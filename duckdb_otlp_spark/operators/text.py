@@ -114,17 +114,6 @@ def quality_score(text: Column) -> Column:
     return F.when(F.length(F.trim(text)) > 0, score).otherwise(0.0)
 
 
-def lang_scores(text: Column) -> Column:
-    """Per-language stopword-hit counts as a map<lang,int>."""
-    toks = F.transform(tokenize_ws(text), lambda t: F.lower(t))
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in LANG_PROFILES]),
-        F.array(*[
-            F.size(F.filter(toks, lambda t: t.isin(*words)))
-            for words in LANG_PROFILES.values()
-        ]))
-
-
 def lang_id(text: Column) -> Column:
     """argmax language by stopword hits; 'und' (undetermined) when no hits.
 

@@ -315,59 +315,6 @@ def expected_logs(envelopes=None):
     return sorted(rows, key=lambda r: r["time_unix_nano"])
 
 
-LOGS_COLUMNS = (
-    "time_unix_nano", "observed_time_unix_nano", "trace_id", "span_id",
-    "service_name", "service_namespace", "service_instance_id",
-    "severity_number", "severity_text", "event_name", "body",
-    "resource_attributes", "scope_name", "scope_version",
-    "scope_attributes", "log_attributes", "dropped_attributes_count",
-    "flags")
-
-
-def expected_logs_columns(envelopes):
-    """Columnar twin of :func:`expected_logs` for the Python DataSource
-    hot path (r12 VERDICT #6): one walk emits per-record tuples (no
-    per-row dict build), sorts them on the same time key, and
-    transposes once with C-level ``zip`` — so the DataSource builds its
-    Arrow arrays straight from these columns instead of re-extracting
-    every value from 64k row dicts. Output is value-identical to
-    ``expected_logs`` (pinned by
-    tests/test_datasource.py::test_columnar_flatten_matches_rowwise);
-    the dict-returning flattener stays the reader-gate oracle.
-
-    Returns ``(LOGS_COLUMNS, columns)`` with one list per column."""
-    tuples = []
-    ap = tuples.append
-    for env in envelopes:
-        for rl in env["resourceLogs"]:
-            for sl in rl["scopeLogs"]:
-                resource, scope = rl.get("resource"), sl.get("scope") or {}
-                svc = _attr(resource, "service.name")
-                svc_ns = _attr(resource, "service.namespace")
-                svc_id = _attr(resource, "service.instance.id")
-                res_attrs = _attrs_json((resource or {}).get("attributes"))
-                scope_name = scope.get("name")
-                scope_version = scope.get("version")
-                scope_attrs = _attrs_json(scope.get("attributes"))
-                for r in sl["logRecords"]:
-                    get = r.get
-                    sev = _i(get("severityNumber"), None)
-                    ap((_ts(get("timeUnixNano")),
-                        _ts(get("observedTimeUnixNano")),
-                        _hex(get("traceId")), _hex(get("spanId")),
-                        svc, svc_ns, svc_id,
-                        sev if sev else None,
-                        get("severityText"), get("eventName"),
-                        _body(get("body")),
-                        res_attrs, scope_name, scope_version, scope_attrs,
-                        _attrs_json(get("attributes")),
-                        _i(get("droppedAttributesCount")), _i(get("flags"))))
-    tuples.sort(key=lambda t: t[0])
-    if not tuples:
-        return LOGS_COLUMNS, [() for _ in LOGS_COLUMNS]
-    return LOGS_COLUMNS, list(zip(*tuples))
-
-
 def _events_json(events):
     if events is None:
         return "[]"
@@ -427,62 +374,6 @@ def expected_traces(envelopes=None):
                         "flags": _i(s.get("flags")),
                     })
     return sorted(rows, key=lambda r: r["name"])
-
-
-TRACES_COLUMNS = (
-    "start_time_unix_nano", "duration_time_unix_nano", "trace_id",
-    "span_id", "parent_span_id", "trace_state", "service_name",
-    "service_namespace", "service_instance_id", "name", "kind",
-    "status_code", "status_status_message", "resource_attributes",
-    "scope_name", "scope_version", "scope_attributes",
-    "span_attributes", "events_json", "links_json",
-    "dropped_attributes_count", "dropped_events_count",
-    "dropped_links_count", "flags")
-
-
-def expected_traces_columns(envelopes):
-    """Columnar twin of :func:`expected_traces` (same contract as
-    :func:`expected_logs_columns` — one walk, per-record tuples, same
-    sort key, value-identical rows; pinned by
-    tests/test_datasource.py::test_columnar_flatten_matches_rowwise)."""
-    tuples = []
-    ap = tuples.append
-    for env in envelopes:
-        for rs in env["resourceSpans"]:
-            for ss in rs["scopeSpans"]:
-                resource, scope = rs.get("resource"), ss.get("scope") or {}
-                svc = _attr(resource, "service.name")
-                svc_ns = _attr(resource, "service.namespace")
-                svc_id = _attr(resource, "service.instance.id")
-                res_attrs = _attrs_json((resource or {}).get("attributes"))
-                scope_name = scope.get("name")
-                scope_version = scope.get("version")
-                scope_attrs = _attrs_json(scope.get("attributes"))
-                for s in ss["spans"]:
-                    get = s.get
-                    start = int(s["startTimeUnixNano"]) \
-                        if "startTimeUnixNano" in s else None
-                    end = int(s["endTimeUnixNano"]) \
-                        if "endTimeUnixNano" in s else None
-                    status = get("status") or {}
-                    ap((_ts(get("startTimeUnixNano")),
-                        (end or 0) - (start or 0),
-                        _hex(get("traceId")), _hex(get("spanId")),
-                        _hex(get("parentSpanId")), get("traceState"),
-                        svc, svc_ns, svc_id,
-                        get("name"), _i(get("kind")),
-                        _i(status.get("code")), status.get("message"),
-                        res_attrs, scope_name, scope_version, scope_attrs,
-                        _attrs_json(get("attributes")),
-                        _events_json(get("events")),
-                        _links_json(get("links")),
-                        _i(get("droppedAttributesCount")),
-                        _i(get("droppedEventsCount")),
-                        _i(get("droppedLinksCount")), _i(get("flags"))))
-    tuples.sort(key=lambda t: t[9])
-    if not tuples:
-        return TRACES_COLUMNS, [() for _ in TRACES_COLUMNS]
-    return TRACES_COLUMNS, list(zip(*tuples))
 
 
 def _exemplars_json(exemplars):

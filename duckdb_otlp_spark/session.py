@@ -9,6 +9,7 @@ with the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import threading
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -32,6 +33,12 @@ def _export_package_to_workers() -> str:
 
 
 _SHIPPED_SESSIONS: set[str] = set()
+# this process's package zip, written once per process: a zip a recycled
+# pid left in the temp dir holds some other version of the package
+_PACKAGE_ZIP: list[Path] = []
+# concurrent callers (the live server's three seal threads) must not see
+# a half-written zip or ship it twice
+_SHIP_LOCK = threading.Lock()
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -46,16 +53,19 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     import zipfile
 
     key = spark.sparkContext.applicationId
-    if key in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.gettempdir()) / f"duckdb_otlp_spark_{os.getpid()}.zip"
-    if not zip_path.exists():
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
-                zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
-    spark.sparkContext.addPyFile(str(zip_path))
-    _SHIPPED_SESSIONS.add(key)
+    with _SHIP_LOCK:
+        if key in _SHIPPED_SESSIONS:
+            return
+        if not _PACKAGE_ZIP:
+            pkg_dir = Path(__file__).resolve().parent
+            zip_path = (Path(tempfile.gettempdir())
+                        / f"duckdb_otlp_spark_{os.getpid()}.zip")
+            with zipfile.ZipFile(zip_path, "w") as zf:
+                for py in sorted(pkg_dir.rglob("*.py")):
+                    zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
+            _PACKAGE_ZIP.append(zip_path)
+        spark.sparkContext.addPyFile(str(_PACKAGE_ZIP[0]))
+        _SHIPPED_SESSIONS.add(key)
 
 
 def get_spark(app_name: str = "duckdb-otlp-spark", cpus: int | None = None) -> SparkSession:

@@ -22,13 +22,10 @@ test ``tests/test_datasource.py``):
 return), so rows cross the Python-JVM boundary as columnar batches,
 not per-row pickles: the per-partition cost is the shared envelope
 decode (the same wire/JSON decode the function API runs in
-``mapInArrow``) plus a per-file flatten whose values come from the
-reader-gate flattener the driver already differentials against the
-real pipeline. Measured at 1 M log records x 32 files on local[8]
-(``probe_datasource_scale.py``, PROBE_DATASOURCE.json): format API =
-1.21x the function API wall on protobuf and 0.76x (faster) on JSONL,
-where one ``json.loads`` + columnar flatten beats the JVM's
-Jackson ``from_json`` over the deep envelope schema.
+``mapInArrow``) plus the per-file flatten of ``sources/flat_decode`` —
+the JVM flatten's Python twin, which the seal and the protobuf reads
+use too. The reader gate's row-wise ``expected_*`` flatteners stay an
+independent oracle only.
 """
 
 from __future__ import annotations
@@ -41,60 +38,16 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from duckdb_otlp_spark import schemas as _schemas
 
-_SIGNALS = {
-    "logs": ("logs", "expected_logs", "LOGS_SCHEMA"),
-    "traces": ("traces", "expected_traces", "TRACES_SCHEMA"),
-    "metrics_gauge": ("metrics", "expected_gauge", "METRICS_GAUGE_SCHEMA"),
-    "metrics_sum": ("metrics", "expected_sum", "METRICS_SUM_SCHEMA"),
-    "metrics_histogram": ("metrics", "expected_histogram",
-                          "METRICS_HISTOGRAM_SCHEMA"),
-    "metrics_exp_histogram": ("metrics", "expected_exp_histogram",
-                              "METRICS_EXP_HISTOGRAM_SCHEMA"),
-}
-
-# The function-API flatten marks defaulted/derived columns non-nullable
-# (coalesce over proto3 defaults); mirrored here so
-# format("otlp").schema == read_otlp_*().schema exactly (pinned by
-# tests/test_datasource.py for every signal).
-_NON_NULLABLE = {
-    "logs": {"resource_attributes", "scope_attributes", "log_attributes",
-             "dropped_attributes_count", "flags"},
-    "traces": {"duration_time_unix_nano", "kind", "status_code",
-               "resource_attributes", "scope_attributes", "span_attributes",
-               "events_json", "links_json", "dropped_attributes_count",
-               "dropped_events_count", "dropped_links_count", "flags"},
-    "metrics_gauge": {"resource_attributes", "scope_attributes",
-                      "metric_attributes", "flags", "exemplars_json"},
-    "metrics_sum": {"resource_attributes", "scope_attributes",
-                    "metric_attributes", "flags", "exemplars_json",
-                    "aggregation_temporality", "is_monotonic"},
-    "metrics_histogram": {"resource_attributes", "scope_attributes",
-                          "metric_attributes", "flags", "exemplars_json",
-                          "aggregation_temporality"},
-    "metrics_exp_histogram": {"scale", "zero_count", "positive_offset",
-                              "positive_bucket_counts", "negative_offset",
-                              "negative_bucket_counts",
-                              "resource_attributes", "scope_attributes",
-                              "metric_attributes", "flags", "exemplars_json",
-                              "aggregation_temporality"},
-}
-
-# The wire decoders emit proto3 int leaves as decimal strings (their
-# envelope schema type); the reader-gate flatteners coerce every such
-# leaf at its consumption point (reader_gate._i and the explicit
-# int()/bool() casts), so the decoded envelope feeds the flatten
-# directly. A recursive str->int pre-pass (_intify) used to rebuild the
-# whole envelope tree here — a full extra walk per file for coercions
-# the flatten already performs; dropped in r13 with the DataSource
-# differential (tests/test_datasource.py) pinning output parity.
+_SIGNALS = ("logs", "traces", "metrics_gauge", "metrics_sum",
+            "metrics_histogram", "metrics_exp_histogram")
 
 
 def _file_envelopes(fpath: str, wire_signal: str,
                     container: str = "otlp") -> list[dict]:
     from duckdb_otlp_spark.sources import otlp_proto
-    from duckdb_otlp_spark.sources.otlp_json import MAX_READ_FILE_BYTES, _is_ndjson
+    from duckdb_otlp_spark.sources.otlp_json import (
+        _ENVELOPES, MAX_READ_FILE_BYTES, _conform_to_schema, _is_ndjson)
 
     b = Path(fpath).read_bytes()
     if len(b) > MAX_READ_FILE_BYTES:
@@ -102,17 +55,21 @@ def _file_envelopes(fpath: str, wire_signal: str,
                          f"{MAX_READ_FILE_BYTES} byte limit: {fpath}")
     if not b:
         return []
+    # the flatteners take the envelope domain the JVM's from_json
+    # yields (int64s as text, doubles as floats); the wire decoders
+    # already emit it, JSON and OTAP trees are conformed to it
+    env_schema = _ENVELOPES[wire_signal][1]
     if container == "otap":
         from duckdb_otlp_spark.sources.otap import bar_to_envelope
-        return [bar_to_envelope(b, wire_signal)]
+        return [_conform_to_schema(bar_to_envelope(b, wire_signal), env_schema)]
     if not b.lstrip(b"\xef\xbb\xbf").strip():
         raise ValueError(f"OTLP parse error: whitespace-only file: {fpath}")
     if otlp_proto.looks_like_json(b):
         text = b.decode("utf-8")
         lines = [ln for ln in text.split("\n") if ln.strip()]
-        if _is_ndjson(lines):
-            return [json.loads(ln) for ln in lines]
-        return [json.loads(text)]
+        docs = lines if _is_ndjson(lines) else [text]
+        return [_conform_to_schema(json.loads(d), env_schema, strict=True)
+                for d in docs]
     try:
         return [otlp_proto.DECODERS[wire_signal](b)]
     except ValueError as e:
@@ -176,49 +133,32 @@ class _OtlpReader(DataSourceReader):
         return [InputPartition(f) for f in self.files]
 
     # Arrow batch size: bounds peak ARROW memory per handoff while
-    # keeping the per-batch JVM transfer amortized. The flattened rows
-    # themselves materialize fully per file first — inherent, not an
-    # oversight: the flatteners sort rows by time across the whole file
-    # (the reader-gate contract), so no streaming emission can start
-    # before the last record is seen; the 100 MB per-file cap bounds
-    # the worst case (r12 ADVICE, recorded boundary).
+    # keeping the per-batch JVM transfer amortized
     _BATCH_ROWS = 65536
 
     def read(self, partition) -> Iterator:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        from duckdb_otlp_spark import reader_gate
-        wire_signal, flatten_name, _ = _SIGNALS[self.signal]
-        flatten = getattr(reader_gate, flatten_name)
-        envelopes = _file_envelopes(partition.value, wire_signal,
-                                    self.container)
-        if not envelopes:
-            return
+        from duckdb_otlp_spark.sources import flat_decode
+        flatten, wire_signal = flat_decode.FLATTENERS[self.signal]
         names = [f.name for f in self.schema.fields]
         atypes = [to_arrow_type(f.dataType) for f in self.schema.fields]
-        columnar = getattr(reader_gate, flatten_name + "_columns", None)
-        if columnar is not None:
-            # columnar fast path (r12 VERDICT #6): the flattener emits
-            # columns in one walk — Arrow arrays build from column
-            # slices with zero per-value dict extraction
-            col_names, cols = columnar(envelopes)
-            if list(col_names) != names:  # defensive: align by name
-                idx = {n: i for i, n in enumerate(col_names)}
-                cols = [cols[idx[n]] for n in names]
-            n_rows = len(cols[0])
-            for lo in range(0, n_rows, self._BATCH_ROWS):
-                hi = lo + self._BATCH_ROWS
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c[lo:hi], type=t)
-                     for c, t in zip(cols, atypes)], names=names)
-            return
-        rows = flatten(envelopes=envelopes)
-        for lo in range(0, len(rows), self._BATCH_ROWS):
-            chunk = rows[lo:lo + self._BATCH_ROWS]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[n] for r in chunk], type=t)
-                 for n, t in zip(names, atypes)], names=names)
+
+        def batch(rows):
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(zip(*rows), atypes)],
+                names=names)
+
+        rows: list = []
+        for env in _file_envelopes(partition.value, wire_signal,
+                                   self.container):
+            rows += flatten(env)
+            while len(rows) >= self._BATCH_ROWS:
+                yield batch(rows[:self._BATCH_ROWS])
+                del rows[:self._BATCH_ROWS]
+        if rows:
+            yield batch(rows)
 
 
 class OtlpDataSource(DataSource):
@@ -233,12 +173,8 @@ class OtlpDataSource(DataSource):
         if signal not in _SIGNALS:
             raise ValueError(f"unknown signal {signal!r}; expected one of "
                              f"{sorted(_SIGNALS)}")
-        base = getattr(_schemas, _SIGNALS[signal][2])
-        nn = _NON_NULLABLE[signal]
-        from pyspark.sql.types import StructField
-        return StructType([
-            StructField(f.name, f.dataType, f.name not in nn, f.metadata)
-            for f in base.fields])
+        from duckdb_otlp_spark.sources.flat_decode import flat_schema
+        return flat_schema(signal)
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _OtlpReader(self.options, schema)

@@ -1,50 +1,68 @@
-"""Protobuf fast path: decode + flatten executor-side, emit FLAT rows.
+"""Executor-side flatten: OTLP envelopes -> FINAL flat rows, in Python.
 
-The generic pb route emits one deeply nested Arrow envelope struct per
-row and leaves the flatten to the JVM: three explodes, an interpreted
-``transform`` validation pass, and the attrs-JSON renderers (array_sort
-+ HOF transforms, all CodegenFallback) run per record. Measured on the
-1M-record/32-file pb bench corpus at local[32] (r14): the envelope rows
-themselves cost 1.3 s (scan + wire decode + Arrow build + transfer),
-but the JVM flatten lifts the full 18-column read to 5.0–5.6 s and even
-the 2-column aggregate shape to 3.1 s. Flattening in Python right after
-the wire decode (this module) and handing Spark the FINAL flat columns
-runs the same reads in 1.5–1.75 s — the per-record work drops from
-~50–130 JVM-µs to ~10 Python-µs because the flatten is plain dict walks
-and string joins instead of interpreted Catalyst HOFs over nested
-UnsafeRows (guide §4.2: hand whole batches to native/vectorizable code;
-the flat string/int columns also convert Arrow->JVM for free, no nested
-copy).
+One flattener per table (logs, traces, and the four metric shapes),
+each an exact twin of the JVM flatten in ``otlp_json`` (``flatten_*``:
+``from_json`` + explode + interpreted higher-order functions). Three
+callers hand Spark the flat columns straight from ``mapInArrow`` / the
+Python DataSource instead of nested envelope rows:
 
-Semantics: every coercion below is an exact twin of the JVM flatten
-(otlp_json.flatten_logs / flatten_traces) over the WIRE DECODER's value
-domain — severity/flags int32 windows (try_cast long -> try_cast int ->
-default), ns->µs floor division with the same int64-overflow error text,
-lowercase hex ids with ''->NULL, canonical sorted-key attrs JSON with
-Jackson-twin string escaping, Java-twin double rendering, the AnyValue
-depth-3 cutoff, and the stringValue-first body CASE order. Byte parity
-with the JVM flatten is pinned by tests/test_flat_decode.py over the
-reader-gate fixtures AND an adversarial corpus (control characters,
-int32/int64 overflows, deep nesting, duplicate keys, non-integral
-doubles).
+- protobuf file reads of logs/traces (``read_pb_flat``): the wire
+  decode and the flatten run in one pass. Measured on the
+  1M-record/32-file pb bench corpus at local[32] (r14): 5.0-5.6 s via
+  the envelope + JVM flatten route, 1.5-1.75 s here;
+- the live server's seal (``flatten_lines``): each spooled JSON request
+  line goes ``json.loads`` -> ``otlp_json._conform_to_schema(strict=
+  True)`` -> flattener. A line that fails any step is REFUSED: it
+  leaves this pass verbatim (``__line``) and the seal runs today's lax
+  ``envelopes_from_lines`` + ``FLATTEN`` plan over the refused lines
+  only, so sealed rows, errors and ``seal_malformed_lines`` are the JVM
+  route's by construction;
+- ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
 
-Documented divergence (out of the proven-exact zone): non-"N.0" doubles
-— |x| >= 9e15 rendered via Double.toString, and subnormals — may differ
-from JDK 17's FloatingDecimal in the LAST DIGITS of the rendered JSON
-number for ~0.5% of such values (this module emits the shortest
-round-trip digits in Java's format; pre-Ryū FloatingDecimal sometimes
-emits extra digits). Both forms parse back to the identical double.
-Telemetry fixtures and the driver's certified rows contain no such
-values (the parity suite proves the covered zone byte-exact), and the
-generic envelope path is unchanged for callers that need it
-(mode="json"/"lines", mixed-format globs).
+Semantics: every coercion below twins the JVM expression over the
+conformed envelope domain — severity/flags int32 windows (try_cast
+long -> try_cast int -> default), enum names (``SPAN_KIND_*``,
+``STATUS_CODE_*``, ``AGGREGATION_TEMPORALITY_*``, ``SEVERITY_NUMBER_*``),
+ns->µs floor division with the int64-overflow error text, lowercase hex
+ids with ''->NULL, canonical sorted-key attrs JSON with Jackson-twin
+string escaping, Java-twin double rendering, the AnyValue depth-3
+cutoff, and the stringValue-first body CASE order. Integer text must be
+canonical (``-?[0-9]+``): anything else raises, because Spark's
+``try_cast`` rules for other spellings are not twinned here — the wire
+decoders only emit canonical text, and the seal refuses such lines to
+the JVM route. Byte parity is pinned by tests/test_flat_decode.py over
+the reader-gate fixtures and adversarial pb and JSON corpora.
+
+Documented divergence (pb reads and the DataSource only): non-"N.0"
+doubles outside the proven-exact zone — |x| >= 9e15 rendered via
+Double.toString, and subnormals — may differ from JDK 17's
+FloatingDecimal in the LAST DIGITS of the rendered JSON number (this
+module emits the shortest round-trip digits in Java's format). Both
+forms parse back to the identical double. The seal passes
+``exact=True``, which raises instead (so such lines take the JVM
+route), as does an attribute list whose keys include NULL (the JVM
+comparator orders NULL keys arbitrarily).
 """
 
 from __future__ import annotations
 
+import json
 import math
 import re
+import sys
 from typing import Any
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from duckdb_otlp_spark import schemas as _schemas
+from duckdb_otlp_spark.sources.otlp_json import (
+    _ENUM_MAPS,
+    _ENVELOPES,
+    _SEVERITY_NAMES,
+    _conform_to_schema,
+)
 
 _I64_MAX = 9223372036854775807
 _I32_MIN, _I32_MAX = -(1 << 31), (1 << 31) - 1
@@ -55,6 +73,10 @@ _NEEDS_ESCAPE = re.compile(r'["\\\x00-\x1f]')
 
 # otlp_json._ANY_VALUE_DEPTH twin
 _DEPTH = 3
+
+_KINDS = _ENUM_MAPS["kind"]
+_STATUS_CODES = _ENUM_MAPS["status_code"]
+_TEMPORALITIES = _ENUM_MAPS["temporality"]
 
 
 # ---------------------------------------------------------------------------
@@ -82,15 +104,18 @@ def _jstr(s) -> str:
     return '"' + s + '"'
 
 
-def _jdouble(x) -> str:
+def _jdouble(x, exact: bool) -> str:
     """_json_double twin: null/NaN -> 'null'; integral |x| < 9e15 ->
     'N.0'; else Double.toString (Java formatting over the shortest
-    round-trip digits — see the module docstring for the digit-tail
-    caveat outside the proven zone)."""
+    round-trip digits). ``exact`` raises outside the proven zone (see
+    the module docstring)."""
     if x is None or x != x:
         return "null"
-    if abs(x) < 9.0e15 and x == int(x):
+    a = abs(x)
+    if a < 9.0e15 and x == int(x):
         return str(int(x)) + ".0"
+    if exact and a != math.inf and (a >= 9.0e15 or a < sys.float_info.min):
+        raise ValueError(f"double {x!r} outside the exact rendering zone")
     return _java_double_str(x)
 
 
@@ -124,20 +149,37 @@ def _java_double_str(x: float) -> str:
     return f"{sign}{digits[0]}.{digits[1:] or '0'}E{exp10}"
 
 
+def _int(s: str) -> int:
+    """Canonical decimal integer text (``-?[0-9]+``, any length) -> int;
+    any other spelling raises (see the module docstring)."""
+    if not (s.isascii() and (s.isdigit()
+                             or (s[:1] == "-" and s[1:].isdigit()))):
+        raise ValueError(f"non-canonical integer text {s!r}")
+    return int(s)
+
+
+def _try_long(s):
+    """try_cast(long) twin: NULL and out-of-int64 -> None."""
+    if s is None:
+        return None
+    v = _int(s)
+    return v if _I64_MIN <= v <= _I64_MAX else None
+
+
 def _jint_text(s) -> str:
-    """intValue render twin: coalesce(try_cast(long) as string, quoted).
-    Canonical decoder strings are bare int64 text; anything else (or
-    out-of-long range) renders quoted like the JVM's fallback."""
-    try:
-        v = int(s)
-        if _I64_MIN <= v <= _I64_MAX:
-            return str(v)
-    except (TypeError, ValueError):
-        pass
-    return _jstr(s)
+    """intValue render twin: coalesce(try_cast(long) as string, quoted)."""
+    v = _try_long(s)
+    return _jstr(s) if v is None else str(v)
 
 
-def _jany(v, depth: int = _DEPTH) -> str:
+def _long_text_or(s, default: str) -> str:
+    """events/links/exemplars JSON: coalesce(try_cast(long) as string,
+    default)."""
+    v = _try_long(s)
+    return default if v is None else str(v)
+
+
+def _jany(v, depth: int, exact: bool) -> str:
     """_any_value_json twin — same CASE order, same depth cutoff."""
     if v is None:
         return "null"
@@ -152,7 +194,7 @@ def _jany(v, depth: int = _DEPTH) -> str:
         return _jint_text(i)
     d = v.get("doubleValue")
     if d is not None:
-        return _jdouble(d)
+        return _jdouble(d, exact)
     by = v.get("bytesValue")
     if by is not None:
         return _jstr(by)
@@ -160,30 +202,43 @@ def _jany(v, depth: int = _DEPTH) -> str:
         av = v.get("arrayValue")
         if av is not None:
             vals = av.get("values") or []
-            return "[" + ",".join(_jany(x, depth - 1) for x in vals) + "]"
+            return "[" + ",".join(_jany(x, depth - 1, exact)
+                                  for x in vals) + "]"
         kv = v.get("kvlistValue")
         if kv is not None:
             vals = kv.get("values") or []
             return "{" + ",".join(
-                _jstr(e.get("key")) + ":" + _jany(e.get("value"), depth - 1)
+                _jstr(e.get("key")) + ":" + _jany(e.get("value"), depth - 1,
+                                                  exact)
                 for e in vals) + "}"
     return "null"
 
 
-def _attrs_json(attrs) -> str:
+def _key_lax(a):
+    return a.get("key") or ""
+
+
+def _key_exact(a):
+    return a.get("key")   # None vs str comparisons raise TypeError
+
+
+def _attrs_json(attrs, exact: bool) -> str:
     """attrs_to_json twin: canonical sorted-key JSON object; NULL list
     -> '{}'. Key sort matches the JVM comparator (code-point order ==
-    UTF8 byte order); missing keys sort first and render 'null' (the
-    degenerate-wire shape, see module docstring)."""
+    UTF8 byte order; both sorts stable). Missing keys sort first and
+    render 'null' (the degenerate-wire shape); ``exact`` raises on them
+    instead, since the JVM comparator's order for NULL keys is
+    unspecified."""
     if attrs is None:
         return "{}"
-    ordered = sorted(attrs, key=lambda a: a.get("key") or "")
+    ordered = sorted(attrs, key=_key_exact if exact else _key_lax)
     return "{" + ",".join(
-        _jstr(a.get("key")) + ":" + _jany(a.get("value")) for a in ordered
+        _jstr(a.get("key")) + ":" + _jany(a.get("value"), _DEPTH, exact)
+        for a in ordered
     ) + "}"
 
 
-def _body_text(v):
+def _body_text(v, exact: bool):
     """_body_text twin: strings pass through, other AnyValue kinds
     render as JSON, all-null renders to SQL NULL."""
     if v is None:
@@ -191,7 +246,7 @@ def _body_text(v):
     s = v.get("stringValue")
     if s is not None:
         return s
-    r = _jany(v)
+    r = _jany(v, _DEPTH, exact)
     return None if r == "null" else r
 
 
@@ -199,69 +254,59 @@ def _body_text(v):
 # JVM-exact scalar coercions
 # ---------------------------------------------------------------------------
 
-def _ns_us(s, what: str):
-    """_ns_ts twin over the decoder domain (canonical u64 decimal
-    strings): ns -> µs floor; > i64::MAX raises the _validated error
-    text the JVM flatten raises for the same file."""
+def _ns(s):
+    """_ns_long twin: ns text -> int; > i64::MAX raises the _validated
+    error text the JVM flatten raises for the same input."""
     if s is None:
         return None
-    v = int(s)
+    v = _int(s)
     if v > _I64_MAX:
         raise ValueError(
             "OTLP parse error: timestamp overflows int64 range: " + s)
-    return v // 1000
-
-
-def _ns_long_checked(s, what: str):
-    """_ns_long twin (traces duration): raises the same overflow text."""
-    if s is None:
-        return None
-    v = int(s)
-    if v > _I64_MAX:
-        raise ValueError(
-            "OTLP parse error: timestamp overflows int64 range: " + s)
+    if v < _I64_MIN:
+        raise ValueError(f"timestamp below int64 range: {s}")
     return v
+
+
+def _ns_us(s):
+    """_ns_ts twin: ns -> µs, floor division."""
+    v = _ns(s)
+    return None if v is None else v // 1000
 
 
 def _i32(s, default):
-    """_uint32/_enum_int numeric twin: try_cast(long) -> try_cast(int)
-    -> default on either overflow or a non-numeric string."""
+    """_uint32 twin: try_cast(long) -> try_cast(int) -> default."""
     if s is None:
         return default
-    try:
-        v = int(s)
-    except (TypeError, ValueError):
+    v = _int(s)
+    return v if _I32_MIN <= v <= _I32_MAX else default
+
+
+def _enum(s, names: dict, default):
+    """_enum_int twin: numeric first (int32 window), then the exact
+    enum name, then the default."""
+    if s is None:
         return default
-    if not (_I64_MIN <= v <= _I64_MAX):
-        return default
-    if not (_I32_MIN <= v <= _I32_MAX):
-        return default
-    return v
+    n = names.get(s)
+    if n is not None:
+        return n
+    return _i32(s, default)
 
 
 def _severity(s):
-    """_severity_number twin: numeric -> int32 window, 0 -> NULL;
-    decoder output is always numeric text, so the enum-name branch
-    reduces to NULL for non-numeric strings."""
-    v = _i32(s, None)
+    """_severity_number twin: enum -> NULL default, 0 -> NULL."""
+    v = _enum(s, _SEVERITY_NAMES, None)
     return None if v == 0 else v
 
 
 def _hex_id(s):
+    """nullif(lower(id), '') twin; ids outside ASCII raise (Java and
+    Python case mappings differ beyond it)."""
     if not s:
         return None
+    if not s.isascii():
+        raise ValueError("non-ASCII id")
     return s.lower()
-
-
-def _long_text_or(s, default: str) -> str:
-    """events/links JSON: coalesce(try_cast(long) as string, default)."""
-    try:
-        v = int(s)
-        if _I64_MIN <= v <= _I64_MAX:
-            return str(v)
-    except (TypeError, ValueError):
-        pass
-    return default
 
 
 def _attr(resource, key):
@@ -271,47 +316,50 @@ def _attr(resource, key):
     return None
 
 
+def _scope_cols(resource, scope, exact: bool) -> tuple:
+    scope = scope or {}
+    return (_attr(resource, "service.name"),
+            _attr(resource, "service.namespace"),
+            _attr(resource, "service.instance.id"),
+            _attrs_json((resource or {}).get("attributes"), exact),
+            scope.get("name"), scope.get("version"),
+            _attrs_json(scope.get("attributes"), exact))
+
+
 # ---------------------------------------------------------------------------
 # Flatten twins (walk order == JVM explode order; NO sorting)
 # ---------------------------------------------------------------------------
 
-def flatten_logs_columns(env: dict) -> list[tuple]:
+def flatten_logs_columns(env: dict, exact: bool = False) -> list[tuple]:
     """One tuple per log record, 18 fields in LOGS_SCHEMA order."""
     out = []
     ap = out.append
     for rl in env.get("resourceLogs") or []:
         resource = rl.get("resource")
-        svc = _attr(resource, "service.name")
-        svc_ns = _attr(resource, "service.namespace")
-        svc_id = _attr(resource, "service.instance.id")
-        res_attrs = _attrs_json((resource or {}).get("attributes"))
         for sl in rl.get("scopeLogs") or []:
-            scope = sl.get("scope") or {}
-            scope_name = scope.get("name")
-            scope_version = scope.get("version")
-            scope_attrs = _attrs_json(scope.get("attributes"))
+            (svc, svc_ns, svc_id, res_attrs, scope_name, scope_version,
+             scope_attrs) = _scope_cols(resource, sl.get("scope"), exact)
             for r in sl.get("logRecords") or []:
                 get = r.get
                 ap((
-                    _ns_us(get("timeUnixNano"), "timeUnixNano"),
-                    _ns_us(get("observedTimeUnixNano"),
-                           "observedTimeUnixNano"),
+                    _ns_us(get("timeUnixNano")),
+                    _ns_us(get("observedTimeUnixNano")),
                     _hex_id(get("traceId")),
                     _hex_id(get("spanId")),
                     svc, svc_ns, svc_id,
                     _severity(get("severityNumber")),
                     get("severityText"),
                     get("eventName"),
-                    _body_text(get("body")),
+                    _body_text(get("body"), exact),
                     res_attrs, scope_name, scope_version, scope_attrs,
-                    _attrs_json(get("attributes")),
+                    _attrs_json(get("attributes"), exact),
                     _i32(get("droppedAttributesCount"), 0),
                     _i32(get("flags"), 0),
                 ))
     return out
 
 
-def _events_json(events) -> str:
+def _events_json(events, exact: bool) -> str:
     if events is None:
         return "[]"
     return "[" + ",".join(
@@ -319,12 +367,12 @@ def _events_json(events) -> str:
         '"dropped_attributes_count":%s}'
         % (_long_text_or(e.get("timeUnixNano"), "null"),
            _jstr(e.get("name")),
-           _attrs_json(e.get("attributes")),
+           _attrs_json(e.get("attributes"), exact),
            _long_text_or(e.get("droppedAttributesCount"), "0"))
         for e in events) + "]"
 
 
-def _links_json(links) -> str:
+def _links_json(links, exact: bool) -> str:
     if links is None:
         return "[]"
     return "[" + ",".join(
@@ -333,49 +381,44 @@ def _links_json(links) -> str:
         % (_jstr(_hex_id(li.get("traceId"))),
            _jstr(_hex_id(li.get("spanId"))),
            _jstr(li.get("traceState")),
-           _attrs_json(li.get("attributes")),
+           _attrs_json(li.get("attributes"), exact),
            _long_text_or(li.get("droppedAttributesCount"), "0"))
         for li in links) + "]"
 
 
-def flatten_traces_columns(env: dict) -> list[tuple]:
+def flatten_traces_columns(env: dict, exact: bool = False) -> list[tuple]:
     """One tuple per span, 24 fields in TRACES_SCHEMA order."""
     out = []
     ap = out.append
     for rs in env.get("resourceSpans") or []:
         resource = rs.get("resource")
-        svc = _attr(resource, "service.name")
-        svc_ns = _attr(resource, "service.namespace")
-        svc_id = _attr(resource, "service.instance.id")
-        res_attrs = _attrs_json((resource or {}).get("attributes"))
         for ss in rs.get("scopeSpans") or []:
-            scope = ss.get("scope") or {}
-            scope_name = scope.get("name")
-            scope_version = scope.get("version")
-            scope_attrs = _attrs_json(scope.get("attributes"))
+            (svc, svc_ns, svc_id, res_attrs, scope_name, scope_version,
+             scope_attrs) = _scope_cols(resource, ss.get("scope"), exact)
             for s in ss.get("spans") or []:
                 get = s.get
-                start = _ns_long_checked(get("startTimeUnixNano"),
-                                         "startTimeUnixNano")
-                end = _ns_long_checked(get("endTimeUnixNano"),
-                                       "endTimeUnixNano")
+                start = _ns(get("startTimeUnixNano"))
+                end = _ns(get("endTimeUnixNano"))
+                duration = (end or 0) - (start or 0)
+                if not _I64_MIN <= duration <= _I64_MAX:
+                    raise ValueError("span duration overflows int64")
                 status = get("status") or {}
                 ap((
                     None if start is None else start // 1000,
-                    (end or 0) - (start or 0),
+                    duration,
                     _hex_id(get("traceId")),
                     _hex_id(get("spanId")),
                     _hex_id(get("parentSpanId")),
                     get("traceState"),
                     svc, svc_ns, svc_id,
                     get("name"),
-                    _i32(get("kind"), 0),
-                    _i32(status.get("code"), 0),
+                    _enum(get("kind"), _KINDS, 0),
+                    _enum(status.get("code"), _STATUS_CODES, 0),
                     status.get("message"),
                     res_attrs, scope_name, scope_version, scope_attrs,
-                    _attrs_json(get("attributes")),
-                    _events_json(get("events")),
-                    _links_json(get("links")),
+                    _attrs_json(get("attributes"), exact),
+                    _events_json(get("events"), exact),
+                    _links_json(get("links"), exact),
                     _i32(get("droppedAttributesCount"), 0),
                     _i32(get("droppedEventsCount"), 0),
                     _i32(get("droppedLinksCount"), 0),
@@ -384,26 +427,132 @@ def flatten_traces_columns(env: dict) -> list[tuple]:
     return out
 
 
-_FLATTENERS = {
-    "logs": flatten_logs_columns,
-    "traces": flatten_traces_columns,
+def _exemplars_json(exemplars, exact: bool) -> str:
+    if exemplars is None:
+        return "[]"
+    out = []
+    for e in exemplars:
+        d = e.get("asDouble")
+        out.append(
+            '{"time_unix_nano":%s,"value":%s,"span_id":%s,"trace_id":%s}'
+            % (_long_text_or(e.get("timeUnixNano"), "null"),
+               _jdouble(d, exact) if d is not None
+               else _long_text_or(e.get("asInt"), "null"),
+               _jstr(_hex_id(e.get("spanId"))),
+               _jstr(_hex_id(e.get("traceId")))))
+    return "[" + ",".join(out) + "]"
+
+
+def _bucket_counts(counts):
+    return None if counts is None else [_try_long(c) for c in counts]
+
+
+def flatten_metrics_columns(env: dict, exact: bool = False
+                            ) -> tuple[list, list, list, list]:
+    """(gauge, sum, histogram, exp_histogram) tuple lists, each in its
+    METRICS_*_SCHEMA order. One walk fans out to the four shapes, like
+    the reference's single-parse metrics transform."""
+    gauge: list = []
+    sums: list = []
+    hists: list = []
+    exps: list = []
+    for rm in env.get("resourceMetrics") or []:
+        resource = rm.get("resource")
+        for sm in rm.get("scopeMetrics") or []:
+            sc = _scope_cols(resource, sm.get("scope"), exact)
+            for m in sm.get("metrics") or []:
+                head = (m.get("name"), m.get("description"), m.get("unit"))
+                for shape, rows in (("gauge", gauge), ("sum", sums),
+                                    ("histogram", hists),
+                                    ("exponentialHistogram", exps)):
+                    body = m.get(shape)
+                    if body is None:
+                        continue
+                    if shape != "gauge":
+                        temporality = _enum(body.get("aggregationTemporality"),
+                                            _TEMPORALITIES, 0)
+                    for dp in body.get("dataPoints") or []:
+                        get = dp.get
+                        ts = (_ns_us(get("timeUnixNano")),
+                              _ns_us(get("startTimeUnixNano")))
+                        tail = (*sc, _attrs_json(get("attributes"), exact),
+                                _i32(get("flags"), 0),
+                                _exemplars_json(get("exemplars"), exact))
+                        if shape == "gauge" or shape == "sum":
+                            row = (*ts, *head, _try_long(get("asInt")),
+                                   get("asDouble"), *tail)
+                            if shape == "sum":
+                                row += (temporality,
+                                        body.get("isMonotonic") or False)
+                        elif shape == "histogram":
+                            row = (*ts, *head, _try_long(get("count")),
+                                   get("sum"), get("min"), get("max"),
+                                   _bucket_counts(get("bucketCounts")),
+                                   get("explicitBounds"), *tail, temporality)
+                        else:
+                            pos = get("positive") or {}
+                            neg = get("negative") or {}
+                            zero = _try_long(get("zeroCount"))
+                            row = (*ts, *head, _try_long(get("count")),
+                                   get("sum"), get("min"), get("max"),
+                                   _i32(get("scale"), 0),
+                                   0 if zero is None else zero,
+                                   get("zeroThreshold"),
+                                   _i32(pos.get("offset"), 0),
+                                   _bucket_counts(pos.get("bucketCounts")) or [],
+                                   _i32(neg.get("offset"), 0),
+                                   _bucket_counts(neg.get("bucketCounts")) or [],
+                                   *tail, temporality)
+                        rows.append(row)
+    return gauge, sums, hists, exps
+
+
+def _metrics_shape(i: int):
+    return lambda env, exact=False: flatten_metrics_columns(env, exact)[i]
+
+
+# table key -> (flattener, wire signal); table keys are schemas.TARGET_TABLES'
+FLATTENERS = {
+    "logs": (flatten_logs_columns, "logs"),
+    "traces": (flatten_traces_columns, "traces"),
+    "metrics_gauge": (_metrics_shape(0), "metrics"),
+    "metrics_sum": (_metrics_shape(1), "metrics"),
+    "metrics_histogram": (_metrics_shape(2), "metrics"),
+    "metrics_exp_histogram": (_metrics_shape(3), "metrics"),
 }
 
-# Fields the flatten NEVER leaves null (rendered JSON always a string,
-# counts always defaulted, duration always computed) — matching the JVM
-# flatten's output nullability exactly, which the schema gate compares.
-_NON_NULLABLE = {
+# Fields the JVM flatten NEVER leaves null (rendered JSON always a
+# string, counts always defaulted, duration always computed) — matching
+# its output nullability exactly, which the schema gates compare.
+_METRIC_NN = {"resource_attributes", "scope_attributes", "metric_attributes",
+              "flags", "exemplars_json"}
+NON_NULLABLE = {
     "logs": {"resource_attributes", "scope_attributes", "log_attributes",
              "dropped_attributes_count", "flags"},
     "traces": {"duration_time_unix_nano", "kind", "status_code",
                "resource_attributes", "scope_attributes", "span_attributes",
                "events_json", "links_json", "dropped_attributes_count",
                "dropped_events_count", "dropped_links_count", "flags"},
+    "metrics_gauge": _METRIC_NN,
+    "metrics_sum": _METRIC_NN | {"aggregation_temporality", "is_monotonic"},
+    "metrics_histogram": _METRIC_NN | {"aggregation_temporality"},
+    "metrics_exp_histogram": _METRIC_NN | {
+        "scale", "zero_count", "positive_offset", "positive_bucket_counts",
+        "negative_offset", "negative_bucket_counts",
+        "aggregation_temporality"},
 }
 
 
+def flat_schema(key: str) -> T.StructType:
+    """The JVM flatten's exact output schema for table ``key``."""
+    nn = NON_NULLABLE[key]
+    return T.StructType([
+        T.StructField(f.name, f.dataType, nullable=f.name not in nn)
+        for f in _schemas.SIGNAL_SCHEMAS[key].fields])
+
+
 # ---------------------------------------------------------------------------
-# Reader
+# Protobuf file reader
 # ---------------------------------------------------------------------------
 
 # driver-side format sniff budget for mode="auto": above this many
@@ -470,16 +619,11 @@ def read_pb_flat(spark, path, signal: str):
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from duckdb_otlp_spark import schemas as _schemas
     from duckdb_otlp_spark.session import ensure_package_on_workers
     from duckdb_otlp_spark.sources.otlp_json import (
         MAX_ENVELOPE_SLICE_RECORDS, MAX_READ_FILE_BYTES, slice_envelope)
 
-    from pyspark.sql import types as T
-    nn = _NON_NULLABLE[signal]
-    out_schema = T.StructType([
-        T.StructField(f.name, f.dataType, nullable=f.name not in nn)
-        for f in _schemas.SIGNAL_SCHEMAS[signal].fields])
+    out_schema = flat_schema(signal)
     arrow_fields = [to_arrow_type(f.dataType) for f in out_schema.fields]
     names = [f.name for f in out_schema.fields]
     paths = path if isinstance(path, list) else [path]
@@ -488,7 +632,7 @@ def read_pb_flat(spark, path, signal: str):
     def decode(batches):
         from duckdb_otlp_spark.sources import otlp_proto
 
-        flatten = _FLATTENERS[signal]
+        flatten = FLATTENERS[signal][0]
         for batch in batches:
             for fpath, length, content in zip(batch.column(0).to_pylist(),
                                               batch.column(1).to_pylist(),
@@ -525,3 +669,192 @@ def read_pb_flat(spark, path, signal: str):
              .select("path", "length", "content"))
     ensure_package_on_workers(files.sparkSession)
     return files.mapInArrow(decode, out_schema)
+
+
+# ---------------------------------------------------------------------------
+# Seal: spooled JSON lines -> flat rows of every table of a signal
+# ---------------------------------------------------------------------------
+
+# table keys each spooled signal seals into, in write order
+SEAL_TABLES = {
+    "logs": ("logs",),
+    "traces": ("traces",),
+    "metrics": ("metrics_gauge", "metrics_sum", "metrics_histogram",
+                "metrics_exp_histogram"),
+}
+# table key -> its ``__table`` tag in a flatten_lines frame
+_SEAL_TAG = {k: i for keys in SEAL_TABLES.values() for i, k in enumerate(keys)}
+
+# Jackson's stream limits, which make the JVM parse fail where
+# json.loads succeeds: object keys over 50,000 chars and strings over
+# 20M chars (checked together, conservatively, by _long_token), and
+# number tokens over 1,000 chars (_NUM_TOKEN_MAX stays well under).
+# Nesting needs no check: CPython's json recursion limit (< 1,000
+# levels) trips before Jackson's 1,000.
+_NAME_CAP = 50_000
+_NUM_TOKEN_MAX = 200
+# \uD800-\uDFFF escapes: a lone surrogate would fail the Arrow string
+# build for the whole batch, so every surrogate escape is refused
+_SURROGATE_ESC = re.compile(r"\\u[dD][89abAB]")
+
+
+def _long_token(raw: bytes) -> bool:
+    """True when some quoted token may reach Jackson's 50k name cap.
+    Escaped quotes are blanked first; that can only merge tokens and
+    overestimate lengths, never hide a long one."""
+    if len(raw) < _NAME_CAP:
+        return False
+    return max(map(len, raw.replace(b'\\"', b"..").split(b'"'))) >= _NAME_CAP
+
+
+def _num_token(cast):
+    def parse(tok: str):
+        if len(tok) > _NUM_TOKEN_MAX:
+            raise ValueError("number token too long")
+        return cast(tok)
+    return parse
+
+
+def _no_constant(tok):
+    raise ValueError(f"non-finite constant {tok}")
+
+
+_PARSE_INT = _num_token(int)
+_PARSE_FLOAT = _num_token(float)
+
+
+def _strict_line(raw: bytes, spine: str, env_schema):
+    """One spooled line -> conformed envelope, or raise when the line is
+    outside the domain the flatteners twin exactly."""
+    if _long_token(raw):
+        raise ValueError("token beyond Jackson's length caps")
+    text = raw.decode("utf-8")
+    if "\\u" in text and _SURROGATE_ESC.search(text):
+        raise ValueError("surrogate escape")
+    env = json.loads(text, parse_constant=_no_constant,
+                     parse_int=_PARSE_INT, parse_float=_PARSE_FLOAT)
+    if type(env) is not dict or env.get(spine) is None:
+        raise ValueError(f"no '{spine}' envelope")
+    return _conform_to_schema(env, env_schema, strict=True)
+
+
+def _union_layout(keys) -> list[tuple[str, Any, bool]]:
+    """(name, type, nullable) of every column of ``keys``' tables, first
+    appearance order. Shared names agree on type and nullability."""
+    out: dict[str, tuple[Any, bool]] = {}
+    for key in keys:
+        for f in flat_schema(key).fields:
+            prev = out.setdefault(f.name, (f.dataType, f.nullable))
+            assert prev == (f.dataType, f.nullable), (key, f.name)
+    return [(n, dt, nullable) for n, (dt, nullable) in out.items()]
+
+
+def _filler(dt, nullable: bool):
+    """Value for a union column a row's table lacks: NULL, or any
+    non-null value where the column is declared non-nullable."""
+    if nullable:
+        return None
+    if isinstance(dt, T.StringType):
+        return ""
+    if isinstance(dt, T.BooleanType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return []
+    return 0
+
+
+def flatten_lines(lines: DataFrame, signal: str) -> DataFrame:
+    """Spooled request lines (column ``value``) -> one frame holding the
+    flat rows of every table ``signal`` seals into.
+
+    Columns: ``__table`` (index into ``SEAL_TABLES[signal]``, or -1 for
+    a refused line), ``__line`` (the refused line's bytes, else NULL),
+    then the union of the tables' columns. Blank lines vanish, like the
+    lax route's ``trim(value) != ''`` filter. Select one table with
+    :func:`table_rows`, the refused lines with :func:`refused_lines`."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from duckdb_otlp_spark.session import ensure_package_on_workers
+    from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
+
+    keys = SEAL_TABLES[signal]
+    layout = _union_layout(keys)
+    out_schema = T.StructType(
+        [T.StructField("__table", T.ByteType(), False),
+         T.StructField("__line", T.BinaryType(), True)]
+        + [T.StructField(n, dt, nullable) for n, dt, nullable in layout])
+    arrow_types = [to_arrow_type(dt) for _, dt, _ in layout]
+    fillers = [_filler(dt, nullable) for _, dt, nullable in layout]
+    # per table: union column -> position in the table's tuples
+    positions = [{f.name: i for i, f in enumerate(flat_schema(k).fields)}
+                 for k in keys]
+    spine, env_schema = _ENVELOPES[signal]
+    batch_rows = MAX_ENVELOPE_SLICE_RECORDS
+    names = [f.name for f in out_schema.fields]
+
+    def emit(rows: list[list], refused: list):
+        per_table = [list(zip(*r)) if r else [] for r in rows]
+        counts = [len(r) for r in rows]
+        arrays = [
+            pa.array([i for i, n in enumerate(counts) for _ in range(n)]
+                     + [-1] * len(refused), type=pa.int8()),
+            pa.array([None] * sum(counts) + refused, type=pa.binary())]
+        for (name, _, _), atype, fill in zip(layout, arrow_types, fillers):
+            col: list = []
+            for cols, pos, n in zip(per_table, positions, counts):
+                if n:
+                    j = pos.get(name)
+                    col += [fill] * n if j is None else cols[j]
+            col += [fill] * len(refused)
+            arrays.append(pa.array(col, type=atype))
+        return pa.RecordBatch.from_arrays(arrays, names)
+
+    def run(batches):
+        if signal == "metrics":
+            def flatten(env):
+                return flatten_metrics_columns(env, exact=True)
+        else:
+            one = FLATTENERS[signal][0]
+
+            def flatten(env):
+                return (one(env, exact=True),)
+        rows: list[list] = [[] for _ in keys]
+        refused: list = []
+        pending = 0
+        for batch in batches:
+            for raw in batch.column(0).to_pylist():
+                if not raw.strip(b" "):
+                    continue
+                try:
+                    parts = flatten(_strict_line(raw, spine, env_schema))
+                except Exception:  # noqa: BLE001 — refused: JVM route
+                    refused.append(raw)
+                    pending += 1
+                    continue
+                for acc, part in zip(rows, parts):
+                    acc += part
+                    pending += len(part)
+                if pending >= batch_rows:
+                    yield emit(rows, refused)
+                    rows, refused, pending = [[] for _ in keys], [], 0
+        if pending:
+            yield emit(rows, refused)
+
+    src = lines.select(F.col("value").cast("binary"))
+    ensure_package_on_workers(src.sparkSession)
+    return src.mapInArrow(run, out_schema)
+
+
+def table_rows(flat: DataFrame, key: str) -> DataFrame:
+    """Table ``key``'s flat rows out of a :func:`flatten_lines` frame,
+    with the JVM flatten's exact schema."""
+    return (flat.filter(F.col("__table") == _SEAL_TAG[key])
+            .select(*[f.name for f in flat_schema(key).fields]))
+
+
+def refused_lines(flat: DataFrame) -> DataFrame:
+    """The refused lines of a :func:`flatten_lines` frame, as the
+    ``value`` text column the lax JVM route parses."""
+    return (flat.filter(F.col("__table") == -1)
+            .select(F.col("__line").cast("string").alias("value")))

@@ -355,15 +355,6 @@ def _grouped_parents(table, group_col: str) -> list[int]:
     return out
 
 
-def _ts_ns(v) -> int:
-    """pyarrow timestamp/duration scalar python value -> raw ns int."""
-    if v is None:
-        return 0
-    if hasattr(v, "value"):  # pandas Timestamp / Timedelta
-        return int(v.value)
-    return int(v)
-
-
 def _ns_cols(table, *names):
     """Columns cast to int64 ns (timestamps/durations) as python lists."""
     import pyarrow as pa

@@ -131,43 +131,84 @@ def _conform_to_schema(v, dt, strict: bool = False):
     scalars landing on string-typed fields are stringified exactly as
     Jackson-then-coerce would render them, unknown struct keys are
     dropped, missing keys become null. Schema-driven and fixed-depth, so
-    one cheap walk per envelope replaces the old walk-to-JSON-text.
+    one cheap walk per envelope replaces the old walk-to-JSON-text; the
+    walk is compiled once per (schema, strictness) into nested closures.
 
-    ``strict=True`` (the oversized whole-document JSON route) raises
-    ``ValueError`` on any shape Jackson would NOT cleanly coerce —
-    non-dict where a struct is expected, non-list for an array, float
+    ``strict=True`` (the oversized whole-document JSON route, the
+    seal's executor-side flattener and the DataSource's JSON files)
+    raises ``ValueError`` on any shape Jackson would NOT cleanly coerce
+    — non-dict where a struct is expected, non-list for an array, float
     for a string field (Jackson keeps the raw token text, Python has
     already lost it), bool for double — so the caller can fall back to
     the JVM parse and keep the error/corrupt-record contract
     byte-identical regardless of file size. The pb/OTAP decoders emit
     schema-exact trees and keep the lenient default."""
-    if v is None:
-        return None
+    got = _CONFORMERS.get((id(dt), strict))
+    if got is None:
+        # the schema rides along so its id() cannot be reused
+        got = _CONFORMERS[(id(dt), strict)] = (dt, _conformer(dt, strict))
+    return got[1](v)
+
+
+_CONFORMERS: dict[tuple[int, bool], tuple[Any, Any]] = {}
+
+
+def _conformer(dt, strict: bool):
+    """The compiled walk behind :func:`_conform_to_schema`."""
+    def fail(want, v):
+        raise ValueError(f"expected {want}, got {type(v).__name__}")
+
     if isinstance(dt, T.StructType):
-        if strict and not isinstance(v, dict):
-            raise ValueError(f"expected object, got {type(v).__name__}")
-        return {f.name: _conform_to_schema(v.get(f.name), f.dataType, strict)
-                for f in dt.fields if f.name in v}
+        subs = {f.name: _conformer(f.dataType, strict) for f in dt.fields}
+
+        def struct(v):
+            if v is None:
+                return None
+            if strict and type(v) is not dict:
+                fail("object", v)
+            return {k: subs[k](x) for k, x in v.items() if k in subs}
+        return struct
     if isinstance(dt, T.ArrayType):
-        if strict and not isinstance(v, list):
-            raise ValueError(f"expected array, got {type(v).__name__}")
-        return [_conform_to_schema(x, dt.elementType, strict) for x in v]
-    if isinstance(dt, T.StringType) and not isinstance(v, str):
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if strict and not isinstance(v, int):
-            raise ValueError(f"expected string, got {type(v).__name__}")
-        return str(v)
-    if strict:
-        if isinstance(dt, T.BooleanType) and not isinstance(v, bool):
-            raise ValueError(f"expected boolean, got {type(v).__name__}")
-        if isinstance(dt, T.DoubleType) and (isinstance(v, bool)
-                                             or not isinstance(v, (int, float))):
-            raise ValueError(f"expected number, got {type(v).__name__}")
-        if isinstance(dt, T.LongType) and (isinstance(v, bool)
-                                           or not isinstance(v, int)):
-            raise ValueError(f"expected integer, got {type(v).__name__}")
-    return v
+        element = _conformer(dt.elementType, strict)
+
+        def array(v):
+            if v is None:
+                return None
+            if strict and type(v) is not list:
+                fail("array", v)
+            return [element(x) for x in v]
+        return array
+    if isinstance(dt, T.StringType):
+        def string(v):
+            if v is None or type(v) is str:
+                return v
+            if type(v) is bool:
+                return "true" if v else "false"
+            if strict and type(v) is not int:
+                fail("string", v)
+            return str(v)
+        return string
+    if isinstance(dt, T.DoubleType):
+        def double(v):
+            if type(v) is int:
+                # Jackson's getDoubleValue for an integer token (correctly
+                # rounded; past the double range Python raises
+                # OverflowError)
+                return float(v)
+            if strict and v is not None and type(v) is not float:
+                fail("number", v)
+            return v
+        return double
+    if strict and isinstance(dt, (T.BooleanType, T.LongType)):
+        want, kind = (("boolean", bool) if isinstance(dt, T.BooleanType)
+                      else ("integer", int))
+
+        def exact(v):
+            if v is not None and type(v) is not kind:
+                fail(want, v)
+            return v
+        return exact
+    return lambda v: v
 
 
 def _typed_doc_envelope(text: str, signal: str):
@@ -774,7 +815,8 @@ def _decoded_envelopes(spark: SparkSession, paths: list[str], signal: str,
                                                            strict=True)
                                         for p in slice_envelope(jenv, signal)]
                                 except (ValueError, TypeError,
-                                        AttributeError, KeyError):
+                                        AttributeError, KeyError,
+                                        OverflowError):
                                     parts = None  # JVM owns malformed shapes
                         if parts is None:
                             lines.append(doc)
@@ -998,9 +1040,9 @@ def read_otlp_logs(spark: SparkSession, path: str | list[str], mode: str = "auto
 
 
 def flatten_logs(env: DataFrame) -> DataFrame:
-    """Envelope rows (column ``env``) -> 18-col logs table. Reused by the
-    streaming ingest path (the seal parses spooled request bodies with
-    exactly this plan).
+    """Envelope rows (column ``env``) -> 18-col logs table. The live
+    seal runs it on the spooled lines the executor-side flattener
+    refuses (sources/flat_decode).
 
     Resource/scope-derived columns (service_* extraction and the two
     attrs-JSON renders) are computed BEFORE the record explode: they are
@@ -1374,19 +1416,17 @@ def read_otlp_metrics_summary(spark: SparkSession, path: str | list[str],
 
 
 def envelopes_from_lines(lines: DataFrame, signal: str,
-                         strict: bool = True,
                          drop_observation=None) -> DataFrame:
     """Raw NDJSON lines (column ``value``) -> envelope rows (column ``env``).
 
-    The streaming-ingest seal path: each spooled request body line parses
-    with the same schema/error contract as the file readers. With
-    ``strict=False`` malformed lines are dropped instead of failing the
-    batch (receiver-side skip-and-count semantics,
-    reference: src/otlp_server.cpp:699-702).  Pass ``drop_observation``
-    (a ``pyspark.sql.Observation``) to count the dropped lines as metric
-    ``malformed`` — the observe node sits between the parse and the
-    keep-filter, so the count rides the seal's own job with no second
-    parse and no extra action.
+    The streaming seal's route for lines the executor-side flattener
+    refuses (sources/flat_decode.flatten_lines). Lax: malformed lines
+    are dropped instead of failing the batch (receiver-side
+    skip-and-count semantics, reference: src/otlp_server.cpp:699-702).
+    Pass ``drop_observation`` (a ``pyspark.sql.Observation``) to count
+    the dropped lines as metric ``malformed`` — the observe node sits
+    between the parse and the keep-filter, so the count rides the
+    seal's own job with no second parse and no extra action.
     """
     def build():
         field, env_schema = _ENVELOPES[signal]
@@ -1396,10 +1436,6 @@ def envelopes_from_lines(lines: DataFrame, signal: str,
                 F.col("env")[field].isNotNull())
 
     nonblank, lax_env, lax_keep = _memo(f"env_lines_{signal}", build)
-    if strict:
-        # single-parse error-checked projection (same contract and
-        # plan shape as the file readers' text path)
-        return _checked_env_select(lines.filter(nonblank), signal)
     parsed = lines.filter(nonblank).select(lax_env)
     if drop_observation is not None:
         parsed = parsed.observe(

@@ -5,14 +5,18 @@ Structured Streaming (reference: src/otlp_start_stop.cpp:41-573).
 Mapping (SURVEY.md §3.2): the reference's group-commit "seal" — a single
 writer thread swapping buffers on a 128 MiB / 5 s trigger — becomes a
 micro-batch: ``readStream`` tails the receiver's spool directory,
-``foreachBatch`` parses + flattens with the exact file-reader plan and
+``foreachBatch`` parses + flattens the spooled JSON lines executor-side
+in one ``mapInArrow`` pass (``sources/flat_decode.flatten_lines``) and
 appends to the six signal tables; the micro-batch transaction is the
-seal. ``otlp_flush`` = ``processAllAvailable``; the parquet-export sink
-is at-least-once per signal (blind append), same contract as the
+seal. Lines the flattener refuses (malformed JSON, off-schema shapes,
+values outside its exact domain) take the file readers' lax JVM plan
+instead, built only for batches that hold such a line.
+``otlp_flush`` = ``processAllAvailable``; the parquet-export sink is
+at-least-once per signal (blind append), same contract as the
 reference's COPY path (reference: otlp_server.cpp:963-1107).
 
 A metrics request fans out to <=4 shape tables from ONE parse — the
-envelope frame is cached for the four flattens, mirroring
+flat frame is cached for the four writes, mirroring
 ``otlp_transform_metrics_all`` (reference: read_otlp.cpp:261-304).
 
 Scale notes: each signal is an independent streaming query (the
@@ -24,6 +28,7 @@ and gives partition pruning to every time-bounded query.
 
 from __future__ import annotations
 
+import itertools
 import threading
 import time
 from dataclasses import dataclass, field
@@ -37,14 +42,8 @@ from duckdb_otlp_spark.catalog import SnapshotCatalog
 from duckdb_otlp_spark.functions.promote import sanitize_key as _sanitize
 from duckdb_otlp_spark.functions.uri import OtlpUri, parse_otlp_uri
 from duckdb_otlp_spark.schemas import TARGET_TABLES
-from duckdb_otlp_spark.sources.otlp_json import (
-    FLATTEN,
-    envelopes_from_lines,
-    flatten_metrics_exp_histogram,
-    flatten_metrics_gauge,
-    flatten_metrics_histogram,
-    flatten_metrics_sum,
-)
+from duckdb_otlp_spark.sources import flat_decode
+from duckdb_otlp_spark.sources.otlp_json import FLATTEN, envelopes_from_lines
 from duckdb_otlp_spark.streaming.maintenance import (
     BLOOM_COLS,
     SORT_KEYS,
@@ -511,45 +510,46 @@ class OtlpSparkServer:
                             f"batch={batch_id} error={e}", "WARN")
             raise
 
-    def _seal_catalog(self, tables: list[tuple[str, DataFrame]],
-                      batch_id: int) -> None:
+    def _seal_catalog(self, tables: list[str], parts, batch_id: int) -> None:
         """Catalog-mode seal: stage every table's data files first, then
         publish ONE snapshot — all-or-nothing across the whole seal,
         the reference's BEGIN..append per signal..COMMIT contract
-        (reference: otlp_server.cpp:1176-1259). A failure before commit
-        leaves only unreferenced staged files (vacuumable), and the
-        streaming retry replays the batch."""
+        (reference: otlp_server.cpp:1176-1259). ``parts`` yields
+        (table, frame) pairs and may name a table twice (its clean rows,
+        then its refused lines' rows); all staged files land in the one
+        commit. A failure before commit leaves only unreferenced staged
+        files (vacuumable), and the streaming retry replays the batch."""
         t0 = time.perf_counter()
         add: dict[str, list] = {}
         schemas: dict[str, str] = {}
-        rows: dict[str, int] = {}
+        rows: dict[str, int] = dict.fromkeys(tables, 0)
         try:
-            for table, df in tables:
+            for table, df in parts:
                 df = self._align_to_table(table, df)
                 entries = self.catalog.stage_dataframe(
                     df, table,
                     sort_cols=SORT_KEYS.get(table, ()),
                     bloom_cols=BLOOM_COLS.get(table, ()),
                     compression=self.compression)
-                add[table] = entries
+                add.setdefault(table, []).extend(entries)
                 schemas[table] = df.schema.json()
-                rows[table] = sum(e.rows for e in entries)
+                rows[table] += sum(e.rows for e in entries)
             stage_ms = (time.perf_counter() - t0) * 1000
             t1 = time.perf_counter()
             self.catalog.commit(add=add, schemas=schemas)
             commit_ms = (time.perf_counter() - t1) * 1000
         except Exception as e:  # noqa: BLE001 — seal failures are recorded
             ms = (time.perf_counter() - t0) * 1000
-            for table, _ in tables:
+            for table in tables:
                 self._record_seal(table, 0, batch_id, ms, "error", str(e))
             self._log_event(f"seal failed: batch={batch_id} error={e}", "WARN")
             raise
-        for table, _ in tables:
+        for table in tables:
             self._record_seal(table, rows[table], batch_id, stage_ms, "ok",
                               commit_ms=commit_ms)
         if self.iceberg is not None:
             try:
-                for table, _ in tables:
+                for table in tables:
                     self.iceberg.export_table(table)
             except Exception as e:  # noqa: BLE001 — metadata mirror only:
                 # the catalog commit already succeeded; losing one Iceberg
@@ -559,12 +559,60 @@ class OtlpSparkServer:
         self._log_event(f"seal: catalog={self.export_root} "
                         f"rows={sum(rows.values())} batch={batch_id}")
 
+    def _finish(self, signal: str, df: DataFrame) -> DataFrame:
+        """Seal-time columns over a flat table: attribute promotion,
+        then, for logs, the opt-in PII scrub and near-dup/contamination
+        stamps — all map-only, in the write's own projection."""
+        df = self._promote(df)
+        if signal != "logs":
+            return df
+        if self.scrub_body_pii:
+            from duckdb_otlp_spark.operators.text import pii_scrub
+            df = df.withColumn("body", pii_scrub(F.col("body")))
+        if self._near_dup_probe is not None:
+            # literal regime: map-only InSet columns in the same
+            # projection — the seal stays ONE job (pinned).
+            # Ordering contract: the stamp runs AFTER the PII
+            # scrub, so signatures are computed on the text that
+            # actually lands in the corpus — build the band index
+            # from scrubbed text for the keys to match
+            df = self._near_dup_probe.stamp(df, text_col="body")
+        if self._contamination_col is not None:
+            # same projection, zero extra jobs (stamps the scrubbed
+            # text, like the near-dup stamp above); the column was
+            # precompiled once in __init__
+            df = df.withColumn("contaminated", self._contamination_col)
+        return df
+
+    def _refused_parts(self, signal: str, flat: DataFrame, refused,
+                       malformed):
+        """(table, frame) pairs for the lines the flattener refused, via
+        the lax JVM route (``envelopes_from_lines`` + ``FLATTEN``), whose
+        dropped lines the ``malformed`` Observation counts. Runs after
+        the clean writes, whose job carried the ``refused`` Observation,
+        so batches without such a line never plan it."""
+        if not int(refused.get["lines"]):
+            return
+        keys = flat_decode.SEAL_TABLES[signal]
+        env = envelopes_from_lines(flat_decode.refused_lines(flat), signal,
+                                   drop_observation=malformed)
+        if len(keys) > 1:
+            env = env.persist()
+        try:
+            for key in keys:
+                yield TARGET_TABLES[key], self._finish(signal, FLATTEN[key](env))
+        finally:
+            if len(keys) > 1:
+                env.unpersist()
+
     def _seal_batch(self, signal: str):
+        keys = flat_decode.SEAL_TABLES[signal]
+        tables = [TARGET_TABLES[k] for k in keys]
+
         def seal(batch_df: DataFrame, batch_id: int) -> None:
             # Streaming triggers can hand over an empty batch (stream
             # start, or a signal with no traffic); short-circuit before
-            # building four flatten plans + four parquet commits of
-            # nothing — this was tens of seconds of dead work per drain.
+            # planning the flatten and the table appends of nothing.
             # (inputFiles() is NOT usable here: the micro-batch DF hides
             # its file list, returning [] even for non-empty batches —
             # isEmpty's limit-1 job is the cheapest correct check.)
@@ -615,52 +663,34 @@ class OtlpSparkServer:
             batch_df = batch_df.observe(
                 obs, F.coalesce(F.sum(F.octet_length("value") + F.lit(1)),
                                 F.lit(0)).alias("nbytes"))
-            drop_obs = Observation()
-            env = envelopes_from_lines(batch_df,
-                                       "metrics" if signal == "metrics" else signal,
-                                       strict=False, drop_observation=drop_obs)
-            if signal == "metrics":
-                shapes = (
-                    ("otlp_metrics_gauge", flatten_metrics_gauge),
-                    ("otlp_metrics_sum", flatten_metrics_sum),
-                    ("otlp_metrics_histogram", flatten_metrics_histogram),
-                    ("otlp_metrics_exp_histogram", flatten_metrics_exp_histogram))
-                env = env.persist()
-                try:
-                    tables = [(t, self._promote(fl(env))) for t, fl in shapes]
-                    if self.catalog is not None:
-                        self._seal_catalog(tables, batch_id)
-                    else:
-                        for table, df in tables:
-                            self._write_table(df, table, batch_id)
-                finally:
-                    env.unpersist()
-            else:
-                table = TARGET_TABLES[signal]
-                df = self._promote(FLATTEN[signal](env))
-                if self.scrub_body_pii and signal == "logs":
-                    from duckdb_otlp_spark.operators.text import pii_scrub
-                    df = df.withColumn("body", pii_scrub(F.col("body")))
-                if self._near_dup_probe is not None and signal == "logs":
-                    # literal regime: map-only InSet columns in the same
-                    # projection — the seal stays ONE job (pinned).
-                    # Ordering contract: the stamp runs AFTER the PII
-                    # scrub, so signatures are computed on the text that
-                    # actually lands in the corpus — build the band index
-                    # from scrubbed text for the keys to match
-                    df = self._near_dup_probe.stamp(df, text_col="body")
-                if self._contamination_col is not None and signal == "logs":
-                    # same projection, zero extra jobs (stamps the
-                    # scrubbed text, like the near-dup stamp above);
-                    # the column was precompiled once in __init__
-                    df = df.withColumn("contaminated",
-                                       self._contamination_col)
+            # one Python pass parses and flattens every line; the
+            # refused-line count rides the same job (an Observation,
+            # unlike an accumulator, never re-counts retried tasks)
+            refused = Observation()
+            flat = flat_decode.flatten_lines(batch_df, signal).observe(
+                refused, F.count("__line").alias("lines"))
+            if len(keys) > 1:
+                flat = flat.persist()  # four metric tables, one pass
+            malformed = Observation()
+            fallback = self._refused_parts(signal, flat, refused, malformed)
+            try:
+                parts = itertools.chain(
+                    ((TARGET_TABLES[k],
+                      self._finish(signal, flat_decode.table_rows(flat, k)))
+                     for k in keys),
+                    fallback)
                 if self.catalog is not None:
-                    self._seal_catalog([(table, df)], batch_id)
+                    self._seal_catalog(tables, parts, batch_id)
                 else:
-                    self._write_table(df, table, batch_id)
+                    for table, df in parts:
+                        self._write_table(df, table, batch_id)
+            finally:
+                fallback.close()
+                if len(keys) > 1:
+                    flat.unpersist()
             self.receiver.release_sealed(int(obs.get["nbytes"]), signal)
-            dropped = int(drop_obs.get["malformed"])
+            dropped = (int(malformed.get["malformed"])
+                       if int(refused.get["lines"]) else 0)
             if dropped:
                 self.seal_malformed_total += dropped
                 self._log_event(
@@ -681,102 +711,25 @@ class OtlpSparkServer:
     }
 
     def _warm_seal_plans(self) -> None:
-        """Execute each seal's parse+flatten plan on a one-record sample
-        before the listener opens: the expression build (~10 s of py4j
-        tree construction, memoized per process) and the whole-stage
-        codegen both compile here instead of inside the first seal —
-        the analog of the reference creating/validating target tables at
-        startup (reference: otlp_server.cpp:455-526).
-
-        The three signals warm in parallel threads: the Python-side
-        expression build interleaves py4j socket round-trips (GIL
-        released while the JVM works), and the JVM compiles the three
-        codegen units concurrently.
-
-        After the plan warm, one *realistic* mini-seal runs for the logs
-        signal: a spooled text scan -> lax parse -> flatten -> y/m/d
-        partitioned parquet write of a few tens of thousands of rows to
-        a scratch dir. A fresh JVM's first heavy seal was measured 2.5-4x
-        slower than steady state (C2 JIT + the FileScan-variant codegen
-        + parquet/zstd writer init all cold); tens of thousands of rows
-        cross the JIT thresholds so the first real batch runs compiled
-        code. This happens before the listener accepts, so it never
-        counts against live ingest."""
-        def warm(signal: str, line: str) -> None:
-            df = self.spark.createDataFrame([(line,)], "value string")
-            env = envelopes_from_lines(df, signal, strict=False)
-            if signal == "metrics":
-                for fl in (flatten_metrics_gauge, flatten_metrics_sum,
-                           flatten_metrics_histogram,
-                           flatten_metrics_exp_histogram):
-                    fl(env).collect()
-            else:
-                FLATTEN[signal](env).collect()
-
-        threads = [threading.Thread(target=warm, args=(s, ln), daemon=True)
-                   for s, ln in self._WARM_SAMPLES.items()]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        self._warm_write_path()
-
-    def _warm_write_path(self, files: int = 8, lines: int = 8,
-                         records: int = 1000) -> None:
-        """Replicate the live seal's EXACT plan shape on scratch data.
-
-        Shape matters, not just the operators: the seal's
-        coalesce-above-scan keeps scan -> parse -> flatten -> write in
-        ONE whole-stage-codegen unit, so warming with a repartition
-        (which splits the plan at an Exchange) compiles a *different*
-        generated class and the first live batch still runs cold. This
-        mirrors `_seal_batch` statement-for-statement — coalesce, both
-        Observations, `_promote`, y/m/d append write — minus the
-        telemetry side effects (seal events, byte release) that would
-        pollute `otlp_seal_list` with a synthetic seal."""
-        import json as _json
+        """Run each signal's seal route once on a one-line sample before
+        the listener opens: the first live seal then finds the Python
+        workers started with the flattener imported, and the parquet
+        write path initialized. Writes to a scratch dir, so no seal
+        telemetry and no byte release."""
         import shutil
         import tempfile
 
-        rec = {"timeUnixNano": "1700000000000000000", "severityNumber": 9,
-               "severityText": "INFO", "body": {"stringValue": "warm line"},
-               "attributes": [{"key": "k", "value": {"stringValue": "v"}}]}
-        env = {"resourceLogs": [{
-            "resource": {"attributes": [
-                {"key": "service.name", "value": {"stringValue": "warm"}}]},
-            "scopeLogs": [{"scope": {"name": "warm"},
-                           "logRecords": [rec] * records}]}]}
-        line = _json.dumps(env, separators=(",", ":")) + "\n"
         scratch = Path(tempfile.mkdtemp(prefix="otlp_warm_"))
         try:
-            spool = scratch / "spool"
-            spool.mkdir()
-            for i in range(files):
-                (spool / f"warm-{i}.ndjson").write_text(line * lines)
-            dp = self.spark.sparkContext.defaultParallelism
-            par = max(8, dp - 2 - 2 * self.receiver.accept_workers)
-            src = (self.spark.read.format("text").load(str(spool))
-                   .coalesce(par))
-            obs = Observation()
-            src = src.observe(
-                obs, F.coalesce(F.sum(F.octet_length("value") + F.lit(1)),
-                                F.lit(0)).alias("nbytes"))
-            drop_obs = Observation()
-            df = self._promote(FLATTEN["logs"](envelopes_from_lines(
-                src, "logs", strict=False, drop_observation=drop_obs)))
-            ts = _PARTITION_TS.get(TARGET_TABLES["logs"], "time_unix_nano")
-            wobs = Observation()
-            (df.withColumn("year", F.date_format(F.col(ts), "yyyy"))
-               .withColumn("month", F.date_format(F.col(ts), "MM"))
-               .withColumn("day", F.date_format(F.col(ts), "dd"))
-               .observe(wobs, F.count(F.lit(1)).alias("rows"))
-               .write.mode("append")
-               .partitionBy("year", "month", "day")
-               .option("compression", self.compression)
-               .parquet(str(scratch / "out")))
-            assert int(wobs.get["rows"]) == files * lines * records
+            for signal, line in self._WARM_SAMPLES.items():
+                lines = self.spark.createDataFrame([(line,)], "value string")
+                flat = flat_decode.flatten_lines(lines, signal)
+                key = flat_decode.SEAL_TABLES[signal][0]
+                (self._finish(signal, flat_decode.table_rows(flat, key))
+                 .write.mode("append").option("compression", self.compression)
+                 .parquet(str(scratch / key)))
         except Exception as e:  # noqa: BLE001 — warm-up is best-effort
-            self._log_event(f"write-path warm failed: {e}", "WARN")
+            self._log_event(f"seal warm-up failed: {e}", "WARN")
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
 

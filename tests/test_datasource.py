@@ -166,48 +166,7 @@ def test_otap_format_wrong_signal_errors(ds_spark):
          .load(str(OTAP_DIR / "metrics-initial.bar")).count())
 
 
-# --- r13: columnar flatten fast path + file URI authority contract ---
-
-def test_columnar_flatten_matches_rowwise():
-    """expected_logs_columns / expected_traces_columns are the
-    DataSource hot path; they must stay value-identical (same order,
-    same values) to the row-wise oracles on every fixture envelope
-    plus a generated multi-group one."""
-    from duckdb_otlp_spark import reader_gate
-
-    gen = {"resourceLogs": [
-        {"resource": {"attributes": [
-            {"key": "service.name", "value": {"stringValue": f"s{g}"}},
-            {"key": "extra", "value": {"intValue": str(g)}}]},
-         "scopeLogs": [{"scope": {"name": f"sc{g}", "version": "2"},
-                        "logRecords": [
-             {"timeUnixNano": str(1700000000000000000 + g * 100 + i),
-              "severityNumber": 9, "severityText": "INFO",
-              "body": {"stringValue": f"m-{g}-{i}"},
-              "attributes": [{"key": "k",
-                              "value": {"doubleValue": i + 0.5}}],
-              "droppedAttributesCount": i % 2,
-              "flags": 1} for i in range(5)]}]}
-        for g in range(3)]}
-    for envs in ([gen], reader_gate.LOGS_ENVELOPES):
-        rows = reader_gate.expected_logs(envelopes=envs)
-        names, cols = reader_gate.expected_logs_columns(envs)
-        assert len(cols) == len(names)
-        assert all(len(c) == len(rows) for c in cols)
-        for i, r in enumerate(rows):
-            assert dict(zip(names, (c[i] for c in cols))) == r, i
-
-    trows = reader_gate.expected_traces(
-        envelopes=reader_gate.TRACES_ENVELOPES)
-    tnames, tcols = reader_gate.expected_traces_columns(
-        reader_gate.TRACES_ENVELOPES)
-    assert all(len(c) == len(trows) for c in tcols)
-    for i, r in enumerate(trows):
-        assert dict(zip(tnames, (c[i] for c in tcols))) == r, i
-    # empty input: zero-length columns, stable shape
-    enames, ecols = reader_gate.expected_traces_columns([])
-    assert len(ecols) == len(enames) and all(len(c) == 0 for c in ecols)
-
+# --- file URI authority contract ---
 
 def test_file_uri_remote_authority_rejected(ds_spark):
     """'file://host/path' names a remote host — must raise the explicit

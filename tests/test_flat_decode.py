@@ -1,4 +1,4 @@
-"""Flat pb decode parity gate (r14).
+"""Flat decode parity gate: protobuf reads and the live seal.
 
 The protobuf fast path (sources/flat_decode) flattens executor-side and
 must be BYTE-IDENTICAL to the generic envelope route + JVM flatten —
@@ -11,16 +11,23 @@ the UNCHANGED envelope plan (``_load_envelopes(mode='protobuf')`` +
 
 from __future__ import annotations
 
-import pytest
+import json
 
+import pytest
+from pyspark.sql import Observation
+
+from duckdb_otlp_spark import reader_gate
 from duckdb_otlp_spark.sources import flat_decode
 from duckdb_otlp_spark.sources.otlp_json import (
+    FLATTEN,
     _load_envelopes,
+    envelopes_from_lines,
     flatten_logs,
     flatten_traces,
     read_otlp_logs,
     read_otlp_traces,
 )
+from tests import fixtures as fx
 from tests.fixtures import encode_envelope_pb
 
 _NS = 1713000000000000000
@@ -301,3 +308,281 @@ def test_jackson_escape_twin(spark):
         s = strs[r["i"]]
         want = r["r"][:-1]        # strip the trailing '}'
         assert flat_decode._jstr(s) == want, (s, want, flat_decode._jstr(s))
+
+
+# ---------------------------------------------------------------------------
+# Seal route: spooled JSON lines flattened executor-side (flatten_lines),
+# refused lines through the lax JVM route — against the lax JVM route
+# (envelopes_from_lines + FLATTEN) over ALL the lines.
+# ---------------------------------------------------------------------------
+
+def _log_line(*records, resource=None, scope=None):
+    rl = {"scopeLogs": [{"logRecords": list(records)}]}
+    if resource is not None:
+        rl["resource"] = resource
+    if scope is not None:
+        rl["scopeLogs"][0]["scope"] = scope
+    return json.dumps({"resourceLogs": [rl]})
+
+
+def _span_line(*spans):
+    return json.dumps({"resourceSpans": [{"scopeSpans": [
+        {"scope": {"name": "t"}, "spans": list(spans)}]}]})
+
+
+def _metric_line(*metrics):
+    return json.dumps({"resourceMetrics": [{
+        "resource": {"attributes": [_kv("service.name",
+                                        {"stringValue": "m"})]},
+        "scopeMetrics": [{"scope": {"name": "m"}, "metrics": list(metrics)}]}]})
+
+
+_DEEP_ANY = {"kvlistValue": {"values": [{"key": "a", "value": {
+    "arrayValue": {"values": [{"kvlistValue": {"values": [
+        {"key": "b", "value": {"arrayValue": {"values": [
+            {"stringValue": "past the depth cutoff"}]}}}]}}]}}}]}}
+
+# Lines the flattener must take itself (none refused).
+_FLAT_LINES = {
+    "logs": [json.dumps(e) for e in
+             reader_gate.LOGS_ENVELOPES + fx.LOGS_SIMPLE + fx.LOGS_NULLS
+             + [fx.LOGS_DOCUMENT] + fx.TS_BOUNDARY_LOGS
+             + [_hostile_logs_env()]] + [
+        # escaped control characters everywhere strings go
+        _log_line({"timeUnixNano": str(_NS), "severityText": "a\u0001b\tc",
+                   "body": {"stringValue": "l1\nl2\u001f\"q\"\\"},
+                   "attributes": [_kv("k\u0002", {"stringValue": "\u0007"})]}),
+        # severity names, number-or-string int64s, ints in doubles
+        _log_line({"timeUnixNano": _NS, "severityNumber": "SEVERITY_NUMBER_WARN",
+                   "observedTimeUnixNano": str(_NS + 5),
+                   "flags": "1", "droppedAttributesCount": 7,
+                   "body": {"doubleValue": 5},
+                   "attributes": [_kv("i", {"intValue": 12}),
+                                  _kv("s", {"intValue": "-0"}),
+                                  _kv("z", {"intValue": "007"}),
+                                  _kv("big", {"intValue": "99999999999999999999"}),
+                                  _kv("d", {"doubleValue": 3})]},
+                  {"timeUnixNano": "-5", "severityNumber": "SEVERITY_NUMBER_ERROR2",
+                   "body": {"boolValue": False}},
+                  {"timeUnixNano": str(_NS + 1),
+                   "severityNumber": "SEVERITY_NUMBER_FATAL4"}),
+        # empty and uppercase ids, nesting past depth 3, explicit nulls
+        _log_line({"timeUnixNano": str(_NS + 2), "traceId": "",
+                   "spanId": "ABCDEF0123456789", "body": _DEEP_ANY,
+                   "attributes": None, "severityText": None},
+                  resource=None, scope=None),
+        # non-string tokens in string fields, unknown keys, duplicates,
+        # a lone NULL key, non-ASCII text
+        '{"resourceLogs":[{"scopeLogs":[{"logRecords":[{"timeUnixNano":'
+        '"1713000000000000003","severityText":42,"eventName":true,'
+        '"unknown":{"x":[1,2]},"flags":"2","flags":"3","body":'
+        '{"stringValue":"first","stringValue":"héllo ✓"},'
+        '"attributes":[{"key":null,"value":{"stringValue":"v"}}]}]}]}]}',
+        "  " + _log_line({"timeUnixNano": str(_NS + 9)}) + "  ",
+        # keys match case-sensitively; a duplicate's last value wins even
+        # when an earlier one would not convert
+        '{"resourceLogs":[{"scopeLogs":[{"logRecords":[{"TimeUnixNano":"5",'
+        '"timeUnixNano":"6","body":{"doubleValue":"abc","doubleValue":1.5}}'
+        ']}]}]}',
+    ],
+    "traces": [json.dumps(e) for e in
+               reader_gate.TRACES_ENVELOPES + fx.TRACES_SIMPLE
+               + fx.TRACES_NULLS + fx.SINGLE_TRACE
+               + [_hostile_traces_env()]] + [
+        _span_line({"traceId": "AB", "spanId": "", "name": "enum",
+                    "kind": "SPAN_KIND_SERVER",
+                    "status": {"code": "STATUS_CODE_ERROR", "message": "m"},
+                    "startTimeUnixNano": _NS, "endTimeUnixNano": str(_NS + 7),
+                    "droppedEventsCount": "2", "flags": 3000000000,
+                    "events": [{"timeUnixNano": _NS, "name": "e\u0003",
+                                "droppedAttributesCount": "9"},
+                               {"name": "no-time", "timeUnixNano": "1" * 25}],
+                    "links": [{"traceId": "CD", "spanId": "EF",
+                               "traceState": "a=\"b\"",
+                               "attributes": [_kv("x", {"doubleValue": 1.5})]}]},
+                   {"name": "only-end", "endTimeUnixNano": "100",
+                    "kind": "SPAN_KIND_CONSUMER", "status": None},
+                   {"name": "negative", "startTimeUnixNano": "-100",
+                    "endTimeUnixNano": "-300"}),
+    ],
+    "metrics": [json.dumps(e) for e in
+                reader_gate.METRICS_ENVELOPES + fx.METRICS_SIMPLE
+                + fx.METRICS_ALL_TYPES + fx.METRICS_SUMMARY_ONLY
+                + fx.METRICS_TEMPORALITY_STRINGS] + [
+        _metric_line(
+            {"name": "g", "gauge": {"dataPoints": [
+                {"timeUnixNano": _NS, "asDouble": 7, "flags": "1",
+                 "exemplars": [{"timeUnixNano": str(_NS), "asInt": 3,
+                                "spanId": "AA", "traceId": ""},
+                               {"asDouble": 2.25},
+                               {"timeUnixNano": "x1"[1:], "asInt": "1" * 25}]},
+                {"timeUnixNano": str(_NS), "asInt": "99999999999999999999"}]}},
+            {"name": "s", "sum": {"dataPoints": [
+                {"timeUnixNano": str(_NS), "asInt": 5}],
+                "aggregationTemporality": "AGGREGATION_TEMPORALITY_CUMULATIVE",
+                "isMonotonic": True}},
+            {"name": "s2", "sum": {"dataPoints": [
+                {"timeUnixNano": str(_NS), "asDouble": 0.5}]}},
+            {"name": "h", "histogram": {"dataPoints": [
+                {"timeUnixNano": str(_NS), "count": 3, "sum": 6, "min": 1,
+                 "max": 4, "bucketCounts": [1, "2", None],
+                 "explicitBounds": [1, 2.5], "exemplars": []},
+                {"timeUnixNano": str(_NS), "bucketCounts": [],
+                 "explicitBounds": []},
+                {"timeUnixNano": str(_NS)}],
+                "aggregationTemporality": "AGGREGATION_TEMPORALITY_DELTA"}},
+            {"name": "e", "exponentialHistogram": {"dataPoints": [
+                {"timeUnixNano": str(_NS), "scale": "-3", "count": "4",
+                 "positive": {"offset": "-2", "bucketCounts": []},
+                 "zeroThreshold": 0},
+                {"timeUnixNano": str(_NS), "positive": {},
+                 "negative": {"bucketCounts": [5, "6"]}, "zeroCount": 2}]}},
+            {"name": "both", "gauge": {"dataPoints": [
+                {"timeUnixNano": str(_NS), "asDouble": 1.0}]},
+             "sum": {"dataPoints": [{"timeUnixNano": str(_NS), "asInt": "1"}]}},
+            {"name": "empty-shape", "gauge": {}}),
+    ],
+}
+
+# Lines the flattener must refuse: the lax JVM route handles them.
+_REFUSED_LINES = {
+    "logs": [
+        '{"resourceLogs": [',                        # truncated body
+        '{"resourceLogs":"x"}',                      # mistyped spine
+        '{"resourceLogs":null}', "{}", "[]", "not json",
+        _log_line({"timeUnixNano": str(_NS), "body": {"doubleValue": 1.0}})
+        .replace("1.0", "NaN"),                      # NaN token
+        _log_line({"timeUnixNano": str(_NS), "severityText": 1.5}),
+        _log_line({"timeUnixNano": str(_NS), "severityText": {"a": 1}}),
+        _log_line({"timeUnixNano": str(_NS), "severityNumber": "SEVERITY_X"}),
+        _log_line({"timeUnixNano": str(_NS), "flags": " 5"}),
+        _log_line({"timeUnixNano": "+5"}),
+        _log_line({"timeUnixNano": "1e3"}),
+        _log_line({"timeUnixNano": str(_NS), "body": {"boolValue": "true"}}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            _kv("big", {"doubleValue": 1.2345678901234567e17})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            _kv("sub", {"doubleValue": 5e-324})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            {"value": {"stringValue": "a"}}, _kv("b", {"stringValue": "c"})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [None]}),
+        _log_line(None),
+        _log_line({"timeUnixNano": str(_NS), "traceId": "ÄB"}),
+        _log_line({"timeUnixNano": str(_NS),
+                   "body": {"stringValue": "😀"}}),
+        _log_line({"timeUnixNano": str(_NS), "body": {"stringValue": "\ud800"}}),
+        _log_line({"timeUnixNano": str(_NS), "severityText": 7})
+        .replace("7", "1" * 1001),                   # Jackson number cap
+        _log_line({"timeUnixNano": str(_NS), "k" * 50_001: 1}),  # name cap
+        _log_line({"timeUnixNano": str(_NS), "zz": 0})
+        .replace("0", "[" * 1100 + "]" * 1100),      # nesting cap
+        _log_line({"timeUnixNano": str(_NS)}) + " trailing",
+        "\t",
+    ],
+    "traces": [
+        _span_line({"name": "k", "kind": "SPAN_KIND_BOGUS"}),
+        _span_line({"name": "ev", "events": [None]}),
+        _span_line({"name": "c", "status": {"code": "2.0"}}),
+        '{"resourceSpans":[{"scopeSpans":[{"spans":[{"name":"x"}]}]}',
+        '{"resourceSpans":5}', "not json",
+    ],
+    "metrics": [
+        _metric_line({"name": "n", "gauge": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "asDouble": 1.0}]}})
+        .replace("1.0", "Infinity"),
+        _metric_line({"name": "t", "sum": {"dataPoints": [],
+                                           "aggregationTemporality": "X"}}),
+        _metric_line({"name": "b", "histogram": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "bucketCounts": ["1.5"]}]}}),
+        _metric_line({"name": "x", "gauge": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "exemplars": [
+                {"asDouble": 1e300}]}]}}),
+        _metric_line({"name": "o", "gauge": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "asDouble": 1}]}})
+        .replace('"asDouble": 1', '"asDouble": ' + "1" * 400),
+        _metric_line(None), "{}", '{"resourceMetrics": [',
+    ],
+}
+
+
+def _lines_df(spark, lines):
+    return spark.createDataFrame([(ln,) for ln in lines], "value string")
+
+
+def _seal_route(flat, signal, key, drop_obs=None):
+    """What the seal writes for table ``key``: the flattener's rows plus
+    the lax JVM route's rows for the refused lines."""
+    lax = envelopes_from_lines(flat_decode.refused_lines(flat), signal,
+                               drop_observation=drop_obs)
+    return flat_decode.table_rows(flat, key).unionByName(FLATTEN[key](lax))
+
+
+@pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+def test_seal_route_matches_lax_jvm_route(spark, signal):
+    flat_lines, refused = _FLAT_LINES[signal], _REFUSED_LINES[signal]
+    lines = _lines_df(spark, flat_lines + refused + [" ", ""]).coalesce(2)
+    flat = flat_decode.flatten_lines(lines, signal).persist()
+    try:
+        tags = flat.select("__table", "__line").collect()
+        assert sorted(bytes(r[1]).decode() for r in tags
+                      if r[0] == -1) == sorted(refused)
+        # every table of the corpus is non-empty, so the parity below is
+        # not vacuous
+        keys = flat_decode.SEAL_TABLES[signal]
+        assert {r[0] for r in tags} >= set(range(len(keys)))
+        control_env = envelopes_from_lines(lines, signal)
+        for key in keys:
+            control = FLATTEN[key](control_env)
+            assert flat_decode.table_rows(flat, key).schema == control.schema
+            # equal row multisets, compared driver-side: an exceptAll
+            # plan carries the JVM flatten's expression trees several
+            # times over and grew the test JVM's heap by gigabytes
+            got = _rows(_seal_route(flat, signal, key))
+            assert got == _rows(control), key
+    finally:
+        flat.unpersist()
+
+
+@pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+def test_seal_route_counts_the_same_malformed_lines(spark, signal):
+    lines = _lines_df(spark, _FLAT_LINES[signal] + _REFUSED_LINES[signal])
+    want, got = Observation(), Observation()
+    key = flat_decode.SEAL_TABLES[signal][0]
+    FLATTEN[key](envelopes_from_lines(lines, signal, drop_observation=want)
+                 ).count()
+    _seal_route(flat_decode.flatten_lines(lines, signal), signal, key,
+                drop_obs=got).count()
+    assert got.get["malformed"] == want.get["malformed"] > 0
+
+
+@pytest.mark.parametrize("signal,line,text", [
+    ("logs", _log_line({"timeUnixNano": "9223372036854775808",
+                        "body": {"stringValue": "x"}}),
+     "OTLP parse error: timestamp overflows int64 range: "
+     "9223372036854775808"),
+    ("traces", _span_line({"name": "x", "endTimeUnixNano": "1",
+                           "startTimeUnixNano": "18446744073709551615"}),
+     "OTLP parse error: timestamp overflows int64 range: "
+     "18446744073709551615"),
+    ("traces", _span_line({"name": "d",
+                           "startTimeUnixNano": "-9223372036854775808",
+                           "endTimeUnixNano": "9223372036854775807"}),
+     "ARITHMETIC_OVERFLOW"),
+])
+def test_seal_route_raises_the_same_error(spark, signal, line, text):
+    lines = _lines_df(spark, [_FLAT_LINES[signal][0], line])
+    for df in (FLATTEN[signal](envelopes_from_lines(lines, signal)),
+               _seal_route(flat_decode.flatten_lines(lines, signal), signal,
+                           signal)):
+        with pytest.raises(Exception, match=text):
+            df.collect()
+
+
+def test_seal_route_plan_has_no_jvm_flatten(spark):
+    lines = _lines_df(spark, _FLAT_LINES["logs"])
+    df = flat_decode.table_rows(flat_decode.flatten_lines(lines, "logs"),
+                                "logs")
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert "MapInArrow" in plan
+    assert "from_json" not in plan and "Generate" not in plan

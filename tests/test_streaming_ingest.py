@@ -567,21 +567,103 @@ def test_seal_counts_malformed_dropped_lines(spark, tmp_path_factory):
     srv = _get(info["uri"])
     try:
         url = srv.uri.url
-        # one good envelope + one '{'-prefixed but truncated body
+        # one good envelope + '{'-prefixed bodies the seal's parse
+        # refuses: a truncated body and a mistyped spine are dropped, a
+        # NaN token parses (Jackson allows it) and seals with a NULL body
         assert _post(url, "/v1/logs", LOGS_SIMPLE[0])[0] == 202
-        code, _ = _post(url, "/v1/logs", b'{"resourceLogs": [', )
-        assert code == 202          # edge accepts: prefix check only
+        nan_body = json.dumps(LOGS_SIMPLE[1]).replace(
+            '{"stringValue": "High memory usage"}', '{"doubleValue": NaN}')
+        for body in (b'{"resourceLogs": [', b'{"resourceLogs":"x"}',
+                     nan_body.encode()):
+            code, _ = _post(url, "/v1/logs", body)
+            assert code == 202      # edge accepts: prefix check only
         otlp_flush(spark, srv.uri.canonical)
 
-        assert srv.seal_malformed_total == 1
+        assert srv.seal_malformed_total == 2
         lst = otlp_server_list(spark).collect()
         me = [r for r in lst if r["uri"] == srv.uri.canonical][0]
-        assert me["seal_malformed_lines"] == 1
+        assert me["seal_malformed_lines"] == 2
         logline = [r for r in otlp_server_log(spark, srv.uri.canonical).collect()
                    if "malformed" in r["message"]]
         assert logline and logline[0]["level"] == "WARN"
-        # the good envelope still sealed
+        # the good envelope and the NaN one still sealed
         logs = spark.read.parquet(str(srv.export_root / "otlp_logs"))
-        assert logs.count() == 1
+        assert sorted(logs.select("body").collect(), key=str) == \
+            [("Application started",), (None,)]
     finally:
         otlp_stop(spark, info["uri"], drain=False)
+
+
+def test_seal_refused_metrics_lines_take_the_jvm_route(spark, tmp_path_factory):
+    """A metrics body carrying a NaN point passes the edge (it only
+    counts skipped_nan_points) but not the seal's executor-side
+    flattener, whose json.loads refuses non-finite tokens; the seal
+    sends that line through the lax JVM route, which parses it like
+    any other. Catalog sink: the flattener's rows and the refused
+    line's rows of each table land in ONE snapshot."""
+    work = tmp_path_factory.mktemp("refused_metrics")
+    row = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                     disable_auth=True, seal_max_age_ms=500, sink="catalog",
+                     iceberg_export=False, warm_start=False)
+    info = row.collect()[0]
+    from duckdb_otlp_spark.streaming.server import _get
+    srv = _get(info["uri"])
+    try:
+        # one NDJSON body: both lines land in the same seal
+        nan_line = json.dumps(METRICS_SIMPLE[0]).replace(
+            "524288000.0", "NaN")
+        body = (json.dumps(METRICS_SIMPLE[0]) + "\n" + nan_line).encode()
+        assert _post(srv.uri.url, "/v1/metrics", body, token=None,
+                     ctype="application/x-ndjson")[0] == 202
+        otlp_flush(spark, srv.uri.canonical)
+        gauge = srv.read_table("otlp_metrics_gauge")
+        values = sorted(r["double_value"] for r in gauge.collect())
+        assert len(values) == 2 and values[0] == 524288000.0
+        assert values[1] != values[1]            # the NaN point sealed
+        for table in ("otlp_metrics_sum", "otlp_metrics_histogram"):
+            assert srv.read_table(table).count() == 2
+        assert srv.seal_malformed_total == 0
+        # no snapshot ever held just one of the two lines
+        counts = {srv.read_table("otlp_metrics_gauge",
+                                 snapshot_id=snap["sequence"]).count()
+                  for snap in srv.catalog.snapshots()}
+        assert counts <= {0, 2}, counts
+    finally:
+        otlp_stop(spark, info["uri"], drain=False)
+
+
+def test_package_zip_shipped_once_and_never_stale(tmp_path, monkeypatch):
+    """The three seal threads ship the package to Python workers
+    concurrently on a server's first seal: it must go out exactly once,
+    built from this checkout even when a recycled pid left another
+    version's zip at the same temp path."""
+    import os
+    import tempfile
+    import threading
+    import types
+    import zipfile
+    from pathlib import Path
+
+    from duckdb_otlp_spark import session
+    from duckdb_otlp_spark.sources import flat_decode
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SHIPPED_SESSIONS", set())
+    monkeypatch.setattr(session, "_PACKAGE_ZIP", [])
+    stale = tmp_path / f"duckdb_otlp_spark_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr("duckdb_otlp_spark/sources/flat_decode.py", "stale")
+    shipped: list[str] = []
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(
+        applicationId="app-zip-test", addPyFile=shipped.append))
+    threads = [threading.Thread(target=session.ensure_package_on_workers,
+                                args=(fake,)) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert shipped == [str(stale)]
+    with zipfile.ZipFile(stale) as zf:
+        assert zf.read("duckdb_otlp_spark/sources/flat_decode.py") == \
+            Path(flat_decode.__file__).read_bytes()
