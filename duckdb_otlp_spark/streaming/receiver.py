@@ -4,8 +4,9 @@ spooling — the receiver half of the reference's ``otlp_serve``
 
 The receiver is deliberately outside Spark (SURVEY.md §3.2): it accepts
 OTLP/JSON POSTs, applies the reference's edge contracts, and appends
-accepted bodies as NDJSON into a per-signal spool directory that the
-Structured Streaming seal job tails. Durability contract preserved:
+accepted bodies as NDJSON into a per-signal spool directory whose
+segments the server's per-signal sealer threads seal and then delete.
+Durability contract preserved:
 202 means buffered-in-spool, not committed — the same at-most-once
 window the reference documents (reference: serve.md:363-369).
 
@@ -15,7 +16,7 @@ the kernel load-balances connections across them. This mirrors the
 reference's native listener threads (reference: otlp_server_http.cpp
 uses a civetweb thread pool): a single-process Python receiver shares
 the Spark driver's GIL, and the driver-side seal work (py4j round
-trips, foreachBatch bookkeeping) was measured to cut acceptance from
+trips, seal bookkeeping) was measured to cut acceptance from
 ~220k logs/s standalone to ~85k logs/s in-process. Admission state and
 telemetry counters live in lock-guarded shared memory so every worker
 sees one 512 MiB budget and ``otlp_server_list`` sees exact counts
@@ -88,7 +89,8 @@ _OTAP_CTYPES = ("application/vnd.otel.arrow", "application/x-otap")
 # trigger yields ~15 tasks with 8 MiB segments — half a 32-thread
 # executor idle through every seal — vs ~40 with 3 MiB (r8: measured
 # zero-503 full-duration gate after the change, from ~1-13% shed
-# before). cleanSource bounds the file count either way.
+# before). Each seal deletes the segments it sealed, which bounds the
+# file count either way.
 DEFAULT_SEGMENT_ROTATE_BYTES = 3 * 1024 * 1024
 DEFAULT_SEGMENT_ROTATE_MS = 500
 
@@ -97,8 +99,8 @@ class _SpoolSegmentWriter:
     """Appends accepted envelope lines to a per-signal rolling segment.
 
     A segment is written as a dot-prefixed temp file (hidden from Spark
-    file sources) and renamed visible on rotation, so the streaming
-    seal never observes a partially-written segment — the same
+    file sources) and renamed visible on rotation, so the seal never
+    observes a partially-written segment — the same
     atomic-visibility contract the old one-file-per-request spool had,
     at ~1/100th the file count."""
 

@@ -1,27 +1,30 @@
 """Live-ingest engine: the ``otlp_serve`` / ``otlp_flush`` / ``otlp_stop`` /
-``otlp_server_list`` / ``otlp_seal_list`` surface re-expressed on
-Structured Streaming (reference: src/otlp_start_stop.cpp:41-573).
+``otlp_server_list`` / ``otlp_seal_list`` surface
+(reference: src/otlp_start_stop.cpp:41-573).
 
-Mapping (SURVEY.md §3.2): the reference's group-commit "seal" — a single
-writer thread swapping buffers on a 128 MiB / 5 s trigger — becomes a
-micro-batch: ``readStream`` tails the receiver's spool directory,
-``foreachBatch`` parses + flattens the spooled JSON lines executor-side
-in one ``mapInArrow`` pass (``sources/flat_decode.flatten_lines``) and
-appends to the six signal tables; the micro-batch transaction is the
-seal. Lines the flattener refuses (malformed JSON, off-schema shapes,
-values outside its exact domain) take the file readers' lax JVM plan
-instead, built only for batches that hold such a line.
-``otlp_flush`` = ``processAllAvailable``; the parquet-export sink is
-at-least-once per signal (blind append), same contract as the
-reference's COPY path (reference: otlp_server.cpp:963-1107).
+Mapping (SURVEY.md §3.2): the reference's group-commit "seal" — a sealer
+loop that seals on a 5 s age or when ``otlp_flush`` asks
+(reference: otlp_server.cpp:815-950, 1438-1440) — is one timer thread
+per signal. A tick lists the signal's visible spool segments, reads
+exactly those with ``spark.read.text``, parses + flattens the lines
+executor-side in one ``mapInArrow`` pass
+(``sources/flat_decode.flatten_lines``), appends to the signal's tables
+and only then deletes the segments; a failed seal leaves them for the
+next tick or flush to replay. Lines the flattener refuses (malformed
+JSON, off-schema shapes, values outside its exact domain) take the file
+readers' lax JVM plan instead, built only for batches that hold such a
+line. ``otlp_flush`` rotates the open segments visible and seals every
+signal at once; the parquet-export sink is at-least-once per signal
+(blind append), same contract as the reference's COPY path
+(reference: otlp_server.cpp:963-1107).
 
 A metrics request fans out to <=4 shape tables from ONE parse — the
 flat frame is cached for the four writes, mirroring
 ``otlp_transform_metrics_all`` (reference: read_otlp.cpp:261-304).
 
-Scale notes: each signal is an independent streaming query (the
-reference's single-writer mutex exists because DuckLake needs one
-writer; Spark sinks are per-table, so signal queries run concurrently).
+Scale notes: each signal seals independently (the reference's
+single-writer mutex exists because DuckLake needs one writer; Spark
+sinks are per-table, so signal seals run concurrently).
 Partitioned year/month/day layout matches the reference's export tree
 and gives partition pruning to every time-bounded query.
 """
@@ -31,9 +34,11 @@ from __future__ import annotations
 import itertools
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +65,8 @@ SEAL_HISTORY_LIMIT = 4096
 # reference: otlp_server.cpp:53-58 maintenance cadence (every 32 seals)
 DEFAULT_MAINTENANCE_EVERY_SEALS = 32
 
+_SIGNALS = ("logs", "traces", "metrics")
+
 _PARTITION_TS = {  # reference: otlp_server.cpp:105-110
     "otlp_traces": "start_time_unix_nano",
 }
@@ -84,7 +91,7 @@ class SealEvent:
 
 
 class OtlpSparkServer:
-    """One live listener: HTTP receiver + per-signal streaming seal jobs."""
+    """One live listener: HTTP receiver + one sealer thread per signal."""
 
     def __init__(self, spark: SparkSession, uri: str, *,
                  work_dir: str | Path | None = None,
@@ -172,7 +179,7 @@ class OtlpSparkServer:
                     f"(operators.pipeline.contamination_screen) instead")
             # precompiled ONCE: a Column is unbound, so the sorted-gram
             # py4j literal transfer happens here, not on every seal of
-            # every micro-batch (the BandProbe does the same)
+            # seal (the BandProbe does the same)
             self._contamination_col = contamination_mark(
                 F.col("body"), flag_contamination_grams,
                 max_overlap=contamination_max_overlap)
@@ -207,7 +214,16 @@ class OtlpSparkServer:
             transport=transport,
             accept_workers=accept_workers,
             stall_after_ms=STALL_SEAL_CYCLES * seal_max_age_ms)
-        self.queries: dict[str, Any] = {}
+        self._sealers: list[threading.Thread] = []
+        self._stopping = threading.Event()
+        # serializes a signal's timer seal with a flush's seal of it
+        self._seal_locks = {s: threading.Lock() for s in _SIGNALS}
+        # per-signal batch ids; a replay after a failed seal reuses its id
+        self._batch_ids = dict.fromkeys(_SIGNALS, 0)
+        self._failed: set[str] = set()
+        # concurrent flushes share the receiver's worker pipes: interleaved
+        # recv()s split one rotate ack's framing and hang both flushes
+        self._rotate_lock = threading.Lock()
         # observability log channel — the analog of the reference writing
         # server events through the duckdb_otlp log type into duckdb_logs
         # (reference: otlp_server.cpp:369-378, src/include/otlp_log.hpp);
@@ -404,8 +420,8 @@ class OtlpSparkServer:
 
     def _schedule_maintenance(self) -> None:
         """Run cadence maintenance on a daemon thread, NOT inline in the
-        seal: a synchronous compaction inside foreachBatch blocks the
-        micro-batch loop for the whole rewrite, so every Nth seal would
+        seal: a synchronous compaction inside the seal blocks the
+        signal's sealer for the whole rewrite, so every Nth seal would
         stall live ingest until the bounded buffer fills and the edge
         starts shedding 503s. Off-thread, the seal only pays the thread
         spawn; `_maintenance_busy` still guarantees single-flight, and
@@ -518,7 +534,7 @@ class OtlpSparkServer:
         (table, frame) pairs and may name a table twice (its clean rows,
         then its refused lines' rows); all staged files land in the one
         commit. A failure before commit leaves only unreferenced staged
-        files (vacuumable), and the streaming retry replays the batch."""
+        files (vacuumable), and the next seal replays the batch."""
         t0 = time.perf_counter()
         add: dict[str, list] = {}
         schemas: dict[str, str] = {}
@@ -605,99 +621,76 @@ class OtlpSparkServer:
             if len(keys) > 1:
                 env.unpersist()
 
-    def _seal_batch(self, signal: str):
+    def _seal_lines(self, signal: str, batch_df: DataFrame,
+                    batch_id: int) -> None:
+        """The seal body over one batch of spooled lines."""
         keys = flat_decode.SEAL_TABLES[signal]
         tables = [TARGET_TABLES[k] for k in keys]
-
-        def seal(batch_df: DataFrame, batch_id: int) -> None:
-            # Streaming triggers can hand over an empty batch (stream
-            # start, or a signal with no traffic); short-circuit before
-            # planning the flatten and the table appends of nothing.
-            # (inputFiles() is NOT usable here: the micro-batch DF hides
-            # its file list, returning [] even for non-empty batches —
-            # isEmpty's limit-1 job is the cheapest correct check.)
-            # The check is GATED on THIS signal's admission gauge: a
-            # non-empty batch implies un-released spooled bytes for its
-            # OWN signal, so per-signal buffered == 0 proves the batch
-            # CAN be empty and is worth probing, while a busy signal
-            # skips the probe — at a 2 s cadence the limit-1 job was
-            # costing ~5% of the seal path's 175k logs/s capacity
-            # budget. The gauge must be per-signal (not the global
-            # sum): a logs-only sustained run would otherwise disable
-            # the guard for the idle traces/metrics queries, whose
-            # empty batches then pay the full dead-work path the guard
-            # exists to skip. A raced empty batch on the busy path just
-            # runs a sub-second empty plan.
-            if (self.receiver.buffered_bytes_by_signal()[signal] == 0
-                    and batch_df.isEmpty()):
-                return
-            # The streaming file source plans one scan task per spool
-            # segment: coalesce packs a many-tiny-segment backlog into
-            # at most one scan task per core. No repartition — receiver
-            # segments are size-capped (3 MiB rotation, sized so one
-            # seal-cadence batch fills the executor — receiver.py
-            # DEFAULT_SEGMENT_ROTATE_BYTES), so scan tasks
-            # are already balanced, and shuffling the raw spool lines
-            # was measured to DOUBLE the seal wall time (15.5 s vs
-            # 7.3 s for a 2M-row batch) versus parsing in place.
-            # Edge co-location headroom: the accept workers are Python
-            # processes sharing this host with the executor threads (in
-            # local mode, and on any edge node running both roles). A
-            # seal that schedules one scan task per core starves them —
-            # measured: a seal overlapping the accept burst dragged
-            # acceptance from 1.4 s to 10.9 s for the same 2M records,
-            # a 3-task reservation restored it. Reserving a few cores
-            # costs the seal <15% when uncontended and removes the
-            # collapse entirely. On a real cluster where receivers run
-            # on separate edge nodes, defaultParallelism counts executor
-            # cores (not the edge host), so the reservation is noise.
-            dp = self.spark.sparkContext.defaultParallelism
-            par = max(8, dp - 2 - 2 * self.receiver.accept_workers)
-            batch_df = batch_df.coalesce(par)
-            # the spooled-byte sum rides the seal's write job as an
-            # Observation instead of costing its own aggregation job
-            obs = Observation()
-            # +1 per line: admission reserved the newline terminator too,
-            # so the release must match byte-for-byte or the per-signal
-            # buffered gauges never return to zero
-            batch_df = batch_df.observe(
-                obs, F.coalesce(F.sum(F.octet_length("value") + F.lit(1)),
-                                F.lit(0)).alias("nbytes"))
-            # one Python pass parses and flattens every line; the
-            # refused-line count rides the same job (an Observation,
-            # unlike an accumulator, never re-counts retried tasks)
-            refused = Observation()
-            flat = flat_decode.flatten_lines(batch_df, signal).observe(
-                refused, F.count("__line").alias("lines"))
+        # The spool scan plans about one task per segment: coalesce
+        # packs a many-tiny-segment backlog into at most one scan task
+        # per core. No repartition — receiver segments are size-capped
+        # (3 MiB rotation, sized so one seal-cadence batch fills the
+        # executor — receiver.py DEFAULT_SEGMENT_ROTATE_BYTES), so scan
+        # tasks are already balanced, and shuffling the raw spool lines
+        # was measured to DOUBLE the seal wall time (15.5 s vs 7.3 s
+        # for a 2M-row batch) versus parsing in place.
+        # Edge co-location headroom: the accept workers are Python
+        # processes sharing this host with the executor threads (in
+        # local mode, and on any edge node running both roles). A
+        # seal that schedules one scan task per core starves them —
+        # measured: a seal overlapping the accept burst dragged
+        # acceptance from 1.4 s to 10.9 s for the same 2M records,
+        # a 3-task reservation restored it. Reserving a few cores
+        # costs the seal <15% when uncontended and removes the
+        # collapse entirely. On a real cluster where receivers run
+        # on separate edge nodes, defaultParallelism counts executor
+        # cores (not the edge host), so the reservation is noise.
+        dp = self.spark.sparkContext.defaultParallelism
+        par = max(8, dp - 2 - 2 * self.receiver.accept_workers)
+        batch_df = batch_df.coalesce(par)
+        # the spooled-byte sum rides the seal's write job as an
+        # Observation instead of costing its own aggregation job
+        obs = Observation()
+        # +1 per line: admission reserved the newline terminator too,
+        # so the release must match byte-for-byte or the per-signal
+        # buffered gauges never return to zero
+        batch_df = batch_df.observe(
+            obs, F.coalesce(F.sum(F.octet_length("value") + F.lit(1)),
+                            F.lit(0)).alias("nbytes"))
+        # one Python pass parses and flattens every line; the
+        # refused-line count rides the same job (an Observation,
+        # unlike an accumulator, never re-counts retried tasks)
+        refused = Observation()
+        flat = flat_decode.flatten_lines(batch_df, signal).observe(
+            refused, F.count("__line").alias("lines"))
+        if len(keys) > 1:
+            flat = flat.persist()  # four metric tables, one pass
+        malformed = Observation()
+        fallback = self._refused_parts(signal, flat, refused, malformed)
+        try:
+            parts = itertools.chain(
+                ((TARGET_TABLES[k],
+                  self._finish(signal, flat_decode.table_rows(flat, k)))
+                 for k in keys),
+                fallback)
+            if self.catalog is not None:
+                self._seal_catalog(tables, parts, batch_id)
+            else:
+                for table, df in parts:
+                    self._write_table(df, table, batch_id)
+        finally:
+            fallback.close()
             if len(keys) > 1:
-                flat = flat.persist()  # four metric tables, one pass
-            malformed = Observation()
-            fallback = self._refused_parts(signal, flat, refused, malformed)
-            try:
-                parts = itertools.chain(
-                    ((TARGET_TABLES[k],
-                      self._finish(signal, flat_decode.table_rows(flat, k)))
-                     for k in keys),
-                    fallback)
-                if self.catalog is not None:
-                    self._seal_catalog(tables, parts, batch_id)
-                else:
-                    for table, df in parts:
-                        self._write_table(df, table, batch_id)
-            finally:
-                fallback.close()
-                if len(keys) > 1:
-                    flat.unpersist()
-            self.receiver.release_sealed(int(obs.get["nbytes"]), signal)
-            dropped = (int(malformed.get["malformed"])
-                       if int(refused.get["lines"]) else 0)
-            if dropped:
-                self.seal_malformed_total += dropped
-                self._log_event(
-                    f"seal dropped {dropped} malformed {signal} line(s) "
-                    f"(accepted at edge, unparseable at seal) batch={batch_id}",
-                    "WARN")
-        return seal
+                flat.unpersist()
+        self.receiver.release_sealed(int(obs.get["nbytes"]), signal)
+        dropped = (int(malformed.get["malformed"])
+                   if int(refused.get["lines"]) else 0)
+        if dropped:
+            self.seal_malformed_total += dropped
+            self._log_event(
+                f"seal dropped {dropped} malformed {signal} line(s) "
+                f"(accepted at edge, unparseable at seal) batch={batch_id}",
+                "WARN")
 
     _WARM_SAMPLES = {
         "logs": ('{"resourceLogs":[{"scopeLogs":[{"logRecords":'
@@ -753,53 +746,60 @@ class OtlpSparkServer:
         if self.uri.port == 0:
             self.uri = OtlpUri(self.uri.scheme, self.uri.host,
                                self.receiver.port, self.uri.ipv6)
-        for signal in ("logs", "traces", "metrics"):
-            self.queries[signal] = self._start_query(signal)
+        for signal in _SIGNALS:
+            sealer = threading.Thread(target=self._sealer, args=(signal,),
+                                      name=f"otlp-seal-{signal}", daemon=True)
+            sealer.start()
+            self._sealers.append(sealer)
         self._log_event(f"listening: uri={self.uri.canonical} "
                         f"transport={self.receiver.transport} sink={self.sink}")
 
-    def _start_query(self, signal: str):
-        # cleanSource=delete: sealed spool segments are deleted once
-        # their micro-batch COMMITS (a failed batch replays from the
-        # same files). Without it the spool directory grows for the
-        # server's whole lifetime — the per-trigger source listing
-        # becomes O(segments ever spooled) and a long-running edge
-        # eventually exhausts the disk with data that's already in
-        # parquet (observed: 2.2 GB of dead segments after a 90 s
-        # 175k logs/s run).
-        src = (self.spark.readStream
-               .format("text")
-               .option("cleanSource", "delete")
-               .load(str(self.spool_dir / signal)))
-        return (src.writeStream
-                .queryName(f"otlp_seal_{signal}_{self.uri.port}")
-                .foreachBatch(self._seal_batch(signal))
-                .option("checkpointLocation",
-                        str(self.work_dir / "checkpoints" / signal))
-                .trigger(processingTime=f"{self.seal_max_age_ms} milliseconds")
-                .start())
-
-    def _revive_queries(self) -> None:
-        """Rebuild any seal stream its last micro-batch killed — the
-        analog of the reference restoring unsealed rows and rebuilding a
-        wedged connection after a seal failure (reference:
-        otlp_server.cpp:1389-1436). The new query resumes from the SAME
-        checkpoint, so the failed batch replays: no spooled row is lost;
-        the parquet sink's blind append stays at-least-once, the catalog
-        sink's staged-then-commit stays all-or-nothing (a failed seal
-        left only unreferenced staged files)."""
-        for signal, q in list(self.queries.items()):
-            if q.exception() is None:
-                continue
+    def _sealer(self, signal: str) -> None:
+        """Seal ``signal`` on wall-clock multiples of the seal age (the
+        phase Spark's processing-time scheduling keeps, so a client can
+        time its sends between seals); a seal that overruns its interval
+        is followed at once by the next."""
+        age = self.seal_max_age_ms / 1000
+        while True:
+            due = (time.time() // age + 1) * age
             try:
-                q.stop()
-            except Exception:  # noqa: BLE001 — already dead
-                pass
-            self.queries[signal] = self._start_query(signal)
-            with self._lock:
-                self.seal_restarts_total += 1
-            self._log_event(f"seal stream revived after failure: "
-                            f"signal={signal}", "WARN")
+                self._seal(signal)
+            except Exception as e:  # noqa: BLE001 — the next tick replays
+                self._log_event(f"seal tick failed: signal={signal} "
+                                f"error={e}", "WARN")
+            if self._stopping.wait(max(0.0, due - time.time())):
+                return
+
+    def _seal(self, signal: str) -> None:
+        """Seal every visible spool segment of ``signal`` once. Without
+        segments it returns before any Spark job; otherwise it runs the
+        seal body over exactly the listed segments and deletes them only
+        after the writes and the catalog commit return. A failed seal
+        leaves them in place, so the next tick or flush replays them
+        under the same batch id — the analog of the reference restoring
+        unsealed rows after a seal failure (reference:
+        otlp_server.cpp:1389-1436): no spooled row is lost; the parquet
+        sink's blind append stays at-least-once, the catalog sink's
+        staged-then-commit stays all-or-nothing."""
+        with self._seal_locks[signal]:
+            # the one listing: a directory root lists on the driver (no
+            # parallel-listing job), and the frame reads exactly the
+            # files it listed
+            lines = self.spark.read.text(str(self.spool_dir / signal))
+            segments = lines.inputFiles()
+            if not segments:
+                return
+            if signal in self._failed:
+                with self._lock:
+                    self.seal_restarts_total += 1
+                self._log_event(f"seal revived after failure: "
+                                f"signal={signal}", "WARN")
+            self._failed.add(signal)
+            self._seal_lines(signal, lines, self._batch_ids[signal])
+            self._failed.discard(signal)
+            self._batch_ids[signal] += 1
+            for uri in segments:
+                Path(unquote(urlparse(uri).path)).unlink(missing_ok=True)
 
     def _ready(self) -> bool:
         """Degrade /readyz when sealing stalls
@@ -813,34 +813,18 @@ class OtlpSparkServer:
 
     def flush(self) -> dict[str, Any]:
         """Synchronous seal of everything spooled (reference otlp_flush,
-        otlp_start_stop.cpp:523-573).
-
-        The three signal queries drain concurrently: each
-        ``processAllAvailable`` blocks through at least one trigger
-        cycle even when that signal's spool is empty, so a sequential
-        drain pays ~2 trigger intervals of dead wait."""
+        otlp_start_stop.cpp:523-573; FlushNow, otlp_server.cpp:1438-1440):
+        open segments rotate visible, then each signal seals now, the
+        three concurrently. A signal's seal waits only for its own
+        in-flight timer seal; the first seal error is re-raised."""
         before = self.sealed_rows_total
-        self.receiver.rotate_all()  # partial spool segments become sealable
-        self._revive_queries()      # a failed seal must not strand its spool
-        errors: list[BaseException] = []
-
-        def drain(q) -> None:
-            try:
-                q.processAllAvailable()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errors.append(e)
-
-        threads = [threading.Thread(target=drain, args=(q,), daemon=True)
-                   for q in self.queries.values()]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errors:
-            raise errors[0]
-        # flush is the sync point: seals scheduled during the drain may
-        # have kicked off async compaction — callers that flush-then-read
-        # must see its result, not race it
+        with self._rotate_lock:  # partial spool segments become sealable
+            self.receiver.rotate_all()
+        with ThreadPoolExecutor(len(_SIGNALS)) as pool:
+            list(pool.map(self._seal, _SIGNALS))
+        # flush is the sync point: its seals may have kicked off async
+        # compaction — callers that flush-then-read must see its result,
+        # not race it
         self._wait_maintenance_idle()
         return {"status": "ok", "sealed_rows": self.sealed_rows_total - before,
                 "seals_total": self._seal_seq}
@@ -849,6 +833,9 @@ class OtlpSparkServer:
         """Stop listener, drain spool (3 attempts), report dropped rows
         (reference otlp_stop, otlp_start_stop.cpp:304-346)."""
         self.receiver.stop()
+        self._stopping.set()
+        for sealer in self._sealers:
+            sealer.join()
         if drain:
             for _ in range(3):
                 try:
@@ -859,11 +846,6 @@ class OtlpSparkServer:
         dropped = self.receiver.buffered_bytes
         self._log_event(f"stopped: dropped_bytes={dropped}",
                         "WARN" if dropped else "INFO")
-        for q in self.queries.values():
-            try:
-                q.stop()
-            except Exception:  # noqa: BLE001 — JVM may already be gone at exit
-                pass
         if self._near_dup_probe is not None:
             try:
                 self._near_dup_probe.unpersist()
@@ -1025,9 +1007,7 @@ def otlp_seal_list(spark: SparkSession, uri: str) -> DataFrame:
     server = _get(uri)
     with server._lock:
         rows = [vars(e).copy() for e in server.seal_history]
-    if not rows:
-        return spark.createDataFrame(
-            [], schema=("seal_sequence long, table string, rows long, "
-                        "batch_id long, append_ms double, commit_ms double, "
-                        "status string, error string, unix_ms long"))
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(
+        rows, schema=("seal_sequence long, table string, rows long, "
+                      "batch_id long, append_ms double, commit_ms double, "
+                      "status string, error string, unix_ms long"))

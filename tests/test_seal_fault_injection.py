@@ -2,8 +2,8 @@
 durability contracts hold — the analog of the reference's seal harness
 (reference: test/cpp/test_seal_harness.cpp, otlp_server.cpp:1389-1436):
 
-- no spooled row is lost: the revived stream replays the failed
-  micro-batch from its checkpoint;
+- no spooled row is lost: a failed seal leaves its spool segments in
+  place, and the next seal (a tick or a flush) replays them;
 - catalog sink stays ALL-OR-NOTHING: a failure before commit leaves
   only unreferenced staged files, so after recovery every row is
   visible exactly once;
@@ -118,8 +118,8 @@ def test_server_log_channel_records_events(spark, tmp_path):
 
 def test_parquet_write_failure_at_least_once(spark, tmp_path):
     """Failure injected AFTER the blind append (mid-commit: data landed,
-    checkpoint did not advance) — the replay may duplicate, must not
-    lose."""
+    the spool segments were not deleted) — the replay may duplicate,
+    must not lose."""
     info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(tmp_path / "w"),
                       export_root=str(tmp_path / "exp"), disable_auth=True,
                       seal_max_age_ms=60_000, warm_start=False).collect()[0]

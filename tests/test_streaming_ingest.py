@@ -1,4 +1,4 @@
-"""End-to-end live-ingest tests: HTTP POST -> spool -> streaming seal ->
+"""End-to-end live-ingest tests: HTTP POST -> spool -> seal ->
 partitioned parquet -> query. Mirrors the reference's manual ingest
 harness coverage (reference: test/manual/otlp_serve_concurrency.py,
 serve.md:384-399): auth, content types, 413/415/503, flush/stop
@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import gzip
 import json
+import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -25,6 +27,8 @@ from duckdb_otlp_spark.streaming import (
 from tests.fixtures import LOGS_SIMPLE, METRICS_SIMPLE, TRACES_SIMPLE
 
 TOKEN = "test-token-0123456789abcdef"
+SEAL_LIST_COLUMNS = ["seal_sequence", "table", "rows", "batch_id", "append_ms",
+                     "commit_ms", "status", "error", "unix_ms"]
 
 
 def _post(url: str, path: str, payload, token=TOKEN, gzip_body=False,
@@ -96,24 +100,19 @@ def test_ingest_end_to_end(spark, server):
 
 
 def test_sealed_spool_segments_are_deleted(spark, server):
-    """cleanSource=delete (r8): once a micro-batch commits, its spool
-    segments disappear — without this the spool directory grows for the
-    server's lifetime (O(segments-ever) source listings, disk exhaustion
-    with data that's already in parquet). Runs after the e2e test so
-    sealed traffic exists."""
-    import time
-
+    """Once a seal commits, its spool segments disappear — without this
+    the spool directory grows for the server's lifetime (O(segments-ever)
+    listings, disk exhaustion with data that's already in parquet). Runs
+    after the e2e test so sealed traffic exists."""
     url = server.uri.url
     spool = server.spool_dir / "logs"
     counts = []
-    # Spark cleans a batch's source files when the NEXT batch commits,
-    # so the newest segment legitimately lingers; the property is that
-    # the population stays BOUNDED instead of growing by one visible
-    # segment per sealed batch (pre-r8 behavior: monotonic growth).
+    # the property is that the population stays BOUNDED instead of
+    # growing by one visible segment per sealed batch (pre-r8 behavior:
+    # monotonic growth)
     for round_ in range(4):
         assert _post(url, "/v1/logs", LOGS_SIMPLE[round_ % 3])[0] == 202
         otlp_flush(spark, server.uri.canonical).collect()
-        time.sleep(0.5)     # async cleaner thread
         counts.append(len(list(spool.glob("*.jsonl"))))
     assert counts[-1] <= 2, counts
     # and the sealed rows stay queryable after their segments vanish
@@ -368,6 +367,7 @@ def test_server_and_seal_telemetry(spark, server):
     assert r["ready"] is True
 
     seals = otlp_seal_list(spark, server.uri.canonical)
+    assert seals.columns == SEAL_LIST_COLUMNS
     rows = seals.filter(F.col("status") == "ok").collect()
     assert any(e["table"] == "otlp_logs" and e["rows"] > 0 for e in rows)
     # metrics request fans out to all 4 shape tables in one seal cycle
@@ -667,3 +667,120 @@ def test_package_zip_shipped_once_and_never_stale(tmp_path, monkeypatch):
     with zipfile.ZipFile(stale) as zf:
         assert zf.read("duckdb_otlp_spark/sources/flat_decode.py") == \
             Path(flat_decode.__file__).read_bytes()
+
+
+def _flush_within(spark, uri, timeout_s):
+    """otlp_flush on a thread, so a flush that never returns fails the
+    test instead of hanging the suite."""
+    out: list = []
+    flusher = threading.Thread(
+        target=lambda: out.append(otlp_flush(spark, uri).collect()[0]),
+        daemon=True)
+    flusher.start()
+    flusher.join(timeout_s)
+    assert not flusher.is_alive(), f"otlp_flush still running after {timeout_s} s"
+    assert out, "otlp_flush raised"
+    return out[0]
+
+
+def test_flush_seals_now_regardless_of_seal_age(spark, tmp_path_factory):
+    """otlp_flush seals what is spooled now (reference FlushNow,
+    otlp_server.cpp:1438-1440): with a 60 s seal age the flush returns
+    well inside one seal interval, every posted row sealed. A fresh
+    server's otlp_seal_list has the same columns as a busy one's."""
+    work = tmp_path_factory.mktemp("flush_now")
+    info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                      disable_auth=True, seal_max_age_ms=60_000,
+                      warm_start=False).collect()[0]
+    from duckdb_otlp_spark.streaming.server import _get
+    srv = _get(info["uri"])
+    try:
+        assert otlp_seal_list(spark, info["uri"]).columns == SEAL_LIST_COLUMNS
+        for env in LOGS_SIMPLE:
+            assert _post(srv.uri.url, "/v1/logs", env, token=None)[0] == 202
+        assert _flush_within(spark, info["uri"], 30)["status"] == "ok"
+        assert srv.sealed_rows_total == 3
+        assert spark.read.parquet(str(srv.export_root / "otlp_logs")).count() == 3
+    finally:
+        otlp_stop(spark, info["uri"], drain=False)
+
+
+def test_flush_returns_while_sends_continue(spark, tmp_path_factory):
+    """A flush seals what was acked before it began and returns while a
+    client keeps posting; it does not wait for the spool to go quiet."""
+    work = tmp_path_factory.mktemp("flush_busy")
+    info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                      disable_auth=True, seal_max_age_ms=1000,
+                      warm_start=False).collect()[0]
+    from duckdb_otlp_spark.streaming.server import _get
+    srv = _get(info["uri"])
+    done = threading.Event()
+    acked: list[int] = []
+    refused: list[int] = []
+
+    def send():
+        while not done.is_set():
+            code = _post(srv.uri.url, "/v1/logs",
+                         LOGS_SIMPLE[len(acked) % 3], token=None)[0]
+            (acked if code == 202 else refused).append(code)
+            time.sleep(0.01)
+
+    sender = threading.Thread(target=send, daemon=True)
+    sender.start()
+    try:
+        time.sleep(1.0)
+        acked_before = len(acked)    # one row per LOGS_SIMPLE envelope
+        assert _flush_within(spark, info["uri"], 60)["status"] == "ok"
+        sealed = spark.read.parquet(str(srv.export_root / "otlp_logs")).count()
+        assert acked_before > 0
+        assert sealed >= acked_before
+    finally:
+        done.set()
+        sender.join(30)
+        otlp_stop(spark, info["uri"], drain=False)
+    assert not sender.is_alive()
+    assert not refused
+
+
+def test_concurrent_flushes_seal_each_row_once(spark, tmp_path_factory):
+    """Flushes racing each other and the timer seals — more flushing
+    threads than cores, a short switch interval — seal every posted row
+    exactly once: a signal's seals are serialized, so no two list and
+    seal the same spool segments."""
+    import sys
+
+    work = tmp_path_factory.mktemp("flush_race")
+    info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                      disable_auth=True, seal_max_age_ms=200,
+                      warm_start=False).collect()[0]
+    from duckdb_otlp_spark.streaming.server import _get
+    srv = _get(info["uri"])
+    errors: list[Exception] = []
+
+    def flush():
+        try:
+            srv.flush()
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        posted = 0
+        for _ in range(3):
+            for env in LOGS_SIMPLE:
+                assert _post(srv.uri.url, "/v1/logs", env, token=None)[0] == 202
+                posted += 1
+            flushers = [threading.Thread(target=flush, daemon=True)
+                        for _ in range(6)]
+            for t in flushers:
+                t.start()
+            for t in flushers:
+                t.join(60)
+                assert not t.is_alive()
+        assert not errors, errors
+        sealed = spark.read.parquet(str(srv.export_root / "otlp_logs"))
+        assert sealed.count() == posted == srv.sealed_rows_total
+    finally:
+        sys.setswitchinterval(interval)
+        otlp_stop(spark, info["uri"], drain=False)
