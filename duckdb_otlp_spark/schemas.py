@@ -187,3 +187,9 @@ TARGET_TABLES: dict[str, str] = {
     "metrics_histogram": "otlp_metrics_histogram",
     "metrics_exp_histogram": "otlp_metrics_exp_histogram",
 }
+
+
+def partition_ts(table: str) -> str:
+    """The timestamp column a live-ingest table's year/month/day export
+    partitions come from (reference: src/otlp_server.cpp:105-110)."""
+    return "start_time_unix_nano" if table == "otlp_traces" else "time_unix_nano"

@@ -2,21 +2,25 @@
 
 One flattener per table (logs, traces, and the four metric shapes),
 each an exact twin of the JVM flatten in ``otlp_json`` (``flatten_*``:
-``from_json`` + explode + interpreted higher-order functions). Three
-callers hand Spark the flat columns straight from ``mapInArrow`` / the
-Python DataSource instead of nested envelope rows:
+``from_json`` + explode + interpreted higher-order functions). The
+callers take the flat columns straight from Python instead of nested
+envelope rows:
 
 - protobuf file reads of logs/traces (``read_pb_flat``): the wire
   decode and the flatten run in one pass. Measured on the
   1M-record/32-file pb bench corpus at local[32] (r14): 5.0-5.6 s via
   the envelope + JVM flatten route, 1.5-1.75 s here;
-- the live server's seal (``flatten_lines``): each spooled JSON request
-  line goes ``json.loads`` -> ``otlp_json._conform_to_schema(strict=
-  True)`` -> flattener. A line that fails any step is REFUSED: it
-  leaves this pass verbatim (``__line``) and the seal runs today's lax
-  ``envelopes_from_lines`` + ``FLATTEN`` plan over the refused lines
-  only, so sealed rows, errors and ``seal_malformed_lines`` are the JVM
-  route's by construction;
+- the live server's seal, through one parse loop (``seal_slices``):
+  each spooled JSON request line goes ``json.loads`` ->
+  ``otlp_json._conform_to_schema(strict=True)`` -> flattener. A line
+  that fails any step is REFUSED: it is kept verbatim and the seal runs
+  today's lax ``envelopes_from_lines`` + ``FLATTEN`` plan over the
+  refused lines only, so sealed rows, errors and
+  ``seal_malformed_lines`` are the JVM route's by construction. The
+  parquet sink's default route (``seal_files``) writes the rows as
+  partitioned parquet inside the Python task; servers with seal-time
+  columns or the catalog sink hand them to Spark (``flatten_lines``, a
+  ``mapInArrow``);
 - ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
 
 Semantics: every coercion below twins the JVM expression over the
@@ -61,6 +65,7 @@ from duckdb_otlp_spark.sources.otlp_json import (
     _ENUM_MAPS,
     _ENVELOPES,
     _SEVERITY_NAMES,
+    MAX_ENVELOPE_SLICE_RECORDS,
     _conform_to_schema,
 )
 
@@ -621,7 +626,7 @@ def read_pb_flat(spark, path, signal: str):
 
     from duckdb_otlp_spark.session import ensure_package_on_workers
     from duckdb_otlp_spark.sources.otlp_json import (
-        MAX_ENVELOPE_SLICE_RECORDS, MAX_READ_FILE_BYTES, slice_envelope)
+        MAX_READ_FILE_BYTES, slice_envelope)
 
     out_schema = flat_schema(signal)
     arrow_fields = [to_arrow_type(f.dataType) for f in out_schema.fields]
@@ -738,6 +743,47 @@ def _strict_line(raw: bytes, spine: str, env_schema):
     return _conform_to_schema(env, env_schema, strict=True)
 
 
+def seal_slices(raws, signal: str):
+    """The seal's one parse loop: spooled request lines (bytes, without
+    their ``\\n``) -> ``(rows, refused)`` slices, where ``rows`` holds
+    one list of flat tuples per table of ``SEAL_TABLES[signal]`` and
+    ``refused`` the lines the strict parse or a flattener refused,
+    verbatim. A slice is yielded once it holds
+    ``MAX_ENVELOPE_SLICE_RECORDS`` rows or refused lines (checked per
+    line), and at the end. Blank lines vanish, like the lax route's
+    ``trim(value) != ''`` filter."""
+    keys = SEAL_TABLES[signal]
+    spine, env_schema = _ENVELOPES[signal]
+    if signal == "metrics":
+        def flatten(env):
+            return flatten_metrics_columns(env, exact=True)
+    else:
+        one = FLATTENERS[signal][0]
+
+        def flatten(env):
+            return (one(env, exact=True),)
+    rows: list[list] = [[] for _ in keys]
+    refused: list = []
+    pending = 0
+    for raw in raws:
+        if not raw.strip(b" "):
+            continue
+        try:
+            parts = flatten(_strict_line(raw, spine, env_schema))
+        except Exception:  # noqa: BLE001 — refused: JVM route
+            refused.append(raw)
+            pending += 1
+            continue
+        for acc, part in zip(rows, parts):
+            acc += part
+            pending += len(part)
+        if pending >= MAX_ENVELOPE_SLICE_RECORDS:
+            yield rows, refused
+            rows, refused, pending = [[] for _ in keys], [], 0
+    if pending:
+        yield rows, refused
+
+
 def _union_layout(keys) -> list[tuple[str, Any, bool]]:
     """(name, type, nullable) of every column of ``keys``' tables, first
     appearance order. Shared names agree on type and nullability."""
@@ -776,7 +822,6 @@ def flatten_lines(lines: DataFrame, signal: str) -> DataFrame:
     from pyspark.sql.pandas.types import to_arrow_type
 
     from duckdb_otlp_spark.session import ensure_package_on_workers
-    from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
 
     keys = SEAL_TABLES[signal]
     layout = _union_layout(keys)
@@ -789,8 +834,6 @@ def flatten_lines(lines: DataFrame, signal: str) -> DataFrame:
     # per table: union column -> position in the table's tuples
     positions = [{f.name: i for i, f in enumerate(flat_schema(k).fields)}
                  for k in keys]
-    spine, env_schema = _ENVELOPES[signal]
-    batch_rows = MAX_ENVELOPE_SLICE_RECORDS
     names = [f.name for f in out_schema.fields]
 
     def emit(rows: list[list], refused: list):
@@ -811,34 +854,8 @@ def flatten_lines(lines: DataFrame, signal: str) -> DataFrame:
         return pa.RecordBatch.from_arrays(arrays, names)
 
     def run(batches):
-        if signal == "metrics":
-            def flatten(env):
-                return flatten_metrics_columns(env, exact=True)
-        else:
-            one = FLATTENERS[signal][0]
-
-            def flatten(env):
-                return (one(env, exact=True),)
-        rows: list[list] = [[] for _ in keys]
-        refused: list = []
-        pending = 0
-        for batch in batches:
-            for raw in batch.column(0).to_pylist():
-                if not raw.strip(b" "):
-                    continue
-                try:
-                    parts = flatten(_strict_line(raw, spine, env_schema))
-                except Exception:  # noqa: BLE001 — refused: JVM route
-                    refused.append(raw)
-                    pending += 1
-                    continue
-                for acc, part in zip(rows, parts):
-                    acc += part
-                    pending += len(part)
-                if pending >= batch_rows:
-                    yield emit(rows, refused)
-                    rows, refused, pending = [[] for _ in keys], [], 0
-        if pending:
+        raws = (raw for batch in batches for raw in batch.column(0).to_pylist())
+        for rows, refused in seal_slices(raws, signal):
             yield emit(rows, refused)
 
     src = lines.select(F.col("value").cast("binary"))
@@ -858,3 +875,96 @@ def refused_lines(flat: DataFrame) -> DataFrame:
     ``value`` text column the lax JVM route parses."""
     return (flat.filter(F.col("__table") == -1)
             .select(F.col("__line").cast("string").alias("value")))
+
+
+# Spark's leaf for a NULL partition timestamp
+_NULL_LEAF = "/".join(f"{p}=__HIVE_DEFAULT_PARTITION__"
+                      for p in ("year", "month", "day"))
+
+
+def _day_leaves(table, ts_col: str):
+    """(``year=/month=/day=`` leaf, rows) pairs of ``table`` — the values
+    Spark's ``date_format(ts, 'yyyy'/'MM'/'dd')`` gives the same
+    TIMESTAMP_NTZ column, NULL included."""
+    import pyarrow.compute as pc
+
+    ts = table.column(ts_col)
+    day = pc.add(pc.add(pc.multiply(pc.year(ts), 10000),
+                        pc.multiply(pc.month(ts), 100)), pc.day(ts))
+    keys = pc.unique(day).to_pylist()
+    for k in keys:
+        leaf = _NULL_LEAF if k is None else (
+            f"year={k // 10000:04d}/month={k // 100 % 100:02d}/day={k % 100:02d}")
+        yield leaf, (table if len(keys) == 1 else table.filter(
+            pc.is_null(day) if k is None else pc.equal(day, k)))
+
+
+def seal_files(paths: list[str], signal: str, staging: str,
+               compression: str) -> dict:
+    """Executor side of the parquet sink's seal: the spooled request
+    lines of ``paths`` (split on ``\\n`` only) go through
+    :func:`seal_slices`, and each slice's rows of each table stream
+    through one ``ParquetWriter`` per ``year=/month=/day=`` leaf under
+    ``staging/<table>/`` (zstd level 1, or ``compression``), so memory
+    is bounded by a slice, not by ``paths``. Refused lines go verbatim
+    to ``staging/refused/`` as NDJSON for the lax JVM route.
+
+    Returns ``{"files": [(table, path under staging/<table>, rows)],
+    "refused": n}``; nothing is visible outside ``staging`` until the
+    driver publishes the files."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    keys = SEAL_TABLES[signal]
+    tables = [_schemas.TARGET_TABLES[k] for k in keys]
+    arrow = [to_arrow_schema(flat_schema(k)) for k in keys]
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    opts = {"compression": compression,
+            "compression_level": 1 if compression == "zstd" else None}
+    writers: dict[tuple[int, str], list] = {}   # (table, leaf) -> [writer, rows]
+    refused_n = 0
+    refused_fh = None
+
+    def lines():
+        for path in paths:
+            with open(path, "rb") as fh:
+                for line in fh:
+                    yield line[:-1] if line.endswith(b"\n") else line
+
+    try:
+        for rows, refused in seal_slices(lines(), signal):
+            for i, tuples in enumerate(rows):
+                if not tuples:
+                    continue
+                table = pa.Table.from_arrays(
+                    [pa.array(c, type=f.type)
+                     for c, f in zip(zip(*tuples), arrow[i])], schema=arrow[i])
+                for leaf, part in _day_leaves(table,
+                                              _schemas.partition_ts(tables[i])):
+                    w = writers.get((i, leaf))
+                    if w is None:
+                        d = os.path.join(staging, tables[i], leaf)
+                        os.makedirs(d, exist_ok=True)
+                        w = writers[(i, leaf)] = [pq.ParquetWriter(
+                            os.path.join(d, name), arrow[i], **opts), 0]
+                    w[0].write_table(part)
+                    w[1] += part.num_rows
+            if refused:
+                if refused_fh is None:
+                    os.makedirs(os.path.join(staging, "refused"), exist_ok=True)
+                    refused_fh = open(os.path.join(staging, "refused",
+                                                   name[:-8] + ".jsonl"), "wb")
+                refused_fh.write(b"\n".join(refused) + b"\n")
+                refused_n += len(refused)
+    finally:
+        for w, _ in writers.values():
+            w.close()
+        if refused_fh is not None:
+            refused_fh.close()
+    return {"files": [(tables[i], f"{leaf}/{name}", n)
+                      for (i, leaf), (_, n) in writers.items()],
+            "refused": refused_n}

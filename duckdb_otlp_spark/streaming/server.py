@@ -5,21 +5,33 @@
 Mapping (SURVEY.md §3.2): the reference's group-commit "seal" — a sealer
 loop that seals on a 5 s age or when ``otlp_flush`` asks
 (reference: otlp_server.cpp:815-950, 1438-1440) — is one timer thread
-per signal. A tick lists the signal's visible spool segments, reads
-exactly those with ``spark.read.text``, parses + flattens the lines
-executor-side in one ``mapInArrow`` pass
-(``sources/flat_decode.flatten_lines``), appends to the signal's tables
-and only then deletes the segments; a failed seal leaves them for the
-next tick or flush to replay. Lines the flattener refuses (malformed
-JSON, off-schema shapes, values outside its exact domain) take the file
-readers' lax JVM plan instead, built only for batches that hold such a
-line. ``otlp_flush`` rotates the open segments visible and seals every
-signal at once; the parquet-export sink is at-least-once per signal
-(blind append), same contract as the reference's COPY path
-(reference: otlp_server.cpp:963-1107).
+per signal. A tick lists the signal's visible spool segments, seals
+exactly those and only then deletes them; a failed seal leaves them for
+the next tick or flush to replay. ``otlp_flush`` rotates the open
+segments visible and seals every signal at once.
 
-A metrics request fans out to <=4 shape tables from ONE parse — the
-flat frame is cached for the four writes, mirroring
+Two seal routes, chosen by the server's config:
+
+- parquet sink without seal-time columns (the default): ONE Spark job
+  per signal, the analog of the reference's one COPY per table
+  (reference: otlp_server.cpp:963-1107). The driver bin-packs the
+  segments into at most one group per free slot; each Python task
+  parses + flattens its group's lines (``flat_decode.seal_files``) and
+  writes every table's parquet into a hidden staging dir; the driver
+  then renames the staged files into the export tree. At-least-once per
+  signal: a failed job publishes nothing and the replay re-seals.
+- catalog sink, or attribute promotion / PII scrub / near-dup or
+  contamination stamps: the segments are read with ``spark.read.text``,
+  parsed + flattened in one ``mapInArrow`` (``flat_decode.
+  flatten_lines``), the JVM-only columns are added in the write's
+  projection, and Spark writes the tables (the catalog's sorted + bloom
+  layout, staged then committed in one snapshot).
+
+Lines the flattener refuses (malformed JSON, off-schema shapes, values
+outside its exact domain) take the file readers' lax JVM plan on both
+routes, built only for seals that hold such a line.
+
+A metrics request fans out to <=4 shape tables from ONE parse, mirroring
 ``otlp_transform_metrics_all`` (reference: read_otlp.cpp:261-304).
 
 Scale notes: each signal seals independently (the reference's
@@ -31,9 +43,13 @@ and gives partition pruning to every time-bounded query.
 
 from __future__ import annotations
 
+import heapq
 import itertools
+import os
+import shutil
 import threading
 import time
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -46,7 +62,7 @@ from pyspark.sql import functions as F
 from duckdb_otlp_spark.catalog import SnapshotCatalog
 from duckdb_otlp_spark.functions.promote import sanitize_key as _sanitize
 from duckdb_otlp_spark.functions.uri import OtlpUri, parse_otlp_uri
-from duckdb_otlp_spark.schemas import TARGET_TABLES
+from duckdb_otlp_spark.schemas import TARGET_TABLES, partition_ts
 from duckdb_otlp_spark.sources import flat_decode
 from duckdb_otlp_spark.sources.otlp_json import FLATTEN, envelopes_from_lines
 from duckdb_otlp_spark.streaming.maintenance import (
@@ -66,10 +82,6 @@ SEAL_HISTORY_LIMIT = 4096
 DEFAULT_MAINTENANCE_EVERY_SEALS = 32
 
 _SIGNALS = ("logs", "traces", "metrics")
-
-_PARTITION_TS = {  # reference: otlp_server.cpp:105-110
-    "otlp_traces": "start_time_unix_nano",
-}
 
 
 @dataclass
@@ -203,6 +215,13 @@ class OtlpSparkServer:
             self.iceberg = IcebergExporter(self.catalog)
         self.create_tables = create_tables
         self._target_schemas: dict[str, Any] = {}
+        # the executor-side seal writes the flat columns only: seal-time
+        # columns (_finish) and the catalog's sorted + bloom layout need
+        # the JVM route
+        self._executor_seal = (
+            self.catalog is None and not any(self.promote_resource)
+            and not any(self.promote_scope) and not self.scrub_body_pii
+            and not flag_near_dups and self._contamination_col is None)
         # transport='grpc' serves OTLP/gRPC unary Export over the
         # from-scratch h2c stack (reference: otlp_serve(transport:=
         # 'grpc'), serve.md:307-326) — a gRPC listener exposes no
@@ -322,6 +341,10 @@ class OtlpSparkServer:
 
         if self.catalog is None:
             self.export_root.mkdir(parents=True, exist_ok=True)
+            # staging dirs of seals a crash cut short: never published,
+            # and their segments are still spooled for the replay
+            for orphan in self.export_root.glob(".seal-*"):
+                shutil.rmtree(orphan, ignore_errors=True)
             return
         from duckdb_otlp_spark.schemas import SIGNAL_SCHEMAS
 
@@ -489,15 +512,15 @@ class OtlpSparkServer:
             self._maintenance_busy.release()
 
     def _write_table(self, df: DataFrame, table: str, batch_id: int) -> None:
-        """One seal append: partitioned y/m/d zstd parquet, like the
-        reference's COPY ... PARTITION_BY (year, month, day)
+        """One JVM-route seal append: partitioned y/m/d zstd parquet, like
+        the reference's COPY ... PARTITION_BY (year, month, day)
         (reference: otlp_server.cpp:112-129).
 
         The row count rides the write job as an Observation, so a seal
         is ONE Spark action (the old count-then-write ran the flatten
         twice or paid a persist): parse + flatten + write + count in a
         single pass."""
-        ts = _PARTITION_TS.get(table, "time_unix_nano")
+        ts = partition_ts(table)
         obs = Observation()
         out = (df
                .withColumn("year", F.date_format(F.col(ts), "yyyy"))
@@ -514,17 +537,27 @@ class OtlpSparkServer:
              # at the codec default, so steady-state files re-compress
              .option("parquet.compression.codec.zstd.level", "1")
              .parquet(str(self.export_root / table)))
-            rows = int(obs.get["rows"])
-            self._record_seal(table, rows, batch_id,
-                              (time.perf_counter() - t0) * 1000, "ok")
-            self._log_event(f"parquet seal: table={table} rows={rows} "
-                            f"batch={batch_id}")
         except Exception as e:  # noqa: BLE001 — seal failures are recorded
-            self._record_seal(table, 0, batch_id,
-                              (time.perf_counter() - t0) * 1000, "error", str(e))
-            self._log_event(f"parquet seal failed: table={table} "
-                            f"batch={batch_id} error={e}", "WARN")
+            self._parquet_sealed([table], batch_id,
+                                 (time.perf_counter() - t0) * 1000, error=e)
             raise
+        self._parquet_sealed([table], batch_id, (time.perf_counter() - t0) * 1000,
+                             {table: int(obs.get["rows"])})
+
+    def _parquet_sealed(self, tables: list[str], batch_id: int, ms: float,
+                        rows: dict[str, int] | None = None,
+                        error: Exception | None = None) -> None:
+        """Record and log the parquet sink's seal of ``tables`` after
+        ``ms``: ok with ``rows``, or failed with ``error``."""
+        for table in tables:
+            if error is None:
+                self._record_seal(table, rows[table], batch_id, ms, "ok")
+                self._log_event(f"parquet seal: table={table} "
+                                f"rows={rows[table]} batch={batch_id}")
+            else:
+                self._record_seal(table, 0, batch_id, ms, "error", str(error))
+                self._log_event(f"parquet seal failed: table={table} "
+                                f"batch={batch_id} error={error}", "WARN")
 
     def _seal_catalog(self, tables: list[str], parts, batch_id: int) -> None:
         """Catalog-mode seal: stage every table's data files first, then
@@ -600,18 +633,13 @@ class OtlpSparkServer:
             df = df.withColumn("contaminated", self._contamination_col)
         return df
 
-    def _refused_parts(self, signal: str, flat: DataFrame, refused,
-                       malformed):
-        """(table, frame) pairs for the lines the flattener refused, via
-        the lax JVM route (``envelopes_from_lines`` + ``FLATTEN``), whose
-        dropped lines the ``malformed`` Observation counts. Runs after
-        the clean writes, whose job carried the ``refused`` Observation,
-        so batches without such a line never plan it."""
-        if not int(refused.get["lines"]):
-            return
+    def _refused_parts(self, signal: str, lines: DataFrame, malformed):
+        """(table, frame) pairs for the lines the flattener refused
+        (column ``value``), via the lax JVM route (``envelopes_from_lines``
+        + ``FLATTEN``), whose dropped lines the ``malformed`` Observation
+        counts."""
         keys = flat_decode.SEAL_TABLES[signal]
-        env = envelopes_from_lines(flat_decode.refused_lines(flat), signal,
-                                   drop_observation=malformed)
+        env = envelopes_from_lines(lines, signal, drop_observation=malformed)
         if len(keys) > 1:
             env = env.persist()
         try:
@@ -621,42 +649,122 @@ class OtlpSparkServer:
             if len(keys) > 1:
                 env.unpersist()
 
+    def _note_malformed(self, signal: str, malformed, batch_id: int) -> None:
+        dropped = int(malformed.get["malformed"])
+        if dropped:
+            self.seal_malformed_total += dropped
+            self._log_event(
+                f"seal dropped {dropped} malformed {signal} line(s) "
+                f"(accepted at edge, unparseable at seal) batch={batch_id}",
+                "WARN")
+
+    def _seal_slots(self) -> int:
+        """The most tasks one seal runs at once.
+
+        Edge co-location headroom: the accept workers are Python
+        processes sharing this host with the executor threads (in local
+        mode, and on any edge node running both roles). A seal that
+        schedules one task per core starves them — measured: a seal
+        overlapping the accept burst dragged acceptance from 1.4 s to
+        10.9 s for the same 2M records, a 3-task reservation restored
+        it. Reserving a few cores costs the seal <15% when uncontended
+        and removes the collapse entirely. On a real cluster where
+        receivers run on separate edge nodes, defaultParallelism counts
+        executor cores (not the edge host), so the reservation is
+        noise."""
+        dp = self.spark.sparkContext.defaultParallelism
+        return max(8, dp - 2 - 2 * self.receiver.accept_workers)
+
+    def _stage(self, signal: str, sizes: dict[str, int], staging: str) -> dict:
+        """The executor route's one Spark job: the segments (path ->
+        bytes) are bin-packed by size, largest first onto the lightest
+        group, into at most one group per free slot, and each group is
+        one Python task of ``flat_decode.seal_files`` writing under
+        ``staging``. Packing on the driver balances the tasks (a file
+        scan packs whole splits and ran a second wave behind one
+        straggler), and parsing in place beats shuffling raw lines (a
+        repartition was measured to DOUBLE the seal wall, 15.5 s vs
+        7.3 s for a 2M-row batch). Returns the tasks' merged
+        ``{"files", "refused"}``."""
+        from duckdb_otlp_spark.session import ensure_package_on_workers
+
+        sc = self.spark.sparkContext
+        n = min(sc.defaultParallelism, self._seal_slots(), len(sizes))
+        groups: list[list[str]] = [[] for _ in range(n)]
+        loads = [(0, i) for i in range(n)]
+        for path in sorted(sizes, key=sizes.__getitem__, reverse=True):
+            load, i = heapq.heappop(loads)
+            groups[i].append(path)
+            heapq.heappush(loads, (load + sizes[path], i))
+        compression = self.compression
+        ensure_package_on_workers(self.spark)
+        out = sc.parallelize(groups, n).mapPartitions(
+            lambda part: [flat_decode.seal_files(g, signal, staging, compression)
+                          for g in part]).collect()
+        return {"files": [f for r in out for f in r["files"]],
+                "refused": sum(r["refused"] for r in out)}
+
+    def _publish(self, staging: Path, table: str, files: list[str]) -> None:
+        """Rename one table's staged files into the export tree."""
+        for rel in files:
+            dest = self.export_root / table / rel
+            dest.parent.mkdir(parents=True, exist_ok=True)
+            (staging / table / rel).rename(dest)
+
+    def _seal_segments(self, signal: str, sizes: dict[str, int],
+                       batch_id: int) -> None:
+        """The executor route over one batch of spool segments: stage
+        every table's parquet in one job, publish table by table (one
+        ``otlp_seal_list`` row each, 0-row tables included; a table's
+        ``append_ms`` is its row share of the job plus its own publish),
+        then seal the refused lines through the lax JVM route."""
+        tables = [TARGET_TABLES[k] for k in flat_decode.SEAL_TABLES[signal]]
+        unsealed = list(tables)
+        staging = self.export_root / f".seal-{uuid.uuid4().hex}"
+        t0 = time.perf_counter()
+        try:
+            staged = self._stage(signal, sizes, str(staging))
+            job_ms = (time.perf_counter() - t0) * 1000
+            files: dict[str, list[str]] = {t: [] for t in tables}
+            rows = dict.fromkeys(tables, 0)
+            for table, rel, n in staged["files"]:
+                files[table].append(rel)
+                rows[table] += n
+            total = sum(rows.values())
+            for table in tables:
+                t1 = time.perf_counter()
+                self._publish(staging, table, files[table])
+                share = rows[table] / total if total else 1 / len(tables)
+                self._parquet_sealed(
+                    [table], batch_id,
+                    job_ms * share + (time.perf_counter() - t1) * 1000, rows)
+                unsealed.remove(table)
+            if staged["refused"]:
+                malformed = Observation()
+                refused = (self.spark.read.option("lineSep", "\n")
+                           .text(str(staging / "refused")))
+                parts = self._refused_parts(signal, refused, malformed)
+                try:
+                    for table, df in parts:
+                        self._write_table(df, table, batch_id)
+                finally:
+                    parts.close()
+                self._note_malformed(signal, malformed, batch_id)
+        except Exception as e:  # noqa: BLE001 — seal failures are recorded
+            self._parquet_sealed(unsealed, batch_id,
+                                 (time.perf_counter() - t0) * 1000, error=e)
+            raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
     def _seal_lines(self, signal: str, batch_df: DataFrame,
                     batch_id: int) -> None:
-        """The seal body over one batch of spooled lines."""
+        """The JVM route over one batch of spooled lines."""
         keys = flat_decode.SEAL_TABLES[signal]
         tables = [TARGET_TABLES[k] for k in keys]
-        # The spool scan plans about one task per segment: coalesce
-        # packs a many-tiny-segment backlog into at most one scan task
-        # per core. No repartition — receiver segments are size-capped
-        # (3 MiB rotation, sized so one seal-cadence batch fills the
-        # executor — receiver.py DEFAULT_SEGMENT_ROTATE_BYTES), so scan
-        # tasks are already balanced, and shuffling the raw spool lines
-        # was measured to DOUBLE the seal wall time (15.5 s vs 7.3 s
-        # for a 2M-row batch) versus parsing in place.
-        # Edge co-location headroom: the accept workers are Python
-        # processes sharing this host with the executor threads (in
-        # local mode, and on any edge node running both roles). A
-        # seal that schedules one scan task per core starves them —
-        # measured: a seal overlapping the accept burst dragged
-        # acceptance from 1.4 s to 10.9 s for the same 2M records,
-        # a 3-task reservation restored it. Reserving a few cores
-        # costs the seal <15% when uncontended and removes the
-        # collapse entirely. On a real cluster where receivers run
-        # on separate edge nodes, defaultParallelism counts executor
-        # cores (not the edge host), so the reservation is noise.
-        dp = self.spark.sparkContext.defaultParallelism
-        par = max(8, dp - 2 - 2 * self.receiver.accept_workers)
-        batch_df = batch_df.coalesce(par)
-        # the spooled-byte sum rides the seal's write job as an
-        # Observation instead of costing its own aggregation job
-        obs = Observation()
-        # +1 per line: admission reserved the newline terminator too,
-        # so the release must match byte-for-byte or the per-signal
-        # buffered gauges never return to zero
-        batch_df = batch_df.observe(
-            obs, F.coalesce(F.sum(F.octet_length("value") + F.lit(1)),
-                            F.lit(0)).alias("nbytes"))
+        # the spool scan plans about one task per segment; coalesce packs
+        # a many-tiny-segment backlog into the seal's slots
+        batch_df = batch_df.coalesce(self._seal_slots())
         # one Python pass parses and flattens every line; the
         # refused-line count rides the same job (an Observation,
         # unlike an accumulator, never re-counts retried tasks)
@@ -666,31 +774,33 @@ class OtlpSparkServer:
         if len(keys) > 1:
             flat = flat.persist()  # four metric tables, one pass
         malformed = Observation()
-        fallback = self._refused_parts(signal, flat, refused, malformed)
+
+        def fallback():
+            # runs after the clean writes, whose job carried the
+            # ``refused`` Observation, so batches without such a line
+            # never plan it
+            if int(refused.get["lines"]):
+                yield from self._refused_parts(
+                    signal, flat_decode.refused_lines(flat), malformed)
+
+        lax = fallback()
         try:
             parts = itertools.chain(
                 ((TARGET_TABLES[k],
                   self._finish(signal, flat_decode.table_rows(flat, k)))
                  for k in keys),
-                fallback)
+                lax)
             if self.catalog is not None:
                 self._seal_catalog(tables, parts, batch_id)
             else:
                 for table, df in parts:
                     self._write_table(df, table, batch_id)
         finally:
-            fallback.close()
+            lax.close()
             if len(keys) > 1:
                 flat.unpersist()
-        self.receiver.release_sealed(int(obs.get["nbytes"]), signal)
-        dropped = (int(malformed.get["malformed"])
-                   if int(refused.get["lines"]) else 0)
-        if dropped:
-            self.seal_malformed_total += dropped
-            self._log_event(
-                f"seal dropped {dropped} malformed {signal} line(s) "
-                f"(accepted at edge, unparseable at seal) batch={batch_id}",
-                "WARN")
+        if int(refused.get["lines"]):
+            self._note_malformed(signal, malformed, batch_id)
 
     _WARM_SAMPLES = {
         "logs": ('{"resourceLogs":[{"scopeLogs":[{"logRecords":'
@@ -709,12 +819,17 @@ class OtlpSparkServer:
         workers started with the flattener imported, and the parquet
         write path initialized. Writes to a scratch dir, so no seal
         telemetry and no byte release."""
-        import shutil
         import tempfile
 
         scratch = Path(tempfile.mkdtemp(prefix="otlp_warm_"))
         try:
             for signal, line in self._WARM_SAMPLES.items():
+                if self._executor_seal:
+                    seg = scratch / f"{signal}.jsonl"
+                    seg.write_text(line + "\n")
+                    self._stage(signal, {str(seg): seg.stat().st_size},
+                                str(scratch / "stage"))
+                    continue
                 lines = self.spark.createDataFrame([(line,)], "value string")
                 flat = flat_decode.flatten_lines(lines, signal)
                 key = flat_decode.SEAL_TABLES[signal][0]
@@ -782,24 +897,38 @@ class OtlpSparkServer:
         sink's blind append stays at-least-once, the catalog sink's
         staged-then-commit stays all-or-nothing."""
         with self._seal_locks[signal]:
-            # the one listing: a directory root lists on the driver (no
-            # parallel-listing job), and the frame reads exactly the
-            # files it listed
-            lines = self.spark.read.text(str(self.spool_dir / signal))
-            segments = lines.inputFiles()
+            spool = self.spool_dir / signal
+            lines = None
+            if self._executor_seal:
+                segments = [str(p) for p in spool.glob("seg_*.jsonl")]
+            else:
+                # the one listing: a directory root lists on the driver
+                # (no parallel-listing job), and the frame reads exactly
+                # the files it listed, split on \n only (a bare \r is
+                # JSON whitespace inside a request line)
+                lines = self.spark.read.option("lineSep", "\n").text(str(spool))
+                segments = [unquote(urlparse(u).path) for u in lines.inputFiles()]
             if not segments:
                 return
+            # segments are immutable once visible, and admission reserved
+            # exactly their bytes: releasing their sizes returns the
+            # per-signal buffered gauges to zero
+            sizes = {p: os.path.getsize(p) for p in segments}
             if signal in self._failed:
                 with self._lock:
                     self.seal_restarts_total += 1
                 self._log_event(f"seal revived after failure: "
                                 f"signal={signal}", "WARN")
             self._failed.add(signal)
-            self._seal_lines(signal, lines, self._batch_ids[signal])
+            if lines is None:
+                self._seal_segments(signal, sizes, self._batch_ids[signal])
+            else:
+                self._seal_lines(signal, lines, self._batch_ids[signal])
             self._failed.discard(signal)
             self._batch_ids[signal] += 1
-            for uri in segments:
-                Path(unquote(urlparse(uri).path)).unlink(missing_ok=True)
+            self.receiver.release_sealed(sum(sizes.values()), signal)
+            for path in segments:
+                Path(path).unlink(missing_ok=True)
 
     def _ready(self) -> bool:
         """Degrade /readyz when sealing stalls
@@ -827,7 +956,7 @@ class OtlpSparkServer:
         # not race it
         self._wait_maintenance_idle()
         return {"status": "ok", "sealed_rows": self.sealed_rows_total - before,
-                "seals_total": self._seal_seq}
+                "seals_total": self._seal_seq, "error": None}
 
     def stop(self, drain: bool = True) -> dict[str, Any]:
         """Stop listener, drain spool (3 attempts), report dropped rows
@@ -933,6 +1062,20 @@ _SERVER_ROW_SCHEMA = (
     "maintenance_runs_total long, ready boolean")
 
 
+def _status_frame(spark: SparkSession, rows: list[dict[str, Any]],
+                  schema: str) -> DataFrame:
+    """A status table in its declared column order, as a local relation
+    built from an Arrow table: its ``collect`` runs no Spark job (a
+    Python list plans an RDD scan, one job per collect)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(struct)), schema=struct)
+
+
 def otlp_serve(spark: SparkSession, uri: str, **params) -> DataFrame:
     """Start a listener; one row back, like the reference's table function
     (reference: otlp_start_stop.cpp:41-298). Duplicate URIs are rejected."""
@@ -951,7 +1094,7 @@ def otlp_serve(spark: SparkSession, uri: str, **params) -> DataFrame:
     if server.uri.canonical != key:  # port 0 resolved to the bound port
         with _REG_LOCK:
             _SERVERS[server.uri.canonical] = _SERVERS.pop(key)
-    return spark.createDataFrame([server.server_row()], schema=_SERVER_ROW_SCHEMA)
+    return _status_frame(spark, [server.server_row()], _SERVER_ROW_SCHEMA)
 
 
 def _get(uri: str) -> OtlpSparkServer:
@@ -963,7 +1106,10 @@ def _get(uri: str) -> OtlpSparkServer:
 
 
 def otlp_flush(spark: SparkSession, uri: str) -> DataFrame:
-    return spark.createDataFrame([_get(uri).flush()])
+    """(status, sealed_rows, seals_total, error), the reference's row
+    (otlp_start_stop.cpp:523-573); a failed seal raises."""
+    return _status_frame(spark, [_get(uri).flush()], (
+        "status string, sealed_rows long, seals_total long, error string"))
 
 
 def otlp_maintenance(spark: SparkSession, uri: str) -> DataFrame:
@@ -974,8 +1120,8 @@ def otlp_maintenance(spark: SparkSession, uri: str) -> DataFrame:
     with server._lock:
         rows = list(server.maintenance_history) or \
             [{"run": 0, "partitions_compacted": 0, "duration_ms": 0.0, "unix_ms": 0}]
-    return spark.createDataFrame(
-        rows, schema="run long, partitions_compacted long, duration_ms double, unix_ms long")
+    return _status_frame(spark, rows, (
+        "run long, partitions_compacted long, duration_ms double, unix_ms long"))
 
 
 def otlp_stop(spark: SparkSession, uri: str, drain: bool = True) -> DataFrame:
@@ -983,13 +1129,13 @@ def otlp_stop(spark: SparkSession, uri: str, drain: bool = True) -> DataFrame:
     result = server.stop(drain=drain)
     with _REG_LOCK:
         _SERVERS.pop(server.uri.canonical, None)
-    return spark.createDataFrame([result])
+    return _status_frame(spark, [result], "status string, dropped_bytes long")
 
 
 def otlp_server_list(spark: SparkSession) -> DataFrame:
     with _REG_LOCK:
         rows = [s.server_row() for s in _SERVERS.values()]
-    return spark.createDataFrame(rows, schema=_SERVER_ROW_SCHEMA)
+    return _status_frame(spark, rows, _SERVER_ROW_SCHEMA)
 
 
 def otlp_server_log(spark: SparkSession, uri: str) -> DataFrame:
@@ -999,15 +1145,14 @@ def otlp_server_log(spark: SparkSession, uri: str) -> DataFrame:
     server = _get(uri)
     with server._lock:
         rows = list(server.server_log)
-    return spark.createDataFrame(
-        rows, schema="unix_ms long, level string, message string")
+    return _status_frame(spark, rows, "unix_ms long, level string, message string")
 
 
 def otlp_seal_list(spark: SparkSession, uri: str) -> DataFrame:
     server = _get(uri)
     with server._lock:
         rows = [vars(e).copy() for e in server.seal_history]
-    return spark.createDataFrame(
-        rows, schema=("seal_sequence long, table string, rows long, "
-                      "batch_id long, append_ms double, commit_ms double, "
-                      "status string, error string, unix_ms long"))
+    return _status_frame(spark, rows, (
+        "seal_sequence long, table string, rows long, batch_id long, "
+        "append_ms double, commit_ms double, status string, error string, "
+        "unix_ms long"))

@@ -586,3 +586,110 @@ def test_seal_route_plan_has_no_jvm_flatten(spark):
         df._jdf.queryExecution(), "formatted")
     assert "MapInArrow" in plan
     assert "from_json" not in plan and "Generate" not in plan
+
+
+# ---------------------------------------------------------------------------
+# The executor seal route (the parquet sink's default: one Python job
+# that parses, flattens and writes parquet) against the JVM route (a
+# server with a seal-time column, forced here) over the same spool
+# segment: the same rows, partition dirs, read-back schema and
+# seal_malformed_lines.
+# ---------------------------------------------------------------------------
+
+def _unstarted_server(spark, work, executor_seal):
+    from duckdb_otlp_spark.streaming.server import OtlpSparkServer
+
+    srv = OtlpSparkServer(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                          disable_auth=True, warm_start=False)
+    srv._ensure_target_tables()
+    assert srv._executor_seal      # the default config takes the new route
+    srv._executor_seal = executor_seal
+    return srv
+
+
+def _seal_both_routes(spark, tmp_path, signal, lines):
+    out = []
+    for executor_seal in (True, False):
+        srv = _unstarted_server(spark, tmp_path / f"x{int(executor_seal)}",
+                                executor_seal)
+        (srv.spool_dir / signal / "seg_test.jsonl").write_bytes(
+            b"".join(ln.encode() + b"\n" for ln in lines))
+        srv._seal(signal)
+        assert not list((srv.spool_dir / signal).iterdir())
+        assert not list(srv.export_root.glob(".seal-*"))
+        out.append(srv)
+    return out
+
+
+def _leaf_dirs(root):
+    return sorted(str(p.parent.relative_to(root)) for p in root.rglob("*.parquet"))
+
+
+@pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+def test_executor_seal_matches_jvm_route(spark, tmp_path, signal):
+    from duckdb_otlp_spark.schemas import TARGET_TABLES
+
+    lines = _FLAT_LINES[signal] + _REFUSED_LINES[signal] + [" ", ""]
+    new, jvm = _seal_both_routes(spark, tmp_path, signal, lines)
+    assert new.seal_malformed_total == jvm.seal_malformed_total > 0
+    assert new.sealed_rows_total == jvm.sealed_rows_total
+    for key in flat_decode.SEAL_TABLES[signal]:
+        table = TARGET_TABLES[key]
+        assert _leaf_dirs(new.export_root / table) == \
+            _leaf_dirs(jvm.export_root / table), table
+        got = spark.read.parquet(str(new.export_root / table))
+        want = spark.read.parquet(str(jvm.export_root / table))
+        assert got.schema == want.schema, table
+        assert _rows(got) == _rows(want), table
+    # one otlp_seal_list row per table from each route's clean pass,
+    # another from the refused lines' JVM pass
+    assert [(e.table, e.status) for e in new.seal_history] == \
+        [(e.table, e.status) for e in jvm.seal_history]
+
+
+def test_executor_seal_partition_dirs(spark, tmp_path):
+    """year=/month=/day= leaves equal Spark's date_format over
+    TIMESTAMP_NTZ: NULL -> __HIVE_DEFAULT_PARTITION__, pre-1970
+    microseconds floor into the day before the epoch, and a day's last
+    microsecond stays in that day."""
+    day_ns = 86_400_000_000_000
+    lines = [_log_line({"body": {"stringValue": "no time"}}),
+             _log_line({"timeUnixNano": "-5"}),
+             _log_line({"timeUnixNano": str(-day_ns - 1000)}),
+             _log_line({"timeUnixNano": str(day_ns - 1000)},
+                       {"timeUnixNano": str(day_ns)}),
+             _log_line({"timeUnixNano": str(_NS)})]
+    new, jvm = _seal_both_routes(spark, tmp_path, "logs", lines)
+    null = "__HIVE_DEFAULT_PARTITION__"
+    want = sorted({f"year={null}/month={null}/day={null}",
+                   "year=1969/month=12/day=31", "year=1969/month=12/day=30",
+                   "year=1970/month=01/day=01", "year=1970/month=01/day=02",
+                   "year=2024/month=04/day=13"})
+    for srv in (new, jvm):
+        assert sorted(set(_leaf_dirs(srv.export_root / "otlp_logs"))) == want
+    assert _rows(spark.read.parquet(str(new.export_root / "otlp_logs"))) == \
+        _rows(spark.read.parquet(str(jvm.export_root / "otlp_logs")))
+
+
+def test_seal_files_streams_one_slice_at_a_time(tmp_path):
+    """A segment group larger than one slice is written as several row
+    groups of one file per leaf, so the task holds one slice at a time;
+    zstd is the codec."""
+    import pyarrow.parquet as pq
+
+    from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
+
+    per_line = 1000
+    n_lines = 2 * MAX_ENVELOPE_SLICE_RECORDS // per_line + 2
+    seg = tmp_path / "seg_a.jsonl"
+    seg.write_text("".join(
+        _log_line(*({"timeUnixNano": str(_NS + i)} for i in range(per_line)))
+        + "\n" for _ in range(n_lines)))
+    out = flat_decode.seal_files([str(seg)], "logs", str(tmp_path / "stage"),
+                                 "zstd")
+    assert out["refused"] == 0
+    [(table, rel, rows)] = out["files"]
+    assert table == "otlp_logs" and rows == n_lines * per_line
+    meta = pq.ParquetFile(tmp_path / "stage" / table / rel).metadata
+    assert meta.num_rows == rows and meta.num_row_groups >= 2
+    assert meta.row_group(0).column(0).compression == "ZSTD"

@@ -93,8 +93,8 @@ def test_server_log_channel_records_events(spark, tmp_path):
     srv = _get(info["uri"])
     try:
         # a regular file squatting on the table path makes the first
-        # seal's parquet append fail inside _write_table (real failure,
-        # so the WARN log entry comes from the production path)
+        # seal's parquet append fail (real failure, so the WARN log
+        # entry comes from the production path)
         blocker = tmp_path / "exp" / "otlp_logs"
         blocker.write_text("not a directory")
         assert _post_log(srv.uri.url, LOGS_SIMPLE[0]) == 202
@@ -117,24 +117,24 @@ def test_server_log_channel_records_events(spark, tmp_path):
 
 
 def test_parquet_write_failure_at_least_once(spark, tmp_path):
-    """Failure injected AFTER the blind append (mid-commit: data landed,
-    the spool segments were not deleted) — the replay may duplicate,
-    must not lose."""
+    """Failure injected AFTER the blind append (mid-commit: a table's
+    staged files were published, the spool segments were not deleted) —
+    the replay may duplicate, must not lose."""
     info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(tmp_path / "w"),
                       export_root=str(tmp_path / "exp"), disable_auth=True,
                       seal_max_age_ms=60_000, warm_start=False).collect()[0]
     srv = _get(info["uri"])
     try:
-        orig = srv._write_table
+        orig = srv._publish
         state = {"failed": 0}
 
-        def flaky(df, table, batch_id):
-            orig(df, table, batch_id)
+        def flaky(staging, table, files):
+            orig(staging, table, files)
             if state["failed"] == 0:
                 state["failed"] += 1
                 raise RuntimeError("injected post-append failure")
 
-        srv._write_table = flaky
+        srv._publish = flaky
         for env in LOGS_SIMPLE:
             assert _post_log(srv.uri.url, env) == 202
         _drain_with_retries(srv)

@@ -784,3 +784,191 @@ def test_concurrent_flushes_seal_each_row_once(spark, tmp_path_factory):
     finally:
         sys.setswitchinterval(interval)
         otlp_stop(spark, info["uri"], drain=False)
+
+
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    it = sc._jsc.sc().statusStore().jobsList(
+        sc._jvm.java.util.ArrayList()).iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next().jobId())
+    return out
+
+
+def _quiet_server(spark, work):
+    """A default-config listener whose timer seals are stopped, so only
+    otlp_flush seals (no tick can race a job count); and the frame
+    otlp_serve returned."""
+    from duckdb_otlp_spark.streaming.server import _get
+
+    served = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                        disable_auth=True, seal_max_age_ms=60_000,
+                        warm_start=False)
+    srv = _get(served.collect()[0]["uri"])
+    srv._stopping.set()
+    for sealer in srv._sealers:
+        sealer.join(30)
+        assert not sealer.is_alive()
+    return srv, served
+
+
+SERVER_ROW_COLUMNS = [
+    "uri", "url", "transport", "sink", "accept_workers", "buffered_bytes",
+    "logs_buffered_bytes", "traces_buffered_bytes", "metrics_buffered_bytes",
+    "admitted_bytes_total", "logs_admitted_bytes", "traces_admitted_bytes",
+    "metrics_admitted_bytes", "ingress_ewma_bytes_per_sec", "requests_total",
+    "accepted_requests", "rejected_auth", "rejected_413", "rejected_415",
+    "rejected_503", "skipped_summary_points", "skipped_nan_points",
+    "seal_malformed_lines", "logs_requests", "traces_requests",
+    "metrics_requests", "seals_total", "seal_failures_total",
+    "seal_restarts_total", "sealed_rows_total", "last_seal_unix_ms",
+    "maintenance_runs_total", "ready"]
+
+
+def test_status_frames_keep_their_columns_and_run_no_job(spark, tmp_path_factory):
+    """All seven status functions return their declared columns in order
+    (the flush row is the reference's (status, sealed_rows, seals_total,
+    error)), and collecting them runs no Spark job."""
+    from duckdb_otlp_spark.streaming import otlp_maintenance, otlp_server_log
+
+    srv, served = _quiet_server(spark, tmp_path_factory.mktemp("status_frames"))
+    uri = srv.uri.canonical
+    try:
+        assert _post(srv.uri.url, "/v1/logs", LOGS_SIMPLE[0], token=None)[0] == 202
+        frames = [
+            (served, SERVER_ROW_COLUMNS),
+            (otlp_server_list(spark), SERVER_ROW_COLUMNS),
+            (otlp_flush(spark, uri),
+             ["status", "sealed_rows", "seals_total", "error"]),
+            (otlp_seal_list(spark, uri), SEAL_LIST_COLUMNS),
+            (otlp_server_log(spark, uri), ["unix_ms", "level", "message"]),
+            (otlp_maintenance(spark, uri),
+             ["run", "partitions_compacted", "duration_ms", "unix_ms"]),
+            (otlp_stop(spark, uri, drain=False), ["status", "dropped_bytes"]),
+        ]
+        srv = None
+        for df, columns in frames:
+            assert df.columns == columns
+            before = _job_ids(spark)
+            rows = df.collect()
+            assert _job_ids(spark) == before, columns
+            assert rows
+        flush_row = frames[2][0].collect()[0]
+        assert flush_row["status"] == "ok" and flush_row["error"] is None
+        assert flush_row["sealed_rows"] == 1
+    finally:
+        if srv is not None:
+            otlp_stop(spark, uri, drain=False)
+
+
+@pytest.mark.parametrize("sink", ["parquet", "catalog"])
+def test_bare_cr_in_a_request_line_seals_every_row(spark, tmp_path_factory, sink):
+    """A single-line JSON body may carry a bare CR as whitespace; the seal
+    splits the spool on \\n only, so the request seals whole instead of
+    as two malformed halves."""
+    from duckdb_otlp_spark.streaming.server import _get
+
+    work = tmp_path_factory.mktemp(f"bare_cr_{sink}")
+    info = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                      disable_auth=True, seal_max_age_ms=500, sink=sink,
+                      iceberg_export=False, warm_start=False).collect()[0]
+    srv = _get(info["uri"])
+    try:
+        body = json.dumps(LOGS_SIMPLE[0]).replace('", "', '",\r"').encode()
+        assert b"\r" in body and b"\n" not in body
+        assert _post(srv.uri.url, "/v1/logs", body, token=None)[0] == 202
+        otlp_flush(spark, srv.uri.canonical)
+        assert srv.read_table("otlp_logs").count() == 1
+        assert srv.sealed_rows_total == 1
+        assert srv.seal_malformed_total == 0
+    finally:
+        otlp_stop(spark, info["uri"], drain=False)
+
+
+def test_default_seal_is_one_job_per_signal(spark, tmp_path_factory):
+    """A default-config seal of clean lines is ONE Spark job per signal
+    with at most one task per slot — no spool text scan, no persist and
+    no JVM parquet write (each of those is a job of its own) — and its
+    sealed rows are the posted ones; per-signal buffered gauges return to
+    exactly zero."""
+    from tests.fixtures import METRICS_ALL_TYPES
+
+    srv, _ = _quiet_server(spark, tmp_path_factory.mktemp("one_job"))
+    try:
+        url = srv.uri.url
+        for env in LOGS_SIMPLE:      # one segment per request
+            assert _post(url, "/v1/logs", env, token=None)[0] == 202
+            srv.receiver.rotate_all()
+        for env in TRACES_SIMPLE:
+            assert _post(url, "/v1/traces", env, token=None)[0] == 202
+        for env in METRICS_ALL_TYPES:
+            assert _post(url, "/v1/metrics", env, token=None)[0] == 202
+        assert all(srv.receiver.buffered_bytes_by_signal().values())
+        before = _job_ids(spark)
+        srv.flush()
+        sc = spark.sparkContext
+        store = sc._jsc.sc().statusStore()
+        jobs = [store.job(j) for j in _job_ids(spark) - before]
+        assert len(jobs) == 3, [j.name() for j in jobs]
+        for job in jobs:
+            assert job.stageIds().size() == 1, job.name()
+            assert job.numTasks() <= sc.defaultParallelism, job.name()
+            # the staging job's collect, not a parquet save
+            assert job.name().startswith("collect at "), job.name()
+        assert srv.receiver.buffered_bytes_by_signal() == \
+            {"logs": 0, "traces": 0, "metrics": 0}
+        assert srv.receiver.buffered_bytes == 0
+        assert srv.read_table("otlp_logs").count() == 3
+        assert srv.read_table("otlp_traces").count() == len(TRACES_SIMPLE)
+        assert srv.seal_failures_total == 0 and srv.seal_malformed_total == 0
+        tables = {e.table for e in srv.seal_history}
+        assert len(tables) == 6      # 0-row metric tables get a row too
+    finally:
+        otlp_stop(spark, srv.uri.canonical, drain=False)
+
+
+def test_failed_seal_job_publishes_nothing_and_replays(spark, tmp_path_factory):
+    """A seal task that fails (here: a directory squatting on a segment
+    name) fails the whole job: no staged file becomes visible, the
+    segments stay, and the next flush seals every row once."""
+    srv, _ = _quiet_server(spark, tmp_path_factory.mktemp("failed_job"))
+    try:
+        for env in LOGS_SIMPLE:
+            assert _post(srv.uri.url, "/v1/logs", env, token=None)[0] == 202
+        poison = srv.spool_dir / "logs" / "seg_poison.jsonl"
+        poison.mkdir()
+        with pytest.raises(Exception):
+            srv.flush()
+        table_dir = srv.export_root / "otlp_logs"
+        assert not list(table_dir.rglob("*.parquet"))
+        assert [p for p in (srv.spool_dir / "logs").glob("seg_*.jsonl")
+                if p != poison]      # the segments stay for the replay
+        assert srv.seal_failures_total >= 1
+        poison.rmdir()
+        srv.flush()
+        assert spark.read.parquet(str(table_dir)).count() == 3
+        assert srv.seal_restarts_total >= 1
+    finally:
+        otlp_stop(spark, srv.uri.canonical, drain=False)
+
+
+def test_start_removes_orphaned_staging_and_warms_the_seal(spark, tmp_path_factory):
+    """A seal cut short by a crash leaves its hidden staging dir under
+    the export root; the next start removes it (its rows are replayed
+    from the spool). The same start warms the executor seal route."""
+    from duckdb_otlp_spark.streaming.server import _get, otlp_server_log
+
+    work = tmp_path_factory.mktemp("orphan")
+    orphan = work / "export" / ".seal-0123" / "otlp_logs" / "year=2024"
+    orphan.mkdir(parents=True)
+    (orphan / "part-x.parquet").write_bytes(b"PAR1")
+    uri = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                     disable_auth=True).collect()[0]["uri"]
+    try:
+        assert _get(uri)._executor_seal
+        assert not (work / "export" / ".seal-0123").exists()
+        assert not [r for r in otlp_server_log(spark, uri).collect()
+                    if r["level"] == "WARN"]
+    finally:
+        otlp_stop(spark, uri, drain=False)
