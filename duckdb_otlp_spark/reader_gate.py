@@ -584,56 +584,48 @@ READER_GATE_SQL["read_logs_pb"] = READER_GATE_SQL["read_logs_json"]
 
 # ---------------------------------------------------------------------------
 # OTAP (Arrow) decode path under the driver gate.  Spark side: the real
-# read_otap_logs over the reference's logs-initial.bar Arrow-IPC fixture
-# (read-only at /root/reference/test/data/otap).  Oracle side: the
-# semantically-equivalent logs-initial.otlp protobuf twin decoded by the
-# pure-Python proto wire decoder and hand-flattened by the SAME row-wise
-# flattener the other gate entries use — zero OTAP code on the oracle path.
-# This is the reference's own EXCEPT-parity contract
-# (test/sql/read_otap.test:44-79) upgraded to a value-hash check.
+# read_otap_* readers over the committed Arrow-IPC fixtures in
+# tests/data/otap (one BatchArrowRecords message per signal, written by
+# the test-side encoder tests/otap_fixtures.py, which shares no code with
+# sources/otap.py and covers its delta / quasidelta / grouped-parent id
+# encodings and CBOR values).  Oracle side: each file's .otlp protobuf
+# twin decoded by the pure-Python proto wire decoder and hand-flattened by
+# the SAME row-wise flattener the other gate entries use — zero OTAP code
+# on the oracle path.  This is the reference's own EXCEPT-parity contract
+# (reference: test/sql/read_otap.test:44-79) upgraded to a value-hash check.
 # ---------------------------------------------------------------------------
 
-_OTAP_FIXTURE_DIR = Path("/root/reference/test/data/otap")
+_OTAP_FIXTURE_DIR = Path(__file__).resolve().parents[1] / "tests" / "data" / "otap"
 
 
-def _otap_expected_logs_rows():
-    from duckdb_otlp_spark.sources.otlp_proto import decode_logs
-    env = decode_logs((_OTAP_FIXTURE_DIR / "logs-initial.otlp").read_bytes())
-    return expected_logs([env])
+def _otap_twin(signal: str) -> dict:
+    from duckdb_otlp_spark.sources.otlp_proto import DECODERS
+    return DECODERS[signal](
+        (_OTAP_FIXTURE_DIR / f"{signal}-initial.otlp").read_bytes())
 
 
-def _otap_expected_traces_rows():
-    from duckdb_otlp_spark.sources.otlp_proto import decode_traces
-    env = decode_traces(
-        (_OTAP_FIXTURE_DIR / "traces-initial.otlp").read_bytes())
-    return expected_traces([env])
-
-
-def _otap_expected_metric_env():
-    from duckdb_otlp_spark.sources.otlp_proto import decode_metrics
-    return decode_metrics(
-        (_OTAP_FIXTURE_DIR / "metrics-initial.otlp").read_bytes())
-
-
-if _OTAP_FIXTURE_DIR.exists():
-    READER_GATE_SQL["read_otap_logs"] = _values_sql(
-        _otap_expected_logs_rows(), _schemas.LOGS_SCHEMA, "time_unix_nano")
-    READER_GATE_SQL["read_otap_traces"] = _values_sql(
-        _otap_expected_traces_rows(), _schemas.TRACES_SCHEMA, "name")
-    _otap_menv = _otap_expected_metric_env()
-    READER_GATE_SQL["read_otap_metrics_gauge"] = _values_sql(
+_otap_menv = _otap_twin("metrics")
+READER_GATE_SQL.update({
+    "read_otap_logs": _values_sql(
+        expected_logs([_otap_twin("logs")]), _schemas.LOGS_SCHEMA,
+        "time_unix_nano"),
+    "read_otap_traces": _values_sql(
+        expected_traces([_otap_twin("traces")]),
+        _schemas.TRACES_SCHEMA, "name"),
+    "read_otap_metrics_gauge": _values_sql(
         expected_gauge([_otap_menv]), _schemas.METRICS_GAUGE_SCHEMA,
-        "time_unix_nano")
-    READER_GATE_SQL["read_otap_metrics_sum"] = _values_sql(
-        expected_sum([_otap_menv]), _schemas.METRICS_SUM_SCHEMA, "name")
-    READER_GATE_SQL["read_otap_metrics_histogram"] = _values_sql(
+        "time_unix_nano"),
+    "read_otap_metrics_sum": _values_sql(
+        expected_sum([_otap_menv]), _schemas.METRICS_SUM_SCHEMA, "name"),
+    "read_otap_metrics_histogram": _values_sql(
         *_arrays_as_json(expected_histogram([_otap_menv]),
                          _schemas.METRICS_HISTOGRAM_SCHEMA),
-        "time_unix_nano")
-    READER_GATE_SQL["read_otap_metrics_exp_histogram"] = _values_sql(
+        "time_unix_nano"),
+    "read_otap_metrics_exp_histogram": _values_sql(
         *_arrays_as_json(expected_exp_histogram([_otap_menv]),
                          _schemas.METRICS_EXP_HISTOGRAM_SCHEMA),
-        "time_unix_nano")
+        "time_unix_nano"),
+})
 
 
 # ---------------------------------------------------------------------------
@@ -713,6 +705,10 @@ def q_read_metrics_exp_histogram_json(spark: SparkSession, sf_dir: str) -> DataF
 
 
 def q_read_otap_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OTAP logs decode under the value-hash gate: the real
+    read_otap_logs over the committed logs-initial.bar fixture vs its
+    protobuf twin hand-flattened on the oracle side (reference contract:
+    test/sql/read_otap.test:44-79)."""
     from duckdb_otlp_spark.sources.otap import OTAP_READERS
     df = OTAP_READERS["logs"](
         spark, str(_OTAP_FIXTURE_DIR / "logs-initial.bar"))
@@ -721,11 +717,11 @@ def q_read_otap_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_read_otap_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTAP traces decode under the driver's value-hash gate: the real
-    read_otap_traces over the reference's traces-initial.bar Arrow-IPC
-    fixture vs the protobuf twin hand-flattened on the oracle side —
-    the reference's EXCEPT-parity contract
-    (/root/reference/test/sql/read_otap.test:44-79) upgraded to a
-    value-hash check, second OTAP signal in the window after logs."""
+    read_otap_traces over the committed traces-initial.bar fixture vs
+    the protobuf twin hand-flattened on the oracle side — the
+    reference's EXCEPT-parity contract (test/sql/read_otap.test:44-79)
+    upgraded to a value-hash check, second OTAP signal in the window
+    after logs."""
     from duckdb_otlp_spark.sources.otap import OTAP_READERS
     df = OTAP_READERS["traces"](
         spark, str(_OTAP_FIXTURE_DIR / "traces-initial.bar"))
@@ -735,10 +731,10 @@ def q_read_otap_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_read_otap_metrics_gauge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTAP gauge decode under the driver's value-hash gate — third OTAP
     signal in the window.  Spark side: the real read_otap_metrics_gauge
-    over the reference's metrics-initial.bar Arrow-IPC fixture; oracle
-    side: the protobuf twin decoded by the pure-Python wire decoder and
-    flattened by the same row-wise flattener the OTLP gate entries use
-    (reference contract: /root/reference/test/sql/read_otap.test:44-103)."""
+    over the committed metrics-initial.bar fixture; oracle side: the
+    protobuf twin decoded by the pure-Python wire decoder and flattened
+    by the same row-wise flattener the OTLP gate entries use (reference
+    contract: test/sql/read_otap.test:44-103)."""
     from duckdb_otlp_spark.sources.otap import OTAP_READERS
     df = OTAP_READERS["metrics_gauge"](
         spark, str(_OTAP_FIXTURE_DIR / "metrics-initial.bar"))
@@ -770,7 +766,7 @@ def q_read_otap_metrics_exp_histogram(spark: SparkSession, sf_dir: str) -> DataF
     """OTAP exponential-histogram decode under the driver's value-hash
     gate — sixth and final OTAP signal in the window; all six
     read_otap_* readers are now driver hard-gate certified (reference
-    contract: /root/reference/test/sql/read_otap.test:44-103)."""
+    contract: test/sql/read_otap.test:44-103)."""
     from duckdb_otlp_spark.sources.otap import OTAP_READERS
     df = OTAP_READERS["metrics_exp_histogram"](
         spark, str(_OTAP_FIXTURE_DIR / "metrics-initial.bar"))
@@ -785,14 +781,10 @@ READER_GATE_QUERIES = {
     "read_metrics_sum_json": q_read_metrics_sum_json,
     "read_metrics_histogram_json": q_read_metrics_histogram_json,
     "read_metrics_exp_histogram_json": q_read_metrics_exp_histogram_json,
+    "read_otap_logs": q_read_otap_logs,
+    "read_otap_traces": q_read_otap_traces,
+    "read_otap_metrics_gauge": q_read_otap_metrics_gauge,
+    "read_otap_metrics_sum": q_read_otap_metrics_sum,
+    "read_otap_metrics_histogram": q_read_otap_metrics_histogram,
+    "read_otap_metrics_exp_histogram": q_read_otap_metrics_exp_histogram,
 }
-
-if _OTAP_FIXTURE_DIR.exists():
-    READER_GATE_QUERIES["read_otap_logs"] = q_read_otap_logs
-    READER_GATE_QUERIES["read_otap_traces"] = q_read_otap_traces
-    READER_GATE_QUERIES["read_otap_metrics_gauge"] = q_read_otap_metrics_gauge
-    READER_GATE_QUERIES["read_otap_metrics_sum"] = q_read_otap_metrics_sum
-    READER_GATE_QUERIES["read_otap_metrics_histogram"] = \
-        q_read_otap_metrics_histogram
-    READER_GATE_QUERIES["read_otap_metrics_exp_histogram"] = \
-        q_read_otap_metrics_exp_histogram

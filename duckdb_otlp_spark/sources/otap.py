@@ -543,7 +543,7 @@ class OtapStreamDecoder:
 _STRINGLY_KEYS = frozenset({
     "severityNumber", "flags", "kind", "aggregationTemporality", "scale",
     "droppedAttributesCount", "droppedEventsCount", "droppedLinksCount",
-    "offset", "code"})
+    "offset", "code", "count"})
 
 
 def _maybe(d: dict, key: str, val) -> None:
@@ -574,11 +574,9 @@ def _logs_envelope(tables, res_attrs, scope_attrs) -> dict:
                 decoded, _ = _cbor_decode(body["ser"])
                 rec["body"] = _py_to_any_value(decoded)
             elif btype is not None:
-                for col_name, jkey in (("str", "stringValue"), ("int", "intValue"),
-                                       ("double", "doubleValue"), ("bool", "boolValue")):
+                for col_name in ("str", "int", "double", "bool", "bytes"):
                     if body.get(col_name) is not None:
-                        v = body[col_name]
-                        rec["body"] = {jkey: str(v) if jkey == "intValue" else v}
+                        rec["body"] = _py_to_any_value(body[col_name])
                         break
         if ids[i] is not None and attrs.get(ids[i]):
             rec["attributes"] = attrs[ids[i]]
@@ -750,7 +748,7 @@ def _metrics_envelope(tables, res_attrs, scope_attrs) -> dict:
                 elif _col(c, "double_value")[i] is not None:
                     d["asDouble"] = c["double_value"][i]
             elif ptype == HISTOGRAM_DP:
-                _maybe(d, "count", str(c["count"][i]) if c.get("count") else None)
+                _maybe(d, "count", _col(c, "count")[i])
                 _maybe(d, "sum", _col(c, "sum")[i])
                 bc = _col(c, "bucket_counts")[i]
                 if bc is not None:
@@ -759,7 +757,7 @@ def _metrics_envelope(tables, res_attrs, scope_attrs) -> dict:
                 _maybe(d, "min", _col(c, "min")[i])
                 _maybe(d, "max", _col(c, "max")[i])
             elif ptype == EXP_HISTOGRAM_DP:
-                _maybe(d, "count", str(c["count"][i]) if c.get("count") else None)
+                _maybe(d, "count", _col(c, "count")[i])
                 _maybe(d, "sum", _col(c, "sum")[i])
                 _maybe(d, "scale", _col(c, "scale")[i])
                 zc = _col(c, "zero_count")[i]
@@ -768,14 +766,14 @@ def _metrics_envelope(tables, res_attrs, scope_attrs) -> dict:
                 for side in ("positive", "negative"):
                     sv = _col(c, side)[i]
                     if sv is not None:
-                        d[side] = {"offset": str(sv.get("offset", 0)),
-                                   "bucketCounts": [str(x) for x in
+                        d[side] = {"bucketCounts": [str(x) for x in
                                                     (sv.get("bucket_counts") or [])]}
+                        _maybe(d[side], "offset", sv.get("offset"))
                 _maybe(d, "min", _col(c, "min")[i])
                 _maybe(d, "max", _col(c, "max")[i])
                 _maybe(d, "zeroThreshold", _col(c, "zero_threshold")[i])
             elif ptype == SUMMARY_DP:
-                _maybe(d, "count", str(c["count"][i]) if c.get("count") else None)
+                _maybe(d, "count", _col(c, "count")[i])
                 _maybe(d, "sum", _col(c, "sum")[i])
             _maybe(d, "flags", _col(c, "flags")[i])
             if dp_ids[i] is not None and attrs.get(dp_ids[i]):

@@ -19,6 +19,7 @@ from tests.fixtures import (
     METRICS_ALL_TYPES,
     TRACES_SIMPLE,
 )
+from tests.otap_fixtures import OTAP_FIXTURE_DIR
 
 _ENV_SETS = {"logs": LOGS_SIMPLE, "traces": TRACES_SIMPLE,
              "metrics": METRICS_ALL_TYPES}
@@ -137,9 +138,16 @@ def test_empty_directory_hits_zero_match_contract(ds_spark, tmp_path):
 
 OTAP_DIR = __import__("pathlib").Path("/root/reference/test/data/otap")
 
+# the committed OTAP fixtures everywhere; the reference's Go-encoded ones
+# where that tree exists
+OTAP_DIRS = pytest.mark.parametrize("otap_dir", [
+    pytest.param(OTAP_FIXTURE_DIR, id="committed"),
+    pytest.param(OTAP_DIR, id="reference", marks=pytest.mark.skipif(
+        not OTAP_DIR.exists(), reason="reference OTAP fixtures not present")),
+])
 
-@pytest.mark.skipif(not OTAP_DIR.exists(),
-                    reason="reference OTAP fixtures not present")
+
+@OTAP_DIRS
 @pytest.mark.parametrize("signal,bar", [
     ("logs", "logs-initial.bar"), ("traces", "traces-initial.bar"),
     ("metrics_gauge", "metrics-initial.bar"),
@@ -147,23 +155,22 @@ OTAP_DIR = __import__("pathlib").Path("/root/reference/test/data/otap")
     ("metrics_histogram", "metrics-initial.bar"),
     ("metrics_exp_histogram", "metrics-initial.bar"),
 ])
-def test_otap_format_matches_function_api(ds_spark, signal, bar):
+def test_otap_format_matches_function_api(ds_spark, otap_dir, signal, bar):
     from duckdb_otlp_spark.sources.otap import OTAP_READERS
     fmt = (ds_spark.read.format("otap").option("signal", signal)
-           .load(str(OTAP_DIR / bar)))
-    fn = OTAP_READERS[signal](ds_spark, str(OTAP_DIR / bar))
+           .load(str(otap_dir / bar)))
+    fn = OTAP_READERS[signal](ds_spark, str(otap_dir / bar))
     assert fmt.schema == fn.schema
     assert fmt.count() == fn.count()
     assert fmt.exceptAll(fn).count() == 0
     assert fn.exceptAll(fmt).count() == 0
 
 
-@pytest.mark.skipif(not OTAP_DIR.exists(),
-                    reason="reference OTAP fixtures not present")
-def test_otap_format_wrong_signal_errors(ds_spark):
+@OTAP_DIRS
+def test_otap_format_wrong_signal_errors(ds_spark, otap_dir):
     with pytest.raises(Exception, match="OTAP decode error"):
         (ds_spark.read.format("otap").option("signal", "logs")
-         .load(str(OTAP_DIR / "metrics-initial.bar")).count())
+         .load(str(otap_dir / "metrics-initial.bar")).count())
 
 
 # --- file URI authority contract ---

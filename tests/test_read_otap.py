@@ -1,9 +1,13 @@
-"""OTAP reader tests against the reference's own fixture pairs
-(read-only at /root/reference/test/data/otap/): each .bar file has a
+"""OTAP reader tests over fixture pairs: each .bar file has a
 semantically-equivalent .otlp protobuf twin, and the oracle is the
 reference's own bidirectional EXCEPT pattern — read_otap_* and
 read_otlp_* must produce identical row sets
 (reference: test/sql/read_otap.test:44-103).
+
+Two fixture sets: the committed one in tests/data/otap (written by the
+test-side encoder tests/otap_fixtures.py), checked on every host, and the
+reference's own Go-encoded files, checked wherever the reference tree is
+present as a cross-check against the real otel-arrow encoder.
 """
 
 from __future__ import annotations
@@ -12,24 +16,37 @@ from pathlib import Path
 
 import pytest
 
-from duckdb_otlp_spark.sources.otap import OTAP_READERS, bar_to_envelope
+from duckdb_otlp_spark.sources.otap import (
+    OTAP_READERS,
+    _decode_bar,
+    bar_to_envelope,
+    envelope_from_tables,
+)
 from duckdb_otlp_spark.sources.otlp_json import READERS
+from tests.otap_fixtures import OTAP_FIXTURE_DIR
 
 OTAP_DIR = Path("/root/reference/test/data/otap")
 
-pytestmark = pytest.mark.skipif(not OTAP_DIR.exists(),
-                                reason="reference OTAP fixtures not present")
+needs_reference = pytest.mark.skipif(not OTAP_DIR.exists(),
+                                     reason="reference OTAP fixtures not present")
+
+with_fixture_dirs = pytest.mark.parametrize("otap_dir", [
+    pytest.param(OTAP_FIXTURE_DIR, id="committed"),
+    pytest.param(OTAP_DIR, id="reference", marks=needs_reference),
+])
+LOG_RECORDS = {OTAP_FIXTURE_DIR: 7, OTAP_DIR: 3}  # in logs-initial.bar
 
 
-def _parity(spark, signal_reader: str, bar: str, otlp: str):
-    otap_df = OTAP_READERS[signal_reader](spark, str(OTAP_DIR / bar))
-    otlp_df = READERS[signal_reader](spark, str(OTAP_DIR / otlp))
+def _parity(spark, otap_dir, signal_reader: str, bar: str, otlp: str):
+    otap_df = OTAP_READERS[signal_reader](spark, str(otap_dir / bar))
+    otlp_df = READERS[signal_reader](spark, str(otap_dir / otlp))
     assert otap_df.schema == otlp_df.schema
     assert otap_df.count() == otlp_df.count()
     assert otap_df.exceptAll(otlp_df).count() == 0
     assert otlp_df.exceptAll(otap_df).count() == 0
 
 
+@with_fixture_dirs
 @pytest.mark.parametrize("reader,bar,otlp", [
     ("logs", "logs-initial.bar", "logs-initial.otlp"),
     ("traces", "traces-initial.bar", "traces-initial.otlp"),
@@ -38,10 +55,11 @@ def _parity(spark, signal_reader: str, bar: str, otlp: str):
     ("metrics_histogram", "metrics-initial.bar", "metrics-initial.otlp"),
     ("metrics_exp_histogram", "metrics-initial.bar", "metrics-initial.otlp"),
 ])
-def test_otap_otlp_parity(spark, reader, bar, otlp):
-    _parity(spark, reader, bar, otlp)
+def test_otap_otlp_parity(spark, otap_dir, reader, bar, otlp):
+    _parity(spark, otap_dir, reader, bar, otlp)
 
 
+@with_fixture_dirs
 @pytest.mark.parametrize("reader,bar,signal", [
     ("logs", "logs-initial.bar", "logs"),
     ("traces", "traces-initial.bar", "traces"),
@@ -50,7 +68,7 @@ def test_otap_otlp_parity(spark, reader, bar, otlp):
     ("metrics_histogram", "metrics-initial.bar", "metrics"),
     ("metrics_exp_histogram", "metrics-initial.bar", "metrics"),
 ])
-def test_typed_path_matches_json_twin(spark, reader, bar, signal):
+def test_typed_path_matches_json_twin(spark, otap_dir, reader, bar, signal):
     """r11: the default read path emits typed Arrow structs straight
     from the decoder (mapInArrow, single parse). The retired JSON-text
     render + from_json variant survives as the differential twin —
@@ -64,8 +82,8 @@ def test_typed_path_matches_json_twin(spark, reader, bar, signal):
                "metrics_histogram": oj.flatten_metrics_histogram,
                "metrics_exp_histogram": oj.flatten_metrics_exp_histogram,
                }[reader]
-    typed = OTAP_READERS[reader](spark, str(OTAP_DIR / bar))
-    js = flatten(_otap_envelopes_json(spark, str(OTAP_DIR / bar), signal))
+    typed = OTAP_READERS[reader](spark, str(otap_dir / bar))
+    js = flatten(_otap_envelopes_json(spark, str(otap_dir / bar), signal))
     assert typed.schema == js.schema
     assert typed.count() == js.count()
     assert typed.exceptAll(js).count() == 0
@@ -75,15 +93,17 @@ def test_typed_path_matches_json_twin(spark, reader, bar, signal):
     assert "from_json" in audit(js).text
 
 
-def test_otap_zstd(spark):
+@with_fixture_dirs
+def test_otap_zstd(spark, otap_dir):
     """Arrow-IPC zstd compression decodes transparently and matches the
     uncompressed twin (reference: api.md compression contract)."""
-    a = OTAP_READERS["logs"](spark, str(OTAP_DIR / "logs-zstd.bar"))
-    b = OTAP_READERS["logs"](spark, str(OTAP_DIR / "logs-initial.bar"))
-    assert a.count() == 3
+    a = OTAP_READERS["logs"](spark, str(otap_dir / "logs-zstd.bar"))
+    b = OTAP_READERS["logs"](spark, str(otap_dir / "logs-initial.bar"))
+    assert a.count() == LOG_RECORDS[otap_dir]
     assert a.exceptAll(b).count() == 0
 
 
+@needs_reference
 def test_otap_row_counts(spark):
     assert OTAP_READERS["logs"](spark, str(OTAP_DIR / "logs-initial.bar")).count() == 3
     assert OTAP_READERS["traces"](spark, str(OTAP_DIR / "traces-initial.bar")).count() == 1
@@ -96,6 +116,7 @@ def test_otap_row_counts(spark):
         assert df.count() == 1, shape
 
 
+@needs_reference
 def test_reuse_message_is_hard_error(spark):
     """A schema-less continuation ("reuse") message cannot be decoded by
     a fresh per-file decoder (reference: read_otap.test:135-141)."""
@@ -103,19 +124,22 @@ def test_reuse_message_is_hard_error(spark):
         OTAP_READERS["logs"](spark, str(OTAP_DIR / "logs-reuse.bar")).collect()
 
 
-def test_otlp_payload_is_hard_error(spark):
+@with_fixture_dirs
+def test_otlp_payload_is_hard_error(spark, otap_dir):
     with pytest.raises(Exception, match="OTAP decode error"):
-        OTAP_READERS["logs"](spark, str(OTAP_DIR / "logs-initial.otlp")).collect()
+        OTAP_READERS["logs"](spark, str(otap_dir / "logs-initial.otlp")).collect()
 
 
-def test_wrong_signal_is_hard_error(spark):
+@with_fixture_dirs
+def test_wrong_signal_is_hard_error(spark, otap_dir):
     with pytest.raises(Exception, match="OTAP decode error"):
-        OTAP_READERS["logs"](spark, str(OTAP_DIR / "metrics-initial.bar")).collect()
+        OTAP_READERS["logs"](spark, str(otap_dir / "metrics-initial.bar")).collect()
     with pytest.raises(Exception, match="OTAP decode error"):
-        OTAP_READERS["metrics_gauge"](spark, str(OTAP_DIR / "logs-initial.bar")).collect()
+        OTAP_READERS["metrics_gauge"](spark, str(otap_dir / "logs-initial.bar")).collect()
 
 
-def test_envelope_reconstruction_driverside():
+@with_fixture_dirs
+def test_envelope_reconstruction_driverside(otap_dir):
     """Pure-python check: .bar -> envelope equals the pb decode of the
     .otlp twin under canonical attribute order (summary dp content is
     excluded — every reader skips summary points)."""
@@ -141,9 +165,85 @@ def test_envelope_reconstruction_driverside():
 
     for sig, name in (("logs", "logs-initial"), ("traces", "traces-initial"),
                       ("metrics", "metrics-initial")):
-        bar = (OTAP_DIR / f"{name}.bar").read_bytes()
-        otlp = (OTAP_DIR / f"{name}.otlp").read_bytes()
+        bar = (otap_dir / f"{name}.bar").read_bytes()
+        otlp = (otap_dir / f"{name}.otlp").read_bytes()
         assert canon(bar_to_envelope(bar, sig)) == canon(DECODERS[sig](otlp)), sig
+
+
+def test_committed_fixtures_match_their_encoder(tmp_path):
+    """The committed set is what ``python -m tests.otap_fixtures`` writes:
+    the same files, each .otlp byte-identical and each .bar carrying the
+    same payload types and Arrow tables (schema metadata included)."""
+    import subprocess
+    import sys
+
+    subprocess.run([sys.executable, "-m", "tests.otap_fixtures", str(tmp_path)],
+                   cwd=Path(__file__).resolve().parents[1], check=True,
+                   capture_output=True)
+    fresh = sorted(p.name for p in tmp_path.iterdir())
+    assert sorted(p.name for p in OTAP_FIXTURE_DIR.iterdir()) == fresh
+    for name in fresh:
+        data = (tmp_path / name).read_bytes()
+        committed = (OTAP_FIXTURE_DIR / name).read_bytes()
+        if name.endswith(".otlp"):
+            assert committed == data, name
+            continue
+        want, got = _decode_bar(data), _decode_bar(committed)
+        assert list(got) == list(want), name
+        for ptype, table in got.items():
+            assert table.equals(want[ptype], check_metadata=True), (name, ptype)
+
+
+def test_truncated_bar_is_decode_error():
+    """A .bar cut short in its protobuf framing, or one whose Arrow IPC
+    stream is cut short inside intact framing, fails with the documented
+    error instead of decoding a partial envelope."""
+    from duckdb_otlp_spark.sources.otap import OtapDecodeError
+    from tests.otap_fixtures import LOGS_ENVELOPE, _ipc, _ld, _vi, logs_payloads
+
+    data = (OTAP_FIXTURE_DIR / "logs-initial.bar").read_bytes()
+    (ptype, logs), *_ = logs_payloads(LOGS_ENVELOPE)
+    ipc = _ipc(logs, None)
+    cut_ipc = _ld(2, _vi(2, ptype) + _ld(3, ipc[:len(ipc) // 2]))
+    for bad in (data[:-1], data[:len(data) // 2], cut_ipc):
+        with pytest.raises(OtapDecodeError, match="OTAP decode error"):
+            bar_to_envelope(bad, "logs")
+
+
+# (payload type, column) whose encoding changes the decoded envelope:
+# delta ids of logs, spans, metrics and number points; delta point parents;
+# quasidelta attribute parents of logs, spans and number points; grouped
+# parents of events, links and number/histogram exemplars
+_ENCODED_COLUMNS_THAT_MATTER = {
+    (30, "id"), (40, "id"), (10, "id"), (11, "id"), (11, "parent_id"),
+    (13, "parent_id"), (14, "parent_id"), (31, "parent_id"),
+    (41, "parent_id"), (15, "parent_id"), (42, "parent_id"),
+    (43, "parent_id"), (19, "parent_id"), (20, "parent_id"),
+}
+
+
+def test_committed_fixtures_need_every_encoding():
+    """Reading any one encoded id column as plain ids must change the
+    decoded envelope for the columns above, so the gate rows over the
+    committed set check each encoding rather than pass on plain ids."""
+    import pyarrow as pa
+
+    changed = set()
+    for signal in ("logs", "traces", "metrics"):
+        tables = _decode_bar(
+            (OTAP_FIXTURE_DIR / f"{signal}-initial.bar").read_bytes())
+        want = envelope_from_tables(tables, signal)
+        for ptype, t in tables.items():
+            for col in ("id", "parent_id"):
+                if col not in t.schema.names or not t.schema.field(col).metadata:
+                    continue
+                i = t.schema.get_field_index(col)
+                plain = t.set_column(i, pa.field(col, t.schema.field(col).type),
+                                     t.column(col))
+                if envelope_from_tables({**tables, ptype: plain}, signal) != want:
+                    changed.add((ptype, col))
+    assert _ENCODED_COLUMNS_THAT_MATTER <= changed, \
+        _ENCODED_COLUMNS_THAT_MATTER - changed
 
 
 # --- r13: oversized-envelope slicing on the typed OTAP path (one
@@ -152,58 +252,17 @@ def test_envelope_reconstruction_driverside():
 #     JVM struct row, the heap-cliff shape fixed for pb in r12) ---
 
 def _encode_bar_logs(n_records: int) -> bytes:
-    """Independent test-side OTAP encoder: a minimal canonical
-    BatchArrowRecords file whose LOGS payload (type 30) carries
-    ``n_records`` rows in one (resource, scope) group. Built from the
-    protobuf wire format + Arrow IPC directly — shares no code with
-    the production decoder."""
-    import io
+    """A canonical BatchArrowRecords file whose LOGS payload carries
+    ``n_records`` rows in one (resource, scope) group, written by the
+    test-side encoder of the committed set."""
+    from tests.otap_fixtures import encode_bar, logs_payloads
 
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
-
-    def varint(n: int) -> bytes:
-        out = b""
-        while True:
-            b7 = n & 0x7F
-            n >>= 7
-            out += bytes([b7 | (0x80 if n else 0)])
-            if not n:
-                return out
-
-    def ld(field: int, payload: bytes) -> bytes:
-        return varint((field << 3) | 2) + varint(len(payload)) + payload
-
-    def vi(field: int, val: int) -> bytes:
-        return varint((field << 3) | 0) + varint(val)
-
-    n = n_records
-    tbl = pa.table({
-        "id": pa.array([None] * n, pa.uint16()),
-        "resource": pa.array([{"id": 0}] * n,
-                             pa.struct([("id", pa.uint16())])),
-        "scope": pa.array([{"id": 0}] * n,
-                          pa.struct([("id", pa.uint16())])),
-        "schema_url": pa.array([None] * n, pa.string()),
-        "time_unix_nano": pa.array(
-            [1700000000000000000 + i for i in range(n)], pa.timestamp("ns")),
-        "observed_time_unix_nano": pa.array([0] * n, pa.timestamp("ns")),
-        "trace_id": pa.array([None] * n, pa.binary(16)),
-        "span_id": pa.array([None] * n, pa.binary(8)),
-        "severity_number": pa.array([9 + (i % 3) for i in range(n)],
-                                    pa.int32()),
-        "severity_text": pa.array([None] * n, pa.string()),
-        "body": pa.array([{"type": 1, "str": f"rec-{i}"} for i in range(n)],
-                         pa.struct([("type", pa.uint8()),
-                                    ("str", pa.string())])),
-        "dropped_attributes_count": pa.array([0] * n, pa.uint32()),
-        "flags": pa.array([None] * n, pa.uint32()),
-        "event_name": pa.array([None] * n, pa.string()),
-    })
-    sink = io.BytesIO()
-    with ipc.new_stream(sink, tbl.schema) as w:
-        w.write_table(tbl)
-    return ld(2, vi(2, 30) + ld(3, sink.getvalue()))
+    records = [{"timeUnixNano": str(1700000000000000000 + i),
+                "severityNumber": 9 + i % 3,
+                "body": {"stringValue": f"rec-{i}"}} for i in range(n_records)]
+    env = {"resourceLogs": [{"resource": {}, "scopeLogs": [
+        {"scope": {}, "logRecords": records}]}]}
+    return encode_bar(logs_payloads(env))
 
 
 def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
