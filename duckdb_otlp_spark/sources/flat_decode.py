@@ -16,11 +16,11 @@ envelope rows:
   that fails any step is REFUSED: it is kept verbatim and the seal runs
   today's lax ``envelopes_from_lines`` + ``FLATTEN`` plan over the
   refused lines only, so sealed rows, errors and
-  ``seal_malformed_lines`` are the JVM route's by construction. The
-  parquet sink's default route (``seal_files``) writes the rows as
-  partitioned parquet inside the Python task; servers with seal-time
-  columns or the catalog sink hand them to Spark (``flatten_lines``, a
-  ``mapInArrow``);
+  ``seal_malformed_lines`` are the JVM route's by construction. Every
+  server config seals through ``seal_files``, which writes the rows as
+  partitioned parquet inside the Python task; the parquet sink's default
+  config publishes those files as they are, while the catalog sink and
+  the seal-time columns have Spark read them back and write;
 - ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
 
 Semantics: every coercion below twins the JVM expression over the
@@ -54,10 +54,7 @@ import json
 import math
 import re
 import sys
-from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from duckdb_otlp_spark import schemas as _schemas
@@ -687,8 +684,6 @@ SEAL_TABLES = {
     "metrics": ("metrics_gauge", "metrics_sum", "metrics_histogram",
                 "metrics_exp_histogram"),
 }
-# table key -> its ``__table`` tag in a flatten_lines frame
-_SEAL_TAG = {k: i for keys in SEAL_TABLES.values() for i, k in enumerate(keys)}
 
 # Jackson's stream limits, which make the JVM parse fail where
 # json.loads succeeds: object keys over 50,000 chars and strings over
@@ -784,99 +779,6 @@ def seal_slices(raws, signal: str):
         yield rows, refused
 
 
-def _union_layout(keys) -> list[tuple[str, Any, bool]]:
-    """(name, type, nullable) of every column of ``keys``' tables, first
-    appearance order. Shared names agree on type and nullability."""
-    out: dict[str, tuple[Any, bool]] = {}
-    for key in keys:
-        for f in flat_schema(key).fields:
-            prev = out.setdefault(f.name, (f.dataType, f.nullable))
-            assert prev == (f.dataType, f.nullable), (key, f.name)
-    return [(n, dt, nullable) for n, (dt, nullable) in out.items()]
-
-
-def _filler(dt, nullable: bool):
-    """Value for a union column a row's table lacks: NULL, or any
-    non-null value where the column is declared non-nullable."""
-    if nullable:
-        return None
-    if isinstance(dt, T.StringType):
-        return ""
-    if isinstance(dt, T.BooleanType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return []
-    return 0
-
-
-def flatten_lines(lines: DataFrame, signal: str) -> DataFrame:
-    """Spooled request lines (column ``value``) -> one frame holding the
-    flat rows of every table ``signal`` seals into.
-
-    Columns: ``__table`` (index into ``SEAL_TABLES[signal]``, or -1 for
-    a refused line), ``__line`` (the refused line's bytes, else NULL),
-    then the union of the tables' columns. Blank lines vanish, like the
-    lax route's ``trim(value) != ''`` filter. Select one table with
-    :func:`table_rows`, the refused lines with :func:`refused_lines`."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from duckdb_otlp_spark.session import ensure_package_on_workers
-
-    keys = SEAL_TABLES[signal]
-    layout = _union_layout(keys)
-    out_schema = T.StructType(
-        [T.StructField("__table", T.ByteType(), False),
-         T.StructField("__line", T.BinaryType(), True)]
-        + [T.StructField(n, dt, nullable) for n, dt, nullable in layout])
-    arrow_types = [to_arrow_type(dt) for _, dt, _ in layout]
-    fillers = [_filler(dt, nullable) for _, dt, nullable in layout]
-    # per table: union column -> position in the table's tuples
-    positions = [{f.name: i for i, f in enumerate(flat_schema(k).fields)}
-                 for k in keys]
-    names = [f.name for f in out_schema.fields]
-
-    def emit(rows: list[list], refused: list):
-        per_table = [list(zip(*r)) if r else [] for r in rows]
-        counts = [len(r) for r in rows]
-        arrays = [
-            pa.array([i for i, n in enumerate(counts) for _ in range(n)]
-                     + [-1] * len(refused), type=pa.int8()),
-            pa.array([None] * sum(counts) + refused, type=pa.binary())]
-        for (name, _, _), atype, fill in zip(layout, arrow_types, fillers):
-            col: list = []
-            for cols, pos, n in zip(per_table, positions, counts):
-                if n:
-                    j = pos.get(name)
-                    col += [fill] * n if j is None else cols[j]
-            col += [fill] * len(refused)
-            arrays.append(pa.array(col, type=atype))
-        return pa.RecordBatch.from_arrays(arrays, names)
-
-    def run(batches):
-        raws = (raw for batch in batches for raw in batch.column(0).to_pylist())
-        for rows, refused in seal_slices(raws, signal):
-            yield emit(rows, refused)
-
-    src = lines.select(F.col("value").cast("binary"))
-    ensure_package_on_workers(src.sparkSession)
-    return src.mapInArrow(run, out_schema)
-
-
-def table_rows(flat: DataFrame, key: str) -> DataFrame:
-    """Table ``key``'s flat rows out of a :func:`flatten_lines` frame,
-    with the JVM flatten's exact schema."""
-    return (flat.filter(F.col("__table") == _SEAL_TAG[key])
-            .select(*[f.name for f in flat_schema(key).fields]))
-
-
-def refused_lines(flat: DataFrame) -> DataFrame:
-    """The refused lines of a :func:`flatten_lines` frame, as the
-    ``value`` text column the lax JVM route parses."""
-    return (flat.filter(F.col("__table") == -1)
-            .select(F.col("__line").cast("string").alias("value")))
-
-
 # Spark's leaf for a NULL partition timestamp
 _NULL_LEAF = "/".join(f"{p}=__HIVE_DEFAULT_PARTITION__"
                       for p in ("year", "month", "day"))
@@ -901,7 +803,7 @@ def _day_leaves(table, ts_col: str):
 
 def seal_files(paths: list[str], signal: str, staging: str,
                compression: str) -> dict:
-    """Executor side of the parquet sink's seal: the spooled request
+    """Executor side of every server seal: the spooled request
     lines of ``paths`` (split on ``\\n`` only) go through
     :func:`seal_slices`, and each slice's rows of each table stream
     through one ``ParquetWriter`` per ``year=/month=/day=`` leaf under
@@ -911,7 +813,7 @@ def seal_files(paths: list[str], signal: str, staging: str,
 
     Returns ``{"files": [(table, path under staging/<table>, rows)],
     "refused": n}``; nothing is visible outside ``staging`` until the
-    driver publishes the files."""
+    driver publishes the files or Spark rewrites them."""
     import os
     import uuid
 

@@ -1420,7 +1420,7 @@ def envelopes_from_lines(lines: DataFrame, signal: str,
     """Raw NDJSON lines (column ``value``) -> envelope rows (column ``env``).
 
     The streaming seal's route for lines the executor-side flattener
-    refuses (sources/flat_decode.flatten_lines). Lax: malformed lines
+    refuses (sources/flat_decode.seal_files). Lax: malformed lines
     are dropped instead of failing the batch (receiver-side
     skip-and-count semantics, reference: src/otlp_server.cpp:699-702).
     Pass ``drop_observation`` (a ``pyspark.sql.Observation``) to count

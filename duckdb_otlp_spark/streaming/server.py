@@ -10,26 +10,26 @@ exactly those and only then deletes them; a failed seal leaves them for
 the next tick or flush to replay. ``otlp_flush`` rotates the open
 segments visible and seals every signal at once.
 
-Two seal routes, chosen by the server's config:
+One seal route, the analog of the reference's one COPY and one parse
+per table (reference: otlp_server.cpp:963-1107): ONE Spark job per
+signal stages the flat rows. The driver bin-packs the segments into at
+most one group per free slot; each Python task parses + flattens its
+group's lines once (``flat_decode.seal_files``) and writes every table's
+parquet into a hidden staging dir. Only the step after staging depends
+on the config:
 
-- parquet sink without seal-time columns (the default): ONE Spark job
-  per signal, the analog of the reference's one COPY per table
-  (reference: otlp_server.cpp:963-1107). The driver bin-packs the
-  segments into at most one group per free slot; each Python task
-  parses + flattens its group's lines (``flat_decode.seal_files``) and
-  writes every table's parquet into a hidden staging dir; the driver
-  then renames the staged files into the export tree. At-least-once per
+- parquet sink without seal-time columns (the default): the driver
+  renames the staged files into the export tree. At-least-once per
   signal: a failed job publishes nothing and the replay re-seals.
 - catalog sink, or attribute promotion / PII scrub / near-dup or
-  contamination stamps: the segments are read with ``spark.read.text``,
-  parsed + flattened in one ``mapInArrow`` (``flat_decode.
-  flatten_lines``), the JVM-only columns are added in the write's
-  projection, and Spark writes the tables (the catalog's sorted + bloom
-  layout, staged then committed in one snapshot).
+  contamination stamps: Spark reads each table's staged files back,
+  adds the seal-time columns in the write's projection (``_finish``)
+  and writes the table (the catalog's sorted + bloom layout, staged
+  then committed in one snapshot).
 
 Lines the flattener refuses (malformed JSON, off-schema shapes, values
-outside its exact domain) take the file readers' lax JVM plan on both
-routes, built only for seals that hold such a line.
+outside its exact domain) take the file readers' lax JVM plan on every
+config, built only for seals that hold such a line.
 
 A metrics request fans out to <=4 shape tables from ONE parse, mirroring
 ``otlp_transform_metrics_all`` (reference: read_otlp.cpp:261-304).
@@ -44,7 +44,6 @@ and gives partition pruning to every time-bounded query.
 from __future__ import annotations
 
 import heapq
-import itertools
 import os
 import shutil
 import threading
@@ -54,7 +53,6 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -147,18 +145,17 @@ class OtlpSparkServer:
         self.promote_scope = list(promote_scope or [])
         # opt-in at-seal PII redaction of log bodies (beyond-reference,
         # SURVEY C39's server integration): the same map-only chained
-        # regexp_replace as operators.text.pii_scrub, applied inside the
-        # seal's flatten plan so raw identifiers never reach the sealed
-        # corpus. Zero extra jobs/shuffles — just more columns in the
-        # existing projection.
+        # regexp_replace as operators.text.pii_scrub, applied in the
+        # seal's write projection so raw identifiers never reach the
+        # sealed corpus. No job or shuffle of its own.
         self.scrub_body_pii = bool(scrub_body_pii)
         # opt-in at-seal near-duplicate flagging (beyond-reference, the
         # server integration of the C41 screen): the value names a
         # persisted band index (operators.dedup.save_band_index) and
         # every sealed log row gets a near_dup_candidate boolean stamped
         # against it. The probe is built ONCE in start(); small indexes
-        # compile to InSet literals so the seal plan stays a single
-        # map-only job (pinned by tests/test_streaming_ingest.py),
+        # compile to InSet literals so the stamp stays map-only in the
+        # seal's write (pinned by tests/test_streaming_operators.py),
         # larger ones fall back to persisted broadcast-join sides that
         # stop() releases.
         self.flag_near_dups = flag_near_dups
@@ -173,7 +170,7 @@ class OtlpSparkServer:
         # eval suite, small by construction) stamps a `contaminated`
         # boolean on every sealed log row via the same JVM-literal
         # column math as contamination_screen_stream's literal regime —
-        # map-only, so the seal stays single-job. Sets beyond the
+        # map-only, so it adds no job to the seal. Sets beyond the
         # literal scale belong to the post-hoc batch equi-join over the
         # sealed table (pipeline.contamination_screen), not the seal
         # hot path — enforced below.
@@ -215,13 +212,6 @@ class OtlpSparkServer:
             self.iceberg = IcebergExporter(self.catalog)
         self.create_tables = create_tables
         self._target_schemas: dict[str, Any] = {}
-        # the executor-side seal writes the flat columns only: seal-time
-        # columns (_finish) and the catalog's sorted + bloom layout need
-        # the JVM route
-        self._executor_seal = (
-            self.catalog is None and not any(self.promote_resource)
-            and not any(self.promote_scope) and not self.scrub_body_pii
-            and not flag_near_dups and self._contamination_col is None)
         # transport='grpc' serves OTLP/gRPC unary Export over the
         # from-scratch h2c stack (reference: otlp_serve(transport:=
         # 'grpc'), serve.md:307-326) — a gRPC listener exposes no
@@ -339,12 +329,12 @@ class OtlpSparkServer:
         fail-fast error instead of being registered."""
         from pyspark.sql import types as T
 
+        self.export_root.mkdir(parents=True, exist_ok=True)
+        # staging dirs of seals a crash cut short: never published,
+        # and their segments are still spooled for the replay
+        for orphan in self.export_root.glob(".seal-*"):
+            shutil.rmtree(orphan, ignore_errors=True)
         if self.catalog is None:
-            self.export_root.mkdir(parents=True, exist_ok=True)
-            # staging dirs of seals a crash cut short: never published,
-            # and their segments are still spooled for the replay
-            for orphan in self.export_root.glob(".seal-*"):
-                shutil.rmtree(orphan, ignore_errors=True)
             return
         from duckdb_otlp_spark.schemas import SIGNAL_SCHEMAS
 
@@ -511,15 +501,16 @@ class OtlpSparkServer:
         finally:
             self._maintenance_busy.release()
 
-    def _write_table(self, df: DataFrame, table: str, batch_id: int) -> None:
-        """One JVM-route seal append: partitioned y/m/d zstd parquet, like
+    def _write_table(self, df: DataFrame, table: str, batch_id: int,
+                     base_ms: float = 0.0) -> None:
+        """One Spark seal append: partitioned y/m/d zstd parquet, like
         the reference's COPY ... PARTITION_BY (year, month, day)
-        (reference: otlp_server.cpp:112-129).
+        (reference: otlp_server.cpp:112-129). ``base_ms`` is the
+        table's share of the staging job, added to its ``append_ms``.
 
-        The row count rides the write job as an Observation, so a seal
-        is ONE Spark action (the old count-then-write ran the flatten
-        twice or paid a persist): parse + flatten + write + count in a
-        single pass."""
+        The row count rides the write job as an Observation, so the
+        write is ONE Spark action (a count-then-write would read the
+        rows twice)."""
         ts = partition_ts(table)
         obs = Observation()
         out = (df
@@ -538,17 +529,18 @@ class OtlpSparkServer:
              .option("parquet.compression.codec.zstd.level", "1")
              .parquet(str(self.export_root / table)))
         except Exception as e:  # noqa: BLE001 — seal failures are recorded
-            self._parquet_sealed([table], batch_id,
-                                 (time.perf_counter() - t0) * 1000, error=e)
+            self._sealed([table], batch_id,
+                         base_ms + (time.perf_counter() - t0) * 1000, error=e)
             raise
-        self._parquet_sealed([table], batch_id, (time.perf_counter() - t0) * 1000,
-                             {table: int(obs.get["rows"])})
+        self._sealed([table], batch_id,
+                     base_ms + (time.perf_counter() - t0) * 1000,
+                     {table: int(obs.get["rows"])})
 
-    def _parquet_sealed(self, tables: list[str], batch_id: int, ms: float,
-                        rows: dict[str, int] | None = None,
-                        error: Exception | None = None) -> None:
-        """Record and log the parquet sink's seal of ``tables`` after
-        ``ms``: ok with ``rows``, or failed with ``error``."""
+    def _sealed(self, tables: list[str], batch_id: int, ms: float,
+                rows: dict[str, int] | None = None,
+                error: Exception | None = None) -> None:
+        """Record and log the seal of ``tables`` after ``ms``: ok with
+        ``rows`` (parquet sink), or failed with ``error``."""
         for table in tables:
             if error is None:
                 self._record_seal(table, rows[table], batch_id, ms, "ok")
@@ -556,19 +548,20 @@ class OtlpSparkServer:
                                 f"rows={rows[table]} batch={batch_id}")
             else:
                 self._record_seal(table, 0, batch_id, ms, "error", str(error))
-                self._log_event(f"parquet seal failed: table={table} "
+                self._log_event(f"{self.sink} seal failed: table={table} "
                                 f"batch={batch_id} error={error}", "WARN")
 
-    def _seal_catalog(self, tables: list[str], parts, batch_id: int) -> None:
+    def _seal_catalog(self, tables: list[str], parts, batch_id: int,
+                      t0: float) -> None:
         """Catalog-mode seal: stage every table's data files first, then
         publish ONE snapshot — all-or-nothing across the whole seal,
         the reference's BEGIN..append per signal..COMMIT contract
         (reference: otlp_server.cpp:1176-1259). ``parts`` yields
         (table, frame) pairs and may name a table twice (its clean rows,
         then its refused lines' rows); all staged files land in the one
-        commit. A failure before commit leaves only unreferenced staged
-        files (vacuumable), and the next seal replays the batch."""
-        t0 = time.perf_counter()
+        commit. ``append_ms`` counts from ``t0``, the seal's start. A
+        failure before commit leaves only unreferenced staged files
+        (vacuumable), and the next seal replays the batch."""
         add: dict[str, list] = {}
         schemas: dict[str, str] = {}
         rows: dict[str, int] = dict.fromkeys(tables, 0)
@@ -581,7 +574,9 @@ class OtlpSparkServer:
                     bloom_cols=BLOOM_COLS.get(table, ()),
                     compression=self.compression)
                 add.setdefault(table, []).extend(entries)
-                schemas[table] = df.schema.json()
+                # the staged rows' read-back schema (every column
+                # nullable), not the refused lines' JVM one
+                schemas.setdefault(table, df.schema.json())
                 rows[table] += sum(e.rows for e in entries)
             stage_ms = (time.perf_counter() - t0) * 1000
             t1 = time.perf_counter()
@@ -620,25 +615,45 @@ class OtlpSparkServer:
             df = df.withColumn("body", pii_scrub(F.col("body")))
         if self._near_dup_probe is not None:
             # literal regime: map-only InSet columns in the same
-            # projection — the seal stays ONE job (pinned).
+            # projection — no job of its own (pinned).
             # Ordering contract: the stamp runs AFTER the PII
             # scrub, so signatures are computed on the text that
             # actually lands in the corpus — build the band index
             # from scrubbed text for the keys to match
             df = self._near_dup_probe.stamp(df, text_col="body")
         if self._contamination_col is not None:
-            # same projection, zero extra jobs (stamps the scrubbed
+            # same projection, no job of its own (stamps the scrubbed
             # text, like the near-dup stamp above); the column was
             # precompiled once in __init__
             df = df.withColumn("contaminated", self._contamination_col)
         return df
 
-    def _refused_parts(self, signal: str, lines: DataFrame, malformed):
-        """(table, frame) pairs for the lines the flattener refused
-        (column ``value``), via the lax JVM route (``envelopes_from_lines``
-        + ``FLATTEN``), whose dropped lines the ``malformed`` Observation
-        counts."""
+    def _staged_frame(self, staging: Path, key: str) -> DataFrame:
+        """Table ``key``'s flat rows staged under ``staging``: its
+        ``flat_schema`` columns, without the staging tree's
+        year/month/day partition columns."""
+        schema = flat_decode.flat_schema(key)
+        path = staging / TARGET_TABLES[key]
+        path.mkdir(parents=True, exist_ok=True)   # no row staged: empty
+        return (self.spark.read.schema(schema).parquet(str(path))
+                .select(*schema.fieldNames()))
+
+    def _spark_parts(self, signal: str, staging: Path, refused: int,
+                     malformed, clean: bool):
+        """(table, frame) pairs for Spark's writer out of a staged seal:
+        with ``clean``, every table's staged rows through ``_finish``;
+        then, when the staging job ``refused`` lines, their rows via the
+        lax JVM route (``envelopes_from_lines`` + ``FLATTEN``), whose
+        dropped lines the ``malformed`` Observation counts."""
         keys = flat_decode.SEAL_TABLES[signal]
+        if clean:
+            for key in keys:
+                yield TARGET_TABLES[key], self._finish(
+                    signal, self._staged_frame(staging, key))
+        if not refused:
+            return
+        lines = (self.spark.read.option("lineSep", "\n")
+                 .text(str(staging / "refused")))
         env = envelopes_from_lines(lines, signal, drop_observation=malformed)
         if len(keys) > 1:
             env = env.persist()
@@ -676,16 +691,15 @@ class OtlpSparkServer:
         return max(8, dp - 2 - 2 * self.receiver.accept_workers)
 
     def _stage(self, signal: str, sizes: dict[str, int], staging: str) -> dict:
-        """The executor route's one Spark job: the segments (path ->
-        bytes) are bin-packed by size, largest first onto the lightest
-        group, into at most one group per free slot, and each group is
-        one Python task of ``flat_decode.seal_files`` writing under
-        ``staging``. Packing on the driver balances the tasks (a file
-        scan packs whole splits and ran a second wave behind one
-        straggler), and parsing in place beats shuffling raw lines (a
-        repartition was measured to DOUBLE the seal wall, 15.5 s vs
-        7.3 s for a 2M-row batch). Returns the tasks' merged
-        ``{"files", "refused"}``."""
+        """The seal's one Spark job: the segments (path -> bytes) are
+        bin-packed by size, largest first onto the lightest group, into
+        at most one group per free slot, and each group is one Python
+        task of ``flat_decode.seal_files`` writing under ``staging``.
+        Packing on the driver balances the tasks (a file scan packs
+        whole splits and ran a second wave behind one straggler), and
+        parsing in place beats shuffling raw lines (a repartition was
+        measured to DOUBLE the seal wall, 15.5 s vs 7.3 s for a 2M-row
+        batch). Returns the tasks' merged ``{"files", "refused"}``."""
         from duckdb_otlp_spark.session import ensure_package_on_workers
 
         sc = self.spark.sparkContext
@@ -696,7 +710,8 @@ class OtlpSparkServer:
             load, i = heapq.heappop(loads)
             groups[i].append(path)
             heapq.heappush(loads, (load + sizes[path], i))
-        compression = self.compression
+        # files Spark rewrites are read back once: no codec to pay twice
+        compression = "none" if self._spark_writes() else self.compression
         ensure_package_on_workers(self.spark)
         out = sc.parallelize(groups, n).mapPartitions(
             lambda part: [flat_decode.seal_files(g, signal, staging, compression)
@@ -711,16 +726,28 @@ class OtlpSparkServer:
             dest.parent.mkdir(parents=True, exist_ok=True)
             (staging / table / rel).rename(dest)
 
+    def _spark_writes(self) -> bool:
+        """Whether a seal hands its staged rows to Spark's writer: the
+        catalog sink's sorted + bloom layout and the seal-time columns
+        of ``_finish`` need it; otherwise the staged files are the
+        export's."""
+        return bool(self.catalog is not None or self._promoted_fields()
+                    or self.scrub_body_pii or self.flag_near_dups
+                    or self._contamination_col is not None)
+
     def _seal_segments(self, signal: str, sizes: dict[str, int],
                        batch_id: int) -> None:
-        """The executor route over one batch of spool segments: stage
-        every table's parquet in one job, publish table by table (one
-        ``otlp_seal_list`` row each, 0-row tables included; a table's
-        ``append_ms`` is its row share of the job plus its own publish),
-        then seal the refused lines through the lax JVM route."""
+        """Seal one batch of spool segments: stage every table's flat
+        parquet in one job, then either publish the staged files table
+        by table (one ``otlp_seal_list`` row each, 0-row tables
+        included; a table's ``append_ms`` is its row share of the job
+        plus its own publish), or let Spark write them through
+        ``_finish`` (one snapshot for the catalog sink). The refused
+        lines follow through the lax JVM route."""
         tables = [TARGET_TABLES[k] for k in flat_decode.SEAL_TABLES[signal]]
         unsealed = list(tables)
         staging = self.export_root / f".seal-{uuid.uuid4().hex}"
+        malformed = Observation()
         t0 = time.perf_counter()
         try:
             staged = self._stage(signal, sizes, str(staging))
@@ -731,76 +758,38 @@ class OtlpSparkServer:
                 files[table].append(rel)
                 rows[table] += n
             total = sum(rows.values())
-            for table in tables:
-                t1 = time.perf_counter()
-                self._publish(staging, table, files[table])
-                share = rows[table] / total if total else 1 / len(tables)
-                self._parquet_sealed(
-                    [table], batch_id,
-                    job_ms * share + (time.perf_counter() - t1) * 1000, rows)
-                unsealed.remove(table)
-            if staged["refused"]:
-                malformed = Observation()
-                refused = (self.spark.read.option("lineSep", "\n")
-                           .text(str(staging / "refused")))
-                parts = self._refused_parts(signal, refused, malformed)
-                try:
+            share = {t: job_ms * (rows[t] / total if total else 1 / len(tables))
+                     for t in tables}
+            spark_writes = self._spark_writes()
+            parts = self._spark_parts(signal, staging, staged["refused"],
+                                      malformed, clean=spark_writes)
+            try:
+                if self.catalog is not None:
+                    unsealed = []      # the snapshot records every table
+                    self._seal_catalog(tables, parts, batch_id, t0)
+                else:
+                    if not spark_writes:
+                        for table in tables:
+                            t1 = time.perf_counter()
+                            self._publish(staging, table, files[table])
+                            self._sealed([table], batch_id, share.pop(table)
+                                         + (time.perf_counter() - t1) * 1000,
+                                         rows)
+                            unsealed.remove(table)
+                    unsealed = []      # each write records its own outcome
                     for table, df in parts:
-                        self._write_table(df, table, batch_id)
-                finally:
-                    parts.close()
+                        self._write_table(df, table, batch_id,
+                                          share.pop(table, 0.0))
+            finally:
+                parts.close()
+            if staged["refused"]:
                 self._note_malformed(signal, malformed, batch_id)
         except Exception as e:  # noqa: BLE001 — seal failures are recorded
-            self._parquet_sealed(unsealed, batch_id,
-                                 (time.perf_counter() - t0) * 1000, error=e)
+            self._sealed(unsealed, batch_id,
+                         (time.perf_counter() - t0) * 1000, error=e)
             raise
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-
-    def _seal_lines(self, signal: str, batch_df: DataFrame,
-                    batch_id: int) -> None:
-        """The JVM route over one batch of spooled lines."""
-        keys = flat_decode.SEAL_TABLES[signal]
-        tables = [TARGET_TABLES[k] for k in keys]
-        # the spool scan plans about one task per segment; coalesce packs
-        # a many-tiny-segment backlog into the seal's slots
-        batch_df = batch_df.coalesce(self._seal_slots())
-        # one Python pass parses and flattens every line; the
-        # refused-line count rides the same job (an Observation,
-        # unlike an accumulator, never re-counts retried tasks)
-        refused = Observation()
-        flat = flat_decode.flatten_lines(batch_df, signal).observe(
-            refused, F.count("__line").alias("lines"))
-        if len(keys) > 1:
-            flat = flat.persist()  # four metric tables, one pass
-        malformed = Observation()
-
-        def fallback():
-            # runs after the clean writes, whose job carried the
-            # ``refused`` Observation, so batches without such a line
-            # never plan it
-            if int(refused.get["lines"]):
-                yield from self._refused_parts(
-                    signal, flat_decode.refused_lines(flat), malformed)
-
-        lax = fallback()
-        try:
-            parts = itertools.chain(
-                ((TARGET_TABLES[k],
-                  self._finish(signal, flat_decode.table_rows(flat, k)))
-                 for k in keys),
-                lax)
-            if self.catalog is not None:
-                self._seal_catalog(tables, parts, batch_id)
-            else:
-                for table, df in parts:
-                    self._write_table(df, table, batch_id)
-        finally:
-            lax.close()
-            if len(keys) > 1:
-                flat.unpersist()
-        if int(refused.get["lines"]):
-            self._note_malformed(signal, malformed, batch_id)
 
     _WARM_SAMPLES = {
         "logs": ('{"resourceLogs":[{"scopeLogs":[{"logRecords":'
@@ -814,28 +803,26 @@ class OtlpSparkServer:
     }
 
     def _warm_seal_plans(self) -> None:
-        """Run each signal's seal route once on a one-line sample before
-        the listener opens: the first live seal then finds the Python
-        workers started with the flattener imported, and the parquet
-        write path initialized. Writes to a scratch dir, so no seal
-        telemetry and no byte release."""
+        """Run each signal's seal once on a one-line sample before the
+        listener opens: the first live seal then finds the Python
+        workers started with the flattener imported, and, where Spark
+        writes the seal, its read and parquet write paths initialized.
+        Writes to a scratch dir, so no commit, no seal telemetry and no
+        byte release."""
         import tempfile
 
         scratch = Path(tempfile.mkdtemp(prefix="otlp_warm_"))
         try:
             for signal, line in self._WARM_SAMPLES.items():
-                if self._executor_seal:
-                    seg = scratch / f"{signal}.jsonl"
-                    seg.write_text(line + "\n")
-                    self._stage(signal, {str(seg): seg.stat().st_size},
-                                str(scratch / "stage"))
-                    continue
-                lines = self.spark.createDataFrame([(line,)], "value string")
-                flat = flat_decode.flatten_lines(lines, signal)
-                key = flat_decode.SEAL_TABLES[signal][0]
-                (self._finish(signal, flat_decode.table_rows(flat, key))
-                 .write.mode("append").option("compression", self.compression)
-                 .parquet(str(scratch / key)))
+                seg = scratch / f"{signal}.jsonl"
+                seg.write_text(line + "\n")
+                stage = scratch / f"stage-{signal}"
+                self._stage(signal, {str(seg): seg.stat().st_size}, str(stage))
+                if self._spark_writes():
+                    key = flat_decode.SEAL_TABLES[signal][0]
+                    (self._finish(signal, self._staged_frame(stage, key))
+                     .write.mode("append").option("compression", self.compression)
+                     .parquet(str(scratch / key)))
         except Exception as e:  # noqa: BLE001 — warm-up is best-effort
             self._log_event(f"seal warm-up failed: {e}", "WARN")
         finally:
@@ -897,17 +884,8 @@ class OtlpSparkServer:
         sink's blind append stays at-least-once, the catalog sink's
         staged-then-commit stays all-or-nothing."""
         with self._seal_locks[signal]:
-            spool = self.spool_dir / signal
-            lines = None
-            if self._executor_seal:
-                segments = [str(p) for p in spool.glob("seg_*.jsonl")]
-            else:
-                # the one listing: a directory root lists on the driver
-                # (no parallel-listing job), and the frame reads exactly
-                # the files it listed, split on \n only (a bare \r is
-                # JSON whitespace inside a request line)
-                lines = self.spark.read.option("lineSep", "\n").text(str(spool))
-                segments = [unquote(urlparse(u).path) for u in lines.inputFiles()]
+            segments = [str(p) for p in
+                        (self.spool_dir / signal).glob("seg_*.jsonl")]
             if not segments:
                 return
             # segments are immutable once visible, and admission reserved
@@ -920,10 +898,7 @@ class OtlpSparkServer:
                 self._log_event(f"seal revived after failure: "
                                 f"signal={signal}", "WARN")
             self._failed.add(signal)
-            if lines is None:
-                self._seal_segments(signal, sizes, self._batch_ids[signal])
-            else:
-                self._seal_lines(signal, lines, self._batch_ids[signal])
+            self._seal_segments(signal, sizes, self._batch_ids[signal])
             self._failed.discard(signal)
             self._batch_ids[signal] += 1
             self.receiver.release_sealed(sum(sizes.values()), signal)

@@ -21,6 +21,15 @@ def _kv(key: str, value):
     return {"key": key, "value": {"stringValue": str(value)}}
 
 
+def row_multiset(df) -> list[str]:
+    """``df``'s rows as a sorted list of their ``repr``s, collected to the
+    driver: two frames hold the same row multiset exactly when these
+    lists are equal. Stricter than ``exceptAll`` both ways (it also tells
+    -0.0 from 0.0) and plans no JVM set operation over the compared
+    frames' expression trees."""
+    return sorted(map(repr, (tuple(r) for r in df.collect())))
+
+
 _RESOURCE = {"attributes": [_kv("service.name", "test-service"), _kv("host.name", "test-host")]}
 
 

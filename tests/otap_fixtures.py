@@ -2,8 +2,9 @@
 
 Writes one self-contained ``BatchArrowRecords`` message per signal
 (``logs-initial.bar``, ``traces-initial.bar``, ``metrics-initial.bar``),
-each with its OTLP protobuf twin (``*.otlp``), plus ``logs-zstd.bar``: the
-logs message with zstd-compressed Arrow IPC bodies. The reader gate
+each with its OTLP protobuf twin (``*.otlp``), plus ``logs-zstd.bar`` and
+``logs-lz4.bar``: the logs message with zstd- and lz4-compressed Arrow
+IPC bodies. The reader gate
 (``duckdb_otlp_spark/reader_gate.py``) reads the ``.bar`` files through
 ``read_otap_*`` and checks them against rows flattened from the ``.otlp``
 twins; ``tests/test_read_otap.py`` checks both readers against each other.
@@ -765,7 +766,9 @@ def fixture_files() -> dict[str, bytes]:
     for signal, (env, payloads) in SIGNALS.items():
         out[f"{signal}-initial.bar"] = encode_bar(payloads(env))
         out[f"{signal}-initial.otlp"] = encode_envelope_pb(env)
-    out["logs-zstd.bar"] = encode_bar(logs_payloads(LOGS_ENVELOPE), "zstd")
+    for codec in ("zstd", "lz4"):
+        out[f"logs-{codec}.bar"] = encode_bar(logs_payloads(LOGS_ENVELOPE),
+                                              codec)
     return out
 
 

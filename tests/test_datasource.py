@@ -3,7 +3,7 @@
 Mirrors test_read_otlp_json.py's contracts through the format API and
 differentials every signal against the function API (the same oracle
 style as the reader gate): identical schema, identical row sets, on
-both protobuf and JSONL inputs.
+both protobuf and JSONL inputs (row multisets compared driver-side).
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from tests.fixtures import (
     LOGS_SIMPLE,
     METRICS_ALL_TYPES,
     TRACES_SIMPLE,
+    row_multiset,
 )
 from tests.otap_fixtures import OTAP_FIXTURE_DIR
 
@@ -60,8 +61,7 @@ def test_format_matches_function_api(ds_spark, ds_dir, signal, stem, ext):
     fn = READERS[signal](ds_spark, str(ds_dir / f"{stem}{ext}"))
     assert fmt.schema == fn.schema
     assert fmt.count() == fn.count()
-    assert fmt.exceptAll(fn).count() == 0
-    assert fn.exceptAll(fmt).count() == 0
+    assert row_multiset(fmt) == row_multiset(fn)
 
 
 def test_zero_match_glob_errors(ds_spark, ds_dir):
@@ -80,7 +80,7 @@ def test_mixed_glob_auto_detects_per_file(ds_spark, ds_dir, tmp_path):
     df = _fmt(ds_spark, "logs", tmp_path / "*")
     fn = READERS["logs"](ds_spark, str(tmp_path / "*"))
     assert df.count() == fn.count()
-    assert df.exceptAll(fn).count() == 0
+    assert row_multiset(df) == row_multiset(fn)
 
 
 def test_garbage_protobuf_errors(ds_spark, tmp_path):
@@ -97,7 +97,7 @@ def test_directory_load_reads_all_files(ds_spark, ds_dir, tmp_path):
     df = _fmt(ds_spark, "logs", d)
     fn = READERS["logs"](ds_spark, str(d / "*.pb"))
     assert df.count() == fn.count()
-    assert df.exceptAll(fn).count() == 0
+    assert row_multiset(df) == row_multiset(fn)
 
 
 @pytest.mark.parametrize("prefix", ["file:", "file://", "file:///"])
@@ -112,7 +112,7 @@ def test_file_scheme_uri_forms(ds_spark, ds_dir, prefix):
           .load(uri))
     fn = READERS["logs"](ds_spark, str(path))
     assert df.count() == fn.count()
-    assert df.exceptAll(fn).count() == 0
+    assert row_multiset(df) == row_multiset(fn)
 
 
 def test_nonexistent_nonglob_path_hits_zero_match_contract(ds_spark, tmp_path):
@@ -162,8 +162,7 @@ def test_otap_format_matches_function_api(ds_spark, otap_dir, signal, bar):
     fn = OTAP_READERS[signal](ds_spark, str(otap_dir / bar))
     assert fmt.schema == fn.schema
     assert fmt.count() == fn.count()
-    assert fmt.exceptAll(fn).count() == 0
-    assert fn.exceptAll(fmt).count() == 0
+    assert row_multiset(fmt) == row_multiset(fn)
 
 
 @OTAP_DIRS

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import Observation
 
 from duckdb_otlp_spark import reader_gate
+from duckdb_otlp_spark.schemas import TARGET_TABLES
 from duckdb_otlp_spark.sources import flat_decode
 from duckdb_otlp_spark.sources.otlp_json import (
     FLATTEN,
@@ -28,7 +29,7 @@ from duckdb_otlp_spark.sources.otlp_json import (
     read_otlp_traces,
 )
 from tests import fixtures as fx
-from tests.fixtures import encode_envelope_pb
+from tests.fixtures import encode_envelope_pb, row_multiset
 
 _NS = 1713000000000000000
 
@@ -170,10 +171,6 @@ def _hostile_traces_env():
     ]}
 
 
-def _rows(df):
-    return sorted(map(repr, (tuple(r) for r in df.collect())))
-
-
 @pytest.mark.parametrize("signal", ["logs", "traces"])
 def test_flat_path_byte_identical_to_envelope_path(spark, tmp_path, signal):
     env = _hostile_logs_env() if signal == "logs" else _hostile_traces_env()
@@ -188,7 +185,7 @@ def test_flat_path_byte_identical_to_envelope_path(spark, tmp_path, signal):
         [f.name for f in control.schema.fields]
     assert [f.dataType for f in flat.schema.fields] == \
         [f.dataType for f in control.schema.fields]
-    got, want = _rows(flat), _rows(control)
+    got, want = row_multiset(flat), row_multiset(control)
     assert got == want, (
         "\n".join(a + " != " + b for a, b in zip(got, want) if a != b))
 
@@ -208,7 +205,7 @@ def test_reader_auto_mode_takes_flat_path(spark, tmp_path, signal):
     # and the rows match the explicit-protobuf control plan
     control = (flatten_logs if signal == "logs" else flatten_traces)(
         _load_envelopes(spark, str(p), signal, "protobuf"))
-    assert _rows(df) == _rows(control)
+    assert row_multiset(df) == row_multiset(control)
 
 
 def test_flat_path_timestamp_overflow_raises_same_contract(spark, tmp_path):
@@ -311,9 +308,8 @@ def test_jackson_escape_twin(spark):
 
 
 # ---------------------------------------------------------------------------
-# Seal route: spooled JSON lines flattened executor-side (flatten_lines),
-# refused lines through the lax JVM route — against the lax JVM route
-# (envelopes_from_lines + FLATTEN) over ALL the lines.
+# Seal corpora: spooled JSON lines the executor-side flattener takes, and
+# lines it refuses to the lax JVM route (envelopes_from_lines + FLATTEN).
 # ---------------------------------------------------------------------------
 
 def _log_line(*records, resource=None, scope=None):
@@ -509,50 +505,112 @@ def _lines_df(spark, lines):
     return spark.createDataFrame([(ln,) for ln in lines], "value string")
 
 
-def _seal_route(flat, signal, key, drop_obs=None):
-    """What the seal writes for table ``key``: the flattener's rows plus
-    the lax JVM route's rows for the refused lines."""
-    lax = envelopes_from_lines(flat_decode.refused_lines(flat), signal,
-                               drop_observation=drop_obs)
-    return flat_decode.table_rows(flat, key).unionByName(FLATTEN[key](lax))
+# ---------------------------------------------------------------------------
+# The seal route on real (unstarted) servers: one staging job parses and
+# flattens every line (flat_decode.seal_files); the default parquet sink
+# publishes the staged files, the catalog sink and seal-time columns let
+# Spark rewrite them. Every config is checked against the lax JVM route
+# over the same lines: the same rows, schema, partition dirs and
+# seal_malformed_lines.
+# ---------------------------------------------------------------------------
+
+_CONFIGS = {
+    "default": {},
+    "catalog": {"sink": "catalog", "iceberg_export": False},
+    "promote_resource": {"promote_resource": ["service.name"]},
+}
+
+
+def _unstarted_server(spark, work, **params):
+    from duckdb_otlp_spark.streaming.server import OtlpSparkServer
+
+    srv = OtlpSparkServer(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                          disable_auth=True, warm_start=False, **params)
+    srv._ensure_target_tables()
+    return srv
+
+
+def _spooled_server(spark, work, signal, lines, **params):
+    srv = _unstarted_server(spark, work, **params)
+    seg = srv.spool_dir / signal / "seg_test.jsonl"
+    seg.parent.mkdir(parents=True, exist_ok=True)
+    seg.write_bytes(b"".join(ln.encode() + b"\n" for ln in lines))
+    return srv
+
+
+def _seal(spark, work, signal, lines, **params):
+    srv = _spooled_server(spark, work, signal, lines, **params)
+    srv._seal(signal)
+    assert not list((srv.spool_dir / signal).iterdir())
+    assert not list(srv.export_root.glob(".seal-*"))
+    return srv
+
+
+def _sealed_flat(srv, table, control):
+    """``table`` as sealed, restricted to ``control``'s flat columns,
+    after checking that the read-back has them with equal types in
+    order."""
+    got = srv.read_table(table)
+    flat = [(f.name, f.dataType) for f in got.schema.fields
+            if f.name in control.columns]
+    assert flat == [(f.name, f.dataType) for f in control.schema.fields], table
+    return got.select(*control.columns)
+
+
+def _leaf_dirs(root):
+    return sorted(str(p.parent.relative_to(root)) for p in root.rglob("*.parquet"))
+
+
+def _control_leaves(table, control):
+    """Spark's year=/month=/day= leaves of ``control``'s rows."""
+    from pyspark.sql import functions as F
+
+    from duckdb_otlp_spark.schemas import partition_ts
+
+    ts = F.col(partition_ts(table))
+    null = "__HIVE_DEFAULT_PARTITION__"
+    return {"/".join(f"{k}={null if v is None else v}" for k, v in
+                     zip(("year", "month", "day"), r))
+            for r in control.select(F.date_format(ts, "yyyy"),
+                                    F.date_format(ts, "MM"),
+                                    F.date_format(ts, "dd")).collect()}
 
 
 @pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
-def test_seal_route_matches_lax_jvm_route(spark, signal):
+def test_seal_route_matches_lax_jvm_route(spark, tmp_path, signal):
     flat_lines, refused = _FLAT_LINES[signal], _REFUSED_LINES[signal]
-    lines = _lines_df(spark, flat_lines + refused + [" ", ""]).coalesce(2)
-    flat = flat_decode.flatten_lines(lines, signal).persist()
-    try:
-        tags = flat.select("__table", "__line").collect()
-        assert sorted(bytes(r[1]).decode() for r in tags
-                      if r[0] == -1) == sorted(refused)
-        # every table of the corpus is non-empty, so the parity below is
-        # not vacuous
-        keys = flat_decode.SEAL_TABLES[signal]
-        assert {r[0] for r in tags} >= set(range(len(keys)))
-        control_env = envelopes_from_lines(lines, signal)
-        for key in keys:
-            control = FLATTEN[key](control_env)
-            assert flat_decode.table_rows(flat, key).schema == control.schema
-            # equal row multisets, compared driver-side: an exceptAll
-            # plan carries the JVM flatten's expression trees several
-            # times over and grew the test JVM's heap by gigabytes
-            got = _rows(_seal_route(flat, signal, key))
-            assert got == _rows(control), key
-    finally:
-        flat.unpersist()
+    lines = flat_lines + refused + [" ", ""]
+    # the one parse loop refuses exactly the lines outside its domain and
+    # takes every other one, filling every table (the parity below is
+    # not vacuous)
+    keys = flat_decode.SEAL_TABLES[signal]
+    got_refused, filled = [], set()
+    for rows, out in flat_decode.seal_slices(
+            (ln.encode() for ln in lines), signal):
+        got_refused += out
+        filled |= {k for k, r in zip(keys, rows) if r}
+    assert sorted(r.decode() for r in got_refused) == sorted(refused)
+    assert filled == set(keys)
+    srv = _seal(spark, tmp_path, signal, lines)
+    control_env = envelopes_from_lines(_lines_df(spark, lines), signal)
+    for key in keys:
+        control = FLATTEN[key](control_env)
+        # equal row multisets, compared driver-side: an exceptAll plan
+        # carries the JVM flatten's expression trees several times over
+        # and grew the test JVM's heap by gigabytes
+        got = _sealed_flat(srv, TARGET_TABLES[key], control)
+        assert row_multiset(got) == row_multiset(control), key
 
 
 @pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
-def test_seal_route_counts_the_same_malformed_lines(spark, signal):
-    lines = _lines_df(spark, _FLAT_LINES[signal] + _REFUSED_LINES[signal])
-    want, got = Observation(), Observation()
+def test_seal_route_counts_the_same_malformed_lines(spark, tmp_path, signal):
+    lines = _FLAT_LINES[signal] + _REFUSED_LINES[signal]
+    want = Observation()
     key = flat_decode.SEAL_TABLES[signal][0]
-    FLATTEN[key](envelopes_from_lines(lines, signal, drop_observation=want)
-                 ).count()
-    _seal_route(flat_decode.flatten_lines(lines, signal), signal, key,
-                drop_obs=got).count()
-    assert got.get["malformed"] == want.get["malformed"] > 0
+    FLATTEN[key](envelopes_from_lines(_lines_df(spark, lines), signal,
+                                      drop_observation=want)).count()
+    srv = _seal(spark, tmp_path, signal, lines)
+    assert srv.seal_malformed_total == want.get["malformed"] > 0
 
 
 @pytest.mark.parametrize("signal,line,text", [
@@ -569,89 +627,79 @@ def test_seal_route_counts_the_same_malformed_lines(spark, signal):
                            "endTimeUnixNano": "9223372036854775807"}),
      "ARITHMETIC_OVERFLOW"),
 ])
-def test_seal_route_raises_the_same_error(spark, signal, line, text):
-    lines = _lines_df(spark, [_FLAT_LINES[signal][0], line])
-    for df in (FLATTEN[signal](envelopes_from_lines(lines, signal)),
-               _seal_route(flat_decode.flatten_lines(lines, signal), signal,
-                           signal)):
-        with pytest.raises(Exception, match=text):
-            df.collect()
-
-
-def test_seal_route_plan_has_no_jvm_flatten(spark):
-    lines = _lines_df(spark, _FLAT_LINES["logs"])
-    df = flat_decode.table_rows(flat_decode.flatten_lines(lines, "logs"),
-                                "logs")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    assert "MapInArrow" in plan
-    assert "from_json" not in plan and "Generate" not in plan
-
-
-# ---------------------------------------------------------------------------
-# The executor seal route (the parquet sink's default: one Python job
-# that parses, flattens and writes parquet) against the JVM route (a
-# server with a seal-time column, forced here) over the same spool
-# segment: the same rows, partition dirs, read-back schema and
-# seal_malformed_lines.
-# ---------------------------------------------------------------------------
-
-def _unstarted_server(spark, work, executor_seal):
-    from duckdb_otlp_spark.streaming.server import OtlpSparkServer
-
-    srv = OtlpSparkServer(spark, "otlp://127.0.0.1:0", work_dir=str(work),
-                          disable_auth=True, warm_start=False)
-    srv._ensure_target_tables()
-    assert srv._executor_seal      # the default config takes the new route
-    srv._executor_seal = executor_seal
-    return srv
-
-
-def _seal_both_routes(spark, tmp_path, signal, lines):
-    out = []
-    for executor_seal in (True, False):
-        srv = _unstarted_server(spark, tmp_path / f"x{int(executor_seal)}",
-                                executor_seal)
-        (srv.spool_dir / signal / "seg_test.jsonl").write_bytes(
-            b"".join(ln.encode() + b"\n" for ln in lines))
+def test_seal_route_raises_the_same_error(spark, tmp_path, signal, line, text):
+    lines = [_FLAT_LINES[signal][0], line]
+    with pytest.raises(Exception, match=text):
+        FLATTEN[signal](envelopes_from_lines(_lines_df(spark, lines),
+                                             signal)).collect()
+    srv = _spooled_server(spark, tmp_path, signal, lines)
+    with pytest.raises(Exception, match=text):
         srv._seal(signal)
-        assert not list((srv.spool_dir / signal).iterdir())
-        assert not list(srv.export_root.glob(".seal-*"))
-        out.append(srv)
-    return out
+    # the failed seal leaves its segment for the replay
+    assert [p.name for p in (srv.spool_dir / signal).iterdir()] == \
+        ["seg_test.jsonl"]
+    assert srv.seal_failures_total >= 1
 
 
-def _leaf_dirs(root):
-    return sorted(str(p.parent.relative_to(root)) for p in root.rglob("*.parquet"))
+def test_seal_route_plan_has_no_jvm_flatten(spark, tmp_path, monkeypatch):
+    """A seal of lines the flattener takes never builds the lax JVM
+    plan, on every config."""
+    from duckdb_otlp_spark.streaming import server
+
+    def spy(*args, **kwargs):
+        raise AssertionError("envelopes_from_lines called")
+
+    monkeypatch.setattr(server, "envelopes_from_lines", spy)
+    for config, params in _CONFIGS.items():
+        for signal in ("logs", "traces", "metrics"):
+            srv = _seal(spark, tmp_path / config / signal, signal,
+                        _FLAT_LINES[signal], **params)
+            assert srv.seal_failures_total == 0, (config, signal)
+            assert srv.sealed_rows_total > 0, (config, signal)
 
 
-@pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
-def test_executor_seal_matches_jvm_route(spark, tmp_path, signal):
-    from duckdb_otlp_spark.schemas import TARGET_TABLES
-
+# the default config keeps the bare signal ids
+@pytest.mark.parametrize("signal,config", [
+    pytest.param(signal, config,
+                 id=signal if config == "default" else f"{signal}-{config}")
+    for config in _CONFIGS for signal in ("logs", "traces", "metrics")])
+def test_executor_seal_matches_jvm_route(spark, tmp_path, signal, config):
     lines = _FLAT_LINES[signal] + _REFUSED_LINES[signal] + [" ", ""]
-    new, jvm = _seal_both_routes(spark, tmp_path, signal, lines)
-    assert new.seal_malformed_total == jvm.seal_malformed_total > 0
-    assert new.sealed_rows_total == jvm.sealed_rows_total
-    for key in flat_decode.SEAL_TABLES[signal]:
-        table = TARGET_TABLES[key]
-        assert _leaf_dirs(new.export_root / table) == \
-            _leaf_dirs(jvm.export_root / table), table
-        got = spark.read.parquet(str(new.export_root / table))
-        want = spark.read.parquet(str(jvm.export_root / table))
-        assert got.schema == want.schema, table
-        assert _rows(got) == _rows(want), table
-    # one otlp_seal_list row per table from each route's clean pass,
-    # another from the refused lines' JVM pass
-    assert [(e.table, e.status) for e in new.seal_history] == \
-        [(e.table, e.status) for e in jvm.seal_history]
+    srv = _seal(spark, tmp_path, signal, lines, **_CONFIGS[config])
+    malformed = Observation()
+    control_env = envelopes_from_lines(_lines_df(spark, lines), signal,
+                                       drop_observation=malformed).persist()
+    try:
+        total = 0
+        tables = []
+        for key in flat_decode.SEAL_TABLES[signal]:
+            table = TARGET_TABLES[key]
+            tables.append(table)
+            control = FLATTEN[key](control_env)
+            want = row_multiset(control)
+            assert row_multiset(_sealed_flat(srv, table, control)) == want, table
+            total += len(want)
+            if srv.catalog is None:
+                assert set(_leaf_dirs(srv.export_root / table)) == \
+                    _control_leaves(table, control), table
+        assert srv.seal_malformed_total == malformed.get["malformed"] > 0
+        assert srv.sealed_rows_total == total
+    finally:
+        control_env.unpersist()
+    # one otlp_seal_list row per table from the staged rows; the parquet
+    # sink adds one more per table from the refused lines' JVM pass, the
+    # catalog sink commits both in the one snapshot
+    passes = 1 if srv.catalog is not None else 2
+    assert [(e.table, e.status) for e in srv.seal_history] == \
+        [(t, "ok") for t in tables] * passes
 
 
 def test_executor_seal_partition_dirs(spark, tmp_path):
     """year=/month=/day= leaves equal Spark's date_format over
-    TIMESTAMP_NTZ: NULL -> __HIVE_DEFAULT_PARTITION__, pre-1970
-    microseconds floor into the day before the epoch, and a day's last
-    microsecond stays in that day."""
+    TIMESTAMP_NTZ, whether the staged files are published (default) or
+    rewritten by Spark (promote_resource): NULL ->
+    __HIVE_DEFAULT_PARTITION__, pre-1970 microseconds floor into the day
+    before the epoch, and a day's last microsecond stays in that day."""
     day_ns = 86_400_000_000_000
     lines = [_log_line({"body": {"stringValue": "no time"}}),
              _log_line({"timeUnixNano": "-5"}),
@@ -659,16 +707,18 @@ def test_executor_seal_partition_dirs(spark, tmp_path):
              _log_line({"timeUnixNano": str(day_ns - 1000)},
                        {"timeUnixNano": str(day_ns)}),
              _log_line({"timeUnixNano": str(_NS)})]
-    new, jvm = _seal_both_routes(spark, tmp_path, "logs", lines)
     null = "__HIVE_DEFAULT_PARTITION__"
     want = sorted({f"year={null}/month={null}/day={null}",
                    "year=1969/month=12/day=31", "year=1969/month=12/day=30",
                    "year=1970/month=01/day=01", "year=1970/month=01/day=02",
                    "year=2024/month=04/day=13"})
-    for srv in (new, jvm):
-        assert sorted(set(_leaf_dirs(srv.export_root / "otlp_logs"))) == want
-    assert _rows(spark.read.parquet(str(new.export_root / "otlp_logs"))) == \
-        _rows(spark.read.parquet(str(jvm.export_root / "otlp_logs")))
+    control = flatten_logs(envelopes_from_lines(_lines_df(spark, lines), "logs"))
+    for config in ("default", "promote_resource"):
+        srv = _seal(spark, tmp_path / config, "logs", lines, **_CONFIGS[config])
+        assert sorted(set(_leaf_dirs(srv.export_root / "otlp_logs"))) == \
+            want, config
+        assert row_multiset(_sealed_flat(srv, "otlp_logs", control)) == \
+            row_multiset(control), config
 
 
 def test_seal_files_streams_one_slice_at_a_time(tmp_path):

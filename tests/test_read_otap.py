@@ -1,8 +1,9 @@
 """OTAP reader tests over fixture pairs: each .bar file has a
 semantically-equivalent .otlp protobuf twin, and the oracle is the
 reference's own bidirectional EXCEPT pattern — read_otap_* and
-read_otlp_* must produce identical row sets
-(reference: test/sql/read_otap.test:44-103).
+read_otlp_* must produce identical row multisets
+(reference: test/sql/read_otap.test:44-103), compared driver-side
+(``tests.fixtures.row_multiset``).
 
 Two fixture sets: the committed one in tests/data/otap (written by the
 test-side encoder tests/otap_fixtures.py), checked on every host, and the
@@ -23,6 +24,7 @@ from duckdb_otlp_spark.sources.otap import (
     envelope_from_tables,
 )
 from duckdb_otlp_spark.sources.otlp_json import READERS
+from tests.fixtures import row_multiset
 from tests.otap_fixtures import OTAP_FIXTURE_DIR
 
 OTAP_DIR = Path("/root/reference/test/data/otap")
@@ -42,8 +44,7 @@ def _parity(spark, otap_dir, signal_reader: str, bar: str, otlp: str):
     otlp_df = READERS[signal_reader](spark, str(otap_dir / otlp))
     assert otap_df.schema == otlp_df.schema
     assert otap_df.count() == otlp_df.count()
-    assert otap_df.exceptAll(otlp_df).count() == 0
-    assert otlp_df.exceptAll(otap_df).count() == 0
+    assert row_multiset(otap_df) == row_multiset(otlp_df)
 
 
 @with_fixture_dirs
@@ -86,21 +87,25 @@ def test_typed_path_matches_json_twin(spark, otap_dir, reader, bar, signal):
     js = flatten(_otap_envelopes_json(spark, str(otap_dir / bar), signal))
     assert typed.schema == js.schema
     assert typed.count() == js.count()
-    assert typed.exceptAll(js).count() == 0
-    assert js.exceptAll(typed).count() == 0
+    assert row_multiset(typed) == row_multiset(js)
     from duckdb_otlp_spark.plans import audit
     assert "from_json" not in audit(typed).text
     assert "from_json" in audit(js).text
 
 
-@with_fixture_dirs
-def test_otap_zstd(spark, otap_dir):
-    """Arrow-IPC zstd compression decodes transparently and matches the
-    uncompressed twin (reference: api.md compression contract)."""
-    a = OTAP_READERS["logs"](spark, str(otap_dir / "logs-zstd.bar"))
+# the old ids stay for zstd; the reference tree has no lz4 file
+@pytest.mark.parametrize("otap_dir,codec", [
+    pytest.param(OTAP_FIXTURE_DIR, "zstd", id="committed"),
+    pytest.param(OTAP_DIR, "zstd", id="reference", marks=needs_reference),
+    pytest.param(OTAP_FIXTURE_DIR, "lz4", id="committed-lz4"),
+])
+def test_otap_zstd(spark, otap_dir, codec):
+    """Arrow-IPC zstd and lz4 compression decode transparently and match
+    the uncompressed twin (reference: api.md compression contract)."""
+    a = OTAP_READERS["logs"](spark, str(otap_dir / f"logs-{codec}.bar"))
     b = OTAP_READERS["logs"](spark, str(otap_dir / "logs-initial.bar"))
     assert a.count() == LOG_RECORDS[otap_dir]
-    assert a.exceptAll(b).count() == 0
+    assert row_multiset(a) == row_multiset(b)
 
 
 @needs_reference
@@ -286,8 +291,7 @@ def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
     typed = read_otap_logs(spark, str(p))
     js = oj.flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
     assert typed.count() == js.count() == n
-    assert typed.exceptAll(js).count() == 0
-    assert js.exceptAll(typed).count() == 0
+    assert row_multiset(typed) == row_multiset(js)
     # slicing engaged: 2 bounded envelope rows vs the twin's single row
     assert _otap_envelopes(spark, str(p), "logs").count() == 2
     assert _otap_envelopes_json(spark, str(p), "logs").count() == 1
@@ -308,5 +312,5 @@ def test_undersized_otap_envelope_not_sliced(spark, tmp_path):
     typed = read_otap_logs(spark, str(p))
     js = oj.flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
     assert typed.count() == js.count() == 37
-    assert typed.exceptAll(js).count() == 0
+    assert row_multiset(typed) == row_multiset(js)
     assert _otap_envelopes(spark, str(p), "logs").count() == 1

@@ -156,8 +156,9 @@ def test_flag_near_dups_at_seal(spark, tmp_path_factory):
     band index — a planted duplicate of an indexed document flags, an
     unrelated body does not (the C41 screen's server integration; the
     judge's r8 'wire it into the ingest spine' item). The small index
-    compiles to the literal regime, so the seal plan stays the same
-    single map-only job (plan pinned by
+    compiles to the literal regime, so the stamp adds no job to the
+    seal's staging job + Spark write: it stays map-only inside the
+    write's projection (plan pinned by
     tests/test_streaming_operators.py::test_band_probe_regimes_parity_and_plan)."""
     from tests.fixtures import BASE_NS, _kv, _log_env
 
@@ -275,7 +276,8 @@ def test_flag_contamination_at_seal(spark, tmp_path_factory):
     """otlp_serve(flag_contamination_grams=<eval gram set>): a log body
     overlapping the eval suite beyond max_overlap is stamped
     contaminated=true at seal, clean bodies false — C28's server
-    integration, same single-job contract as the other stamps. An
+    integration. Like the other stamps it is map-only in the Spark write
+    that follows the seal's staging job, adding no job of its own. An
     over-ceiling gram set is rejected at construction with a pointer to
     the batch screen."""
     import pytest
@@ -796,15 +798,15 @@ def _job_ids(spark) -> set[int]:
     return out
 
 
-def _quiet_server(spark, work):
-    """A default-config listener whose timer seals are stopped, so only
-    otlp_flush seals (no tick can race a job count); and the frame
-    otlp_serve returned."""
+def _quiet_server(spark, work, **params):
+    """A listener (default config, or ``params``) whose timer seals are
+    stopped, so only otlp_flush seals (no tick can race a job count);
+    and the frame otlp_serve returned."""
     from duckdb_otlp_spark.streaming.server import _get
 
     served = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
                         disable_auth=True, seal_max_age_ms=60_000,
-                        warm_start=False)
+                        warm_start=False, **params)
     srv = _get(served.collect()[0]["uri"])
     srv._stopping.set()
     for sealer in srv._sealers:
@@ -953,20 +955,70 @@ def test_failed_seal_job_publishes_nothing_and_replays(spark, tmp_path_factory):
         otlp_stop(spark, srv.uri.canonical, drain=False)
 
 
-def test_start_removes_orphaned_staging_and_warms_the_seal(spark, tmp_path_factory):
+@pytest.mark.parametrize("params", [
+    {}, {"sink": "catalog", "iceberg_export": False},
+    {"promote_resource": ["service.name"]}, {"scrub_body_pii": True},
+], ids=["default", "catalog", "promote_resource", "scrub_body_pii"])
+def test_every_config_seals_through_the_staging_job(spark, tmp_path_factory,
+                                                    params):
+    """Every config parses and stages its seal with the one staging job:
+    each flush runs it once per signal that has segments, and only the
+    step after it depends on the config."""
+    srv, _ = _quiet_server(spark, tmp_path_factory.mktemp("one_route"),
+                           **params)
+    calls = []
+    stage = srv._stage
+
+    def spy(signal, sizes, staging):
+        calls.append(signal)
+        return stage(signal, sizes, staging)
+
+    srv._stage = spy
+    try:
+        for env in LOGS_SIMPLE:
+            assert _post(srv.uri.url, "/v1/logs", env, token=None)[0] == 202
+            srv.receiver.rotate_all()
+        assert _post(srv.uri.url, "/v1/metrics", METRICS_SIMPLE[0],
+                     token=None)[0] == 202
+        srv.flush()
+        assert sorted(calls) == ["logs", "metrics"]
+        srv.flush()                  # nothing spooled: no staging job
+        assert sorted(calls) == ["logs", "metrics"]
+        assert srv.read_table("otlp_logs").count() == 3
+        assert srv.read_table("otlp_metrics_gauge").count() == 1
+    finally:
+        otlp_stop(spark, srv.uri.canonical, drain=False)
+
+
+@pytest.mark.parametrize("sink", ["parquet", "catalog"])
+def test_start_removes_orphaned_staging_and_warms_the_seal(
+        spark, tmp_path_factory, monkeypatch, sink):
     """A seal cut short by a crash leaves its hidden staging dir under
     the export root; the next start removes it (its rows are replayed
-    from the spool). The same start warms the executor seal route."""
-    from duckdb_otlp_spark.streaming.server import _get, otlp_server_log
+    from the spool), on either sink. The same start warms the seal: one
+    staging job per signal, without a warning."""
+    from duckdb_otlp_spark.streaming.server import (
+        OtlpSparkServer,
+        otlp_server_log,
+    )
 
-    work = tmp_path_factory.mktemp("orphan")
+    warmed = []
+    stage = OtlpSparkServer._stage
+
+    def spy(self, signal, sizes, staging):
+        warmed.append(signal)
+        return stage(self, signal, sizes, staging)
+
+    monkeypatch.setattr(OtlpSparkServer, "_stage", spy)
+    work = tmp_path_factory.mktemp(f"orphan_{sink}")
     orphan = work / "export" / ".seal-0123" / "otlp_logs" / "year=2024"
     orphan.mkdir(parents=True)
     (orphan / "part-x.parquet").write_bytes(b"PAR1")
     uri = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
-                     disable_auth=True).collect()[0]["uri"]
+                     disable_auth=True, sink=sink,
+                     iceberg_export=False).collect()[0]["uri"]
     try:
-        assert _get(uri)._executor_seal
+        assert sorted(warmed) == ["logs", "metrics", "traces"]
         assert not (work / "export" / ".seal-0123").exists()
         assert not [r for r in otlp_server_log(spark, uri).collect()
                     if r["level"] == "WARN"]
