@@ -18,20 +18,24 @@ test ``tests/test_datasource.py``):
 - the 100 MB per-file cap and the 0-match glob error;
 - identical flattened rows and schema per signal.
 
-``read()`` yields ``pyarrow.RecordBatch`` (Spark 4 DataSource Arrow
-return), so rows cross the Python-JVM boundary as columnar batches,
-not per-row pickles: the per-partition cost is the shared envelope
-decode (the same wire/JSON decode the function API runs in
-``mapInArrow``) plus the per-file flatten of ``sources/flat_decode`` —
-the JVM flatten's Python twin, which the seal and the protobuf reads
-use too. The reader gate's row-wise ``expected_*`` flatteners stay an
-independent oracle only.
+``read()`` is ``flat_decode.decode_file``, the per-file decode the
+protobuf and OTAP readers run in ``mapInArrow``: the same file rules,
+error texts and flatteners. It yields one ``pyarrow.RecordBatch`` per
+envelope slice, so rows cross the Python-JVM boundary as columnar
+batches.
+
+Divergence: JSON files are parsed strictly in Python, while
+``read_otlp_*`` parses them with the JVM's lax ``from_json``. Both
+raise ``OTLP parse error: invalid JSON`` and ``OTLP parse error:
+expected '<spine>' envelope`` for the same files, but a document with a
+mistyped field below the spine (``"severityNumber": {"oops": 1}``)
+reads as NULL-filled rows through ``read_otlp_*`` and raises ``OTLP
+parse error`` here.
 """
 
 from __future__ import annotations
 
 import glob as _glob
-import json
 from pathlib import Path
 from typing import Iterator
 
@@ -43,50 +47,14 @@ _SIGNALS = ("logs", "traces", "metrics_gauge", "metrics_sum",
             "metrics_histogram", "metrics_exp_histogram")
 
 
-def _file_envelopes(fpath: str, wire_signal: str,
-                    container: str = "otlp") -> list[dict]:
-    from duckdb_otlp_spark.sources import otlp_proto
-    from duckdb_otlp_spark.sources.otlp_json import (
-        _ENVELOPES, MAX_READ_FILE_BYTES, _conform_to_schema, _is_ndjson)
-
-    b = Path(fpath).read_bytes()
-    if len(b) > MAX_READ_FILE_BYTES:
-        raise ValueError(f"OTLP read error: file exceeds "
-                         f"{MAX_READ_FILE_BYTES} byte limit: {fpath}")
-    if not b:
-        return []
-    # the flatteners take the envelope domain the JVM's from_json
-    # yields (int64s as text, doubles as floats); the wire decoders
-    # already emit it, JSON and OTAP trees are conformed to it
-    env_schema = _ENVELOPES[wire_signal][1]
-    if container == "otap":
-        from duckdb_otlp_spark.sources.otap import bar_to_envelope
-        return [_conform_to_schema(bar_to_envelope(b, wire_signal), env_schema)]
-    if not b.lstrip(b"\xef\xbb\xbf").strip():
-        raise ValueError(f"OTLP parse error: whitespace-only file: {fpath}")
-    if otlp_proto.looks_like_json(b):
-        text = b.decode("utf-8")
-        lines = [ln for ln in text.split("\n") if ln.strip()]
-        docs = lines if _is_ndjson(lines) else [text]
-        return [_conform_to_schema(json.loads(d), env_schema, strict=True)
-                for d in docs]
-    try:
-        return [otlp_proto.DECODERS[wire_signal](b)]
-    except ValueError as e:
-        raise ValueError(f"OTLP parse error: invalid protobuf payload "
-                         f"({e}): {fpath}") from e
-
-
 class _OtlpReader(DataSourceReader):
-    def __init__(self, options: dict, schema: StructType,
-                 container: str = "otlp"):
+    def __init__(self, options: dict, container: str = "otlp"):
         self.container = container
         signal = options.get("signal", "logs")
         if signal not in _SIGNALS:
             raise ValueError(f"unknown signal {signal!r}; expected one of "
                              f"{sorted(_SIGNALS)}")
         self.signal = signal
-        self.schema = schema
         path = options.get("path")
         if not path:
             raise ValueError("format('otlp') needs a path: .load('/dir/*.pb')")
@@ -132,33 +100,11 @@ class _OtlpReader(DataSourceReader):
         # one file per partition — the reference's parallelism unit
         return [InputPartition(f) for f in self.files]
 
-    # Arrow batch size: bounds peak ARROW memory per handoff while
-    # keeping the per-batch JVM transfer amortized
-    _BATCH_ROWS = 65536
-
     def read(self, partition) -> Iterator:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        from duckdb_otlp_spark.sources import flat_decode
-        flatten, wire_signal = flat_decode.FLATTENERS[self.signal]
-        names = [f.name for f in self.schema.fields]
-        atypes = [to_arrow_type(f.dataType) for f in self.schema.fields]
-
-        def batch(rows):
-            return pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, t in zip(zip(*rows), atypes)],
-                names=names)
-
-        rows: list = []
-        for env in _file_envelopes(partition.value, wire_signal,
-                                   self.container):
-            rows += flatten(env)
-            while len(rows) >= self._BATCH_ROWS:
-                yield batch(rows[:self._BATCH_ROWS])
-                del rows[:self._BATCH_ROWS]
-        if rows:
-            yield batch(rows)
+        from duckdb_otlp_spark.sources.flat_decode import decode_file
+        fpath = partition.value
+        return decode_file(fpath, Path(fpath).read_bytes(), self.signal,
+                           self.container)
 
 
 class OtlpDataSource(DataSource):
@@ -177,7 +123,7 @@ class OtlpDataSource(DataSource):
         return flat_schema(signal)
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return _OtlpReader(self.options, schema)
+        return _OtlpReader(self.options)
 
 
 class OtapDataSource(OtlpDataSource):
@@ -191,7 +137,7 @@ class OtapDataSource(OtlpDataSource):
         return "otap"
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return _OtlpReader(self.options, schema, container="otap")
+        return _OtlpReader(self.options, container="otap")
 
 
 def register(spark) -> None:

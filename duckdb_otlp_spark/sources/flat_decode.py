@@ -6,10 +6,14 @@ each an exact twin of the JVM flatten in ``otlp_json`` (``flatten_*``:
 callers take the flat columns straight from Python instead of nested
 envelope rows:
 
-- protobuf file reads of logs/traces (``read_pb_flat``): the wire
-  decode and the flatten run in one pass. Measured on the
-  1M-record/32-file pb bench corpus at local[32] (r14): 5.0-5.6 s via
-  the envelope + JVM flatten route, 1.5-1.75 s here;
+- file reads through one per-file decode (``decode_file``): the
+  protobuf reads of all six ``read_otlp_*`` tables and the six
+  ``read_otap_*`` readers (both via ``read_flat``, one ``mapInArrow``),
+  and ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
+  The wire or OTAP decode and the flatten run in one pass. Measured on
+  the 1M-record/32-file pb bench corpus at local[32] (r14): 5.0-5.6 s
+  via the envelope + JVM flatten route, 1.5-1.75 s here. JSON reads
+  through ``read_otlp_*`` keep the JVM route;
 - the live server's seal, through one parse loop (``seal_slices``):
   each spooled JSON request line goes ``json.loads`` ->
   ``otlp_json._conform_to_schema(strict=True)`` -> flattener. A line
@@ -20,8 +24,7 @@ envelope rows:
   server config seals through ``seal_files``, which writes the rows as
   partitioned parquet inside the Python task; the parquet sink's default
   config publishes those files as they are, while the catalog sink and
-  the seal-time columns have Spark read them back and write;
-- ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
+  the seal-time columns have Spark read them back and write.
 
 Semantics: every coercion below twins the JVM expression over the
 conformed envelope domain — severity/flags int32 windows (try_cast
@@ -37,7 +40,8 @@ decoders only emit canonical text, and the seal refuses such lines to
 the JVM route. Byte parity is pinned by tests/test_flat_decode.py over
 the reader-gate fixtures and adversarial pb and JSON corpora.
 
-Documented divergence (pb reads and the DataSource only): non-"N.0"
+Documented divergence (the file reads of ``decode_file`` only: protobuf
+reads of every table, ``read_otap_*`` and the DataSource): non-"N.0"
 doubles outside the proven-exact zone — |x| >= 9e15 rendered via
 Double.toString, and subnormals — may differ from JDK 17's
 FloatingDecimal in the LAST DIGITS of the rendered JSON number (this
@@ -63,7 +67,10 @@ from duckdb_otlp_spark.sources.otlp_json import (
     _ENVELOPES,
     _SEVERITY_NAMES,
     MAX_ENVELOPE_SLICE_RECORDS,
+    MAX_READ_FILE_BYTES,
     _conform_to_schema,
+    _is_ndjson,
+    slice_envelope,
 )
 
 _I64_MAX = 9223372036854775807
@@ -554,7 +561,7 @@ def flat_schema(key: str) -> T.StructType:
 
 
 # ---------------------------------------------------------------------------
-# Protobuf file reader
+# File readers: protobuf, OTAP, and format("otlp"/"otap")
 # ---------------------------------------------------------------------------
 
 # driver-side format sniff budget for mode="auto": above this many
@@ -612,65 +619,113 @@ def all_protobuf(spark, path) -> bool:
         return False
 
 
-def read_pb_flat(spark, path, signal: str):
-    """Protobuf file(s) -> FINAL flat signal table, decoded and
-    flattened executor-side (one file per task, the generic path's
-    parallelism unit). Raises the same error contracts as the envelope
-    route: per-file 100 MB cap, whitespace-only files, invalid
-    protobuf payloads, int64 timestamp overflow."""
+def _json_envelopes(text: str, signal: str):
+    """An OTLP/JSON file (one document, or NDJSON) -> strictly conformed
+    envelopes, raising the JVM parse's two error classes (``invalid
+    JSON`` / ``expected '<spine>' envelope``, each with the document's
+    first 120 characters). A document the JVM would read leniently (a
+    mistyped field below the spine) raises here instead."""
+    spine, env_schema = _ENVELOPES[signal]
+    lines = [ln for ln in text.split("\n") if ln.strip()]
+    for doc in lines if _is_ndjson(lines) else [text]:
+        excerpt = doc[:120]
+        try:
+            env = json.loads(doc)
+        except ValueError:
+            raise ValueError(
+                f"OTLP parse error: invalid JSON: {excerpt}") from None
+        if type(env) is not dict or type(env.get(spine)) is not list:
+            raise ValueError(
+                f"OTLP parse error: expected '{spine}' envelope: {excerpt}")
+        try:
+            yield _conform_to_schema(env, env_schema, strict=True)
+        except (ValueError, OverflowError) as e:
+            raise ValueError(f"OTLP parse error: {e}: {excerpt}") from e
+
+
+def _file_envelopes(fpath: str, data: bytes, signal: str, container: str):
+    if container == "otap":
+        from duckdb_otlp_spark.sources.otap import (
+            OtapDecodeError, _err, bar_to_envelope)
+        try:
+            env = bar_to_envelope(data, signal)
+        except OtapDecodeError:
+            raise
+        except Exception as e:
+            raise _err(f"{e} ({fpath})") from e
+        # the flatteners take the domain from_json yields; the OTAP
+        # tree is conformed to it, the wire decoders emit it already
+        return [_conform_to_schema(env, _ENVELOPES[signal][1])]
+    if not data.lstrip(b"\xef\xbb\xbf").strip():
+        raise ValueError(f"OTLP parse error: whitespace-only file: {fpath}")
+    from duckdb_otlp_spark.sources import otlp_proto
+    if container == "otlp" and otlp_proto.looks_like_json(data):
+        return _json_envelopes(data.decode("utf-8"), signal)
+    try:
+        return [otlp_proto.DECODERS[signal](data)]
+    except ValueError as e:
+        raise ValueError(f"OTLP parse error: invalid protobuf payload "
+                         f"({e}): {fpath}") from e
+
+
+def decode_file(fpath: str, data: bytes, key: str, container: str,
+                cap: int = MAX_READ_FILE_BYTES):
+    """One input file -> ``flat_schema(key)`` Arrow record batches: the
+    per-file decode behind :func:`read_flat` and
+    ``format("otlp"/"otap")``.
+
+    ``container`` names the file format: ``"protobuf"`` (OTLP wire),
+    ``"otap"`` (one self-contained ``BatchArrowRecords`` message) or
+    ``"otlp"`` (per-file FORMAT AUTO: OTLP/JSON document or NDJSON,
+    else protobuf). Every container shares the reference's file rules:
+    a file over ``cap`` bytes raises ``OTLP read error``, an empty file
+    yields no rows, and a whitespace-only OTLP file raises. Bad payloads
+    raise ``OTLP parse error: invalid protobuf payload`` or ``OTAP
+    decode error``. Each envelope is cut by ``slice_envelope`` and each
+    slice becomes one batch, so a batch holds at most
+    ``MAX_ENVELOPE_SLICE_RECORDS`` records."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    if len(data) > cap:
+        raise ValueError(
+            f"OTLP read error: file exceeds {cap} byte limit: {fpath}")
+    if not data:
+        return
+    flatten, signal = FLATTENERS[key]
+    schema = to_arrow_schema(flat_schema(key))
+    for env in _file_envelopes(fpath, data, signal, container):
+        for part in slice_envelope(env, signal):
+            tuples = flatten(part)
+            if tuples:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type)
+                     for c, f in zip(zip(*tuples), schema)], names=schema.names)
+
+
+def read_flat(spark, path, key: str, container: str):
+    """Protobuf or OTAP file(s) -> FINAL flat table ``key``, decoded
+    and flattened executor-side by :func:`decode_file` in one
+    ``mapInArrow`` (``binaryFile`` keeps one file per task, the
+    reference's parallelism unit)."""
     from duckdb_otlp_spark.session import ensure_package_on_workers
-    from duckdb_otlp_spark.sources.otlp_json import (
-        MAX_READ_FILE_BYTES, slice_envelope)
+    from duckdb_otlp_spark.sources import otlp_json
 
-    out_schema = flat_schema(signal)
-    arrow_fields = [to_arrow_type(f.dataType) for f in out_schema.fields]
-    names = [f.name for f in out_schema.fields]
+    # bound at plan-build time so the closure ships the value (a module
+    # global would re-resolve on the worker, ignoring driver-side
+    # monkeypatches)
+    cap = otlp_json.MAX_READ_FILE_BYTES
     paths = path if isinstance(path, list) else [path]
-    max_slice = MAX_ENVELOPE_SLICE_RECORDS
 
     def decode(batches):
-        from duckdb_otlp_spark.sources import otlp_proto
-
-        flatten = FLATTENERS[signal][0]
         for batch in batches:
-            for fpath, length, content in zip(batch.column(0).to_pylist(),
-                                              batch.column(1).to_pylist(),
-                                              batch.column(2).to_pylist()):
-                if length > MAX_READ_FILE_BYTES:
-                    raise ValueError(
-                        f"OTLP read error: file exceeds {MAX_READ_FILE_BYTES} "
-                        f"byte limit: {fpath}")
-                b = bytes(content)
-                if not b:
-                    continue  # empty file -> 0 rows (reference parity)
-                if not b.lstrip(b"\xef\xbb\xbf").strip():
-                    raise ValueError(
-                        f"OTLP parse error: whitespace-only file: {fpath}")
-                try:
-                    decoded = otlp_proto.DECODERS[signal](b)
-                except ValueError as e:
-                    raise ValueError(
-                        f"OTLP parse error: invalid protobuf payload "
-                        f"({e}): {fpath}") from e
-                # slice: bounds each emitted Arrow batch the same way
-                # the envelope route bounds its struct rows
-                for part in slice_envelope(decoded, signal,
-                                           max_records=max_slice):
-                    tuples = flatten(part)
-                    if not tuples:
-                        continue
-                    cols = list(zip(*tuples))
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(c, type=t)
-                         for c, t in zip(cols, arrow_fields)], names)
+            for fpath, content in zip(batch.column(0).to_pylist(),
+                                      batch.column(1).to_pylist()):
+                yield from decode_file(fpath, content, key, container, cap)
 
-    files = (spark.read.format("binaryFile").load(paths)
-             .select("path", "length", "content"))
+    files = spark.read.format("binaryFile").load(paths).select("path", "content")
     ensure_package_on_workers(files.sparkSession)
-    return files.mapInArrow(decode, out_schema)
+    return files.mapInArrow(decode, flat_schema(key))
 
 
 # ---------------------------------------------------------------------------

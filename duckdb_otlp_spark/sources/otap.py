@@ -9,14 +9,12 @@ the SAME flattened schemas as the ``read_otlp_*`` readers.
 
 Strategy: executor-side (``binaryFile`` + ``mapInArrow``, one file per
 task = the reference's parallelism unit) the payload tables are decoded
-with pyarrow, re-assembled into proto3-JSON envelope dicts, and emitted
-as ONE typed Arrow struct column matching the signal schema — a single
-parse, no JSON text round-trip — which then flows through the exact
-same JVM-side flatten plan as OTLP/JSON, so OTAP↔OTLP row parity holds
-by construction, which is the reference's own differential oracle
-(reference: test/sql/read_otap.test:44-79). The JSON-text render +
-``from_json`` variant survives as ``_otap_envelopes_json``, the typed
-path's differential twin.
+with pyarrow, re-assembled into proto3-JSON envelope dicts, and
+flattened to the final rows by the same per-file decode the protobuf
+readers use (``flat_decode.read_flat``): the same file rules, the same
+flatteners, so OTAP↔OTLP row parity holds by construction, which is the
+reference's own differential oracle (reference:
+test/sql/read_otap.test:44-79).
 
 otel-arrow encodings handled (public spec, github.com/open-telemetry/otel-arrow):
 - ``delta`` ids: cumulative sum over non-null stored values;
@@ -36,23 +34,12 @@ a wrong-signal file all raise "OTAP decode error".
 from __future__ import annotations
 
 import base64
-import json
 import struct
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_otlp_spark.sources.otlp_json import (
-    _ENVELOPES,
-    _conform_to_schema,  # moved there in r13 (shared with the JSON doc route)
-    flatten_logs,
-    flatten_metrics_exp_histogram,
-    flatten_metrics_gauge,
-    flatten_metrics_histogram,
-    flatten_metrics_sum,
-    flatten_traces,
-    slice_envelope,
-)
+from duckdb_otlp_spark.sources.flat_decode import read_flat
 from duckdb_otlp_spark.sources.otlp_proto import _fields
 
 # public otel-arrow ArrowPayloadType values
@@ -830,114 +817,30 @@ def _metrics_envelope(tables, res_attrs, scope_attrs) -> dict:
 # Spark readers
 # ---------------------------------------------------------------------------
 
-def _otap_envelopes(spark: SparkSession, path: str | list[str],
-                    signal: str,
-                    max_slice_records: int | None = None) -> DataFrame:
-    """Typed single-parse read path: the executor-side decoder emits the
-    envelope as ONE Arrow struct column matching the signal schema
-    (``mapInArrow``), so the JVM flatten consumes typed data directly —
-    no JSON text render, no second ``from_json`` parse. The JSON-text
-    variant survives as :func:`_otap_envelopes_json`, the differential
-    twin (tests/test_read_otap.py pins typed == json on the reference
-    fixtures).
-
-    Oversized envelopes are sliced into bounded rows before Arrow
-    emission (``slice_envelope``, the same guard the protobuf path
-    grew at the 4M-record probe tier): one self-contained OTAP message
-    per file is the reference contract (test/sql/read_otap.test), and
-    a 100 MB message would otherwise become ONE JVM struct row — the
-    heap-cliff shape that OOM'd the unsliced pb read. Slicing is
-    output-invariant (flatten explodes per record; resource/scope
-    columns recompute identically per slice) — pinned typed==json on
-    an over-cap file by tests/test_read_otap.py."""
-    from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
-    mr = MAX_ENVELOPE_SLICE_RECORDS if max_slice_records is None \
-        else max_slice_records
-    paths = path if isinstance(path, list) else [path]
-    files = spark.read.format("binaryFile").load(paths).select("path", "content")
-    field, env_schema = _ENVELOPES[signal]
-    from pyspark.sql.types import StructField, StructType
-    out_schema = StructType([StructField("env", env_schema)])
-
-    def decode(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-        env_type = to_arrow_type(env_schema)
-        for batch in batches:
-            envs = []
-            for fpath, content in zip(batch.column(0).to_pylist(),
-                                      batch.column(1).to_pylist()):
-                try:
-                    env = bar_to_envelope(bytes(content), signal)
-                except OtapDecodeError:
-                    raise
-                except Exception as e:
-                    raise _err(f"{e} ({fpath})") from e
-                for part in slice_envelope(env, signal, max_records=mr):
-                    envs.append(_conform_to_schema(part, env_schema))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(envs, type=env_type)], ["env"])
-
-    from duckdb_otlp_spark.session import ensure_package_on_workers
-    ensure_package_on_workers(files.sparkSession)
-    return files.mapInArrow(decode, out_schema)
-
-
-def _otap_envelopes_json(spark: SparkSession, path: str | list[str],
-                         signal: str) -> DataFrame:
-    """JSON-text read path (the pre-r11 shape): decode to proto3-JSON
-    envelope text, then ``from_json`` with the signal schema. Kept as
-    the differential twin for the typed path — it exercises the same
-    decoder through an independent serialization."""
-    from pyspark.sql import functions as F
-    paths = path if isinstance(path, list) else [path]
-    files = spark.read.format("binaryFile").load(paths).select("path", "content")
-    field, env_schema = _ENVELOPES[signal]
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            lines = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    env = bar_to_envelope(bytes(content), signal)
-                except OtapDecodeError:
-                    raise
-                except Exception as e:
-                    raise _err(f"{e} ({fpath})") from e
-                lines.append(json.dumps(env, separators=(",", ":")))
-            yield pd.DataFrame({"value": lines})
-
-    from duckdb_otlp_spark.session import ensure_package_on_workers
-    ensure_package_on_workers(files.sparkSession)
-    lines = files.mapInPandas(decode, "value string")
-    return lines.select(F.from_json(F.col("value"), env_schema).alias("env"))
-
-
 def read_otap_logs(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Equivalent of ``read_otap_logs`` (reference: read_otlp.cpp:190-223)."""
-    return flatten_logs(_otap_envelopes(spark, path, "logs"))
+    return read_flat(spark, path, "logs", "otap")
 
 
 def read_otap_traces(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return flatten_traces(_otap_envelopes(spark, path, "traces"))
+    return read_flat(spark, path, "traces", "otap")
 
 
 def read_otap_metrics_gauge(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return flatten_metrics_gauge(_otap_envelopes(spark, path, "metrics"))
+    return read_flat(spark, path, "metrics_gauge", "otap")
 
 
 def read_otap_metrics_sum(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return flatten_metrics_sum(_otap_envelopes(spark, path, "metrics"))
+    return read_flat(spark, path, "metrics_sum", "otap")
 
 
 def read_otap_metrics_histogram(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return flatten_metrics_histogram(_otap_envelopes(spark, path, "metrics"))
+    return read_flat(spark, path, "metrics_histogram", "otap")
 
 
 def read_otap_metrics_exp_histogram(spark: SparkSession,
                                     path: str | list[str]) -> DataFrame:
-    return flatten_metrics_exp_histogram(_otap_envelopes(spark, path, "metrics"))
+    return read_flat(spark, path, "metrics_exp_histogram", "otap")
 
 
 OTAP_READERS = {

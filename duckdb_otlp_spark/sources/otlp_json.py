@@ -2,13 +2,18 @@
 
 Spark-first re-expression of the reference's ``read_otlp_*`` table
 functions (reference: src/function/read_otlp.cpp:467-507). The reference
-parses whole files in Rust and emits Arrow; here the whole pipeline is
-declarative Spark SQL expressions — ``spark.read.text`` + ``from_json``
-+ ``explode`` — so Catalyst gets full column-pruning visibility
-(``spark.sql.optimizer`` prunes the ``from_json`` parse schema down to
-the selected output columns, which is strictly better than the
-reference's copy-level-only projection pushdown,
-reference: src/function/read_otlp.cpp:392-395).
+parses whole files once in Rust and emits Arrow. Here two routes exist:
+
+- protobuf inputs (``mode='protobuf'``, or ``mode='auto'`` when every
+  file sniffs as protobuf) are decoded and flattened executor-side in
+  one ``mapInArrow`` (``flat_decode.read_flat``), the route the OTAP
+  readers and ``format("otlp"/"otap")`` share;
+- JSON, NDJSON and mixed listings keep the JVM route: ``from_json`` +
+  ``explode`` + higher-order functions (the ``flatten_*`` plans below),
+  whose lax partial-result semantics the Python decode does not twin.
+  Catalyst prunes the ``from_json`` parse schema down to the selected
+  output columns (the reference prunes at copy level only,
+  reference: src/function/read_otlp.cpp:392-395).
 
 Semantics matched to the reference:
 
@@ -28,11 +33,13 @@ Semantics matched to the reference:
 - per-file size cap 100 MB (reference: src/include/otlp_ingest_limits.hpp
   MAX_READ_FILE_BYTES).
 
-Scale notes: ``mode="auto"`` reads whole files (file-level parallelism —
+Modes: ``mode="auto"`` reads whole files (file-level parallelism —
 same unit of work as the reference, one task per file, bounded by the
-100 MB cap). ``mode="lines"`` is the 100 TB path: plain line-splittable
+100 MB cap). ``mode="protobuf"`` forces the protobuf decode for every
+file. ``mode="lines"`` is the 100 TB path: plain line-splittable
 ``spark.read.text`` so a single huge NDJSON file fans out across
-executors; use it when inputs are known-NDJSON.
+executors; use it when inputs are known-NDJSON. Any other mode raises
+``ValueError``.
 """
 
 from __future__ import annotations
@@ -485,10 +492,12 @@ def _json_quote(c: Column) -> Column:
 
     Fast path: values with no characters needing escapes (quotes,
     backslash, control chars) are quoted with a plain concat; only the
-    rest pay the to_json(struct(...)) Jackson round-trip. The renderer
-    runs per attribute value per record, so this is hot in the seal."""
-    j = F.to_json(F.struct(c.alias("v")))
-    escaped = j.substr(F.lit(6), F.length(j) - F.lit(6))
+    rest pay the Jackson round-trip, ``to_json(array(c))`` minus the
+    brackets (a one-field struct wrapper lost its field name in the
+    metrics flatten's plan). The renderer runs per attribute value per
+    record, so this is hot in the seal."""
+    j = F.to_json(F.array(c))
+    escaped = j.substr(F.lit(2), F.length(j) - F.lit(2))
     plain = ~c.rlike('["\\\\\x00-\x1f]')
     return (
         F.when(c.isNull(), F.lit("null"))
@@ -744,8 +753,8 @@ def _resource_attr(resource: Column, key: str) -> Column:
 # File -> envelope rows
 # ---------------------------------------------------------------------------
 
-def _decoded_envelopes(spark: SparkSession, paths: list[str], signal: str,
-                       fmt: str) -> DataFrame:
+def _decoded_envelopes(spark: SparkSession, paths: list[str],
+                       signal: str) -> DataFrame:
     """Binary scan -> (``env`` typed struct, ``value`` JSON text) rows.
 
     ``binaryFile`` keeps the reference's parallelism unit — one file per
@@ -794,7 +803,7 @@ def _decoded_envelopes(spark: SparkSession, paths: list[str], signal: str,
                     continue  # empty file -> 0 rows (reference parity)
                 if not b.lstrip(b"\xef\xbb\xbf").strip():
                     raise ValueError(f"OTLP parse error: whitespace-only file: {fpath}")
-                if fmt == "auto" and otlp_proto.looks_like_json(b):
+                if otlp_proto.looks_like_json(b):
                     text = b.decode("utf-8")
                     json_lines = [ln for ln in text.split("\n") if ln.strip()]
 
@@ -890,9 +899,9 @@ def _checked_env_select(df: DataFrame, signal: str,
         # The corrupt capture fires on ANY conversion failure, not just
         # malformed JSON — a valid line with a wrong-shaped envelope
         # (e.g. {"resourceLogs": 5}) must classify as an envelope error,
-        # matching the wholetext mode's try_parse_json contract. The
-        # second parse runs only on corrupt rows (codegen And
-        # short-circuits), so the hot path stays single-parse.
+        # not as invalid JSON. The second parse runs only on corrupt
+        # rows (codegen And short-circuits), so the hot path stays
+        # single-parse.
         checked = F.get(F.transform(F.array(parsed), lambda p: (
             F.when(p["__corrupt"].isNotNull()
                    & F.try_parse_json(line).isNull(),
@@ -937,106 +946,50 @@ def _load_envelopes(spark: SparkSession, path: str | list[str], signal: str,
     ``mode='auto'``: binary whole-file read, per-file protobuf vs JSON vs
     NDJSON auto-detection, 100 MB cap — reference parity
     (reference: src/function/read_otlp.cpp:417-439).
-    ``mode='protobuf'``: force the protobuf decode for every file.
-    ``mode='json'``: pure-JVM text path (JSON/NDJSON only, no Python step).
     ``mode='lines'``: splittable line reader for large NDJSON (scale path).
     """
     paths = path if isinstance(path, list) else [path]
-
     if mode == "lines":
         lines = spark.read.text(paths).filter(F.trim(F.col("value")) != "")
         return _checked_env_select(lines, signal)
-
-    if mode == "protobuf":
-        # every file is wire-decoded to a typed struct; the text column
-        # is never populated, so the plan carries no JSON parse at all
-        rows = _decoded_envelopes(spark, paths, signal, "protobuf")
-        return rows.select(F.col("env"))
-
-    if mode == "auto":
-        # protobuf files arrive as typed structs (env), JSON files as
-        # text (value) — parse the text rows once JVM-side, pass the
-        # typed rows through
-        rows = _decoded_envelopes(spark, paths, signal, "auto")
-        return _checked_env_select(rows, signal, typed=True)
-
-    # mode == "json": pure-JVM wholetext path. Per-LINE expressions here
-    # live inside a transform() lambda over the file's line array, where
-    # the staged-projection single-parse trick of _checked_env_select
-    # cannot apply — this explicit non-default mode keeps the original
-    # validity-check formulation (one wholetext row per FILE, so the
-    # duplicated parse is bounded by file count, not corpus lines).
-    def _parse_or_error(line: Column) -> Column:
-        field, env_schema = _ENVELOPES[signal]
-        parsed = F.from_json(line, env_schema)
-        return (
-            F.when(F.try_parse_json(line).isNull(),
-                   F.raise_error(F.concat(
-                       F.lit("OTLP parse error: invalid JSON: "),
-                       F.substring(line, 1, 120))))
-            .when(parsed[field].isNull(),
-                  F.raise_error(F.concat(
-                      F.lit(f"OTLP parse error: expected '{field}' envelope: "),
-                      F.substring(line, 1, 120))))
-            .otherwise(parsed)
-        )
-
-    def build_wholetext():
-        _, env_schema = _ENVELOPES[signal]
-        content = F.col("value")
-        nonblank_lines = F.filter(F.split(content, "\n"), lambda l: F.trim(l) != "")
-        # NDJSON iff some single line is a complete JSON object on its own; a
-        # pretty-printed multi-line document's lines never are (its opener is
-        # a bare "{"). The startswith guard matters because the variant parser
-        # is lenient about trailing content ('"key": ...' alone would
-        # "parse"). Mirrors the reference's per-file format auto-detection
-        # (reference: src/function/read_otlp.cpp).
-        is_ndjson = F.exists(
-            nonblank_lines,
-            lambda l: F.trim(l).startswith("{") & F.try_parse_json(l).isNotNull())
-        line_envs = F.transform(nonblank_lines, _parse_or_error)
-        doc_envs = F.array(_parse_or_error(content))
-        envelopes = (
-            F.when(F.octet_length(content) > MAX_READ_FILE_BYTES,
-                   F.raise_error(F.lit(
-                       f"OTLP read error: file exceeds {MAX_READ_FILE_BYTES} byte limit")))
-            .when(F.octet_length(content) == 0, F.array().cast(T.ArrayType(env_schema)))
-            .when(F.regexp_replace(content, r"\s", "") == "",
-                  F.raise_error(F.lit("OTLP parse error: whitespace-only file")))
-            .when(is_ndjson, line_envs)
-            .otherwise(doc_envs)
-        )
-        return F.explode(envelopes).alias("env")
-
-    raw = spark.read.text(paths, wholetext=True)
-    return raw.select(_memo(f"wholetext_env_{signal}", build_wholetext))
+    if mode != "auto":
+        raise ValueError(f"unknown read mode {mode!r}")
+    # protobuf files arrive as typed structs (env), JSON files as text
+    # (value) — parse the text rows once JVM-side, pass the typed rows
+    # through
+    rows = _decoded_envelopes(spark, paths, signal)
+    return _checked_env_select(rows, signal, typed=True)
 
 
 # ---------------------------------------------------------------------------
 # Public readers
 # ---------------------------------------------------------------------------
 
-def _pb_fast_path(spark: SparkSession, path, mode: str, signal: str):
-    """Route all-protobuf inputs through the executor-side flat decode
-    (sources/flat_decode — measured ~3x the envelope+JVM-flatten route
-    on the 1M-record pb bench corpus, r14). ``mode='protobuf'`` always
-    takes it; ``mode='auto'`` takes it only when a bounded driver-side
-    head sniff proves every input file is protobuf (mixed or oversized
-    listings keep the generic per-file-detected plan)."""
+_MODES = ("auto", "protobuf", "lines")
+
+
+def _read(spark: SparkSession, path, mode: str, key: str) -> DataFrame:
+    """Read table ``key`` in ``mode``. Protobuf inputs take the
+    executor-side flat decode (``flat_decode.read_flat``, measured ~3x
+    the envelope + JVM-flatten route on the 1M-record pb bench corpus,
+    r14): ``mode='protobuf'`` always, ``mode='auto'`` when a bounded
+    driver-side head sniff proves every input file is protobuf. JSON,
+    NDJSON and mixed or oversized listings take the envelope plan and
+    the JVM flatten (``FLATTEN``)."""
     from duckdb_otlp_spark.sources import flat_decode
 
+    if mode not in _MODES:
+        raise ValueError(f"unknown read mode {mode!r}; expected one of {_MODES}")
     if mode == "protobuf" or (mode == "auto"
                               and flat_decode.all_protobuf(spark, path)):
-        return flat_decode.read_pb_flat(spark, path, signal)
-    return None
+        return flat_decode.read_flat(spark, path, key, "protobuf")
+    signal = flat_decode.FLATTENERS[key][1]
+    return FLATTEN[key](_load_envelopes(spark, path, signal, mode))
 
 
 def read_otlp_logs(spark: SparkSession, path: str | list[str], mode: str = "auto") -> DataFrame:
     """Equivalent of ``read_otlp_logs`` (reference: src/function/read_otlp.cpp:139-142)."""
-    fast = _pb_fast_path(spark, path, mode, "logs")
-    if fast is not None:
-        return fast
-    return flatten_logs(_load_envelopes(spark, path, "logs", mode))
+    return _read(spark, path, mode, "logs")
 
 
 def flatten_logs(env: DataFrame) -> DataFrame:
@@ -1097,10 +1050,7 @@ def read_otlp_traces(spark: SparkSession, path: str | list[str], mode: str = "au
     ``duration_time_unix_nano`` = end − start in raw ns
     (reference: test/sql/read_otlp_json.test:55-60).
     """
-    fast = _pb_fast_path(spark, path, mode, "traces")
-    if fast is not None:
-        return fast
-    return flatten_traces(_load_envelopes(spark, path, "traces", mode))
+    return _read(spark, path, mode, "traces")
 
 
 def flatten_traces(env: DataFrame) -> DataFrame:
@@ -1240,7 +1190,7 @@ def _number_point_cols(dp: Column) -> dict[str, Column]:
 def read_otlp_metrics_gauge(spark: SparkSession, path: str | list[str],
                             mode: str = "auto") -> DataFrame:
     """Equivalent of ``read_otlp_metrics_gauge`` (reference: read_otlp.cpp:149-152)."""
-    return flatten_metrics_gauge(_load_envelopes(spark, path, "metrics", mode))
+    return _read(spark, path, mode, "metrics_gauge")
 
 
 def flatten_metrics_gauge(env: DataFrame) -> DataFrame:
@@ -1275,7 +1225,7 @@ def flatten_metrics_gauge(env: DataFrame) -> DataFrame:
 def read_otlp_metrics_sum(spark: SparkSession, path: str | list[str],
                           mode: str = "auto") -> DataFrame:
     """Equivalent of ``read_otlp_metrics_sum`` (reference: read_otlp.cpp:154-157)."""
-    return flatten_metrics_sum(_load_envelopes(spark, path, "metrics", mode))
+    return _read(spark, path, mode, "metrics_sum")
 
 
 def flatten_metrics_sum(env: DataFrame) -> DataFrame:
@@ -1313,7 +1263,7 @@ def flatten_metrics_sum(env: DataFrame) -> DataFrame:
 def read_otlp_metrics_histogram(spark: SparkSession, path: str | list[str],
                                 mode: str = "auto") -> DataFrame:
     """Equivalent of ``read_otlp_metrics_histogram`` (reference: read_otlp.cpp:177-181)."""
-    return flatten_metrics_histogram(_load_envelopes(spark, path, "metrics", mode))
+    return _read(spark, path, mode, "metrics_histogram")
 
 
 def flatten_metrics_histogram(env: DataFrame) -> DataFrame:
@@ -1352,7 +1302,7 @@ def flatten_metrics_histogram(env: DataFrame) -> DataFrame:
 def read_otlp_metrics_exp_histogram(spark: SparkSession, path: str | list[str],
                                     mode: str = "auto") -> DataFrame:
     """Equivalent of ``read_otlp_metrics_exp_histogram`` (reference: read_otlp.cpp:183-188)."""
-    return flatten_metrics_exp_histogram(_load_envelopes(spark, path, "metrics", mode))
+    return _read(spark, path, mode, "metrics_exp_histogram")
 
 
 def flatten_metrics_exp_histogram(env: DataFrame) -> DataFrame:

@@ -32,6 +32,7 @@ from __future__ import annotations
 import socket
 import struct
 import threading
+import zlib
 from dataclasses import dataclass, field
 
 # ---------------------------------------------------------------------------
@@ -378,6 +379,32 @@ class GrpcError(Exception):
         self.message = message
 
 
+class BodyTooLarge(ValueError):
+    """A compressed body inflates past its cap."""
+
+
+def inflate(data: bytes, wbits: int, cap: int) -> bytes:
+    """Decompress a gzip (``wbits=31``) or zlib (``wbits=15``) body,
+    never holding more than ``cap + 1`` output bytes. Raises
+    ``BodyTooLarge`` past ``cap`` and ``ValueError`` for a corrupt or
+    truncated stream. Concatenated gzip members are read in turn, as
+    ``gzip.decompress`` reads them."""
+    out = b""
+    while True:
+        d = zlib.decompressobj(wbits)
+        try:
+            out += d.decompress(data, cap + 1 - len(out))
+        except zlib.error as e:
+            raise ValueError(f"corrupt compressed body ({e})") from None
+        if len(out) > cap:
+            raise BodyTooLarge(f"decompressed body exceeds {cap} bytes")
+        if not d.eof:
+            raise ValueError("truncated compressed body")
+        data = d.unused_data
+        if wbits != 31 or not data:
+            return out
+
+
 def grpc_frame(message: bytes, compressed: bool = False) -> bytes:
     return bytes([1 if compressed else 0]) + struct.pack(">I", len(message)) + message
 
@@ -394,8 +421,12 @@ def _pop_grpc_frames(buf: bytearray, max_message_bytes: int) -> list[bytes]:
         msg = bytes(buf[5:5 + length])
         del buf[:5 + length]
         if compressed:
-            import gzip
-            msg = gzip.decompress(msg)
+            try:
+                msg = inflate(msg, 31, max_message_bytes)
+            except BodyTooLarge as e:
+                raise GrpcError(8, str(e)) from None
+            except ValueError as e:
+                raise GrpcError(13, str(e)) from None   # INTERNAL
         out.append(msg)
     return out
 

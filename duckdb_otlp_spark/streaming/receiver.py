@@ -29,7 +29,9 @@ Contracts matched:
 - Content-Type -> {json, ndjson, protobuf}; protobuf decodes edge-side
   to a JSON envelope line; unknown -> 415. gzip/deflate/identity
   encodings; else 415 (reference: otlp_server.cpp:200-237).
-- Body cap 16 MiB -> 413; admission cap 512 MiB of un-sealed spool
+- Body cap 16 MiB -> 413, on the wire and again after gzip/deflate
+  decompression (which stops at the cap); a corrupt or truncated
+  compressed body -> 400; admission cap 512 MiB of un-sealed spool
   bytes -> 503 (reference: otlp_ingest_limits.hpp).
 - /healthz always 200; /readyz degrades when sealing stalls
   (reference: otlp_server_http.cpp:131-144).
@@ -41,7 +43,6 @@ Contracts matched:
 
 from __future__ import annotations
 
-import gzip
 import hmac
 import json
 import math
@@ -53,10 +54,11 @@ import sys
 import threading
 import time
 import uuid
-import zlib
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
+
+from duckdb_otlp_spark.streaming.h2c import BodyTooLarge, inflate
 
 # reference: src/include/otlp_ingest_limits.hpp
 DEFAULT_MAX_BODY_BYTES = 16 * 1024 * 1024
@@ -410,10 +412,15 @@ def _make_handler(cfg: _WorkerConfig, shared: _Shared,
                 self._drain()
                 return self._reply(413, {"error": "body too large"})
             body = self.rfile.read(n)
-            if enc == "gzip":
-                body = gzip.decompress(body)
-            elif enc == "deflate":
-                body = zlib.decompress(body)
+            if enc != "identity":
+                try:
+                    body = inflate(body, 31 if enc == "gzip" else 15,
+                                   cfg.max_body_bytes)
+                except BodyTooLarge:
+                    shared.inc("rejected_413")
+                    return self._reply(413, {"error": "body too large"})
+                except ValueError as e:
+                    return self._reply(400, {"error": f"invalid {enc} body: {e}"})
             skips: dict[str, int] | None = None
             if is_pb:
                 # decode edge-side to a JSON envelope line so the spool

@@ -83,6 +83,21 @@ def test_mixed_glob_auto_detects_per_file(ds_spark, ds_dir, tmp_path):
     assert row_multiset(df) == row_multiset(fn)
 
 
+@pytest.mark.parametrize("doc,err_class", [
+    ('{"resourceLogs": [', "OTLP parse error: invalid JSON"),
+    ('{"resourceLogs": 5}', "OTLP parse error: expected 'resourceLogs' envelope"),
+    ('{"wrong": 1}', "OTLP parse error: expected 'resourceLogs' envelope"),
+])
+def test_json_error_classes_match_function_api(ds_spark, tmp_path, doc,
+                                               err_class):
+    p = tmp_path / "bad.jsonl"
+    p.write_text(doc + "\n")
+    with pytest.raises(Exception, match=err_class):
+        _fmt(ds_spark, "logs", p).count()
+    with pytest.raises(Exception, match=err_class):
+        READERS["logs"](ds_spark, str(p)).count()
+
+
 def test_garbage_protobuf_errors(ds_spark, tmp_path):
     (tmp_path / "junk.pb").write_bytes(b"\xff\xfe\xfd not protobuf")
     with pytest.raises(Exception, match="OTLP parse error"):

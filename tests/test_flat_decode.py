@@ -5,8 +5,9 @@ must be BYTE-IDENTICAL to the generic envelope route + JVM flatten —
 including JSON string escaping, double rendering, int32 coercion
 windows, enum defaults, the AnyValue depth cutoff, and the timestamp
 overflow error contract. The control side of every comparison here is
-the UNCHANGED envelope plan (``_load_envelopes(mode='protobuf')`` +
-``flatten_*``), so any drift in the twin fails loudly.
+the UNCHANGED envelope plan (``_load_envelopes(mode='auto')``, whose
+protobuf files arrive as typed envelope structs, + ``flatten_*``), so
+any drift in the twin fails loudly.
 """
 
 from __future__ import annotations
@@ -21,10 +22,10 @@ from duckdb_otlp_spark.schemas import TARGET_TABLES
 from duckdb_otlp_spark.sources import flat_decode
 from duckdb_otlp_spark.sources.otlp_json import (
     FLATTEN,
+    READERS,
     _load_envelopes,
     envelopes_from_lines,
     flatten_logs,
-    flatten_traces,
     read_otlp_logs,
     read_otlp_traces,
 )
@@ -171,15 +172,93 @@ def _hostile_traces_env():
     ]}
 
 
-@pytest.mark.parametrize("signal", ["logs", "traces"])
-def test_flat_path_byte_identical_to_envelope_path(spark, tmp_path, signal):
-    env = _hostile_logs_env() if signal == "logs" else _hostile_traces_env()
-    p = tmp_path / f"hostile_{signal}.pb"
-    p.write_bytes(encode_envelope_pb(env))
+_EXEMPLARS = [
+    {"timeUnixNano": str(_NS + 1), "asDouble": 0.125,
+     "spanId": "EEE19B7EC3C1B174",
+     "traceId": "5B8EFFF798038103D269B633813FC60C",
+     "filteredAttributes": [_kv("f", {"stringValue": "x\"y"})]},
+    {"timeUnixNano": str(_NS + 2), "asInt": "-7"},
+    {},                                    # every field absent
+]
 
-    flat = flat_decode.read_pb_flat(spark, str(p), signal)
-    flatten = flatten_logs if signal == "logs" else flatten_traces
-    control = flatten(_load_envelopes(spark, str(p), signal, "protobuf"))
+
+def _hostile_metrics_env():
+    """All four point types (plus a summary every reader skips), with
+    exemplars, empty bucket lists, negative offsets and scales, and
+    missing optional fields."""
+    number_points = [
+        {"timeUnixNano": str(_NS), "startTimeUnixNano": str(_NS - 1000),
+         "asDouble": 1.5, "attributes": _HOSTILE_ATTRS,
+         "exemplars": _EXEMPLARS, "flags": 1},
+        {"timeUnixNano": str(_NS + 1), "asInt": "-9223372036854775808"},
+        {"timeUnixNano": str(_NS + 2), "asDouble": -0.0},
+        {"timeUnixNano": str(_NS + 3)},        # no value at all
+    ]
+    metrics = [
+        {"name": "g.hostile", "description": 'd"q', "unit": "ms",
+         "gauge": {"dataPoints": number_points}},
+        {"name": "s.cumulative", "sum": {
+            "aggregationTemporality": "AGGREGATION_TEMPORALITY_CUMULATIVE",
+            "isMonotonic": True, "dataPoints": [
+                {"timeUnixNano": str(_NS), "asInt": "42",
+                 "exemplars": _EXEMPLARS[:2]}]}},
+        {"name": "s.delta", "sum": {
+            "aggregationTemporality": 1, "dataPoints": number_points[1:]}},
+        {"name": "h", "histogram": {"aggregationTemporality": 2, "dataPoints": [
+            {"timeUnixNano": str(_NS), "count": "3", "sum": 6.5,
+             "bucketCounts": ["1", "2", "0"], "explicitBounds": [0.5, 10.0],
+             "min": -1.0, "max": 5.0, "exemplars": _EXEMPLARS,
+             "attributes": [_kv("le", {"doubleValue": 2.5e-5})]},
+            {"timeUnixNano": str(_NS + 1), "count": "0",
+             "bucketCounts": [], "explicitBounds": []},
+            {"timeUnixNano": str(_NS + 2)},
+        ]}},
+        {"name": "e", "exponentialHistogram": {
+            "aggregationTemporality": 1, "dataPoints": [
+                {"timeUnixNano": str(_NS), "count": "10", "sum": -3.25,
+                 "scale": -2, "zeroCount": "4", "zeroThreshold": 1e-9,
+                 "positive": {"offset": -3, "bucketCounts": ["1", "0", "5"]},
+                 "negative": {"offset": -1, "bucketCounts": []},
+                 "min": -2.0, "max": 9.0, "exemplars": _EXEMPLARS,
+                 "flags": 1},
+                {"timeUnixNano": str(_NS + 1), "positive": {}},
+            ]}},
+        {"name": "summary.skipped", "summary": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "count": "1", "sum": 1.0}]}},
+    ]
+    return {"resourceMetrics": [
+        {"resource": {"attributes": [
+            _kv("service.name", {"stringValue": "m\tsvc"})]},
+         "scopeMetrics": [{"scope": {"name": "meter", "version": "2"},
+                           "metrics": metrics},
+                          {"metrics": metrics[:1]}]},
+        {"scopeMetrics": [{"metrics": metrics[3:5]}]},
+    ]}
+
+
+_HOSTILE = {"logs": _hostile_logs_env, "traces": _hostile_traces_env}
+_TABLES = ["logs", "traces", "metrics_gauge", "metrics_sum",
+           "metrics_histogram", "metrics_exp_histogram"]
+
+
+def _hostile_pb(tmp_path, key):
+    p = tmp_path / f"hostile_{key}.pb"
+    p.write_bytes(encode_envelope_pb(_HOSTILE.get(key, _hostile_metrics_env)()))
+    return p
+
+
+def _jvm_control(spark, p, key):
+    """The envelope plan + JVM flatten over the same file."""
+    signal = flat_decode.FLATTENERS[key][1]
+    return FLATTEN[key](_load_envelopes(spark, str(p), signal, "auto"))
+
+
+@pytest.mark.parametrize("signal", _TABLES)
+def test_flat_path_byte_identical_to_envelope_path(spark, tmp_path, signal):
+    p = _hostile_pb(tmp_path, signal)
+
+    flat = flat_decode.read_flat(spark, str(p), signal, "protobuf")
+    control = _jvm_control(spark, p, signal)
 
     assert [f.name for f in flat.schema.fields] == \
         [f.name for f in control.schema.fields]
@@ -190,21 +269,17 @@ def test_flat_path_byte_identical_to_envelope_path(spark, tmp_path, signal):
         "\n".join(a + " != " + b for a, b in zip(got, want) if a != b))
 
 
-@pytest.mark.parametrize("signal", ["logs", "traces"])
+@pytest.mark.parametrize("signal", _TABLES)
 def test_reader_auto_mode_takes_flat_path(spark, tmp_path, signal):
-    env = _hostile_logs_env() if signal == "logs" else _hostile_traces_env()
-    p = tmp_path / f"auto_{signal}.pb"
-    p.write_bytes(encode_envelope_pb(env))
-    reader = read_otlp_logs if signal == "logs" else read_otlp_traces
-    df = reader(spark, str(p))            # auto: driver sniff -> flat
+    p = _hostile_pb(tmp_path, signal)
+    df = READERS[signal](spark, str(p))   # auto: driver sniff -> flat
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
     assert "MapInArrow" in plan
     assert "Generate" not in plan          # no JVM explode
     assert "from_json" not in plan
-    # and the rows match the explicit-protobuf control plan
-    control = (flatten_logs if signal == "logs" else flatten_traces)(
-        _load_envelopes(spark, str(p), signal, "protobuf"))
+    # and the rows match the envelope-plan control
+    control = _jvm_control(spark, p, signal)
     assert row_multiset(df) == row_multiset(control)
 
 
@@ -238,7 +313,7 @@ def test_mixed_glob_keeps_generic_plan(spark, tmp_path):
     df = read_otlp_logs(spark, str(tmp_path / "*"))
     n_pb = len(flatten_logs(
         _load_envelopes(spark, str(tmp_path / "a.pb"), "logs",
-                        "protobuf")).collect())
+                        "auto")).collect())
     assert df.count() == n_pb + 1
 
 

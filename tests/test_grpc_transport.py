@@ -127,6 +127,46 @@ def test_grpc_admission_resource_exhausted(tmp_path):
         rcv.stop()
 
 
+@pytest.fixture()
+def gzip_client(tmp_path, monkeypatch):
+    """A client of a 4 KiB-capped gRPC receiver that sends every message
+    with the compressed flag set."""
+    from duckdb_otlp_spark.streaming import h2c
+
+    rcv = OtlpHttpReceiver("127.0.0.1", 0, tmp_path / "spool",
+                           disable_auth=True, transport="grpc",
+                           accept_workers=1, max_body_bytes=4096)
+    rcv.start()
+    plain = h2c.grpc_frame
+    monkeypatch.setattr(h2c, "grpc_frame",
+                        lambda m, compressed=False: plain(m, True))
+    client = h2c.GrpcClient("127.0.0.1", rcv.port)
+    yield client
+    client.close()
+    rcv.stop()
+
+
+def test_grpc_compressed_message_past_the_cap_is_resource_exhausted(gzip_client):
+    import gzip
+
+    ok = gzip.compress(encode_envelope_pb(LOGS_SIMPLE[0]))
+    assert gzip_client.call(LOGS_PATH, [ok])[0]["grpc-status"] == "0"
+    bomb = gzip.compress(b"\0" * (64 * 4096))
+    assert len(bomb) < 4096                 # under the cap on the wire
+    assert gzip_client.call(LOGS_PATH, [bomb])[0]["grpc-status"] == "8"
+
+
+def test_grpc_corrupt_compressed_message_is_internal(gzip_client):
+    """A corrupt or truncated gzip message gets INTERNAL, and the
+    connection keeps serving."""
+    import gzip
+
+    ok = gzip.compress(encode_envelope_pb(LOGS_SIMPLE[0]))
+    for bad in (ok[:len(ok) // 2], b"not compressed at all"):
+        assert gzip_client.call(LOGS_PATH, [bad])[0]["grpc-status"] == "13"
+    assert gzip_client.call(LOGS_PATH, [ok])[0]["grpc-status"] == "0"
+
+
 def test_grpc_large_message_flow_control(grpc_rcv, tmp_path):
     """A ~1.5 MiB Export spans many DATA frames and exceeds the 64 KiB
     initial flow-control window — the server's WINDOW_UPDATE top-ups

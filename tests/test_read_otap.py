@@ -19,7 +19,9 @@ import pytest
 
 from duckdb_otlp_spark.sources.otap import (
     OTAP_READERS,
+    OtapDecodeError,
     _decode_bar,
+    _err,
     bar_to_envelope,
     envelope_from_tables,
 )
@@ -37,6 +39,41 @@ with_fixture_dirs = pytest.mark.parametrize("otap_dir", [
     pytest.param(OTAP_DIR, id="reference", marks=needs_reference),
 ])
 LOG_RECORDS = {OTAP_FIXTURE_DIR: 7, OTAP_DIR: 3}  # in logs-initial.bar
+
+
+def _otap_envelopes_json(spark, path, signal: str):
+    """The readers' differential twin: each file's envelope rendered as
+    proto3-JSON text, then ``from_json`` with the signal schema (feed
+    the rows to the JVM ``flatten_*``) — the same decoder through an
+    independent serialization and flatten."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from duckdb_otlp_spark.session import ensure_package_on_workers
+    from duckdb_otlp_spark.sources.otlp_json import _ENVELOPES
+
+    paths = path if isinstance(path, list) else [path]
+    files = spark.read.format("binaryFile").load(paths).select("path", "content")
+    env_schema = _ENVELOPES[signal][1]
+
+    def decode(batches):
+        import pandas as pd
+        for pdf in batches:
+            lines = []
+            for fpath, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    env = bar_to_envelope(bytes(content), signal)
+                except OtapDecodeError:
+                    raise
+                except Exception as e:
+                    raise _err(f"{e} ({fpath})") from e
+                lines.append(json.dumps(env, separators=(",", ":")))
+            yield pd.DataFrame({"value": lines})
+
+    ensure_package_on_workers(files.sparkSession)
+    lines = files.mapInPandas(decode, "value string")
+    return lines.select(F.from_json(F.col("value"), env_schema).alias("env"))
 
 
 def _parity(spark, otap_dir, signal_reader: str, bar: str, otlp: str):
@@ -75,7 +112,6 @@ def test_typed_path_matches_json_twin(spark, otap_dir, reader, bar, signal):
     render + from_json variant survives as the differential twin —
     identical rows through an independent serialization — and the typed
     plan must carry NO JsonToStructs (that's the whole point)."""
-    from duckdb_otlp_spark.sources.otap import _otap_envelopes_json
     from duckdb_otlp_spark.sources import otlp_json as oj
     flatten = {"logs": oj.flatten_logs, "traces": oj.flatten_traces,
                "metrics_gauge": oj.flatten_metrics_gauge,
@@ -270,18 +306,21 @@ def _encode_bar_logs(n_records: int) -> bytes:
     return encode_bar(logs_payloads(env))
 
 
+def _decoded_batches(p: Path) -> int:
+    """Arrow batches the readers' per-file decode yields for one logs
+    .bar file: one per envelope slice."""
+    from duckdb_otlp_spark.sources.flat_decode import decode_file
+    return sum(1 for _ in decode_file(str(p), p.read_bytes(), "logs", "otap"))
+
+
 def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
     """A .bar file over MAX_ENVELOPE_SLICE_RECORDS records reads through
     the sliced typed path with output identical to the JSON-text twin
     (which renders the whole envelope as one document and never
-    slices) — and the typed path demonstrably emits >1 bounded
-    envelope row where the twin emits one."""
+    slices) — and the per-file decode demonstrably emits >1 bounded
+    batch where the twin emits one envelope row."""
     from duckdb_otlp_spark.sources import otlp_json as oj
-    from duckdb_otlp_spark.sources.otap import (
-        _otap_envelopes,
-        _otap_envelopes_json,
-        read_otap_logs,
-    )
+    from duckdb_otlp_spark.sources.otap import read_otap_logs
     from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
 
     n = MAX_ENVELOPE_SLICE_RECORDS + 100
@@ -293,19 +332,15 @@ def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
     assert typed.count() == js.count() == n
     assert row_multiset(typed) == row_multiset(js)
     # slicing engaged: 2 bounded envelope rows vs the twin's single row
-    assert _otap_envelopes(spark, str(p), "logs").count() == 2
+    assert _decoded_batches(p) == 2
     assert _otap_envelopes_json(spark, str(p), "logs").count() == 1
 
 
 def test_undersized_otap_envelope_not_sliced(spark, tmp_path):
-    """Under the cap the envelope passes through untouched — one typed
-    row per file, rows identical to the JSON twin."""
+    """Under the cap the envelope passes through untouched — one batch
+    per file, rows identical to the JSON twin."""
     from duckdb_otlp_spark.sources import otlp_json as oj
-    from duckdb_otlp_spark.sources.otap import (
-        _otap_envelopes,
-        _otap_envelopes_json,
-        read_otap_logs,
-    )
+    from duckdb_otlp_spark.sources.otap import read_otap_logs
 
     p = tmp_path / "small.bar"
     p.write_bytes(_encode_bar_logs(37))
@@ -313,4 +348,33 @@ def test_undersized_otap_envelope_not_sliced(spark, tmp_path):
     js = oj.flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
     assert typed.count() == js.count() == 37
     assert row_multiset(typed) == row_multiset(js)
-    assert _otap_envelopes(spark, str(p), "logs").count() == 1
+    assert _decoded_batches(p) == 1
+
+
+def test_otap_reader_applies_the_file_cap(spark, monkeypatch):
+    """read_otap_* refuse a file over the per-file cap, like every other
+    reader; the cap is bound when the plan is built."""
+    from duckdb_otlp_spark.sources import otlp_json
+
+    bar = OTAP_FIXTURE_DIR / "logs-initial.bar"
+    monkeypatch.setattr(otlp_json, "MAX_READ_FILE_BYTES", bar.stat().st_size - 1)
+    with pytest.raises(Exception, match="OTLP read error: file exceeds"):
+        OTAP_READERS["logs"](spark, str(bar)).collect()
+
+
+@pytest.mark.parametrize("reader,bar", [
+    ("logs", "logs-initial.bar"), ("traces", "traces-initial.bar"),
+    ("metrics_gauge", "metrics-initial.bar"),
+    ("metrics_sum", "metrics-initial.bar"),
+    ("metrics_histogram", "metrics-initial.bar"),
+    ("metrics_exp_histogram", "metrics-initial.bar"),
+])
+def test_otap_reader_plan_is_one_flat_decode(spark, reader, bar):
+    """Each read_otap_* plan is the one MapInArrow decode: no JVM
+    explode, no JSON parse."""
+    df = OTAP_READERS[reader](spark, str(OTAP_FIXTURE_DIR / bar))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert "MapInArrow" in plan
+    assert "Generate" not in plan
+    assert "from_json" not in plan

@@ -194,6 +194,29 @@ def test_summary_only_returns_zero_rows(spark, otlp_fixtures):
     assert read_otlp_metrics_exp_histogram(spark, p).count() == 0
 
 
+def test_metrics_attrs_needing_escapes_render_valid_json(spark, tmp_path):
+    """Resource, scope and point attribute values that need JSON escapes
+    render as valid JSON objects in the metrics tables too."""
+    import json
+
+    def attrs(key, value):
+        return [{"key": key, "value": {"stringValue": value}}]
+
+    env = {"resourceMetrics": [{
+        "resource": {"attributes": attrs("service.name", "m\tsvc")},
+        "scopeMetrics": [{"scope": {"name": "s", "attributes": attrs("k", 'a"b')},
+                          "metrics": [{"name": "g", "gauge": {"dataPoints": [
+                              {"timeUnixNano": "1", "asDouble": 1.0,
+                               "attributes": attrs("p", "x\ny")}]}}]}]}]}
+    p = tmp_path / "escapes.jsonl"
+    p.write_text(json.dumps(env) + "\n")
+    for mode in ("auto", "lines"):
+        row = read_otlp_metrics_gauge(spark, str(p), mode=mode).collect()[0]
+        assert json.loads(row["resource_attributes"]) == {"service.name": "m\tsvc"}
+        assert json.loads(row["scope_attributes"]) == {"k": 'a"b'}
+        assert json.loads(row["metric_attributes"]) == {"p": "x\ny"}
+
+
 def test_temporality_enum_strings(spark, otlp_fixtures):
     df = read_otlp_metrics_sum(spark, str(otlp_fixtures["metrics_temporality_strings.jsonl"]))
     row = df.collect()[0]
@@ -207,6 +230,15 @@ def test_metrics_placeholders_raise(spark, otlp_fixtures):
         read_otlp_metrics(spark, str(otlp_fixtures["metrics_simple.jsonl"]))
     with pytest.raises(NotImplementedError):
         read_otlp_metrics_summary(spark, str(otlp_fixtures["metrics_simple.jsonl"]))
+
+
+def test_unknown_read_mode_raises(spark, otlp_fixtures):
+    """``mode`` is one of auto/protobuf/lines; anything else raises
+    instead of silently picking a route."""
+    from duckdb_otlp_spark.sources.otlp_json import READERS
+    for reader in READERS.values():
+        with pytest.raises(ValueError, match="unknown read mode 'json'"):
+            reader(spark, str(otlp_fixtures["logs_simple.jsonl"]), mode="json")
 
 
 # --- error contracts (reference: read_otlp_edge_cases.test:55-66,
@@ -239,12 +271,12 @@ def test_wrong_signal_errors(spark, otlp_fixtures):
 
 @pytest.mark.parametrize("bad_line,err_class,modes", [
     ('{"resourceLogs": 5}', "expected 'resourceLogs' envelope",
-     ("auto", "json", "lines")),
+     ("auto", "lines")),
     # a top-level array doesn't sniff as OTLP JSON (no leading '{'), so
     # mode='auto' correctly routes it to the protobuf decoder instead —
-    # only the explicit JSON modes see it as JSON
-    ('[1, 2, 3]', "expected 'resourceLogs' envelope", ("json", "lines")),
-    ('{"resourceLogs": [', "invalid JSON", ("auto", "json", "lines")),
+    # only the explicit JSON mode sees it as JSON
+    ('[1, 2, 3]', "expected 'resourceLogs' envelope", ("lines",)),
+    ('{"resourceLogs": [', "invalid JSON", ("auto", "lines")),
 ])
 def test_error_class_agrees_across_read_modes(spark, tmp_path, bad_line,
                                               err_class, modes):
@@ -261,15 +293,15 @@ def test_error_class_agrees_across_read_modes(spark, tmp_path, bad_line,
 
 def test_partially_corrupt_envelope_agrees_across_read_modes(spark, tmp_path):
     """A present-but-internally-type-mismatched envelope behaves the same
-    in the corrupt-capture path as in the wholetext path: the field is
-    non-null, so no error class fires and rows flow (with null insides),
-    exactly as PERMISSIVE from_json does in mode='json'."""
+    in the whole-file and the line-split paths: the field is non-null,
+    so no error class fires and rows flow (with null insides), exactly
+    as PERMISSIVE from_json does."""
     line = ('{"resourceLogs": [{"scopeLogs": [{"logRecords": '
             '[{"timeUnixNano": "1000", "severityNumber": {"oops": 1}}]}]}]}')
     p = tmp_path / "semi.jsonl"
     p.write_text(line + "\n")
     counts = {mode: read_otlp_logs(spark, str(p), mode=mode).count()
-              for mode in ("auto", "json", "lines")}
+              for mode in ("auto", "lines")}
     assert len(set(counts.values())) == 1, counts
 
 
@@ -322,7 +354,7 @@ def test_file_scheme_uri_and_glob(spark, otlp_fixtures):
     uri = f"file://{root}/logs_simple.jsonl"
     n = read_otlp_logs(spark, str(otlp_fixtures["logs_simple.jsonl"])).count()
     assert n > 0
-    for mode in ("auto", "json", "lines"):
+    for mode in ("auto", "lines"):
         assert read_otlp_logs(spark, uri, mode=mode).count() == n
 
     # scheme + glob through the binaryFile (auto) and text paths
@@ -396,7 +428,7 @@ def test_oversized_json_document_reads_typed_and_identical(
     assert len(typed) == len(jvm) == n
     assert sorted(map(tuple, typed)) == sorted(map(tuple, jvm))
     # the typed route engaged: bounded envelope rows, no JSON text rows
-    env_df = oj._decoded_envelopes(spark, [str(p)], "logs", "auto")
+    env_df = oj._decoded_envelopes(spark, [str(p)], "logs")
     assert env_df.filter("env IS NOT NULL").count() == 2
     assert env_df.filter("value IS NOT NULL").count() == 0
 

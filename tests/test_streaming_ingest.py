@@ -13,6 +13,7 @@ import threading
 import time
 import urllib.error
 import urllib.request
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,7 +25,10 @@ from duckdb_otlp_spark.streaming import (
     otlp_server_list,
     otlp_stop,
 )
-from tests.fixtures import LOGS_SIMPLE, METRICS_SIMPLE, TRACES_SIMPLE
+from tests.fixtures import LOGS_SIMPLE, METRICS_SIMPLE, TRACES_SIMPLE, row_multiset
+from tests.otap_fixtures import OTAP_FIXTURE_DIR
+from tests.test_read_otap import OTAP_DIR as REFERENCE_OTAP_DIR
+from tests.test_read_otap import needs_reference
 
 TOKEN = "test-token-0123456789abcdef"
 SEAL_LIST_COLUMNS = ["seal_sequence", "table", "rows", "batch_id", "append_ms",
@@ -359,6 +363,52 @@ def test_body_cap_413(server):
     assert code == 413
 
 
+@pytest.fixture()
+def small_cap_receiver(tmp_path):
+    """A bare HTTP receiver with a 4 KiB body cap."""
+    from duckdb_otlp_spark.streaming.receiver import OtlpHttpReceiver
+
+    rcv = OtlpHttpReceiver("127.0.0.1", 0, tmp_path / "spool",
+                           disable_auth=True, accept_workers=1,
+                           max_body_bytes=4096)
+    rcv.start()
+    yield rcv
+    rcv.stop()
+
+
+def _post_encoded(rcv, enc: str, body: bytes):
+    return _post(f"http://127.0.0.1:{rcv.port}", "/v1/logs", body, token=None,
+                 extra_headers={"Content-Encoding": enc})
+
+
+_COMPRESS = {"gzip": gzip.compress, "deflate": zlib.compress}
+
+
+@pytest.mark.parametrize("enc", ["gzip", "deflate"])
+def test_compressed_body_past_the_cap_is_413(small_cap_receiver, enc):
+    """A gzip/deflate body that inflates past the body cap gets 413:
+    decompression stops at the cap instead of spooling whatever the
+    body inflates to."""
+    compress = _COMPRESS[enc]
+    ok = compress(json.dumps(LOGS_SIMPLE[0]).encode())
+    assert _post_encoded(small_cap_receiver, enc, ok)[0] == 202
+    bomb = compress(b" " * (64 * 4096))
+    assert len(bomb) < 4096                 # under the cap on the wire
+    assert _post_encoded(small_cap_receiver, enc, bomb)[0] == 413
+    assert small_cap_receiver.stats.rejected_413 == 1
+
+
+@pytest.mark.parametrize("enc", ["gzip", "deflate"])
+def test_corrupt_compressed_body_is_400(small_cap_receiver, enc):
+    """A corrupt or truncated gzip/deflate body gets a 400 reply, and
+    the receiver keeps serving."""
+    ok = _COMPRESS[enc](json.dumps(LOGS_SIMPLE[0]).encode())
+    for bad in (ok[:len(ok) // 2], b"not compressed at all"):
+        code, resp = _post_encoded(small_cap_receiver, enc, bad)
+        assert code == 400 and enc in resp["error"], resp
+    assert _post_encoded(small_cap_receiver, enc, ok)[0] == 202
+
+
 def test_server_and_seal_telemetry(spark, server):
     row = otlp_server_list(spark).collect()
     assert len(row) == 1
@@ -503,14 +553,16 @@ def test_catalog_sink_end_to_end(spark, tmp_path_factory):
         otlp_stop(spark, srv.uri.canonical)
 
 
-def test_otap_http_ingest_end_to_end(spark, tmp_path_factory):
+@pytest.mark.parametrize("bar_dir", [
+    pytest.param(OTAP_FIXTURE_DIR, id="committed"),
+    pytest.param(REFERENCE_OTAP_DIR, id="reference", marks=needs_reference),
+])
+def test_otap_http_ingest_end_to_end(spark, tmp_path_factory, bar_dir):
     """otap: listener accepts BatchArrowRecords over HTTP, decodes
     edge-side, seals into the same tables; OTLP payloads get 415 (the
     scheme selects the protocol, like otlp_serve vs otap_serve)."""
-    from pathlib import Path
-    bar_dir = Path("/root/reference/test/data/otap")
-    if not bar_dir.exists():
-        pytest.skip("reference OTAP fixtures not present")
+    from duckdb_otlp_spark.sources.otap import OTAP_READERS
+
     work = tmp_path_factory.mktemp("ingest_otap")
     info = otlp_serve(spark, "otap://127.0.0.1:0", work_dir=str(work),
                       auth_token=TOKEN, seal_max_age_ms=500).collect()[0]
@@ -540,17 +592,17 @@ def test_otap_http_ingest_end_to_end(spark, tmp_path_factory):
         assert code == 400 and "OTAP decode error" in resp["error"]
         assert _post(url, "/v1/logs", LOGS_SIMPLE[0])[0] == 415
         otlp_flush(spark, srv.uri.canonical)
-        # logs-initial.bar has 3 rows, posted twice; parity with the
-        # file reader on the same fixture
-        from duckdb_otlp_spark.sources.otap import OTAP_READERS
-        logs = spark.read.parquet(str(srv.export_root / "otlp_logs"))
-        assert logs.count() == 6
+        # logs-initial.bar was posted twice: the sealed rows are the file
+        # reader's rows of the same fixture, twice over
         ref = OTAP_READERS["logs"](spark, str(bar_dir / "logs-initial.bar"))
-        sealed = logs.drop("year", "month", "day").distinct()
-        assert sealed.exceptAll(ref).count() == 0
-        assert spark.read.parquet(str(srv.export_root / "otlp_traces")).count() == 1
-        assert spark.read.parquet(
-            str(srv.export_root / "otlp_metrics_gauge")).count() == 1
+        logs = spark.read.parquet(str(srv.export_root / "otlp_logs"))
+        assert row_multiset(logs.drop("year", "month", "day")) == \
+            sorted(row_multiset(ref) * 2)
+        for table, bar in (("traces", "traces-initial.bar"),
+                           ("metrics_gauge", "metrics-initial.bar")):
+            want = OTAP_READERS[table](spark, str(bar_dir / bar)).count()
+            assert spark.read.parquet(
+                str(srv.export_root / f"otlp_{table}")).count() == want
     finally:
         otlp_stop(spark, srv.uri.canonical)
 
