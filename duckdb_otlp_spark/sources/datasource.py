@@ -25,12 +25,13 @@ envelope slice, so rows cross the Python-JVM boundary as columnar
 batches.
 
 Divergence: JSON files are parsed strictly in Python, while
-``read_otlp_*`` parses them with the JVM's lax ``from_json``. Both
-raise ``OTLP parse error: invalid JSON`` and ``OTLP parse error:
-expected '<spine>' envelope`` for the same files, but a document with a
-mistyped field below the spine (``"severityNumber": {"oops": 1}``)
-reads as NULL-filled rows through ``read_otlp_*`` and raises ``OTLP
-parse error`` here.
+``read_otlp_*`` parses them with the JVM's lax ``from_json``; both
+hand the envelopes to the same flatteners. Both raise ``OTLP parse
+error: invalid JSON`` and ``OTLP parse error: expected '<spine>'
+envelope`` for the same files. The one difference is a mistyped field
+below the spine (an object, array or fraction where a string goes, as
+in ``"severityNumber": {"oops": 1}``): it reads as NULL through
+``read_otlp_*`` and raises ``OTLP parse error`` here.
 """
 
 from __future__ import annotations

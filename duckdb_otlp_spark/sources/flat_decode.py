@@ -1,10 +1,7 @@
 """Executor-side flatten: OTLP envelopes -> FINAL flat rows, in Python.
 
-One flattener per table (logs, traces, and the four metric shapes),
-each an exact twin of the JVM flatten in ``otlp_json`` (``flatten_*``:
-``from_json`` + explode + interpreted higher-order functions). The
-callers take the flat columns straight from Python instead of nested
-envelope rows:
+One flattener per table (logs, traces, and the four metric shapes), the
+program's only flattener. Every route hands it envelope dicts:
 
 - file reads through one per-file decode (``decode_file``): the
   protobuf reads of all six ``read_otlp_*`` tables and the six
@@ -12,44 +9,49 @@ envelope rows:
   and ``spark.read.format("otlp"/"otap")`` (``sources/datasource.py``).
   The wire or OTAP decode and the flatten run in one pass. Measured on
   the 1M-record/32-file pb bench corpus at local[32] (r14): 5.0-5.6 s
-  via the envelope + JVM flatten route, 1.5-1.75 s here. JSON reads
-  through ``read_otlp_*`` keep the JVM route;
+  via the old envelope + JVM flatten route, 1.5-1.75 s here;
+- JSON and NDJSON reads through ``read_otlp_*`` and the seal's refused
+  lines (``flatten_parsed``): the JVM's lax ``from_json`` stays the
+  parser, and its parsed envelopes reach the flattener as ``to_json``
+  text in one ``mapInArrow``;
 - the live server's seal, through one parse loop (``seal_slices``):
   each spooled JSON request line goes ``json.loads`` ->
   ``otlp_json._conform_to_schema(strict=True)`` -> flattener. A line
-  that fails any step is REFUSED: it is kept verbatim and the seal runs
-  today's lax ``envelopes_from_lines`` + ``FLATTEN`` plan over the
-  refused lines only, so sealed rows, errors and
-  ``seal_malformed_lines`` are the JVM route's by construction. Every
-  server config seals through ``seal_files``, which writes the rows as
-  partitioned parquet inside the Python task; the parquet sink's default
-  config publishes those files as they are, while the catalog sink and
-  the seal-time columns have Spark read them back and write.
+  the strict parse refuses (malformed JSON, NaN tokens, off-schema
+  shapes) is kept verbatim and the seal parses the refused lines with
+  ``envelopes_from_lines`` (lax ``from_json``) before
+  ``flatten_parsed``, so sealed rows and ``seal_malformed_lines`` are
+  the file readers'. Every server config seals through ``seal_files``,
+  which writes the rows as partitioned parquet inside the Python task;
+  the parquet sink's default config publishes those files as they are,
+  while the catalog sink and the seal-time columns have Spark read them
+  back and write.
 
-Semantics: every coercion below twins the JVM expression over the
-conformed envelope domain — severity/flags int32 windows (try_cast
-long -> try_cast int -> default), enum names (``SPAN_KIND_*``,
-``STATUS_CODE_*``, ``AGGREGATION_TEMPORALITY_*``, ``SEVERITY_NUMBER_*``),
-ns->µs floor division with the int64-overflow error text, lowercase hex
-ids with ''->NULL, canonical sorted-key attrs JSON with Jackson-twin
-string escaping, Java-twin double rendering, the AnyValue depth-3
-cutoff, and the stringValue-first body CASE order. Integer text must be
-canonical (``-?[0-9]+``): anything else raises, because Spark's
-``try_cast`` rules for other spellings are not twinned here — the wire
-decoders only emit canonical text, and the seal refuses such lines to
-the JVM route. Byte parity is pinned by tests/test_flat_decode.py over
-the reader-gate fixtures and adversarial pb and JSON corpora.
+Semantics: the flatteners are total over the envelopes ``from_json``
+yields, with the JVM semantics the retired expression flatten had
+(tests/jvm_flatten.py keeps it as the tests' oracle): Spark's
+``try_cast(string AS bigint)`` for every integer field and int32
+windows on top (try_cast long -> try_cast int -> default), enum names
+(``SPAN_KIND_*``, ``STATUS_CODE_*``, ``AGGREGATION_TEMPORALITY_*``,
+``SEVERITY_NUMBER_*``), ns->µs floor division with the
+``decimal(38,0)`` fallback and error texts of the timestamp parse,
+lowercase ids with ''->NULL, canonical sorted-key attrs JSON with
+Jackson-twin string escaping, NULL list elements rendered as the JVM
+renders them, Java-format double rendering, the AnyValue depth-3
+cutoff, and the stringValue-first body CASE order.
 
-Documented divergence (the file reads of ``decode_file`` only: protobuf
-reads of every table, ``read_otap_*`` and the DataSource): non-"N.0"
-doubles outside the proven-exact zone — |x| >= 9e15 rendered via
-Double.toString, and subnormals — may differ from JDK 17's
-FloatingDecimal in the LAST DIGITS of the rendered JSON number (this
-module emits the shortest round-trip digits in Java's format). Both
-forms parse back to the identical double. The seal passes
-``exact=True``, which raises instead (so such lines take the JVM
-route), as does an attribute list whose keys include NULL (the JVM
-comparator orders NULL keys arbitrarily).
+Documented divergences, on every route: non-"N.0" doubles outside the
+proven-exact zone — |x| >= 9e15 rendered via Double.toString, and
+subnormals — may differ from JDK 17's FloatingDecimal in the LAST
+DIGITS of the rendered JSON number (this module emits the shortest
+round-trip digits in Java's format); both forms parse back to the
+identical double. An attribute list of 32 or more entries holding a
+NULL key or element may order differently: the JVM comparator ranks
+NULL equal to every key, so its order depends on the sort algorithm,
+which this module follows only below 32 entries. A span duration that
+overflows int64, or a timestamp below the int64 range, raises on every
+read of its row, ``count()`` included; the JVM flatten raised only when
+that column was selected.
 """
 
 from __future__ import annotations
@@ -57,15 +59,17 @@ from __future__ import annotations
 import json
 import math
 import re
-import sys
+from decimal import ROUND_HALF_UP, Decimal
+from functools import cmp_to_key
+from operator import itemgetter
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from duckdb_otlp_spark import schemas as _schemas
 from duckdb_otlp_spark.sources.otlp_json import (
-    _ENUM_MAPS,
+    _ANY_VALUE_DEPTH,
     _ENVELOPES,
-    _SEVERITY_NAMES,
     MAX_ENVELOPE_SLICE_RECORDS,
     MAX_READ_FILE_BYTES,
     _conform_to_schema,
@@ -77,15 +81,31 @@ _I64_MAX = 9223372036854775807
 _I32_MIN, _I32_MAX = -(1 << 31), (1 << 31) - 1
 _I64_MIN = -(1 << 63)
 
-# same class as otlp_json._json_quote's fast-path rlike
+# the characters Jackson escapes in a JSON string
 _NEEDS_ESCAPE = re.compile(r'["\\\x00-\x1f]')
 
-# otlp_json._ANY_VALUE_DEPTH twin
-_DEPTH = 3
+_ENUM_MAPS = {
+    "kind": {"SPAN_KIND_UNSPECIFIED": 0, "SPAN_KIND_INTERNAL": 1, "SPAN_KIND_SERVER": 2,
+             "SPAN_KIND_CLIENT": 3, "SPAN_KIND_PRODUCER": 4, "SPAN_KIND_CONSUMER": 5},
+    "status_code": {"STATUS_CODE_UNSET": 0, "STATUS_CODE_OK": 1, "STATUS_CODE_ERROR": 2},
+    "temporality": {"AGGREGATION_TEMPORALITY_UNSPECIFIED": 0,
+                    "AGGREGATION_TEMPORALITY_DELTA": 1,
+                    "AGGREGATION_TEMPORALITY_CUMULATIVE": 2},
+}
+
+_SEVERITY_NAMES = {
+    f"SEVERITY_NUMBER_{name}{n}" if n else f"SEVERITY_NUMBER_{name}": base + (n or 1) - 1
+    for name, base in (("TRACE", 1), ("DEBUG", 5), ("INFO", 9), ("WARN", 13),
+                       ("ERROR", 17), ("FATAL", 21))
+    for n in (0, 2, 3, 4)
+}
 
 _KINDS = _ENUM_MAPS["kind"]
 _STATUS_CODES = _ENUM_MAPS["status_code"]
 _TEMPORALITIES = _ENUM_MAPS["temporality"]
+
+# a NULL list element reads like an element whose fields are all NULL
+_NO_FIELDS: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -103,7 +123,7 @@ _ESCAPE_TABLE = {
 
 
 def _jstr(s) -> str:
-    """_json_quote twin: NULL -> 'null'; plain strings concat-quoted;
+    """JSON string literal: NULL -> 'null'; plain strings concat-quoted;
     strings needing escapes take the Jackson-twin table (pinned against
     to_json by the parity suite)."""
     if s is None:
@@ -113,18 +133,14 @@ def _jstr(s) -> str:
     return '"' + s + '"'
 
 
-def _jdouble(x, exact: bool) -> str:
-    """_json_double twin: null/NaN -> 'null'; integral |x| < 9e15 ->
-    'N.0'; else Double.toString (Java formatting over the shortest
-    round-trip digits). ``exact`` raises outside the proven zone (see
-    the module docstring)."""
+def _jdouble(x) -> str:
+    """Double as JSON: null/NaN -> 'null'; integral |x| < 9e15 -> 'N.0';
+    else Double.toString (Java formatting over the shortest round-trip
+    digits, see the module docstring)."""
     if x is None or x != x:
         return "null"
-    a = abs(x)
-    if a < 9.0e15 and x == int(x):
+    if abs(x) < 9.0e15 and x == int(x):
         return str(int(x)) + ".0"
-    if exact and a != math.inf and (a >= 9.0e15 or a < sys.float_info.min):
-        raise ValueError(f"double {x!r} outside the exact rendering zone")
     return _java_double_str(x)
 
 
@@ -158,21 +174,46 @@ def _java_double_str(x: float) -> str:
     return f"{sign}{digits[0]}.{digits[1:] or '0'}E{exp10}"
 
 
-def _int(s: str) -> int:
-    """Canonical decimal integer text (``-?[0-9]+``, any length) -> int;
-    any other spelling raises (see the module docstring)."""
-    if not (s.isascii() and (s.isdigit()
-                             or (s[:1] == "-" and s[1:].isdigit()))):
-        raise ValueError(f"non-canonical integer text {s!r}")
-    return int(s)
+# UTF8String.toLong trims bytes that are whitespace or ISO controls
+# (0x00-0x20, 0x7F), then takes a sign and ASCII digits, no fraction
+_LONG_TRIM = "".join(map(chr, range(0x21))) + "\x7f"
+_LONG_TEXT = re.compile(r"([+-]?)0*([0-9]+)")
+# java.math.BigDecimal over String.trim (chars <= U+0020): Unicode
+# decimal digits, an optional fraction and an int-range exponent
+_DEC_TRIM = "".join(map(chr, range(0x21)))
+_DEC_TEXT = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?0*(\d+))?")
 
 
 def _try_long(s):
-    """try_cast(long) twin: NULL and out-of-int64 -> None."""
+    """try_cast(string AS bigint) twin; NULL when Spark's is. Canonical
+    short digit strings take the fast path; every other text is decided
+    by its significant-digit count before ``int()`` sees it."""
     if s is None:
         return None
-    v = _int(s)
+    if len(s) <= 19 and s.isdigit() and s.isascii():
+        v = int(s)
+        return v if v <= _I64_MAX else None
+    m = _LONG_TEXT.fullmatch(s.strip(_LONG_TRIM))
+    if m is None or len(m[2]) > 19:
+        return None
+    v = -int(m[2]) if m[1] == "-" else int(m[2])
     return v if _I64_MIN <= v <= _I64_MAX else None
+
+
+def _try_dec38(s):
+    """try_cast(string AS decimal(38,0)) twin as an int: ROUND_HALF_UP
+    to an integer, NULL past 38 digits or for an exponent outside int
+    range."""
+    m = _DEC_TEXT.fullmatch(s.strip(_DEC_TRIM))
+    if m is None:
+        return None
+    if m[1] is not None and (len(m[1]) > 10 or int(m[1]) > 2147483647):
+        return None
+    d = Decimal(m[0])
+    if d.adjusted() >= 38:
+        return None
+    v = int(d.to_integral_value(ROUND_HALF_UP))
+    return v if abs(v) < 10 ** 38 else None
 
 
 def _jint_text(s) -> str:
@@ -188,8 +229,9 @@ def _long_text_or(s, default: str) -> str:
     return default if v is None else str(v)
 
 
-def _jany(v, depth: int, exact: bool) -> str:
-    """_any_value_json twin — same CASE order, same depth cutoff."""
+def _jany(v, depth: int) -> str:
+    """AnyValue as JSON value text — the JVM CASE order and depth
+    cutoff."""
     if v is None:
         return "null"
     s = v.get("stringValue")
@@ -203,7 +245,7 @@ def _jany(v, depth: int, exact: bool) -> str:
         return _jint_text(i)
     d = v.get("doubleValue")
     if d is not None:
-        return _jdouble(d, exact)
+        return _jdouble(d)
     by = v.get("bytesValue")
     if by is not None:
         return _jstr(by)
@@ -211,51 +253,62 @@ def _jany(v, depth: int, exact: bool) -> str:
         av = v.get("arrayValue")
         if av is not None:
             vals = av.get("values") or []
-            return "[" + ",".join(_jany(x, depth - 1, exact)
-                                  for x in vals) + "]"
+            return "[" + ",".join(_jany(x, depth - 1) for x in vals) + "]"
         kv = v.get("kvlistValue")
         if kv is not None:
             vals = kv.get("values") or []
-            return "{" + ",".join(
-                _jstr(e.get("key")) + ":" + _jany(e.get("value"), depth - 1,
-                                                  exact)
-                for e in vals) + "}"
+            return "{" + ",".join(_jkv(e, depth - 1) for e in vals) + "}"
     return "null"
 
 
-def _key_lax(a):
-    return a.get("key") or ""
+def _jkv(a, depth: int) -> str:
+    """One key/value entry; a NULL entry renders 'null:null'."""
+    a = a or _NO_FIELDS
+    return _jstr(a.get("key")) + ":" + _jany(a.get("value"), depth)
 
 
-def _key_exact(a):
-    return a.get("key")   # None vs str comparisons raise TypeError
+_KEY = itemgetter("key")
 
 
-def _attrs_json(attrs, exact: bool) -> str:
-    """attrs_to_json twin: canonical sorted-key JSON object; NULL list
-    -> '{}'. Key sort matches the JVM comparator (code-point order ==
-    UTF8 byte order; both sorts stable). Missing keys sort first and
-    render 'null' (the degenerate-wire shape); ``exact`` raises on them
-    instead, since the JVM comparator's order for NULL keys is
-    unspecified."""
+def _jvm_order(a, b) -> int:
+    """The JVM comparator: key order, and 0 whenever a key or the entry
+    is NULL."""
+    ka, kb = (a or _NO_FIELDS).get("key"), (b or _NO_FIELDS).get("key")
+    if ka is None or kb is None:
+        return 0
+    return -1 if ka < kb else 1 if ka > kb else 0
+
+
+_JVM_ORDER = cmp_to_key(_jvm_order)
+
+
+def _attrs_json(attrs) -> str:
+    """Canonical sorted-key JSON object; NULL list -> '{}'. Key order is
+    code-point order (== UTF8 byte order; both sorts stable). A NULL key
+    or entry makes the JVM comparator inconsistent, so such lists sort
+    with that comparator (CPython's and Java's TimSort run the same
+    insertion sort below 32 entries)."""
     if attrs is None:
         return "{}"
-    ordered = sorted(attrs, key=_key_exact if exact else _key_lax)
+    try:
+        ordered = sorted(attrs, key=_KEY)
+    except (TypeError, KeyError):
+        return "{" + ",".join(_jkv(a, _ANY_VALUE_DEPTH)
+                              for a in sorted(attrs, key=_JVM_ORDER)) + "}"
     return "{" + ",".join(
-        _jstr(a.get("key")) + ":" + _jany(a.get("value"), _DEPTH, exact)
-        for a in ordered
-    ) + "}"
+        _jstr(a.get("key")) + ":" + _jany(a.get("value"), _ANY_VALUE_DEPTH)
+        for a in ordered) + "}"
 
 
-def _body_text(v, exact: bool):
-    """_body_text twin: strings pass through, other AnyValue kinds
-    render as JSON, all-null renders to SQL NULL."""
+def _body_text(v):
+    """Log body: strings pass through, other AnyValue kinds render as
+    JSON, all-null renders to SQL NULL."""
     if v is None:
         return None
     s = v.get("stringValue")
     if s is not None:
         return s
-    r = _jany(v, _DEPTH, exact)
+    r = _jany(v, _ANY_VALUE_DEPTH)
     return None if r == "null" else r
 
 
@@ -263,37 +316,67 @@ def _body_text(v, exact: bool):
 # JVM-exact scalar coercions
 # ---------------------------------------------------------------------------
 
+_ARITHMETIC_OVERFLOW = (
+    "[ARITHMETIC_OVERFLOW] long overflow. Use 'try_subtract' to tolerate "
+    "overflow and return NULL instead. If necessary set "
+    '"spark.sql.ansi.enabled" to "false" to bypass this error. '
+    "SQLSTATE: 22003")
+
+
 def _ns(s):
-    """_ns_long twin: ns text -> int; > i64::MAX raises the _validated
-    error text the JVM flatten raises for the same input."""
+    """u64-ns text -> int: try_cast(long), else the decimal(38,0) parse.
+    Text neither takes, or above int64, raises a placeholder that
+    ``_scope_error`` turns into the timestamp error; below int64 the
+    decimal's ANSI cast to long overflows."""
     if s is None:
         return None
-    v = _int(s)
-    if v > _I64_MAX:
-        raise ValueError(
-            "OTLP parse error: timestamp overflows int64 range: " + s)
+    v = _try_long(s)
+    if v is not None:
+        return v
+    v = _try_dec38(s)
+    if v is None or v > _I64_MAX:
+        raise ValueError("timestamp outside int64")
     if v < _I64_MIN:
-        raise ValueError(f"timestamp below int64 range: {s}")
+        raise ValueError(
+            f'[CAST_OVERFLOW] The value {v}BD of the type "DECIMAL(38,0)" '
+            'cannot be cast to "BIGINT" due to an overflow. Use `try_cast` '
+            "to tolerate overflow and return NULL instead. SQLSTATE: 22003")
     return v
 
 
 def _ns_us(s):
-    """_ns_ts twin: ns -> µs, floor division."""
+    """ns -> µs, floor division."""
     v = _ns(s)
     return None if v is None else v // 1000
 
 
+def _scope_error(records, fields, err):
+    """Raise what the JVM flatten raises for ``records`` (one scope's
+    list) whose walk failed with ``err``: its timestamp check runs over
+    the whole list before any column, and names the first record with a
+    timestamp ``_ns`` rejects by its first non-NULL timestamp text."""
+    for r in records:
+        texts = [(r or _NO_FIELDS).get(f) for f in fields]
+        for t in texts:
+            if t is not None and _try_long(t) is None:
+                v = _try_dec38(t)
+                if v is None or v > _I64_MAX:
+                    shown = next(x for x in texts if x is not None)
+                    raise ValueError(
+                        "OTLP parse error: timestamp overflows int64 range: "
+                        + shown) from None
+    raise err
+
+
 def _i32(s, default):
-    """_uint32 twin: try_cast(long) -> try_cast(int) -> default."""
-    if s is None:
-        return default
-    v = _int(s)
-    return v if _I32_MIN <= v <= _I32_MAX else default
+    """try_cast(long) -> try_cast(int) -> default."""
+    v = _try_long(s)
+    return v if v is not None and _I32_MIN <= v <= _I32_MAX else default
 
 
 def _enum(s, names: dict, default):
-    """_enum_int twin: numeric first (int32 window), then the exact
-    enum name, then the default."""
+    """proto3 JSON enum: the exact enum name, else numeric (int32
+    window), else the default."""
     if s is None:
         return default
     n = names.get(s)
@@ -303,149 +386,168 @@ def _enum(s, names: dict, default):
 
 
 def _severity(s):
-    """_severity_number twin: enum -> NULL default, 0 -> NULL."""
+    """severityNumber: enum -> NULL default, 0 -> NULL."""
     v = _enum(s, _SEVERITY_NAMES, None)
     return None if v == 0 else v
 
 
 def _hex_id(s):
-    """nullif(lower(id), '') twin; ids outside ASCII raise (Java and
-    Python case mappings differ beyond it)."""
-    if not s:
-        return None
-    if not s.isascii():
-        raise ValueError("non-ASCII id")
-    return s.lower()
+    """nullif(lower(id), '')."""
+    return s.lower() if s else None
 
 
 def _attr(resource, key):
-    for a in (resource or {}).get("attributes") or []:
-        if a.get("key") == key:
-            return (a.get("value") or {}).get("stringValue")
+    for a in (resource or _NO_FIELDS).get("attributes") or []:
+        if a and a.get("key") == key:
+            return (a.get("value") or _NO_FIELDS).get("stringValue")
     return None
 
 
-def _scope_cols(resource, scope, exact: bool) -> tuple:
-    scope = scope or {}
+def _scope_cols(resource, scope) -> tuple:
+    scope = scope or _NO_FIELDS
     return (_attr(resource, "service.name"),
             _attr(resource, "service.namespace"),
             _attr(resource, "service.instance.id"),
-            _attrs_json((resource or {}).get("attributes"), exact),
+            _attrs_json((resource or _NO_FIELDS).get("attributes")),
             scope.get("name"), scope.get("version"),
-            _attrs_json(scope.get("attributes"), exact))
+            _attrs_json(scope.get("attributes")))
 
 
 # ---------------------------------------------------------------------------
-# Flatten twins (walk order == JVM explode order; NO sorting)
+# Flatteners (walk order == the JVM explode order; NO sorting)
 # ---------------------------------------------------------------------------
 
-def flatten_logs_columns(env: dict, exact: bool = False) -> list[tuple]:
+_LOG_TIMES = ("timeUnixNano", "observedTimeUnixNano")
+_SPAN_TIMES = ("startTimeUnixNano", "endTimeUnixNano")
+_POINT_TIMES = ("timeUnixNano", "startTimeUnixNano")
+
+
+def flatten_logs_columns(env: dict) -> list[tuple]:
     """One tuple per log record, 18 fields in LOGS_SCHEMA order."""
     out = []
     ap = out.append
     for rl in env.get("resourceLogs") or []:
+        rl = rl or _NO_FIELDS
         resource = rl.get("resource")
         for sl in rl.get("scopeLogs") or []:
+            sl = sl or _NO_FIELDS
             (svc, svc_ns, svc_id, res_attrs, scope_name, scope_version,
-             scope_attrs) = _scope_cols(resource, sl.get("scope"), exact)
-            for r in sl.get("logRecords") or []:
-                get = r.get
-                ap((
-                    _ns_us(get("timeUnixNano")),
-                    _ns_us(get("observedTimeUnixNano")),
-                    _hex_id(get("traceId")),
-                    _hex_id(get("spanId")),
-                    svc, svc_ns, svc_id,
-                    _severity(get("severityNumber")),
-                    get("severityText"),
-                    get("eventName"),
-                    _body_text(get("body"), exact),
-                    res_attrs, scope_name, scope_version, scope_attrs,
-                    _attrs_json(get("attributes"), exact),
-                    _i32(get("droppedAttributesCount"), 0),
-                    _i32(get("flags"), 0),
-                ))
+             scope_attrs) = _scope_cols(resource, sl.get("scope"))
+            records = sl.get("logRecords") or []
+            try:
+                for r in records:
+                    get = (r or _NO_FIELDS).get
+                    ap((
+                        _ns_us(get("timeUnixNano")),
+                        _ns_us(get("observedTimeUnixNano")),
+                        _hex_id(get("traceId")),
+                        _hex_id(get("spanId")),
+                        svc, svc_ns, svc_id,
+                        _severity(get("severityNumber")),
+                        get("severityText"),
+                        get("eventName"),
+                        _body_text(get("body")),
+                        res_attrs, scope_name, scope_version, scope_attrs,
+                        _attrs_json(get("attributes")),
+                        _i32(get("droppedAttributesCount"), 0),
+                        _i32(get("flags"), 0),
+                    ))
+            except ValueError as e:
+                _scope_error(records, _LOG_TIMES, e)
     return out
 
 
-def _events_json(events, exact: bool) -> str:
+def _events_json(events) -> str:
     if events is None:
         return "[]"
-    return "[" + ",".join(
-        '{"time_unix_nano":%s,"name":%s,"attributes":%s,'
-        '"dropped_attributes_count":%s}'
-        % (_long_text_or(e.get("timeUnixNano"), "null"),
-           _jstr(e.get("name")),
-           _attrs_json(e.get("attributes"), exact),
-           _long_text_or(e.get("droppedAttributesCount"), "0"))
-        for e in events) + "]"
+    out = []
+    for e in events:
+        e = e or _NO_FIELDS
+        out.append(
+            '{"time_unix_nano":%s,"name":%s,"attributes":%s,'
+            '"dropped_attributes_count":%s}'
+            % (_long_text_or(e.get("timeUnixNano"), "null"),
+               _jstr(e.get("name")),
+               _attrs_json(e.get("attributes")),
+               _long_text_or(e.get("droppedAttributesCount"), "0")))
+    return "[" + ",".join(out) + "]"
 
 
-def _links_json(links, exact: bool) -> str:
+def _links_json(links) -> str:
     if links is None:
         return "[]"
-    return "[" + ",".join(
-        '{"trace_id":%s,"span_id":%s,"trace_state":%s,"attributes":%s,'
-        '"dropped_attributes_count":%s}'
-        % (_jstr(_hex_id(li.get("traceId"))),
-           _jstr(_hex_id(li.get("spanId"))),
-           _jstr(li.get("traceState")),
-           _attrs_json(li.get("attributes"), exact),
-           _long_text_or(li.get("droppedAttributesCount"), "0"))
-        for li in links) + "]"
+    out = []
+    for li in links:
+        li = li or _NO_FIELDS
+        out.append(
+            '{"trace_id":%s,"span_id":%s,"trace_state":%s,"attributes":%s,'
+            '"dropped_attributes_count":%s}'
+            % (_jstr(_hex_id(li.get("traceId"))),
+               _jstr(_hex_id(li.get("spanId"))),
+               _jstr(li.get("traceState")),
+               _attrs_json(li.get("attributes")),
+               _long_text_or(li.get("droppedAttributesCount"), "0")))
+    return "[" + ",".join(out) + "]"
 
 
-def flatten_traces_columns(env: dict, exact: bool = False) -> list[tuple]:
+def flatten_traces_columns(env: dict) -> list[tuple]:
     """One tuple per span, 24 fields in TRACES_SCHEMA order."""
     out = []
     ap = out.append
     for rs in env.get("resourceSpans") or []:
+        rs = rs or _NO_FIELDS
         resource = rs.get("resource")
         for ss in rs.get("scopeSpans") or []:
+            ss = ss or _NO_FIELDS
             (svc, svc_ns, svc_id, res_attrs, scope_name, scope_version,
-             scope_attrs) = _scope_cols(resource, ss.get("scope"), exact)
-            for s in ss.get("spans") or []:
-                get = s.get
-                start = _ns(get("startTimeUnixNano"))
-                end = _ns(get("endTimeUnixNano"))
-                duration = (end or 0) - (start or 0)
-                if not _I64_MIN <= duration <= _I64_MAX:
-                    raise ValueError("span duration overflows int64")
-                status = get("status") or {}
-                ap((
-                    None if start is None else start // 1000,
-                    duration,
-                    _hex_id(get("traceId")),
-                    _hex_id(get("spanId")),
-                    _hex_id(get("parentSpanId")),
-                    get("traceState"),
-                    svc, svc_ns, svc_id,
-                    get("name"),
-                    _enum(get("kind"), _KINDS, 0),
-                    _enum(status.get("code"), _STATUS_CODES, 0),
-                    status.get("message"),
-                    res_attrs, scope_name, scope_version, scope_attrs,
-                    _attrs_json(get("attributes"), exact),
-                    _events_json(get("events"), exact),
-                    _links_json(get("links"), exact),
-                    _i32(get("droppedAttributesCount"), 0),
-                    _i32(get("droppedEventsCount"), 0),
-                    _i32(get("droppedLinksCount"), 0),
-                    _i32(get("flags"), 0),
-                ))
+             scope_attrs) = _scope_cols(resource, ss.get("scope"))
+            spans = ss.get("spans") or []
+            try:
+                for s in spans:
+                    get = (s or _NO_FIELDS).get
+                    start = _ns(get("startTimeUnixNano"))
+                    end = _ns(get("endTimeUnixNano"))
+                    duration = (end or 0) - (start or 0)
+                    if not _I64_MIN <= duration <= _I64_MAX:
+                        raise ValueError(_ARITHMETIC_OVERFLOW)
+                    status = get("status") or _NO_FIELDS
+                    ap((
+                        None if start is None else start // 1000,
+                        duration,
+                        _hex_id(get("traceId")),
+                        _hex_id(get("spanId")),
+                        _hex_id(get("parentSpanId")),
+                        get("traceState"),
+                        svc, svc_ns, svc_id,
+                        get("name"),
+                        _enum(get("kind"), _KINDS, 0),
+                        _enum(status.get("code"), _STATUS_CODES, 0),
+                        status.get("message"),
+                        res_attrs, scope_name, scope_version, scope_attrs,
+                        _attrs_json(get("attributes")),
+                        _events_json(get("events")),
+                        _links_json(get("links")),
+                        _i32(get("droppedAttributesCount"), 0),
+                        _i32(get("droppedEventsCount"), 0),
+                        _i32(get("droppedLinksCount"), 0),
+                        _i32(get("flags"), 0),
+                    ))
+            except ValueError as e:
+                _scope_error(spans, _SPAN_TIMES, e)
     return out
 
 
-def _exemplars_json(exemplars, exact: bool) -> str:
+def _exemplars_json(exemplars) -> str:
     if exemplars is None:
         return "[]"
     out = []
     for e in exemplars:
+        e = e or _NO_FIELDS
         d = e.get("asDouble")
         out.append(
             '{"time_unix_nano":%s,"value":%s,"span_id":%s,"trace_id":%s}'
             % (_long_text_or(e.get("timeUnixNano"), "null"),
-               _jdouble(d, exact) if d is not None
+               _jdouble(d) if d is not None
                else _long_text_or(e.get("asInt"), "null"),
                _jstr(_hex_id(e.get("spanId"))),
                _jstr(_hex_id(e.get("traceId")))))
@@ -456,83 +558,91 @@ def _bucket_counts(counts):
     return None if counts is None else [_try_long(c) for c in counts]
 
 
-def flatten_metrics_columns(env: dict, exact: bool = False
-                            ) -> tuple[list, list, list, list]:
-    """(gauge, sum, histogram, exp_histogram) tuple lists, each in its
-    METRICS_*_SCHEMA order. One walk fans out to the four shapes, like
-    the reference's single-parse metrics transform."""
-    gauge: list = []
-    sums: list = []
-    hists: list = []
-    exps: list = []
+# the metric body keys of the four point shapes, in table order
+METRIC_SHAPES = ("gauge", "sum", "histogram", "exponentialHistogram")
+
+
+def flatten_metrics_columns(env: dict, shapes: tuple = METRIC_SHAPES
+                            ) -> tuple[list, ...]:
+    """One tuple list per shape of ``shapes`` (a subsequence of
+    ``METRIC_SHAPES``), each in its METRICS_*_SCHEMA order. One walk
+    fans out to the shapes asked for, like the reference's single-parse
+    metrics transform; the others are never flattened."""
+    out = tuple([] for _ in shapes)
+    wanted = tuple(zip(shapes, out))
     for rm in env.get("resourceMetrics") or []:
+        rm = rm or _NO_FIELDS
         resource = rm.get("resource")
         for sm in rm.get("scopeMetrics") or []:
-            sc = _scope_cols(resource, sm.get("scope"), exact)
+            sm = sm or _NO_FIELDS
+            sc = _scope_cols(resource, sm.get("scope"))
             for m in sm.get("metrics") or []:
+                m = m or _NO_FIELDS
                 head = (m.get("name"), m.get("description"), m.get("unit"))
-                for shape, rows in (("gauge", gauge), ("sum", sums),
-                                    ("histogram", hists),
-                                    ("exponentialHistogram", exps)):
+                for shape, rows in wanted:
                     body = m.get(shape)
                     if body is None:
                         continue
                     if shape != "gauge":
                         temporality = _enum(body.get("aggregationTemporality"),
                                             _TEMPORALITIES, 0)
-                    for dp in body.get("dataPoints") or []:
-                        get = dp.get
-                        ts = (_ns_us(get("timeUnixNano")),
-                              _ns_us(get("startTimeUnixNano")))
-                        tail = (*sc, _attrs_json(get("attributes"), exact),
-                                _i32(get("flags"), 0),
-                                _exemplars_json(get("exemplars"), exact))
-                        if shape == "gauge" or shape == "sum":
-                            row = (*ts, *head, _try_long(get("asInt")),
-                                   get("asDouble"), *tail)
-                            if shape == "sum":
-                                row += (temporality,
-                                        body.get("isMonotonic") or False)
-                        elif shape == "histogram":
-                            row = (*ts, *head, _try_long(get("count")),
-                                   get("sum"), get("min"), get("max"),
-                                   _bucket_counts(get("bucketCounts")),
-                                   get("explicitBounds"), *tail, temporality)
-                        else:
-                            pos = get("positive") or {}
-                            neg = get("negative") or {}
-                            zero = _try_long(get("zeroCount"))
-                            row = (*ts, *head, _try_long(get("count")),
-                                   get("sum"), get("min"), get("max"),
-                                   _i32(get("scale"), 0),
-                                   0 if zero is None else zero,
-                                   get("zeroThreshold"),
-                                   _i32(pos.get("offset"), 0),
-                                   _bucket_counts(pos.get("bucketCounts")) or [],
-                                   _i32(neg.get("offset"), 0),
-                                   _bucket_counts(neg.get("bucketCounts")) or [],
-                                   *tail, temporality)
-                        rows.append(row)
-    return gauge, sums, hists, exps
+                    points = body.get("dataPoints") or []
+                    try:
+                        for dp in points:
+                            get = (dp or _NO_FIELDS).get
+                            ts = (_ns_us(get("timeUnixNano")),
+                                  _ns_us(get("startTimeUnixNano")))
+                            tail = (*sc, _attrs_json(get("attributes")),
+                                    _i32(get("flags"), 0),
+                                    _exemplars_json(get("exemplars")))
+                            if shape == "gauge" or shape == "sum":
+                                row = (*ts, *head, _try_long(get("asInt")),
+                                       get("asDouble"), *tail)
+                                if shape == "sum":
+                                    row += (temporality,
+                                            body.get("isMonotonic") or False)
+                            elif shape == "histogram":
+                                row = (*ts, *head, _try_long(get("count")),
+                                       get("sum"), get("min"), get("max"),
+                                       _bucket_counts(get("bucketCounts")),
+                                       get("explicitBounds"), *tail, temporality)
+                            else:
+                                pos = get("positive") or _NO_FIELDS
+                                neg = get("negative") or _NO_FIELDS
+                                zero = _try_long(get("zeroCount"))
+                                row = (*ts, *head, _try_long(get("count")),
+                                       get("sum"), get("min"), get("max"),
+                                       _i32(get("scale"), 0),
+                                       0 if zero is None else zero,
+                                       get("zeroThreshold"),
+                                       _i32(pos.get("offset"), 0),
+                                       _bucket_counts(pos.get("bucketCounts")) or [],
+                                       _i32(neg.get("offset"), 0),
+                                       _bucket_counts(neg.get("bucketCounts")) or [],
+                                       *tail, temporality)
+                            rows.append(row)
+                    except ValueError as e:
+                        _scope_error(points, _POINT_TIMES, e)
+    return out
 
 
-def _metrics_shape(i: int):
-    return lambda env, exact=False: flatten_metrics_columns(env, exact)[i]
+def _metrics_shape(shape: str):
+    return lambda env: flatten_metrics_columns(env, (shape,))[0]
 
 
 # table key -> (flattener, wire signal); table keys are schemas.TARGET_TABLES'
 FLATTENERS = {
     "logs": (flatten_logs_columns, "logs"),
     "traces": (flatten_traces_columns, "traces"),
-    "metrics_gauge": (_metrics_shape(0), "metrics"),
-    "metrics_sum": (_metrics_shape(1), "metrics"),
-    "metrics_histogram": (_metrics_shape(2), "metrics"),
-    "metrics_exp_histogram": (_metrics_shape(3), "metrics"),
+    "metrics_gauge": (_metrics_shape("gauge"), "metrics"),
+    "metrics_sum": (_metrics_shape("sum"), "metrics"),
+    "metrics_histogram": (_metrics_shape("histogram"), "metrics"),
+    "metrics_exp_histogram": (_metrics_shape("exponentialHistogram"), "metrics"),
 }
 
-# Fields the JVM flatten NEVER leaves null (rendered JSON always a
-# string, counts always defaulted, duration always computed) — matching
-# its output nullability exactly, which the schema gates compare.
+# Fields the flatteners NEVER leave null (rendered JSON always a
+# string, counts always defaulted, duration always computed) — the
+# output nullability the schema gates compare.
 _METRIC_NN = {"resource_attributes", "scope_attributes", "metric_attributes",
               "flags", "exemplars_json"}
 NON_NULLABLE = {
@@ -553,11 +663,67 @@ NON_NULLABLE = {
 
 
 def flat_schema(key: str) -> T.StructType:
-    """The JVM flatten's exact output schema for table ``key``."""
+    """Table ``key``'s flat output schema."""
     nn = NON_NULLABLE[key]
     return T.StructType([
         T.StructField(f.name, f.dataType, nullable=f.name not in nn)
         for f in _schemas.SIGNAL_SCHEMAS[key].fields])
+
+
+def _arrow_batches(parts, schema):
+    """Flat tuple lists -> Arrow record batches of ``schema``: a batch
+    takes parts while it stays within ``MAX_ENVELOPE_SLICE_RECORDS``
+    rows (a single larger part is one batch)."""
+    import pyarrow as pa
+
+    def batch(tuples):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(zip(*tuples), schema)],
+            names=schema.names)
+
+    acc: list = []
+    for tuples in parts:
+        if acc and len(acc) + len(tuples) > MAX_ENVELOPE_SLICE_RECORDS:
+            yield batch(acc)
+            acc = []
+        acc += tuples
+    if acc:
+        yield batch(acc)
+
+
+def flatten_parsed(env, key: str):
+    """Envelope rows parsed by ``from_json`` (column ``env``) -> table
+    ``key``'s ``flat_schema`` rows: the JSON/NDJSON reads of
+    ``read_otlp_*`` and the seal's refused lines. The parsed envelopes
+    cross to Python as ``to_json`` text, and one ``mapInArrow`` runs
+    ``json.loads`` and the table's flattener, each envelope cut by
+    ``slice_envelope``. ``to_json`` text already has the envelope
+    schema's shape, except that it quotes NaN and the infinities: only
+    text holding such a string pays the lenient conformance (as costly
+    as the parse) that turns them back into doubles."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from duckdb_otlp_spark.session import ensure_package_on_workers
+
+    flatten, signal = FLATTENERS[key]
+    env_schema = _ENVELOPES[signal][1]
+    out = flat_schema(key)
+
+    def envelopes(docs):
+        for doc in docs:
+            parsed = json.loads(doc)
+            if '"NaN"' in doc or 'Infinity"' in doc:
+                parsed = _conform_to_schema(parsed, env_schema)
+            yield from slice_envelope(parsed, signal)
+
+    def run(batches):
+        schema = to_arrow_schema(out)
+        for batch in batches:
+            yield from _arrow_batches(
+                map(flatten, envelopes(batch.column(0).to_pylist())), schema)
+
+    ensure_package_on_workers(env.sparkSession)
+    return env.select(F.to_json("env").alias("value")).mapInArrow(run, out)
 
 
 # ---------------------------------------------------------------------------
@@ -681,10 +847,8 @@ def decode_file(fpath: str, data: bytes, key: str, container: str,
     a file over ``cap`` bytes raises ``OTLP read error``, an empty file
     yields no rows, and a whitespace-only OTLP file raises. Bad payloads
     raise ``OTLP parse error: invalid protobuf payload`` or ``OTAP
-    decode error``. Each envelope is cut by ``slice_envelope`` and each
-    slice becomes one batch, so a batch holds at most
-    ``MAX_ENVELOPE_SLICE_RECORDS`` records."""
-    import pyarrow as pa
+    decode error``. Each envelope is cut by ``slice_envelope``, and
+    batches hold at most ``MAX_ENVELOPE_SLICE_RECORDS`` records."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if len(data) > cap:
@@ -693,14 +857,10 @@ def decode_file(fpath: str, data: bytes, key: str, container: str,
     if not data:
         return
     flatten, signal = FLATTENERS[key]
-    schema = to_arrow_schema(flat_schema(key))
-    for env in _file_envelopes(fpath, data, signal, container):
-        for part in slice_envelope(env, signal):
-            tuples = flatten(part)
-            if tuples:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=f.type)
-                     for c, f in zip(zip(*tuples), schema)], names=schema.names)
+    yield from _arrow_batches(
+        (flatten(part) for env in _file_envelopes(fpath, data, signal, container)
+         for part in slice_envelope(env, signal)),
+        to_arrow_schema(flat_schema(key)))
 
 
 def read_flat(spark, path, key: str, container: str):
@@ -780,7 +940,7 @@ _PARSE_FLOAT = _num_token(float)
 
 def _strict_line(raw: bytes, spine: str, env_schema):
     """One spooled line -> conformed envelope, or raise when the line is
-    outside the domain the flatteners twin exactly."""
+    outside the domain where ``json.loads`` reads what Jackson reads."""
     if _long_token(raw):
         raise ValueError("token beyond Jackson's length caps")
     text = raw.decode("utf-8")
@@ -797,21 +957,19 @@ def seal_slices(raws, signal: str):
     """The seal's one parse loop: spooled request lines (bytes, without
     their ``\\n``) -> ``(rows, refused)`` slices, where ``rows`` holds
     one list of flat tuples per table of ``SEAL_TABLES[signal]`` and
-    ``refused`` the lines the strict parse or a flattener refused,
-    verbatim. A slice is yielded once it holds
+    ``refused`` the lines the strict parse refused, verbatim. A slice is yielded once it holds
     ``MAX_ENVELOPE_SLICE_RECORDS`` rows or refused lines (checked per
     line), and at the end. Blank lines vanish, like the lax route's
     ``trim(value) != ''`` filter."""
     keys = SEAL_TABLES[signal]
     spine, env_schema = _ENVELOPES[signal]
     if signal == "metrics":
-        def flatten(env):
-            return flatten_metrics_columns(env, exact=True)
+        flatten = flatten_metrics_columns
     else:
         one = FLATTENERS[signal][0]
 
         def flatten(env):
-            return (one(env, exact=True),)
+            return (one(env),)
     rows: list[list] = [[] for _ in keys]
     refused: list = []
     pending = 0
@@ -819,12 +977,12 @@ def seal_slices(raws, signal: str):
         if not raw.strip(b" "):
             continue
         try:
-            parts = flatten(_strict_line(raw, spine, env_schema))
-        except Exception:  # noqa: BLE001 — refused: JVM route
+            env = _strict_line(raw, spine, env_schema)
+        except Exception:  # noqa: BLE001 — refused: the lax from_json parse
             refused.append(raw)
             pending += 1
             continue
-        for acc, part in zip(rows, parts):
+        for acc, part in zip(rows, flatten(env)):
             acc += part
             pending += len(part)
         if pending >= MAX_ENVELOPE_SLICE_RECORDS:
@@ -864,7 +1022,7 @@ def seal_files(paths: list[str], signal: str, staging: str,
     through one ``ParquetWriter`` per ``year=/month=/day=`` leaf under
     ``staging/<table>/`` (zstd level 1, or ``compression``), so memory
     is bounded by a slice, not by ``paths``. Refused lines go verbatim
-    to ``staging/refused/`` as NDJSON for the lax JVM route.
+    to ``staging/refused/`` as NDJSON for the lax ``from_json`` parse.
 
     Returns ``{"files": [(table, path under staging/<table>, rows)],
     "refused": n}``; nothing is visible outside ``staging`` until the

@@ -27,9 +27,10 @@ on the config:
   and writes the table (the catalog's sorted + bloom layout, staged
   then committed in one snapshot).
 
-Lines the flattener refuses (malformed JSON, off-schema shapes, values
-outside its exact domain) take the file readers' lax JVM plan on every
-config, built only for seals that hold such a line.
+Lines the strict parse refuses (malformed JSON, NaN tokens, off-schema
+shapes) take the file readers' lax ``from_json`` parse on every config,
+then the same flattener (``flat_decode.flatten_parsed``); that plan is
+built only for seals that hold such a line.
 
 A metrics request fans out to <=4 shape tables from ONE parse, mirroring
 ``otlp_transform_metrics_all`` (reference: read_otlp.cpp:261-304).
@@ -62,7 +63,7 @@ from duckdb_otlp_spark.functions.promote import sanitize_key as _sanitize
 from duckdb_otlp_spark.functions.uri import OtlpUri, parse_otlp_uri
 from duckdb_otlp_spark.schemas import TARGET_TABLES, partition_ts
 from duckdb_otlp_spark.sources import flat_decode
-from duckdb_otlp_spark.sources.otlp_json import FLATTEN, envelopes_from_lines
+from duckdb_otlp_spark.sources.otlp_json import envelopes_from_lines
 from duckdb_otlp_spark.streaming.maintenance import (
     BLOOM_COLS,
     SORT_KEYS,
@@ -575,7 +576,7 @@ class OtlpSparkServer:
                     compression=self.compression)
                 add.setdefault(table, []).extend(entries)
                 # the staged rows' read-back schema (every column
-                # nullable), not the refused lines' JVM one
+                # nullable), not the refused lines' flat_schema one
                 schemas.setdefault(table, df.schema.json())
                 rows[table] += sum(e.rows for e in entries)
             stage_ms = (time.perf_counter() - t0) * 1000
@@ -643,8 +644,9 @@ class OtlpSparkServer:
         """(table, frame) pairs for Spark's writer out of a staged seal:
         with ``clean``, every table's staged rows through ``_finish``;
         then, when the staging job ``refused`` lines, their rows via the
-        lax JVM route (``envelopes_from_lines`` + ``FLATTEN``), whose
-        dropped lines the ``malformed`` Observation counts."""
+        lax ``from_json`` parse (``envelopes_from_lines``) and
+        ``flat_decode.flatten_parsed``, whose dropped lines the
+        ``malformed`` Observation counts."""
         keys = flat_decode.SEAL_TABLES[signal]
         if clean:
             for key in keys:
@@ -659,7 +661,8 @@ class OtlpSparkServer:
             env = env.persist()
         try:
             for key in keys:
-                yield TARGET_TABLES[key], self._finish(signal, FLATTEN[key](env))
+                yield TARGET_TABLES[key], self._finish(
+                    signal, flat_decode.flatten_parsed(env, key))
         finally:
             if len(keys) > 1:
                 env.unpersist()
@@ -743,7 +746,7 @@ class OtlpSparkServer:
         included; a table's ``append_ms`` is its row share of the job
         plus its own publish), or let Spark write them through
         ``_finish`` (one snapshot for the catalog sink). The refused
-        lines follow through the lax JVM route."""
+        lines follow through the lax ``from_json`` parse."""
         tables = [TARGET_TABLES[k] for k in flat_decode.SEAL_TABLES[signal]]
         unsealed = list(tables)
         staging = self.export_root / f".seal-{uuid.uuid4().hex}"

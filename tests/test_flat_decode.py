@@ -1,13 +1,14 @@
-"""Flat decode parity gate: protobuf reads and the live seal.
+"""Flat decode parity gate: protobuf reads, JSON reads and the live seal.
 
-The protobuf fast path (sources/flat_decode) flattens executor-side and
-must be BYTE-IDENTICAL to the generic envelope route + JVM flatten —
-including JSON string escaping, double rendering, int32 coercion
-windows, enum defaults, the AnyValue depth cutoff, and the timestamp
-overflow error contract. The control side of every comparison here is
-the UNCHANGED envelope plan (``_load_envelopes(mode='auto')``, whose
-protobuf files arrive as typed envelope structs, + ``flatten_*``), so
-any drift in the twin fails loudly.
+The program's one flattener (sources/flat_decode) runs executor-side in
+Python and must be BYTE-IDENTICAL to the JVM flatten kept as the
+oracle in tests/jvm_flatten.py — including JSON string escaping, double
+rendering, int32 coercion windows, enum defaults, the AnyValue depth
+cutoff, and the timestamp overflow error contract. The control side of
+every comparison here is the envelope plan (``_load_envelopes``, whose
+protobuf files arrive as typed envelope structs, or
+``envelopes_from_lines``) + the oracle's ``flatten_*``, so any drift in
+the flattener fails loudly.
 """
 
 from __future__ import annotations
@@ -21,16 +22,15 @@ from duckdb_otlp_spark import reader_gate
 from duckdb_otlp_spark.schemas import TARGET_TABLES
 from duckdb_otlp_spark.sources import flat_decode
 from duckdb_otlp_spark.sources.otlp_json import (
-    FLATTEN,
     READERS,
     _load_envelopes,
     envelopes_from_lines,
-    flatten_logs,
     read_otlp_logs,
     read_otlp_traces,
 )
 from tests import fixtures as fx
 from tests.fixtures import encode_envelope_pb, row_multiset
+from tests.jvm_flatten import FLATTEN, flatten_logs
 
 _NS = 1713000000000000000
 
@@ -382,9 +382,38 @@ def test_jackson_escape_twin(spark):
         assert flat_decode._jstr(s) == want, (s, want, flat_decode._jstr(s))
 
 
+def test_integer_text_twins_match_spark_try_cast(spark):
+    """_try_long and _try_dec38 read integer text as Spark's
+    try_cast(string AS bigint) and try_cast(string AS decimal(38,0)) do:
+    trimming, signs, fractions, exponents, Unicode digits, the int64 and
+    38-digit edges, and texts past int()'s 4,300-digit limit."""
+    from pyspark.sql import functions as F
+
+    texts = ["5", " 5", "5 ", "\t5\n", "\x7f5", "\x1c5", "\xa05", "\u20035",
+             "+5", "-5", "+", "-", "", " ", "2.0", "2.5", "-2.5", "1e3", "1E3",
+             "1.5e2", ".5", "5.", "-.5", "2.", " 2.0", "3.99", "-3.99", "0x10",
+             "1_000", "007", "-0", "++5", "5-", "1.5.2", "1e", "e5", "1e+5",
+             "1e-5", "1\x00", "NaN", "Infinity", "\u0661\u0662\u0663",
+             "9223372036854775807", "9223372036854775808",
+             "-9223372036854775808", "-9223372036854775809",
+             "0" * 30 + "5", "1" * 25, "-" + "1" * 25, "1" * 38, "1" * 39,
+             "9" * 38 + ".5", "9" * 37 + ".5", "12345678901234567890.5",
+             "0e37", "0e38", "1e2147483648", "1e-2147483648",
+             "0" * 5000 + "1", "1" * 5000, "-" + "0" * 5000 + "7"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, s string")
+    rows = df.select("i", F.col("s").try_cast("long").alias("l"),
+                     F.col("s").try_cast("decimal(38,0)").alias("d")).collect()
+    for r in rows:
+        s = texts[r["i"]]
+        d = None if r["d"] is None else int(r["d"])
+        assert (flat_decode._try_long(s), flat_decode._try_dec38(s)) == \
+            (r["l"], d), repr(s[:40])
+
+
 # ---------------------------------------------------------------------------
-# Seal corpora: spooled JSON lines the executor-side flattener takes, and
-# lines it refuses to the lax JVM route (envelopes_from_lines + FLATTEN).
+# Seal corpora: spooled JSON lines the seal's strict parse takes, and lines
+# it refuses to the lax from_json parse (envelopes_from_lines); the oracle
+# is the JVM flatten over envelopes_from_lines of every line.
 # ---------------------------------------------------------------------------
 
 def _log_line(*records, resource=None, scope=None):
@@ -413,7 +442,7 @@ _DEEP_ANY = {"kvlistValue": {"values": [{"key": "a", "value": {
         {"key": "b", "value": {"arrayValue": {"values": [
             {"stringValue": "past the depth cutoff"}]}}}]}}]}}}]}}
 
-# Lines the flattener must take itself (none refused).
+# Lines the strict parse takes and the flattener flattens (none refused).
 _FLAT_LINES = {
     "logs": [json.dumps(e) for e in
              reader_gate.LOGS_ENVELOPES + fx.LOGS_SIMPLE + fx.LOGS_NULLS
@@ -455,6 +484,22 @@ _FLAT_LINES = {
         '{"resourceLogs":[{"scopeLogs":[{"logRecords":[{"TimeUnixNano":"5",'
         '"timeUnixNano":"6","body":{"doubleValue":"abc","doubleValue":1.5}}'
         ']}]}]}',
+        # lines only the flatteners refused before they became total over
+        # the from_json domain: unknown enum names, non-canonical integers,
+        # out-of-zone doubles, NULL keys, NULL list elements, non-ASCII ids
+        _log_line({"timeUnixNano": str(_NS), "severityNumber": "SEVERITY_X"}),
+        _log_line({"timeUnixNano": str(_NS), "flags": " 5"}),
+        _log_line({"timeUnixNano": "+5"}),
+        _log_line({"timeUnixNano": "1e3"}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            _kv("big", {"doubleValue": 1.2345678901234567e17})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            _kv("sub", {"doubleValue": 5e-324})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [
+            {"value": {"stringValue": "a"}}, _kv("b", {"stringValue": "c"})]}),
+        _log_line({"timeUnixNano": str(_NS), "attributes": [None]}),
+        _log_line(None),
+        _log_line({"timeUnixNano": str(_NS), "traceId": "ÄB"}),
     ],
     "traces": [json.dumps(e) for e in
                reader_gate.TRACES_ENVELOPES + fx.TRACES_SIMPLE
@@ -475,6 +520,9 @@ _FLAT_LINES = {
                     "kind": "SPAN_KIND_CONSUMER", "status": None},
                    {"name": "negative", "startTimeUnixNano": "-100",
                     "endTimeUnixNano": "-300"}),
+        _span_line({"name": "k", "kind": "SPAN_KIND_BOGUS"}),
+        _span_line({"name": "ev", "events": [None]}),
+        _span_line({"name": "c", "status": {"code": "2.0"}}),
     ],
     "metrics": [json.dumps(e) for e in
                 reader_gate.METRICS_ENVELOPES + fx.METRICS_SIMPLE
@@ -512,10 +560,18 @@ _FLAT_LINES = {
                 {"timeUnixNano": str(_NS), "asDouble": 1.0}]},
              "sum": {"dataPoints": [{"timeUnixNano": str(_NS), "asInt": "1"}]}},
             {"name": "empty-shape", "gauge": {}}),
+        _metric_line({"name": "t", "sum": {"dataPoints": [],
+                                           "aggregationTemporality": "X"}}),
+        _metric_line({"name": "b", "histogram": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "bucketCounts": ["1.5"]}]}}),
+        _metric_line({"name": "x", "gauge": {"dataPoints": [
+            {"timeUnixNano": str(_NS), "exemplars": [
+                {"asDouble": 1e300}]}]}}),
+        _metric_line(None),
     ],
 }
 
-# Lines the flattener must refuse: the lax JVM route handles them.
+# Lines the strict parse must refuse: the lax from_json parse handles them.
 _REFUSED_LINES = {
     "logs": [
         '{"resourceLogs": [',                        # truncated body
@@ -525,20 +581,7 @@ _REFUSED_LINES = {
         .replace("1.0", "NaN"),                      # NaN token
         _log_line({"timeUnixNano": str(_NS), "severityText": 1.5}),
         _log_line({"timeUnixNano": str(_NS), "severityText": {"a": 1}}),
-        _log_line({"timeUnixNano": str(_NS), "severityNumber": "SEVERITY_X"}),
-        _log_line({"timeUnixNano": str(_NS), "flags": " 5"}),
-        _log_line({"timeUnixNano": "+5"}),
-        _log_line({"timeUnixNano": "1e3"}),
         _log_line({"timeUnixNano": str(_NS), "body": {"boolValue": "true"}}),
-        _log_line({"timeUnixNano": str(_NS), "attributes": [
-            _kv("big", {"doubleValue": 1.2345678901234567e17})]}),
-        _log_line({"timeUnixNano": str(_NS), "attributes": [
-            _kv("sub", {"doubleValue": 5e-324})]}),
-        _log_line({"timeUnixNano": str(_NS), "attributes": [
-            {"value": {"stringValue": "a"}}, _kv("b", {"stringValue": "c"})]}),
-        _log_line({"timeUnixNano": str(_NS), "attributes": [None]}),
-        _log_line(None),
-        _log_line({"timeUnixNano": str(_NS), "traceId": "ÄB"}),
         _log_line({"timeUnixNano": str(_NS),
                    "body": {"stringValue": "😀"}}),
         _log_line({"timeUnixNano": str(_NS), "body": {"stringValue": "\ud800"}}),
@@ -551,9 +594,6 @@ _REFUSED_LINES = {
         "\t",
     ],
     "traces": [
-        _span_line({"name": "k", "kind": "SPAN_KIND_BOGUS"}),
-        _span_line({"name": "ev", "events": [None]}),
-        _span_line({"name": "c", "status": {"code": "2.0"}}),
         '{"resourceSpans":[{"scopeSpans":[{"spans":[{"name":"x"}]}]}',
         '{"resourceSpans":5}', "not json",
     ],
@@ -561,19 +601,26 @@ _REFUSED_LINES = {
         _metric_line({"name": "n", "gauge": {"dataPoints": [
             {"timeUnixNano": str(_NS), "asDouble": 1.0}]}})
         .replace("1.0", "Infinity"),
-        _metric_line({"name": "t", "sum": {"dataPoints": [],
-                                           "aggregationTemporality": "X"}}),
-        _metric_line({"name": "b", "histogram": {"dataPoints": [
-            {"timeUnixNano": str(_NS), "bucketCounts": ["1.5"]}]}}),
-        _metric_line({"name": "x", "gauge": {"dataPoints": [
-            {"timeUnixNano": str(_NS), "exemplars": [
-                {"asDouble": 1e300}]}]}}),
         _metric_line({"name": "o", "gauge": {"dataPoints": [
             {"timeUnixNano": str(_NS), "asDouble": 1}]}})
         .replace('"asDouble": 1', '"asDouble": ' + "1" * 400),
-        _metric_line(None), "{}", '{"resourceMetrics": [',
+        "{}", '{"resourceMetrics": [',
     ],
 }
+
+
+# The two out-of-zone doubles (big, sub) render with the shortest
+# round-trip digits, which may differ from the JVM's in the last digits
+# (flat_decode's documented divergence): their rows compare by value.
+_BY_VALUE = ('{"big":', '{"sub":')
+
+
+def _value_multiset(df) -> list[str]:
+    """``row_multiset`` with JSON text that starts with a ``_BY_VALUE``
+    key parsed."""
+    return sorted(repr(tuple(
+        json.loads(v) if isinstance(v, str) and v.startswith(_BY_VALUE) else v
+        for v in r)) for r in df.collect())
 
 
 def _lines_df(spark, lines):
@@ -674,7 +721,7 @@ def test_seal_route_matches_lax_jvm_route(spark, tmp_path, signal):
         # carries the JVM flatten's expression trees several times over
         # and grew the test JVM's heap by gigabytes
         got = _sealed_flat(srv, TARGET_TABLES[key], control)
-        assert row_multiset(got) == row_multiset(control), key
+        assert _value_multiset(got) == _value_multiset(control), key
 
 
 @pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
@@ -751,8 +798,8 @@ def test_executor_seal_matches_jvm_route(spark, tmp_path, signal, config):
             table = TARGET_TABLES[key]
             tables.append(table)
             control = FLATTEN[key](control_env)
-            want = row_multiset(control)
-            assert row_multiset(_sealed_flat(srv, table, control)) == want, table
+            want = _value_multiset(control)
+            assert _value_multiset(_sealed_flat(srv, table, control)) == want, table
             total += len(want)
             if srv.catalog is None:
                 assert set(_leaf_dirs(srv.export_root / table)) == \
@@ -818,3 +865,46 @@ def test_seal_files_streams_one_slice_at_a_time(tmp_path):
     meta = pq.ParquetFile(tmp_path / "stage" / table / rel).metadata
     assert meta.num_rows == rows and meta.num_row_groups >= 2
     assert meta.row_group(0).column(0).compression == "ZSTD"
+
+
+# ---------------------------------------------------------------------------
+# JSON reads: from_json parses, flat_decode.flatten_parsed flattens.
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("mode", ["auto", "lines"])
+@pytest.mark.parametrize("key,line", [
+    pytest.param("logs", _log_line({"timeUnixNano": str(_NS),
+                                    "attributes": [None]}), id="null-attribute"),
+    pytest.param("traces", _span_line({"name": "ev", "events": [None]}),
+                 id="null-event"),
+    pytest.param("logs", _log_line({"timeUnixNano": str(_NS), "flags": " 5"}),
+                 id="spaced-flags"),
+    pytest.param("logs", _log_line({"timeUnixNano": "1e3"}), id="exponent-time"),
+    pytest.param("traces", _span_line({"name": "c", "status": {"code": "2.0"}}),
+                 id="fractional-status"),
+])
+def test_json_read_matches_jvm_flatten(spark, tmp_path, key, line, mode):
+    p = tmp_path / "in.jsonl"
+    p.write_text(line + "\n")
+    got = READERS[key](spark, str(p), mode=mode)
+    want = FLATTEN[key](_load_envelopes(spark, str(p), key, mode))
+    assert [(f.name, f.dataType) for f in got.schema.fields] == \
+        [(f.name, f.dataType) for f in want.schema.fields]
+    assert row_multiset(got) == row_multiset(want)
+
+
+@pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+def test_json_read_of_the_seal_corpus_matches_jvm_flatten(spark, tmp_path,
+                                                          signal):
+    """Every line the seal's strict parse takes, read as one NDJSON file:
+    each table equals the JVM flatten over the same parsed envelopes.
+    The file readers raise on one line (a failed conversion flags it
+    corrupt, and its repeated key fails the JSON re-check), so it is
+    left out."""
+    p = tmp_path / f"{signal}.jsonl"
+    p.write_text("".join(ln + "\n" for ln in _FLAT_LINES[signal]
+                         if '"doubleValue":"abc"' not in ln))
+    for key in flat_decode.SEAL_TABLES[signal]:
+        got = READERS[key](spark, str(p), mode="lines")
+        want = FLATTEN[key](_load_envelopes(spark, str(p), signal, "lines"))
+        assert _value_multiset(got) == _value_multiset(want), key

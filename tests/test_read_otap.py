@@ -27,6 +27,7 @@ from duckdb_otlp_spark.sources.otap import (
 )
 from duckdb_otlp_spark.sources.otlp_json import READERS
 from tests.fixtures import row_multiset
+from tests.jvm_flatten import FLATTEN, flatten_logs
 from tests.otap_fixtures import OTAP_FIXTURE_DIR
 
 OTAP_DIR = Path("/root/reference/test/data/otap")
@@ -44,8 +45,8 @@ LOG_RECORDS = {OTAP_FIXTURE_DIR: 7, OTAP_DIR: 3}  # in logs-initial.bar
 def _otap_envelopes_json(spark, path, signal: str):
     """The readers' differential twin: each file's envelope rendered as
     proto3-JSON text, then ``from_json`` with the signal schema (feed
-    the rows to the JVM ``flatten_*``) — the same decoder through an
-    independent serialization and flatten."""
+    the rows to the JVM flatten of tests/jvm_flatten) — the same decoder
+    through an independent serialization and flatten."""
     import json
 
     from pyspark.sql import functions as F
@@ -112,13 +113,7 @@ def test_typed_path_matches_json_twin(spark, otap_dir, reader, bar, signal):
     render + from_json variant survives as the differential twin —
     identical rows through an independent serialization — and the typed
     plan must carry NO JsonToStructs (that's the whole point)."""
-    from duckdb_otlp_spark.sources import otlp_json as oj
-    flatten = {"logs": oj.flatten_logs, "traces": oj.flatten_traces,
-               "metrics_gauge": oj.flatten_metrics_gauge,
-               "metrics_sum": oj.flatten_metrics_sum,
-               "metrics_histogram": oj.flatten_metrics_histogram,
-               "metrics_exp_histogram": oj.flatten_metrics_exp_histogram,
-               }[reader]
+    flatten = FLATTEN[reader]
     typed = OTAP_READERS[reader](spark, str(otap_dir / bar))
     js = flatten(_otap_envelopes_json(spark, str(otap_dir / bar), signal))
     assert typed.schema == js.schema
@@ -319,7 +314,6 @@ def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
     (which renders the whole envelope as one document and never
     slices) — and the per-file decode demonstrably emits >1 bounded
     batch where the twin emits one envelope row."""
-    from duckdb_otlp_spark.sources import otlp_json as oj
     from duckdb_otlp_spark.sources.otap import read_otap_logs
     from duckdb_otlp_spark.sources.otlp_json import MAX_ENVELOPE_SLICE_RECORDS
 
@@ -328,7 +322,7 @@ def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
     p.write_bytes(_encode_bar_logs(n))
 
     typed = read_otap_logs(spark, str(p))
-    js = oj.flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
+    js = flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
     assert typed.count() == js.count() == n
     assert row_multiset(typed) == row_multiset(js)
     # slicing engaged: 2 bounded envelope rows vs the twin's single row
@@ -339,13 +333,12 @@ def test_oversized_otap_envelope_reads_sliced_and_identical(spark, tmp_path):
 def test_undersized_otap_envelope_not_sliced(spark, tmp_path):
     """Under the cap the envelope passes through untouched — one batch
     per file, rows identical to the JSON twin."""
-    from duckdb_otlp_spark.sources import otlp_json as oj
     from duckdb_otlp_spark.sources.otap import read_otap_logs
 
     p = tmp_path / "small.bar"
     p.write_bytes(_encode_bar_logs(37))
     typed = read_otap_logs(spark, str(p))
-    js = oj.flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
+    js = flatten_logs(_otap_envelopes_json(spark, str(p), "logs"))
     assert typed.count() == js.count() == 37
     assert row_multiset(typed) == row_multiset(js)
     assert _decoded_batches(p) == 1

@@ -303,6 +303,86 @@ def test_partially_corrupt_envelope_agrees_across_read_modes(spark, tmp_path):
     counts = {mode: read_otlp_logs(spark, str(p), mode=mode).count()
               for mode in ("auto", "lines")}
     assert len(set(counts.values())) == 1, counts
+    # by value: one row, the mistyped field NULL, the rest kept — in
+    # both read modes and in a seal
+    kept = datetime.datetime(1970, 1, 1, 0, 0, 0, 1)
+    reads = {mode: read_otlp_logs(spark, str(p), mode=mode)
+             for mode in ("auto", "lines")}
+    reads["seal"] = _sealed_logs(spark, tmp_path / "srv", [line])
+    for name, df in reads.items():
+        rows = df.select("time_unix_nano", "severity_number").collect()
+        assert [tuple(r) for r in rows] == [(kept, None)], name
+
+
+def _sealed_logs(spark, work, lines):
+    """``lines`` spooled to an unstarted server and sealed: the sealed
+    logs table."""
+    from duckdb_otlp_spark.streaming.server import OtlpSparkServer
+
+    srv = OtlpSparkServer(spark, "otlp://127.0.0.1:0", work_dir=str(work),
+                          disable_auth=True, warm_start=False)
+    srv._ensure_target_tables()
+    seg = srv.spool_dir / "logs" / "seg_test.jsonl"
+    seg.parent.mkdir(parents=True, exist_ok=True)
+    seg.write_text("".join(ln + "\n" for ln in lines))
+    srv._seal("logs")
+    return srv.read_table("otlp_logs")
+
+
+_HUGE = "1" * 5000   # past int()'s 4,300-digit limit for str -> int
+
+
+def test_integer_text_past_the_digit_limit(spark, tmp_path):
+    """A 5,000-digit intValue renders as quoted text and a 5,000-digit
+    timestamp raises the overflow error, in both read modes, through
+    format("otlp") and in a seal — never int()'s digit-limit error."""
+    from duckdb_otlp_spark.sources.datasource import register
+
+    register(spark)
+    line = ('{"resourceLogs": [{"scopeLogs": [{"logRecords": [{"timeUnixNano": '
+            '"1000", "attributes": [{"key": "n", "value": {"intValue": "%s"}}]}]}]}]}'
+            % _HUGE)
+    bad = '{"resourceLogs": [{"scopeLogs": [{"logRecords": [{"timeUnixNano": "%s"}]}]}]}' \
+        % _HUGE
+    p = tmp_path / "ok" / "huge.jsonl"
+    q = tmp_path / "bad" / "huge.jsonl"
+    for f, text in ((p, line), (q, bad)):
+        f.parent.mkdir()
+        f.write_text(text + "\n")
+
+    def fmt(path):
+        return spark.read.format("otlp").option("signal", "logs").load(str(path))
+
+    reads = {"auto": lambda f: read_otlp_logs(spark, str(f)),
+             "lines": lambda f: read_otlp_logs(spark, str(f), mode="lines"),
+             "format": fmt}
+    for name, read in reads.items():
+        attrs = [r[0] for r in read(p).select("log_attributes").collect()]
+        assert attrs == ['{"n":"%s"}' % _HUGE], name
+        with pytest.raises(Exception, match="timestamp overflows int64 range"):
+            read(q).collect()
+    sealed = _sealed_logs(spark, tmp_path / "srv", [line])
+    assert [r[0] for r in sealed.select("log_attributes").collect()] == \
+        ['{"n":"%s"}' % _HUGE]
+    with pytest.raises(Exception, match="timestamp overflows int64 range"):
+        _sealed_logs(spark, tmp_path / "srv-bad", [bad])
+
+
+@pytest.mark.parametrize("mode", ["auto", "lines"])
+@pytest.mark.parametrize("reader", [
+    read_otlp_logs, read_otlp_traces, read_otlp_metrics_gauge,
+    read_otlp_metrics_sum, read_otlp_metrics_histogram,
+    read_otlp_metrics_exp_histogram], ids=lambda r: r.__name__)
+def test_json_reader_plan_is_from_json_and_one_flatten(spark, otlp_fixtures,
+                                                       reader, mode):
+    """Every JSON read parses with from_json and flattens in MapInArrow:
+    no JVM explode."""
+    df = reader(spark, str(otlp_fixtures["logs_simple.jsonl"]), mode=mode)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert "from_json" in plan
+    assert "MapInArrow" in plan
+    assert "Generate" not in plan
 
 
 def test_ts_boundary_parses(spark, otlp_fixtures):

@@ -650,11 +650,11 @@ def test_seal_counts_malformed_dropped_lines(spark, tmp_path_factory):
 
 def test_seal_refused_metrics_lines_take_the_jvm_route(spark, tmp_path_factory):
     """A metrics body carrying a NaN point passes the edge (it only
-    counts skipped_nan_points) but not the seal's executor-side
-    flattener, whose json.loads refuses non-finite tokens; the seal
-    sends that line through the lax JVM route, which parses it like
-    any other. Catalog sink: the flattener's rows and the refused
-    line's rows of each table land in ONE snapshot."""
+    counts skipped_nan_points) but not the seal's strict parse, whose
+    json.loads refuses non-finite tokens; the seal sends that line
+    through the lax from_json parse, which parses it like any other,
+    and the same flattener. Catalog sink: the strict lines' rows and
+    the refused line's rows of each table land in ONE snapshot."""
     work = tmp_path_factory.mktemp("refused_metrics")
     row = otlp_serve(spark, "otlp://127.0.0.1:0", work_dir=str(work),
                      disable_auth=True, seal_max_age_ms=500, sink="catalog",
